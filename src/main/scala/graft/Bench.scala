@@ -47,7 +47,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val clean = sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEAN", "true").toBoolean
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // Comma-separated allowlist for isolation experiments (empty = all).
@@ -61,7 +61,7 @@ object Bench {
     val builder = GraftSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     // Re-apply the A/B passthrough LAST so an experiment can override

@@ -54,6 +54,17 @@ object GraftSession {
     b
   }
 
+  /** Local task slots for the Bench, Verify and tool mains:
+    * `SPARK_GRAFT_CPUS` when set, else the host's processor count, so the
+    * default follows the machine it runs on. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpusFrom(env: Option[String]): Int = {
+    val n = env.fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
+    require(n > 0, s"SPARK_GRAFT_CPUS=$n must be positive")
+    n
+  }
+
   /** Apply the `SPARK_GRAFT_SQL_CONF` passthrough (semicolon-separated
     * `key=value` pairs) to `b`. A token without '=' throws — never
     * silently skipped. */

@@ -5,13 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // Shared engine defaults (GraftSession): Verify runs the SAME engine
     // configuration the bench times, so the oracle certifies the
     // configuration that is actually measured.
     val spark = GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.operators.SkewCap.registerWarnings(spark)

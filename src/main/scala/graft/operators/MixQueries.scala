@@ -302,7 +302,7 @@ object MixQueries {
         .select(col("doc_id"), col("cluster_id")))
 
   /** Split assignment from an EXISTING cluster labeling — lets a pipeline
-    * that already ran the dedup (CurationDemo) reuse it instead of paying
+    * that already ran the dedup ([[curationE2e]]) reuse it instead of paying
     * the pair-generation + components pass twice. `clusters` carries
     * (doc_id, cluster_id) for clustered docs only. */
   def splitLeakageFrom(docs: DataFrame, clusters: DataFrame): DataFrame =
@@ -316,9 +316,10 @@ object MixQueries {
           .otherwise("test"))
       .select(col("doc_id"), col("group_id"), col("split"))
 
-  /** q_curation_e2e: the CAPSTONE composition — the CurationDemo pipeline
-    * as one hash-gated frame. Near-dup clustering (exact-Jaccard PPJoin →
-    * connected components) drops non-canonical cluster members; the
+  /** q_curation_e2e: the CAPSTONE composition — the training-data
+    * curation pipeline as one hash-gated frame. Near-dup clustering
+    * (exact-Jaccard PPJoin → connected components) drops non-canonical
+    * cluster members; the
     * heuristic quality screen keeps score ≥ 2; leakage-safe splits are
     * drawn per CLUSTER (computed before the drop, so each canonical keeps
     * its cluster's assignment). One run of the dedup feeds BOTH the drop

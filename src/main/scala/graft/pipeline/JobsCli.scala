@@ -101,8 +101,10 @@ object JobsCli {
   private def list(v: String): Seq[String] =
     v.split(',').map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** Parse reference-style argv. Required: --from_date, --to_date,
-    * --input_dir_listings, --listings_output_dir. Unknown flags fail
+  /** Parse the Job-1 (listings CURATED) argv surface. Required, as in the
+    * reference's argparse set: --from_date, --to_date,
+    * --input_dir_listings, --listings_output_dir, the six dim dirs,
+    * -s/--target_schema_file and -r/--reject_data_dir. Unknown flags fail
     * loudly (a typo silently ignored is a misconfigured production run). */
   def parse(argv: Seq[String]): JobsCliArgs = {
     val known = Set("--from_date", "--to_date", "--input_dir_listings",
@@ -126,15 +128,15 @@ object JobsCli {
       inputDirListings = list(req("--input_dir_listings")),
       listingsOutputDir = req("--listings_output_dir"),
       inputMlsList = opts.get("--input_mls_list").map(list),
-      inputDirBoards = opts.get("--input_dir_boards"),
-      inputDirStates = opts.get("--input_dir_states"),
-      inputDirZipcodes = opts.get("--input_dir_zipcodes"),
-      inputDirPropertySubTypes = opts.get("--input_dir_property_sub_types"),
-      inputDirCounties = opts.get("--input_dir_counties"),
-      inputDirGeoIds = opts.get("--input_dir_geo_ids"),
-      targetSchemaFile = opts.get("--target_schema_file"),
+      inputDirBoards = Some(req("--input_dir_boards")),
+      inputDirStates = Some(req("--input_dir_states")),
+      inputDirZipcodes = Some(req("--input_dir_zipcodes")),
+      inputDirPropertySubTypes = Some(req("--input_dir_property_sub_types")),
+      inputDirCounties = Some(req("--input_dir_counties")),
+      inputDirGeoIds = Some(req("--input_dir_geo_ids")),
+      targetSchemaFile = Some(req("--target_schema_file")),
       logDir = opts.get("--log_dir"),
-      rejectDataDir = opts.get("--reject_data_dir"),
+      rejectDataDir = Some(req("--reject_data_dir")),
       numOutputFiles = opts.get("--num_output_files").map(_.toInt).getOrElse(100),
       vacuumHrs = opts.get("--vacuum_hrs").map(_.toDouble),
       shufflePartitions =
@@ -286,25 +288,5 @@ object JobsCli {
     require(args.listingsDeltaDir != args.listingsOrcDir,
       "--listings_orc_dir must differ from --listings_delta_dir")
     args
-  }
-
-  /** The six dim dirs in reference order — runJob1 requires all of them
-    * (the reference marks them argparse-required; they stay optional in
-    * the case class only so the synthetic JobsDemo surface, which has no
-    * dims, shares the parser). */
-  def requireRealPipelineFlags(a: JobsCliArgs): Unit = {
-    val missing = Seq(
-      "--input_dir_boards" -> a.inputDirBoards,
-      "--input_dir_states" -> a.inputDirStates,
-      "--input_dir_zipcodes" -> a.inputDirZipcodes,
-      "--input_dir_property_sub_types" -> a.inputDirPropertySubTypes,
-      "--input_dir_counties" -> a.inputDirCounties,
-      "--input_dir_geo_ids" -> a.inputDirGeoIds,
-      "--target_schema_file" -> a.targetSchemaFile,
-      "--reject_data_dir" -> a.rejectDataDir).collect {
-      case (flag, None) => flag
-    }
-    require(missing.isEmpty,
-      s"real-pipeline run needs ${missing.mkString(", ")}")
   }
 }

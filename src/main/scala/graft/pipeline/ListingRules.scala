@@ -9,7 +9,7 @@ import graft.functions.ColumnLib._
   * (mls_listings_transform.py:132-417, ~65 derived columns) as composable
   * `Column` rules. Each function is one rule *pattern* with the exact
   * semantics of its cited reference site; the full 133-column transform is
-  * these patterns applied per field, driven by `Validation`/`ColumnLib`
+  * these patterns applied per field, driven by `MlsValidate`/`ColumnLib`
   * projection machinery (`_x`-replacement, final schema projection).
   *
   * Every rule is a pure Column expression — whole-stage codegen'd, no UDFs.

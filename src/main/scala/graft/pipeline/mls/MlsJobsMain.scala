@@ -14,9 +14,8 @@ import graft.sources.{ManagedTable, MergeClauses, TableIO, VersionedLayout}
   * union with the live curated table → the two latest-wins windows →
   * optional property-id enrichment (API over HTTP or the MSSQL 3-hop) →
   * reject/outdated text legs → MERGE into the managed table → ORC mirror →
-  * retention vacuum. [[graft.pipeline.JobsDemo]] remains the synthetic
-  * TPC-H-shaped demo of the same surface; this object is the
-  * schema-faithful production entry, gated end-to-end by q_job1_cli.
+  * retention vacuum. This object is the one production entry for all
+  * three jobs, gated end-to-end by q_job1_cli/q_job2_cli/q_job3_cli.
   *
   * `asOf`/`now` inject the run clock (the reference's `current_date()` /
   * `current_timestamp()`): production `main` passes the real clock, the
@@ -109,7 +108,6 @@ object MlsJobsMain {
               now: Column = current_timestamp(),
               clientOverride: Option[BatchLookup.LookupClient] = None)
       : String = {
-    JobsCli.requireRealPipelineFlags(a)
     val deltaRoot = deltaDirOf(a.listingsOutputDir)
 
     // ---- read inputs (curated.py:70-96) --------------------------------
@@ -254,10 +252,21 @@ object MlsJobsMain {
     val curated: Option[DataFrame] =
       scala.util.Try(graft.sources.TableIO.readStatic(spark, format = "orc", path = histOut)
         .select(targetSchema.fieldNames.toIndexedSeq.map(col): _*)).toOption
-    val source = MlsJob2Gate.histFinal(fresh, curated,
-        targetSchema.fieldNames.toSeq)
-      .localCheckpoint(eager = false)
+    mergeHistory(spark, deltaRoot, fresh, curated, targetSchema.fieldNames.toSeq)
+    TableIO.writeOrcZlib(ManagedTable.read(spark, deltaRoot),
+      histOut, a.numOutputFiles)
+    a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
+    deltaRoot
+  }
 
+  /** Job 2's publish step (hist:119-210): hist-grain dedup of the fresh
+    * batch ∪ `curated` (projected to `fieldNames`), `*_old` + changed
+    * flags, then the three-way MERGE into the delta table at `deltaRoot`,
+    * created empty on the first run. */
+  def mergeHistory(spark: SparkSession, deltaRoot: String, fresh: DataFrame,
+                   curated: Option[DataFrame], fieldNames: Seq[String]): Unit = {
+    val source = MlsJob2Gate.histFinal(fresh, curated, fieldNames)
+      .localCheckpoint(eager = false)
     if (!ManagedTable.exists(deltaRoot))
       VersionedLayout.withUserMetadata(
         "Create empty listings hist delta table") {
@@ -268,10 +277,6 @@ object MlsJobsMain {
     // source_as_of_date the sanitizer nulled never match and re-insert.
     ManagedTable.merge(spark, deltaRoot, source, MlsJob2Gate.grainKeys,
       MlsJob2Gate.histMergeSpec, nullSafeKeys = false)
-    TableIO.writeOrcZlib(ManagedTable.read(spark, deltaRoot),
-      histOut, a.numOutputFiles)
-    a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
-    deltaRoot
   }
 
   /** One full Job-3 (property-id BACKFILL) run behind the reference's

@@ -12,13 +12,13 @@ package graft.tools
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus
     val gates = if (args.nonEmpty) args.toSeq
       else Seq("q_agg_cube", "q_events_wau", "q_j1_broadcast_dims",
         "q_s12_surrogate_keys", "q_w2_hist_grain")
     val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -12,11 +12,11 @@ import org.apache.spark.sql.catalyst.rules.RuleExecutor
 object RuleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus
     val gate = args.headOption.getOrElse("q_job1_e2e")
     val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(gate)

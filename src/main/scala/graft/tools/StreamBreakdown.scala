@@ -14,12 +14,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamBreakdown {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus
     val gates = if (args.nonEmpty) args.toSeq
       else Seq("q_stream_typecounts_tws", "q_stream_hourly", "q_stream_neardup")
     val spark = graft.GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

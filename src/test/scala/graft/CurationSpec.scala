@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{MixQueries, SimilarityQueries, Sketches, TextQueries}
 
 /** Behavioral coverage for the corpus-curation operators: repetition
-  * scoring, split assignment, shuffle sharding, and the theta distinct
-  * sketch. Value-level parity is the DuckDB gate; these tests pin the
+  * scoring, split assignment, the composed q_curation_e2e pipeline,
+  * shuffle sharding, and the theta distinct sketch. Value-level parity is the DuckDB gate; these tests pin the
   * operator-level invariants (known scores, proportions, determinism,
   * stability under corpus growth, estimator accuracy). */
 class CurationSpec extends AnyFunSuite {
@@ -49,6 +49,27 @@ class CurationSpec extends AnyFunSuite {
     val b = MixQueries.splitAssign(spark, small)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(b == a.filter(_._1 <= 1000L))
+  }
+
+  test("curation e2e: splits partition the deduped corpus, quality floor held") {
+    val dir = "/root/testdata/sf0.001"
+    val corpus = MixQueries.curationE2e(spark, dir).cache()
+    try {
+      val n = corpus.count()
+      assert(n > 0)
+      // every surviving doc has exactly one split, from the known three
+      assert(corpus.select("doc_id").distinct().count() == n)
+      val bySplit = corpus.groupBy("split").count().as[(String, Long)]
+        .collect().toMap
+      assert(bySplit.keySet.subsetOf(Set("train", "validation", "test")))
+      assert(bySplit.values.sum == n)
+      assert(bySplit.getOrElse("train", 0L) > bySplit.getOrElse("test", 0L))
+      assert(corpus.filter("quality_score < 2").isEmpty)
+      // non-canonical near-dup cluster members are dropped
+      val dropped = graft.operators.GraphCC.dedupClusters(spark, dir)
+        .filter("is_canonical = 0").select("doc_id")
+      assert(corpus.join(dropped, "doc_id").isEmpty)
+    } finally corpus.unpersist()
   }
 
   test("shuffle shard: dense positions per shard, a permutation of the corpus") {

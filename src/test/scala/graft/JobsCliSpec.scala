@@ -1,21 +1,28 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{JobsCli, JobsDemo}
+import graft.pipeline.JobsCli
 
-/** Drives all three job drivers END-TO-END FROM ARGV with the reference's
-  * flag surface (mls_listings_curated.py:18-56): date window, MLS isin,
-  * output-file count, retention vacuum, reject logging. */
+/** The three jobs' argv parsers against the reference's flag surface
+  * (mls_listings_curated.py:18-56 and its hist/backfill twins): required
+  * flags, defaults, choices, and foreign-flag rejection. The argv-driven
+  * runs themselves are pinned in MlsJobsMainSpec. */
 class JobsCliSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
   private val fixture = "/root/testdata/sf0.001/orders.parquet"
 
   test("parser: defaults, lists, dates, and loud failures") {
-    val a = JobsCli.parse(Seq(
+    // The full Job-1 flag set; `drop` removes one flag and its value.
+    def job1Argv(drop: String = ""): Seq[String] = Seq(
       "--from_date", "19950101", "--to_date", "19961231",
       "--input_dir_listings", s"$fixture,$fixture",
+      "--input_dir_boards", "/tmp/b", "--input_dir_states", "/tmp/s",
+      "--input_dir_zipcodes", "/tmp/z",
+      "--input_dir_property_sub_types", "/tmp/p",
+      "--input_dir_counties", "/tmp/c", "--input_dir_geo_ids", "/tmp/g",
       "--listings_output_dir", "/tmp/x",
+      "-s", "/tmp/schema.json", "-r", "/tmp/rejects")
+      .sliding(2, 2).filterNot(_.head == drop).flatten.toSeq
+    val a = JobsCli.parse(job1Argv() ++ Seq(
       "--input_mls_list", "MLS0, MLS2",
       "--num_output_files", "7", "--vacuum_hrs", "168",
       "--shuffle_partitions", "3", "--debug", "--log_rejected_records"))
@@ -24,18 +31,40 @@ class JobsCliSpec extends AnyFunSuite {
     assert(a.inputMlsList.contains(Seq("MLS0", "MLS2")))
     assert(a.numOutputFiles == 7 && a.vacuumHrs.contains(168.0))
     assert(a.shufflePartitions == 3 && a.debug && a.logRejectedRecords)
+    assert(a.inputDirGeoIds.contains("/tmp/g"))
+    assert(a.targetSchemaFile.contains("/tmp/schema.json"))
+    assert(a.rejectDataDir.contains("/tmp/rejects"))
 
     // defaults mirror the reference's argparse defaults
-    val d = JobsCli.parse(Seq("--from_date", "19950101", "--to_date", "19950201",
-      "--input_dir_listings", fixture, "--listings_output_dir", "/tmp/x"))
+    val d = JobsCli.parse(job1Argv())
     assert(d.numOutputFiles == 100 && d.shufflePartitions == 2 &&
-      d.vacuumHrs.isEmpty && !d.debug)
+      d.vacuumHrs.isEmpty && !d.debug && d.propertyIdSource == "NONE" &&
+      d.propertyIdModes == Seq("New", "Null") && d.logDir.isEmpty)
 
-    intercept[IllegalArgumentException](JobsCli.parse(Seq("--to_date", "19950101")))
-    intercept[IllegalArgumentException](JobsCli.parse(Seq(
-      "--from_date", "1995-01-01", "--to_date", "19950201",
-      "--input_dir_listings", fixture, "--listings_output_dir", "/tmp/x")))
-    intercept[IllegalArgumentException](JobsCli.parse(Seq("--bogus_flag", "1")))
+    // every Job-1-required flag is enforced, the six dim dirs, the schema
+    // file and the reject dir included (argparse-required in the reference)
+    for (req <- Seq("--from_date", "--to_date", "--input_dir_listings",
+        "--listings_output_dir", "--input_dir_boards", "--input_dir_states",
+        "--input_dir_zipcodes", "--input_dir_property_sub_types",
+        "--input_dir_counties", "--input_dir_geo_ids", "-s", "-r")) {
+      val e = intercept[IllegalArgumentException](
+        JobsCli.parse(job1Argv(drop = req)))
+      assert(e.getMessage.startsWith("missing required flag"), req)
+    }
+    intercept[IllegalArgumentException](JobsCli.parse(
+      job1Argv().updated(1, "1995-01-01")))
+    intercept[IllegalArgumentException](JobsCli.parse(
+      job1Argv() ++ Seq("--bogus_flag", "1")))
+
+    // property-id choices are validated like argparse
+    intercept[IllegalArgumentException](JobsCli.parse(
+      job1Argv() ++ Seq("--property_id_source", "FTP")))
+    intercept[IllegalArgumentException](JobsCli.parse(
+      job1Argv() ++ Seq("--property_id_source", "API"))) // endpoint required
+    intercept[IllegalArgumentException](JobsCli.parse(
+      job1Argv() ++ Seq("--property_id_modes", "New,Bogus")))
+    intercept[IllegalArgumentException](JobsCli.parse(
+      job1Argv() ++ Seq("--property_id_limit", "0")))
   }
 
   test("hist parser: reference flag set, required flags, foreign-flag rejection") {
@@ -106,87 +135,5 @@ class JobsCliSpec extends AnyFunSuite {
       base ++ Seq("--from_date", "20240101")))
     intercept[IllegalArgumentException](JobsCli.parseBackfill(
       base ++ Seq("--listings_output_dir", "/tmp/o")))
-  }
-
-  test("all three jobs run from argv; window, isin, and vacuum take effect") {
-    val out = Files.createTempDirectory("graft_cli").toString
-    val argv = Seq(
-      "--from_date", "19950101", "--to_date", "19961231",
-      "--input_dir_listings", fixture,
-      "--listings_output_dir", out,
-      "--num_output_files", "2",
-      "--vacuum_hrs", "0",
-      "--log_rejected_records")
-    val r1 = JobsDemo.run(spark, JobsCli.parse(argv))
-    assert(r1("curated_rows") > 0 && r1("hist_rows") >= r1("curated_rows"))
-    assert(r1("backfilled") > 0)
-    // vacuum_hrs 0 ran inside the curated job, dropping its createEmpty
-    // v0 and leaving the merged v1; the later backfill merge adds v2 —
-    // so exactly two snapshots survive (three commits happened)
-    assert(r1("curated_versions") == 2)
-    // reject logging produced the quarantine dirs
-    assert(Files.exists(Paths.get(out, "rejects", "rejected")))
-    // ORC mirror respected --num_output_files
-    val orc = Files.list(Paths.get(out, "curated_orc"))
-    try {
-      import scala.jdk.CollectionConverters._
-      assert(orc.iterator().asScala.count(
-        _.getFileName.toString.endsWith(".orc")) == 2)
-    } finally orc.close()
-
-    // a second run, narrowed by date window AND mls isin, merges fewer keys
-    val out2 = Files.createTempDirectory("graft_cli2").toString
-    val r2 = JobsDemo.run(spark, JobsCli.parse(Seq(
-      "--from_date", "19950101", "--to_date", "19950630",
-      "--input_dir_listings", fixture,
-      "--listings_output_dir", out2,
-      "--input_mls_list", "MLS1")))
-    assert(r2("curated_rows") > 0)
-    assert(r2("curated_rows") < r1("curated_rows"))
-  }
-
-  test("property-id API flags drive the real HTTP client from argv") {
-    // choice validation mirrors the reference's argparse contract
-    intercept[IllegalArgumentException](JobsCli.parse(Seq(
-      "--from_date", "19950101", "--to_date", "19950201",
-      "--input_dir_listings", fixture, "--listings_output_dir", "/tmp/x",
-      "--property_id_source", "FTP")))
-    intercept[IllegalArgumentException](JobsCli.parse(Seq(
-      "--from_date", "19950101", "--to_date", "19950201",
-      "--input_dir_listings", fixture, "--listings_output_dir", "/tmp/x",
-      "--property_id_source", "API"))) // endpoint required
-
-    intercept[IllegalArgumentException](JobsCli.parse(Seq(
-      "--from_date", "19950101", "--to_date", "19950201",
-      "--input_dir_listings", fixture, "--listings_output_dir", "/tmp/x",
-      "--property_id_modes", "New,Bogus"))) // choice-validated like argparse
-
-    val server = new graft.enrich.StubPropertyServer()
-    try {
-      val out = Files.createTempDirectory("graft_cli_api").toString
-      val base = Seq(
-        "--from_date", "19950101", "--to_date", "19950401",
-        "--input_dir_listings", fixture,
-        "--listings_output_dir", out,
-        "--property_id_source", "API",
-        "--property_id_api_endpoint", server.lookupUrl,
-        "--property_id_api_batch_size", "32",
-        "--property_id_api_sleep", "0")
-      val r = JobsDemo.run(spark, JobsCli.parse(base))
-      assert(r("property_ids_looked_up") > 0)
-      assert(r("curated_rows") > 0)
-
-      // widening the modes widens the candidate set; a limit caps it
-      val out2 = Files.createTempDirectory("graft_cli_api2").toString
-      val allModes = JobsDemo.run(spark, JobsCli.parse(base
-        .updated(base.indexOf(out), out2) ++ Seq(
-        "--property_id_modes", "New,Null,Provisional,Final")))
-      assert(allModes("property_ids_looked_up") > r("property_ids_looked_up"))
-      val out3 = Files.createTempDirectory("graft_cli_api3").toString
-      val limited = JobsDemo.run(spark, JobsCli.parse(base
-        .updated(base.indexOf(out), out3) ++ Seq(
-        "--property_id_limit", "10")))
-      assert(limited("property_ids_looked_up") <= 10)
-    } finally server.stop()
   }
 }

@@ -85,6 +85,35 @@ object MlsFixtures {
       Row("77001", "TX"), Row("80202", "CO")).asJava, schema)
   }
 
+  /** Job-2 merge input at the hist grain: (listing id, source_as_of_date,
+    * current_price, listing_status) per snapshot, with the window columns
+    * and the other four tracked columns held fixed. */
+  def histSnapshots(spark: SparkSession,
+                    rows: Seq[(String, Option[String], Double, String)],
+                    loadDate: String = "20240301"): DataFrame = {
+    import spark.implicits._
+    rows.toDF("mls_listing_id", "soad", "current_price", "listing_status")
+      .selectExpr("'MLS1' AS mls", "mls_listing_id",
+        "CAST(soad AS TIMESTAMP) AS source_as_of_date",
+        "DATE '2024-02-01' AS listing_date", "DATE '2024-02-01' AS entry_date",
+        s"'$loadDate' AS load_date",
+        "TIMESTAMP '2024-06-01 00:00:00' AS create_timestamp",
+        "listing_status", "current_price",
+        "mls_listing_id AS source_listing_id",
+        "'12 MAIN ST' AS street_address_raw", "'SF' AS property_type",
+        "'RES' AS property_sub_type")
+  }
+
+  /** One Job-2 publish into the hist table at `root`, with the table's
+    * current state as the curated side (what `runJob2` reads back from
+    * the ORC mirror it wrote from that state). */
+  def runHistory(spark: SparkSession, root: String, fresh: DataFrame): Unit =
+    graft.pipeline.mls.MlsJobsMain.mergeHistory(spark, root, fresh,
+      if (graft.sources.ManagedTable.exists(root))
+        Some(graft.sources.ManagedTable.read(spark, root))
+      else None,
+      fresh.columns.toSeq)
+
   def propertySubTypes(spark: SparkSession): DataFrame = {
     val schema = StructType(Seq(StructField("property_sub_type", StringType)))
     spark.createDataFrame(Seq(Row("RES"), Row("CONDO")).asJava, schema)

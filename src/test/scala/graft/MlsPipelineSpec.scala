@@ -1,17 +1,16 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.{Date, Timestamp}
+import java.sql.Date
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.Jobs
 import graft.pipeline.mls.{MlsTransform, MlsValidate}
 import graft.sources.ManagedTable
 import MlsFixtures._
 
 /** Pipeline-parity e2e (FIXTURES.md §A4): the faithful validate split with
   * exact reason strings and flag order, the faithful transform's edge rows,
-  * and the curated job's incremental latest-wins behavior on MLS grain. */
+  * and Job 2's change-row capture on MLS snapshot grain. */
 class MlsPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -118,59 +117,18 @@ class MlsPipelineSpec extends AnyFunSuite {
 
   test("history job on MLS snapshot grain keeps only change rows") {
     val root = Files.createTempDirectory("graft_mls_hist").toString
-    val cfg = Jobs.HistoryConfig(tableRoot = root,
-      keys = Seq("mls", "mls_listing_id", "source_as_of_date"),
-      versionOrder = Seq(col("source_as_of_date").desc),
-      entityKeys = Seq("mls", "mls_listing_id"),
-      tracked = Seq("current_price", "listing_status"))
-    def snap(ts: String, price: Double, status: String) =
-      listing("source_as_of_date" -> Timestamp.valueOf(ts),
-        "current_price" -> price, "listing_status" -> status)
-    val (good, _) = validate(
-      snap("2024-01-01 00:00:00", 100000.0, "A"),
-      snap("2024-02-01 00:00:00", 100000.0, "A"),   // no change → dropped
-      snap("2024-03-01 00:00:00", 95000.0, "A"),
-      snap("2024-04-01 00:00:00", 95000.0, "S"))
-    Jobs.runHistory(spark,
-      MlsTransform.transformListings(good, lit("2024-06-01").cast("date")), cfg)
-    val hist = ManagedTable.read(spark, root)
-    val rows = hist.select("source_as_of_date", "current_price_old",
+    runHistory(spark, root, histSnapshots(spark, Seq(
+      ("L-1", Some("2024-01-01"), 100000.0, "A"),
+      ("L-1", Some("2024-02-01"), 100000.0, "A"),   // no change → dropped
+      ("L-1", Some("2024-03-01"), 95000.0, "A"),
+      ("L-1", Some("2024-04-01"), 95000.0, "S"))))
+    val rows = ManagedTable.read(spark, root)
+      .select("source_as_of_date", "current_price_old",
         "current_price_changed_flag", "listing_status_changed_flag")
       .orderBy("source_as_of_date").collect()
     assert(rows.length == 3) // the no-change 02-01 snapshot is absent
     assert(rows(0).isNullAt(1) && rows(0).getBoolean(2))  // first insert
-    assert(rows(1).getDecimal(1).doubleValue() == 100000.0 && rows(1).getBoolean(2))
+    assert(rows(1).getDouble(1) == 100000.0 && rows(1).getBoolean(2))
     assert(!rows(2).getBoolean(2) && rows(2).getBoolean(3)) // status-only change
-  }
-
-  test("curated job on MLS grain: incremental latest-wins with reference ordering") {
-    val root = Files.createTempDirectory("graft_mls").toString
-    val ordering = Seq(col("source_as_of_date").desc, col("listing_date").desc,
-      col("entry_date").asc, col("load_date").desc)
-    val cfg = Jobs.CuratedConfig(tableRoot = root,
-      keys = Seq("mls", "mls_listing_id"), ordering = ordering)
-
-    def run(rows: org.apache.spark.sql.Row*): Unit = {
-      val (good, _) = validate(rows: _*)
-      Jobs.runCurated(spark, MlsTransform.transformListings(good,
-        lit("2024-06-01").cast("date")), Nil, cfg)
-    }
-
-    run(
-      listing("mls_listing_id" -> "L-1", "current_price" -> 100000.0,
-        "source_as_of_date" -> Timestamp.valueOf("2024-03-01 00:00:00")),
-      listing("mls_listing_id" -> "L-2"))
-    run(
-      listing("mls_listing_id" -> "L-1", "current_price" -> 111000.0,
-        "source_as_of_date" -> Timestamp.valueOf("2024-04-01 00:00:00")),
-      listing("mls_listing_id" -> "L-1", "current_price" -> 90000.0,
-        "source_as_of_date" -> Timestamp.valueOf("2024-02-01 00:00:00")),
-      listing("mls_listing_id" -> "L-3"))
-
-    val t = ManagedTable.read(spark, root)
-    val prices = t.select("mls_listing_id", "current_price")
-      .collect().map(r => r.getString(0) -> r.getDecimal(1).doubleValue()).toMap
-    assert(prices.keySet == Set("L-1", "L-2", "L-3"))
-    assert(prices("L-1") == 111000.0) // newest snapshot wins; stale ignored
   }
 }

@@ -3,26 +3,13 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{Jobs, LatestWins, Validation}
+import graft.pipeline.LatestWins
 import graft.sources.ManagedTable
+import MlsFixtures.{histSnapshots, runHistory}
 
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("validation split is a partition of the input, reasons in rule order") {
-    val df = Seq(("ok", 5), ("bad1", -1), ("bad2", 200)).toDF("name", "qty")
-    val rules = Seq(
-      Validation.Rule("neg", "negative_qty", col("qty") < 0),
-      Validation.Rule("big", "qty_too_big", col("qty") > 100),
-      Validation.Rule("name", "bad_name", col("name").startsWith("bad")))
-    val split = Validation.validate(df, rules)
-    assert(split.good.count() + split.rejected.count() == df.count())
-    assert(split.good.columns.toSeq == df.columns.toSeq)
-    val reasons = split.rejected.orderBy("name")
-      .select("_reject_reasons").as[String].collect()
-    assert(reasons.toSeq == Seq("negative_qty|bad_name", "qty_too_big|bad_name"))
-  }
 
   test("latest-wins dedup: newest version wins, 'new' beats 'curated' on ties") {
     val curated = Seq((1, "2024-01-02", "cur_v2"), (2, "2024-01-01", "cur_only"))
@@ -63,81 +50,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(out(3).isNullAt(2) && out(3).getBoolean(3))
   }
 
-  test("curated job end-to-end incl. incremental second run") {
-    val root = Files.createTempDirectory("graft_job").toString
-    val rejectedDir = Files.createTempDirectory("graft_rej").toString
-    val cfg = Jobs.CuratedConfig(
-      tableRoot = root, keys = Seq("k"), ordering = Seq(col("dt").desc),
-      rejectedDir = Some(rejectedDir))
-    val rules = Seq(Validation.Rule("qty", "bad_qty", col("qty") < 0))
-
-    Jobs.runCurated(spark,
-      Seq((1, "2024-01-01", 10), (2, "2024-01-01", -5), (3, "2024-01-01", 30))
-        .toDF("k", "dt", "qty"), rules, cfg)
-    val t1 = ManagedTable.read(spark, root).as[(Int, String, Int)].collect().sorted
-    assert(t1.toSeq == Seq((1, "2024-01-01", 10), (3, "2024-01-01", 30)))
-    assert(spark.read.text(s"$rejectedDir/rejected").count() == 1)
-
-    // second run: newer version of k=1, stale version of k=3, new k=4
-    Jobs.runCurated(spark,
-      Seq((1, "2024-02-01", 11), (3, "2023-12-01", 99), (4, "2024-01-01", 40))
-        .toDF("k", "dt", "qty"), rules, cfg)
-    val t2 = ManagedTable.read(spark, root).as[(Int, String, Int)].collect().sorted
-    assert(t2.toSeq == Seq((1, "2024-02-01", 11), (3, "2024-01-01", 30),
-      (4, "2024-01-01", 40)))
-  }
-
-  test("history job keeps only change-representing snapshots") {
-    val root = Files.createTempDirectory("graft_hist").toString
-    val cfg = Jobs.HistoryConfig(
-      tableRoot = root, keys = Seq("k", "dt"),
-      versionOrder = Seq(col("dt").desc), entityKeys = Seq("k"),
-      tracked = Seq("price"))
-    Jobs.runHistory(spark, Seq(
-      (1, "2024-01-01", 100), (1, "2024-01-02", 100), (1, "2024-01-03", 150))
-      .toDF("k", "dt", "price"), cfg)
-    val kept = ManagedTable.read(spark, root)
-      .select("k", "dt", "price").as[(Int, String, Int)].collect().sorted
-    // middle snapshot (no price change) must not be in the log
-    assert(kept.toSeq == Seq((1, "2024-01-01", 100), (1, "2024-01-03", 150)))
-  }
-
   test("history job parity knobs: whole-dollar comparator, match guard, plain-= keys") {
     val root = Files.createTempDirectory("graft_hist_knobs").toString
-    val cfg = Jobs.HistoryConfig(
-      tableRoot = root, keys = Seq("k", "dt"),
-      versionOrder = Seq(col("dt").desc), entityKeys = Seq("k"),
-      tracked = Seq("price"),
-      // reference hist:152 — change detection at whole-dollar grain
-      compare = Map("price" ->
-        ((a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-          round(a, 0) <=> round(b, 0))),
-      matchGuardCols = Seq("price", "price_old", "price_changed_flag"),
-      nullSafeKeys = false)
-    def df(rows: Seq[(Option[Int], Option[String], Double)]) =
-      rows.toDF("k", "dt", "price")
-    // run 1: k=1 has two snapshots whose prices differ only in cents —
-    // the whole-dollar comparator collapses them to ONE log row; a
-    // null-dt snapshot also lands.
-    Jobs.runHistory(spark, df(Seq(
-      (Some(1), Some("2024-01-01"), 100.10),
-      (Some(1), Some("2024-01-02"), 100.40), // same dollar -> not a change
-      (Some(2), None, 50.0))), cfg)
-    val t1 = ManagedTable.read(spark, root)
-      .select("k", "dt", "price").as[(Int, Option[String], Double)].collect()
-    assert(t1.count(_._1 == 1) == 1, s"cents-only change logged: ${t1.toSeq}")
-    assert(t1.count(r => r._1 == 2 && r._2.isEmpty) == 1)
-    // run 2: replay the same input — with plain `=` merge keys the
-    // null-dt snapshot never matches and accumulates a duplicate (the
-    // reference's observable ON-= behavior), while keyed rows stay put.
-    Jobs.runHistory(spark, df(Seq(
-      (Some(1), Some("2024-01-01"), 100.10),
-      (Some(1), Some("2024-01-02"), 100.40),
-      (Some(2), None, 50.0))), cfg)
-    val t2 = ManagedTable.read(spark, root)
-      .select("k", "dt", "price").as[(Int, Option[String], Double)].collect()
-    assert(t2.count(r => r._1 == 2 && r._2.isEmpty) == 2, s"got: ${t2.toSeq}")
-    assert(t2.count(_._1 == 1) == 1)
+    // L-1 has two snapshots whose prices differ only in cents — the
+    // whole-dollar comparator (hist:152) collapses them to ONE log row;
+    // L-2's null source_as_of_date snapshot also lands.
+    val rows = Seq(
+      ("L-1", Some("2024-01-01"), 100.10, "A"),
+      ("L-1", Some("2024-01-02"), 100.40, "A"), // same dollar -> not a change
+      ("L-2", None, 50.0, "A"))
+    runHistory(spark, root, histSnapshots(spark, rows))
+    def table = ManagedTable.read(spark, root)
+      .select("mls_listing_id", "source_as_of_date", "load_date")
+      .as[(String, Option[java.sql.Timestamp], String)].collect()
+    val t1 = table
+    assert(t1.count(_._1 == "L-1") == 1, s"cents-only change logged: ${t1.toSeq}")
+    assert(t1.count(r => r._1 == "L-2" && r._2.isEmpty) == 1)
+    // Replay with a later load_date: the replayed rows win the hist-grain
+    // window, but the matched L-1 row's 18 guard columns are unchanged, so
+    // the guard (hist:188-192) leaves the stored row as it was; with plain
+    // `=` merge keys (hist:185) the null-soad snapshot never matches and
+    // accumulates a duplicate.
+    runHistory(spark, root, histSnapshots(spark, rows, loadDate = "20240302"))
+    val t2 = table
+    assert(t2.count(r => r._1 == "L-2" && r._2.isEmpty) == 2, s"got: ${t2.toSeq}")
+    assert(t2.filter(_._1 == "L-1").map(_._3).toSeq == Seq("20240301"))
   }
 
   private implicit class Map2[A, B, C](rows: Array[(A, B, C)]) {

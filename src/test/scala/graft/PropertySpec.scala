@@ -5,10 +5,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Merge, Salting}
-import graft.pipeline.{LatestWins, Validation}
+import graft.pipeline.LatestWins
 
 /** Property-based invariants (SURVEY §5's stated test strategy):
-  * validate∘split partitions the input; latest-wins dedup is idempotent;
+  * latest-wins dedup is idempotent;
   * merge replay is idempotent; salted aggregation/top-k equal their plain
   * forms for any salt/k. Inputs come from seeded ScalaCheck generators
   * (the scalatest-scalacheck bridge isn't in the offline cache, so cases
@@ -26,19 +26,6 @@ class PropertySpec extends AnyFunSuite {
   private def cases[A](g: Gen[A], n: Int = 6): Seq[A] =
     (0 until n).flatMap(i =>
       g.apply(Gen.Parameters.default.withSize(5 + i * 10), Seed(42L + i)))
-
-  test("validation split partitions any input (good ∪ rejected == input)") {
-    for (rows <- cases(rowGen)) {
-      val df = rows.toDF("k", "dt", "v")
-      val split = Validation.validate(df, Seq(
-        Validation.Rule("neg", "neg", col("v") < 0),
-        Validation.Rule("big", "big", col("v") > 50)))
-      assert(split.good.count() + split.rejected.count() == rows.length.toLong)
-      val reunion = split.good.select("k", "dt", "v")
-        .unionAll(split.rejected.select("k", "dt", "v"))
-      assert(reunion.except(df).count() == 0 && df.except(reunion).count() == 0)
-    }
-  }
 
   test("latest-wins dedup is idempotent") {
     for (rows <- cases(rowGen) if rows.nonEmpty) {

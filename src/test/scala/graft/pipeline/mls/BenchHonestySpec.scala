@@ -15,7 +15,9 @@ import graft.sources.ScratchDirs
   * read-only input FIXTURE (`*_raw`/`*_fix`/`*_orc` — pure functions of
   * the sf dir, legitimately built once), never a published-run root. A
   * refactor that memoizes an e2e run introduces a new memo name here and
-  * fails loudly. */
+  * fails loudly. It also pins the one session config surface: every main
+  * builds its session through GraftSession, so the oracle certifies the
+  * engine configuration the bench times. */
 class BenchHonestySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -85,5 +87,32 @@ class BenchHonestySpec extends AnyFunSuite {
           "e2e gate plan lost its window subtree — is it reading a " +
             "pre-published result instead of running the pipeline?")
       }
+  }
+
+  test("every session is built through GraftSession (no raw-builder mains)") {
+    // Built at runtime so this file's own source never matches.
+    val rawBuilder = ("SparkSession" + "\\s*\\.\\s*builder\\s*\\(").r
+    val allowed = Set("GraftSession.scala", "TestSpark.scala")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          !allowed(p.getFileName.toString))
+        .filter(p => rawBuilder
+          .findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
+        .map(_.toString).toVector
+    } finally files.close()
+    assert(offenders.isEmpty,
+      s"$offenders build a raw session — use graft.GraftSession.builder() " +
+        "so the bench, the oracle and the mains share one engine config")
+  }
+
+  test("SPARK_GRAFT_CPUS defaults to the host's processor count") {
+    assert(graft.GraftSession.cpusFrom(None) ==
+      Runtime.getRuntime.availableProcessors)
+    assert(graft.GraftSession.cpusFrom(Some(" 3 ")) == 3)
+    intercept[IllegalArgumentException](graft.GraftSession.cpusFrom(Some("0")))
+    intercept[NumberFormatException](graft.GraftSession.cpusFrom(Some("many")))
   }
 }

@@ -184,6 +184,56 @@ class MlsJobsMainSpec extends AnyFunSuite {
     assert(r.getString(3) == "MSSQL")
   }
 
+  /** Read-only Job-1 input dirs for the argv runs (MlsJobCliGate.argv's
+    * in_a/in_b + dims + schema layout). in_a holds the February batch
+    * TWICE per key: the second slice carries an older source_as_of_date,
+    * so window 1 marks it outdated — exercising the 'Outdated record'
+    * reject leg deterministically. in_b holds a batch outside every window
+    * these tests use (the multi-dir scan still runs, zero rows survive the
+    * load_date filter). */
+  private val staleSoad = "2024-01-03 00:00:00"
+  private lazy val cliInputs: String = {
+    val in = Files.createTempDirectory("graft_cli_inputs").toString
+    MlsJob1Gate.synthesize(
+        MlsJob1Gate.rawBase(spark, dir, 2, "2024-02-01", tag = "x")
+          .unionByName(MlsJob1Gate.rawBase(spark, dir, 2, "2024-02-01",
+            tag = "x", soadTs = staleSoad)))
+      .drop("gate_batch").write.mode("overwrite").orc(s"$in/in_a")
+    MlsJob1Gate.synthesize(
+        MlsJob1Gate.rawBase(spark, dir, 1, "2023-06-01", tag = "x"))
+      .drop("gate_batch").write.mode("overwrite").orc(s"$in/in_b")
+    MlsJob1Gate.dims.foreach { case (n, _, _) =>
+      MlsJob1Gate.dimDf(spark, n).write.mode("overwrite").orc(s"$in/dim_$n")
+    }
+    Files.writeString(Paths.get(in, "schema.json"), new String(
+      getClass.getResourceAsStream("/mls_listings_schema.json").readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8))
+    in
+  }
+
+  /** One February Job-1 run from argv into `out`, API lookups against
+    * `server`, at the run clock `nowTs`. Returns the delta root. */
+  private def cliRun(out: String, server: graft.enrich.StubPropertyServer,
+                     nowTs: String, extra: Seq[String]): String = {
+    val a = JobsCli.parse(MlsJobCliGate.argv(cliInputs, out,
+      "20240201", "20240228", Seq(
+        "--property_id_source", "API",
+        "--property_id_api_endpoint", server.lookupUrl,
+        "--property_id_api_batch_size", "64",
+        "--property_id_api_sleep", "0") ++ extra))
+    MlsJobsMain.runJob1(spark, a,
+      asOf = expr("DATE '2024-06-01'"), now = expr(s"TIMESTAMP '$nowTs'"))
+  }
+
+  private val keyOf = (r: org.apache.spark.sql.Row) =>
+    (r.getString(0), r.getString(1))
+  private def keys(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.select("mls", "mls_listing_id").collect().map(keyOf).toSet
+  private def lookedUpAt(root: String, nowTs: String): Set[(String, String)] =
+    keys(ManagedTable.read(spark, root)
+      .filter(col("asg_primary_id_source_queried_timestamp") ===
+        to_timestamp(lit(nowTs))))
+
   test("CLI budget integration: the re-run budget avoids exactly the keys " +
       "a key-ordered budget would re-pick") {
     // Run A: February window, budget 2 → with every candidate tied on
@@ -194,60 +244,25 @@ class MlsJobsMainSpec extends AnyFunSuite {
     // exactly run A's tried set, so a key-ordered budget would re-pick
     // it — the priority cascade must pick never-tried keys instead.
     val root = Files.createTempDirectory("graft_cli_budget").toString
-    // The February batch TWICE per key: the second slice carries an older
-    // source_as_of_date, so window 1 marks it outdated — exercising the
-    // 'Outdated record' reject leg deterministically.
-    MlsJob1Gate.synthesize(
-        MlsJob1Gate.rawBase(spark, dir, 2, "2024-02-01", tag = "x")
-          .unionByName(MlsJob1Gate.rawBase(spark, dir, 2, "2024-02-01",
-            tag = "x", soadTs = "2024-01-03 00:00:00")))
-      .drop("gate_batch").write.mode("overwrite").orc(s"$root/in_a")
-    // argv() names both in_a and in_b; in_b holds a batch outside every
-    // window this test uses (multi-dir scan still exercises, zero rows
-    // survive the load_date filter).
-    MlsJob1Gate.synthesize(
-        MlsJob1Gate.rawBase(spark, dir, 1, "2023-06-01", tag = "x"))
-      .drop("gate_batch").write.mode("overwrite").orc(s"$root/in_b")
-    MlsJob1Gate.dims.foreach { case (n, _, _) =>
-      MlsJob1Gate.dimDf(spark, n).write.mode("overwrite").orc(s"$root/dim_$n")
-    }
-    Files.writeString(Paths.get(root, "schema.json"), new String(
-      getClass.getResourceAsStream("/mls_listings_schema.json").readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8))
     val server = new graft.enrich.StubPropertyServer()
     val gateRoot = try {
-      def run(nowTs: String, modes: String): String = {
-        val a = JobsCli.parse(MlsJobCliGate.argv(root, "20240201", "20240228",
-          Seq("--property_id_source", "API",
-            "--property_id_api_endpoint", server.lookupUrl,
-            "--property_id_api_batch_size", "64",
-            "--property_id_api_sleep", "0",
-            "--property_id_modes", modes,
-            "--property_id_limit", "2")))
-        MlsJobsMain.runJob1(spark, a,
-          asOf = expr("DATE '2024-06-01'"),
-          now = expr(s"TIMESTAMP '$nowTs'"))
-      }
-      val gr = run("2024-07-01 00:00:00", "New")
+      val gr = cliRun(root, server, "2024-07-01 00:00:00",
+        Seq("--property_id_modes", "New", "--property_id_limit", "2"))
       val afterA = ManagedTable.read(spark, gr)
-      val keyOf = (r: org.apache.spark.sql.Row) =>
-        (r.getString(0), r.getString(1))
-      val triedA = afterA
-        .filter(col("asg_primary_id_source_queried_timestamp").isNotNull)
-        .select("mls", "mls_listing_id").collect().map(keyOf).toSet
-      val allKeys = afterA.select("mls", "mls_listing_id")
-        .collect().map(keyOf).toSet
+      val triedA = keys(afterA
+        .filter(col("asg_primary_id_source_queried_timestamp").isNotNull))
+      val allKeys = keys(afterA)
+      // --property_id_limit caps the lookups
       assert(triedA.size == 2)
       assert(allKeys.size >= 4,
         s"fixture too small for a non-vacuous budget test: ${allKeys.size}")
       // run A's budget, all-tied, picked the key-order head
       assert(triedA == allKeys.toSeq.sorted.take(2).toSet)
 
-      run("2024-08-01 00:00:00", "New,Null,Provisional,Final")
-      val pickedB = ManagedTable.read(spark, gr)
-        .filter(col("asg_primary_id_source_queried_timestamp") ===
-          to_timestamp(lit("2024-08-01 00:00:00")))
-        .select("mls", "mls_listing_id").collect().map(keyOf).toSet
+      cliRun(root, server, "2024-08-01 00:00:00", Seq(
+        "--property_id_modes", "New,Null,Provisional,Final",
+        "--property_id_limit", "2"))
+      val pickedB = lookedUpAt(gr, "2024-08-01 00:00:00")
       assert(pickedB.size == 2)
       assert(pickedB.intersect(triedA).isEmpty,
         "budget re-spent on already-tried keys — priority ordering not applied")
@@ -256,11 +271,21 @@ class MlsJobsMainSpec extends AnyFunSuite {
       assert(pickedB == (allKeys -- triedA).toSeq.sorted.take(2).toSet)
       gr
     } finally server.stop()
-    // reject dir: run-B overwrote with its rejected + appended outdated
+    // latest-wins at MLS grain: the stale-soad slice lost to the newer
+    // snapshot within run A's batch and to the curated row in run B
+    val soads = ManagedTable.read(spark, gateRoot)
+      .select(col("source_as_of_date").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(soads.contains(MlsJob1Gate.defaultSoad) && !soads.contains(staleSoad),
+      s"stale snapshot won latest-wins: $soads")
+    // --log_rejected_records: run B overwrote -r with its validation
+    // rejects, then appended its outdated rows
     val rejectLines = spark.read.text(s"$root/rejects")
     assert(rejectLines.count() > 0)
     assert(rejectLines.filter(col("value")
       .contains("Outdated record")).count() > 0)
+    assert(rejectLines.filter(col("value")
+      .contains("Invalid MLS code")).count() > 0)
     // Outdated-dump fidelity (curated.py:184-189): the dumped rows keep
     // their ORIGINAL bookkeeping values, not the window-recomputed ones.
     // The outdated rows are run-B's older-soad duplicates, transformed at
@@ -274,15 +299,65 @@ class MlsJobsMainSpec extends AnyFunSuite {
     assert(outdatedRows.filter(!col("create_timestamp")
       .cast("string").startsWith("2024-08-01")).count() == 0,
       "outdated dump carries recomputed create_timestamp, not the original")
-    // ORC mirror: asg bookkeeping columns stripped, primary id kept
+    // ORC mirror: asg bookkeeping columns stripped, primary id kept, and
+    // exactly --num_output_files (2) data files
     val mirror = spark.read.orc(s"$root/out")
     assert(mirror.columns.contains("asg_primary_id"))
     assert(mirror.columns.contains("asg_primary_id_final_flag"))
     assert(!mirror.columns.contains("asg_primary_id_load_status"))
     assert(mirror.count() == ManagedTable.read(spark, gateRoot).count())
+    assert(listNames(s"$root/out").count(_.endsWith(".orc")) == 2)
     // create-empty commit metadata (curated.py:325's userMetadata)
     val h = ManagedTable.commitHistoryWithMetadata(gateRoot)
     assert(h.head._3.contains("Create empty listings delta table"))
     assert(h.exists(_._3.exists(_.contains("job=listings_curated"))))
   }
+
+  test("CLI flag surface: --input_mls_list narrows the merge, widened " +
+      "--property_id_modes re-look-up tried keys, --vacuum_hrs 0 keeps " +
+      "only the live version") {
+    val root = Files.createTempDirectory("graft_cli_flags").toString
+    val isin = Seq("--input_mls_list", "MLS0")
+    val server = new graft.enrich.StubPropertyServer()
+    try {
+      // Run C: MLS0 only, mode New, budget 1 (argv's --vacuum_hrs 168).
+      val gr = cliRun(root, server, "2024-07-01 00:00:00",
+        isin ++ Seq("--property_id_modes", "New", "--property_id_limit", "1"))
+      val merged = keys(ManagedTable.read(spark, gr))
+      assert(merged.nonEmpty && merged.forall(_._1 == "MLS0"), s"$merged")
+      assert(spark.read.orc(s"$cliInputs/in_a")
+        .filter(col("mls") =!= "MLS0").count() > 0,
+        "fixture holds no other MLS code: the isin check is vacuous")
+      // the load_date window keeps in_b's June-2023 batch out entirely
+      assert(ManagedTable.read(spark, gr)
+        .filter(col("load_date") =!= "2024-02-01").isEmpty)
+      // isin filters before validation: no other code reaches -r either
+      assert(spark.read.json(s"$root/rejects")
+        .filter(col("mls") =!= "MLS0").count() == 0)
+      val triedC = lookedUpAt(gr, "2024-07-01 00:00:00")
+      assert(triedC.size == 1 && merged.size > 1)
+      assert(versionDirs(gr).size > 1)
+
+      // Run D: all modes, no budget, retention 0 h. Mode New alone skips
+      // the keys run C tried; the widened modes look every key up again.
+      cliRun(root, server, "2024-08-01 00:00:00", isin ++ Seq(
+        "--property_id_modes", "New,Null,Provisional,Final",
+        "--vacuum_hrs", "0"))
+      val lookedD = lookedUpAt(gr, "2024-08-01 00:00:00")
+      assert(triedC.subsetOf(lookedD))
+      assert(lookedD == keys(ManagedTable.read(spark, gr)))
+      assert(versionDirs(gr) == Seq(ManagedTable.currentVersion(gr)))
+    } finally server.stop()
+  }
+
+  private def listNames(dir: String): Seq[String] = {
+    val st = Files.list(Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala.map(_.getFileName.toString).toVector
+    } finally st.close()
+  }
+
+  private def versionDirs(root: String): Seq[Int] =
+    listNames(root).filter(_.matches("v\\d+")).map(_.drop(1).toInt).sorted
 }
