@@ -13,9 +13,10 @@ import graft.sources.TableIO.table
   * under the hash bar:
   *
   *  - a non-empty key batch routes through the REAL BatchLookup.enrich
-  *    machinery (countApprox partition sizing → mapPartitions batched
-  *    client) with a deterministic arithmetic client, emitting one
-  *    `kase='lookup'` row per key with the client-computed value;
+  *    machinery (exact count → rows dealt into batches of at most the
+  *    batch size → one client call per batch) with a deterministic
+  *    arithmetic client, emitting one `kase='lookup'` row per key with the
+  *    client-computed value;
   *  - an empty key frame hits the guard, the client is never invoked, and
   *    one `kase='empty_guard'` row records `skipped=true` (a broken guard
   *    would record false and hash-mismatch).

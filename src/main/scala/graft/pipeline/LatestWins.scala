@@ -28,31 +28,43 @@ object LatestWins {
     * reject leg to reconstruct what a record looked like must see the
     * record as it arrived, not post-recompute bookkeeping.
     *
-    * Scale: one shuffle on `keys` shared by the window and the min/max
-    * recompute (same partitioning, Catalyst plans a single exchange). */
+    * Scale: both outputs are `_from = 'new'` rows, so a curated row whose
+    * key is absent from the batch can reach neither — not as a winner, not
+    * as an outdated row, not through the per-key min/max. `curated` is
+    * therefore left-semi-joined to the batch's keys (null-safe, keys
+    * broadcast: the batch is the small side) before the union, and
+    * the window's one shuffle on `keys` moves batch-sized data, not
+    * table-sized. The ranked new rows are lazily checkpointed once;
+    * `latest` and `outdated` both read them, so the window runs once
+    * however many actions consume the two outputs. */
   def dedupe(fresh: DataFrame, curated: DataFrame, keys: Seq[String],
              ordering: Seq[Column],
              recomputeMin: Seq[String] = Nil,
              recomputeMax: Seq[String] = Nil): Deduped = {
+    val batchKeys = fresh.select(keys.map(col): _*)
+      .toDF(keys.map("_k_" + _): _*)
+    val touched = curated.join(broadcast(batchKeys),
+      keys.map(k => col(k) <=> col("_k_" + k)).reduce(_ && _), "left_semi")
     val tagged = fresh.withColumn("_from", lit("new"))
-      .unionByName(curated.withColumn("_from", lit("curated")))
+      .unionByName(touched.withColumn("_from", lit("curated")))
     val keyWindow = Window.partitionBy(keys.map(col): _*)
     val ranked0 = tagged.withColumn("_rownum",
       row_number().over(keyWindow.orderBy(ordering :+ col("_from").desc: _*)))
     val rc = recomputeMin.map(c => c -> min(col(c)).over(keyWindow)) ++
       recomputeMax.map(c => c -> max(col(c)).over(keyWindow))
-    val ranked = ranked0.withColumns(
-      rc.map { case (c, e) => s"_rc_$c" -> e }.toMap)
+    // Only NEW rows are ever emitted (curated.py:166-189 filter both legs
+    // on `_from == 'new'`): a curated row superseded by the batch is simply
+    // replaced, not written to the reject/outdated leg.
+    val rankedNew = ranked0
+      .withColumns(rc.map { case (c, e) => s"_rc_$c" -> e }.toMap)
+      .filter(col("_from") === "new")
+      .localCheckpoint(eager = false)
     val aux = Seq("_rownum", "_from") ++ rc.map { case (c, _) => s"_rc_$c" }
     Deduped(
-      latest = ranked.filter(col("_rownum") === 1 && col("_from") === "new")
+      latest = rankedNew.filter(col("_rownum") === 1)
         .withColumns(rc.map { case (c, _) => c -> col(s"_rc_$c") }.toMap)
         .drop(aux: _*),
-      // Only NEW rows that lost are "outdated" (curated.py:184 filters
-      // `_from == 'new' AND _rownum > 1`): a curated row superseded by the
-      // batch is simply replaced, not written to the reject/outdated leg.
-      outdated = ranked.filter(col("_rownum") > 1 && col("_from") === "new")
-        .drop(aux: _*))
+      outdated = rankedNew.filter(col("_rownum") > 1).drop(aux: _*))
   }
 
   /** Like `dedupe` but keeps the per-key winner regardless of provenance —

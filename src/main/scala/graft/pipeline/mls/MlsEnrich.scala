@@ -10,7 +10,7 @@ import graft.enrich.BatchLookup
   * mls_listings_transform.py:483-572 + mls_listings_curated.py:236-271):
   * canonicalize one lookup per distinct address via a max-over-window
   * ReferenceID, batch the distinct addresses through the external client
-  * (partition-sized, one call per partition), decode the result status with
+  * (at most `batchSize` addresses per call), decode the result status with
   * the reference's exact three-condition CASE (the third condition is
   * intentional per the reference's own comment at transform.py:545-546),
   * then attach results with the order-sensitive asg_* recompute —
@@ -54,9 +54,14 @@ object MlsEnrich {
       // lookups, not corrupt keys.
       xxhash64(col("mls"), col("mls_listing_id")).as("UniqueID"))
       .withColumn("ReferenceID", max(col("UniqueID")).over(addrWindow))
+      // read twice: by the distinct addresses below and by the result join
+      .localCheckpoint(eager = false)
 
+    // Materialized once: the emptiness guard, the batch sizing and the
+    // batched calls all read these blocks instead of re-running the
+    // budget → address window → distinct chain.
     val distinctAddrs = forLkp.select("StreetAddress", "City", "StateAbbr",
-      "Zip5", "Unit", "ReferenceID").distinct()
+      "Zip5", "Unit", "ReferenceID").distinct().localCheckpoint()
     if (distinctAddrs.isEmpty) None
     else {
       val raw = BatchLookup.enrich(spark, distinctAddrs, client, batchSize,

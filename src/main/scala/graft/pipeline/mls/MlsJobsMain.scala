@@ -22,10 +22,15 @@ import graft.sources.{ManagedTable, MergeClauses, TableIO, VersionedLayout}
   * oracle gate pins both — which is what makes the CLI path
   * hash-checkable.
   *
-  * Scale notes: the dims broadcast (MlsValidate/attachGeo), the two
-  * windows and the merge shuffle once on (mls, mls_listing_id), the
-  * lookup leg batches partition-sized service calls, and the final ORC
-  * mirror is file-count-controlled — the same shapes the e2e gates pin.
+  * Scale notes: every intermediate that feeds two outputs executes once —
+  * validation (reject leg + transform), the ranked window output (outdated
+  * leg + lookup + merge) and the lookup's address frame. The dims
+  * broadcast (MlsValidate/attachGeo); the windows shuffle only the batch's
+  * keys and their curated versions ([[LatestWins.dedupe]]), so the nightly
+  * window cost follows the batch, not the table; the merge shuffles once
+  * on (mls, mls_listing_id); the lookup leg sends service batches of at
+  * most `--property_id_api_batch_size` rows; and the final ORC mirror is
+  * file-count-controlled.
   */
 object MlsJobsMain {
 
@@ -124,11 +129,11 @@ object MlsJobsMain {
     val (good, rejected) = MlsValidate.validateListings(
       listings, boards, states, zipcodes, psub)
     // LAZY lineage truncation, same as the e2e gates (MlsJob1Gate.job1E2e):
-    // the run fires several actions over this frame (the outdated-reject
-    // dump and the merge), and without the checkpoint each one re-analyzes
-    // AND re-executes the many-thousand-expression transform tree. Lazy:
-    // the plan is truncated at analysis time, the blocks persist inside
-    // whichever action computes them first.
+    // dedupe reads this frame twice (its batch keys and the window input),
+    // and without the checkpoint each read re-analyzes AND re-executes the
+    // many-thousand-expression transform tree. Lazy: the plan is truncated
+    // at analysis time, the blocks persist inside whichever job computes
+    // them first. Validation itself is checkpointed inside MlsValidate.
     val fresh = MlsFullTransform.transformKeeping(targetSchema, Nil)(
       good, counties, geoIds, asOf, now)
       .localCheckpoint(eager = false)
@@ -141,17 +146,15 @@ object MlsJobsMain {
       else fresh.limit(0)
     // dd.outdated carries each losing row's ORIGINAL bookkeeping values
     // (LatestWins applies the min/max recompute to winners only), matching
-    // the reference's reject dump exactly (curated.py:184-189).
+    // the reference's reject dump exactly (curated.py:184-189). Both legs
+    // read dedupe's one checkpointed window output, so the lookup branch,
+    // the attach join and the final projection below reference a
+    // batch-sized materialized frame, not the window subtree.
     val dd = LatestWins.dedupe(fresh, curated, keys, window1Ordering,
       recomputeMin = Seq("create_timestamp"),
       recomputeMax = asgRecomputeMax)
-    // Lazy-checkpointed for the same reason: the merge action's DAG
-    // references this frame up to three times (the mode-filter/budget
-    // branch, the attach join's probe side, and the final projection) —
-    // truncation plans the window subtree once, not once per reference.
     val latest = dd.latest.withColumn("asg_primary_id_load_status",
       coalesce(col("asg_primary_id_load_status"), lit("Null")))
-      .localCheckpoint(eager = false)
 
     // ---- property-id lookup (curated.py:194-271) -----------------------
     val resolved: DataFrame = a.propertyIdSource match {

@@ -120,7 +120,10 @@ object MlsValidate {
     // (transform.py:122-124).
     val kept = keepColumns(flagged, c => c.startsWith("listings_") ||
       Seq("states_state", "_reject_flags", "_reject_reasons").contains(c))
-    val renamed = stripPrefix(kept, "listings_")
+    // Lazily checkpointed so the split runs the scan, the four joins and
+    // the all-column dropDuplicates shuffle once, whichever of the two
+    // legs is consumed first; the other reads the persisted blocks.
+    val renamed = stripPrefix(kept, "listings_").localCheckpoint(eager = false)
 
     (renamed.filter(col("_reject_flags") === 0),
       renamed.filter(col("_reject_flags") > 0))

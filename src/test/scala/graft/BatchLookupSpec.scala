@@ -12,6 +12,15 @@ class FakeLookupClient extends BatchLookup.LookupClient {
     batch.map(r => Row(r.getInt(0), s"P-${r.getInt(0)}"))
 }
 
+/** Tags every output row with its call: (id, the call's first id, the
+  * call's row count). */
+class CallTaggingClient extends BatchLookup.LookupClient {
+  override def lookup(batch: Seq[Row]): Seq[Row] = {
+    val call = batch.head.getLong(0)
+    batch.map(r => Row(r.getLong(0), call, batch.size))
+  }
+}
+
 class BatchLookupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -29,6 +38,26 @@ class BatchLookupSpec extends AnyFunSuite {
     assert(got.head == (1, "P-1") && got.last == (97, "P-97"))
     // partition count ≈ ceil(97/10); repartition produced ≥ input rows / batch
     assert(out.rdd.getNumPartitions == 10)
+  }
+
+  test("calls carry at most batchSize rows over a multi-partition input") {
+    val b = 10
+    val tagSchema = StructType(Seq(StructField("id", LongType),
+      StructField("call", LongType), StructField("size", IntegerType)))
+    // 7 uneven input partitions; at n = 2b a round-robin repartition into
+    // 2 partitions dealt one call 12 rows. The frame is materialized, as
+    // the enrich contract asks.
+    for (n <- Seq(b - 1, b, b + 1, 2 * b, 3 * b + 2)) {
+      val keys = spark.range(0, n, 1, numPartitions = 7).toDF("id")
+        .localCheckpoint()
+      val got = BatchLookup.enrich(spark, keys, new CallTaggingClient,
+        batchSize = b, tagSchema).as[(Long, Long, Int)].collect().toSeq
+      assert(got.map(_._1).sorted == (0L until n.toLong), s"n=$n")
+      val calls = got.groupBy(_._2)
+      assert(calls.size == (n + b - 1) / b, s"n=$n calls")
+      assert(calls.values.forall(rs => rs.size == rs.head._3 && rs.size <= b),
+        s"n=$n sizes ${calls.values.map(_.size)}")
+    }
   }
 
   test("empty input yields empty enrichment without calling the service") {

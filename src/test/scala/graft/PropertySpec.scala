@@ -232,4 +232,79 @@ class PropertySpec extends AnyFunSuite {
       assert(fast.collect().toSet == plain.collect().toSet)
     }
   }
+
+  // (k1, k2, dt, v, lo, hi): key (k1, k2) with a nullable k2; ordering
+  // (dt, v) desc; `lo` takes the per-key min, `hi` (nullable) the max.
+  private type LwRow = (Int, Option[String], Int, Int, Int, Option[Int])
+  private val lwCols = Seq("k1", "k2", "dt", "v", "lo", "hi")
+
+  private def lwRow(maxK1: Int): Gen[LwRow] = for {
+    k1 <- Gen.chooseNum(1, maxK1)
+    k2 <- Gen.oneOf(None, Some("a"), Some("b"))
+    dt <- Gen.chooseNum(1, 4)
+    v <- Gen.chooseNum(0, 2)
+    lo <- Gen.chooseNum(-50, 50)
+    hi <- Gen.option(Gen.chooseNum(-50, 50))
+  } yield (k1, k2, dt, v, lo, hi)
+
+  /** (fresh, curated, extra): fresh is unique on (key, dt, v) so window
+    * ranks are deterministic; curated holds copies of some fresh rows
+    * (new-vs-curated ties on every ordering column) with other lo/hi;
+    * extra holds curated rows whose keys are absent from fresh. */
+  private val pruneGen = for {
+    fresh0 <- Gen.listOf(lwRow(3))
+    cur0 <- Gen.listOf(lwRow(3))
+    tieSeed <- Gen.listOf(Gen.chooseNum(0, 1000))
+    extra0 <- Gen.listOf(lwRow(4))
+  } yield {
+    val fresh = fresh0.distinctBy(r => (r._1, r._2, r._3, r._4))
+    val ties = fresh.zip(tieSeed).collect { case (r, t) if t % 3 == 0 =>
+      (r._1, r._2, r._3, r._4, r._5 - t, Some(t)) }
+    val freshKeys = fresh.map(r => (r._1, r._2)).toSet
+    (fresh, cur0 ++ ties, extra0.filterNot(r => freshKeys((r._1, r._2))))
+  }
+
+  /** Latest-wins by hand: per key, rank new ∪ curated by (dt, v) desc with
+    * new before curated on ties; a new winner takes min(lo)/max(hi) over
+    * all the key's rows, the other new rows are outdated as they came. */
+  private def lwModel(fresh: Seq[LwRow], cur: Seq[LwRow])
+      : (Seq[LwRow], Seq[LwRow]) = {
+    val byKey = (fresh.map(_ -> 1) ++ cur.map(_ -> 0)).groupBy(t => (t._1._1, t._1._2))
+    val ranked = byKey.values.map(_.sortBy { case (r, isNew) => (-r._3, -r._4, -isNew) })
+    val latest = ranked.collect { case rs if rs.head._2 == 1 =>
+      val his = rs.flatMap(_._1._6)
+      rs.head._1.copy(_5 = rs.map(_._1._5).min,
+        _6 = if (his.isEmpty) None else Some(his.max))
+    }
+    val outdated = ranked.flatMap(_.tail.collect { case (r, 1) => r })
+    (latest.toSeq.sortBy(_.toString), outdated.toSeq.sortBy(_.toString))
+  }
+
+  test("latest-wins ignores curated keys absent from the batch") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[LwRow] =
+      df.select(lwCols.map(col): _*).collect().map(r => (r.getInt(0),
+        Option(r.getString(1)), r.getInt(2), r.getInt(3), r.getInt(4),
+        if (r.isNullAt(5)) None else Some(r.getInt(5)))).toSeq.sortBy(_.toString)
+    val seen = scala.collection.mutable.Set[String]()
+    for ((fresh, cur, extra) <- cases(pruneGen, n = 8)) {
+      val f = fresh.toDF(lwCols: _*)
+      def dedupe(c: Seq[LwRow]) = {
+        val dd = LatestWins.dedupe(f, c.toDF(lwCols: _*), Seq("k1", "k2"),
+          Seq(col("dt").desc, col("v").desc),
+          recomputeMin = Seq("lo"), recomputeMax = Seq("hi"))
+        (rows(dd.latest), rows(dd.outdated))
+      }
+      val base = dedupe(cur)
+      assert(base == lwModel(fresh, cur))
+      assert(dedupe(cur ++ extra) == base)
+      val all = fresh ++ cur
+      if (all.groupBy(r => (r._1, r._2)).exists(_._2.size > 1)) seen += "multi"
+      if (cur.exists(c => fresh.exists(r => r.productIterator.take(4).toSeq ==
+          c.productIterator.take(4).toSeq))) seen += "tie"
+      if (fresh.exists(r => r._2.isEmpty && cur.exists(c => c._1 == r._1 && c._2.isEmpty)))
+        seen += "null key both sides"
+      if (extra.nonEmpty) seen += "extra"
+    }
+    assert(seen == Set("multi", "tie", "null key both sides", "extra"))
+  }
 }

@@ -350,6 +350,30 @@ class MlsJobsMainSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("compute once: a Job-1 run scans each input dir once and the live " +
+      "curated version at most twice") {
+    val root = Files.createTempDirectory("graft_cli_once").toString
+    val server = new graft.enrich.StubPropertyServer()
+    try {
+      val gr = cliRun(root, server, "2024-07-01 00:00:00",
+        Seq("--property_id_modes", "New", "--property_id_limit", "2"))
+      val live = s"/v${ManagedTable.currentVersion(gr)}"
+      val scans = ScanLog.during(spark) {
+        cliRun(root, server, "2024-08-01 00:00:00", Seq(
+          "--property_id_modes", "New,Null,Provisional,Final",
+          "--property_id_limit", "2"))
+      }
+      def scansOf(suffix: String) = scans.count(_.endsWith(suffix))
+      // validation's scan + joins + dropDuplicates feed both the reject
+      // leg and the transform: one execution
+      assert(scansOf("/in_a") == 1, scans)
+      assert(scansOf("/in_b") == 1, scans)
+      // the dedupe window and the merge target; the lookup branch and the
+      // outdated leg read the window's materialized output
+      assert(scansOf(live) >= 1 && scansOf(live) <= 2, scans)
+    } finally server.stop()
+  }
+
   private def listNames(dir: String): Seq[String] = {
     val st = Files.list(Paths.get(dir))
     try {
@@ -360,4 +384,58 @@ class MlsJobsMainSpec extends AnyFunSuite {
 
   private def versionDirs(root: String): Seq[Int] =
     listNames(root).filter(_.matches("v\\d+")).map(_.drop(1).toInt).sorted
+}
+
+/** Root paths of every file scan the queries of a block execute, from the
+  * executed plans a [[QueryExecutionListener]] sees (lazy checkpoints
+  * report theirs as a `localCheckpoint` action). */
+object ScanLog {
+  import java.util.concurrent.ConcurrentLinkedQueue
+  import scala.jdk.CollectionConverters._
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec,
+    QueryExecution, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+    QueryStageExec}
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  private val Start = "graft_scanlog_start"
+  private val End = "graft_scanlog_end"
+
+  def roots(p: SparkPlan): Seq[String] = p match {
+    case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+    case a: AdaptiveSparkPlanExec => roots(a.executedPlan)
+    case q: QueryStageExec => roots(q.plan)
+    case c: CommandResultExec => roots(c.commandPhysicalPlan)
+    case other => (other.children ++ other.subqueries).flatMap(roots)
+  }
+
+  /** Events arrive in order on one bus, but after their query returns:
+    * a start and an end marker query bracket `body`, so events of earlier
+    * queries are skipped and every event of `body` is in when it returns. */
+  def during(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    @volatile var recording = false
+    @volatile var drained = false
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val plan = qe.logical.toString
+        if (plan.contains(Start)) recording = true
+        else if (plan.contains(End)) drained = true
+        else if (recording) roots(qe.executedPlan).foreach(seen.add)
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def marker(name: String) = spark.range(1).selectExpr(s"id AS $name").collect()
+    spark.listenerManager.register(l)
+    try {
+      marker(Start)
+      body
+      marker(End)
+      val deadline = System.currentTimeMillis() + 20000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(drained, "query listener events never drained")
+    } finally spark.listenerManager.unregister(l)
+    seen.asScala.toSeq
+  }
 }

@@ -5,6 +5,7 @@ dumps, run each oracle SQL in DuckDB over the same testdata views, and compare
 
 Usage: python3 tools/check.py [verify_out_dir] [sf_dir]
 (Run `sbt "runMain graft.Verify <sf_dir> <out_dir>"` first.)
+Exits 1 on any mismatch, and when no result with an oracle was compared.
 """
 import sys, os, json, math
 import duckdb
@@ -39,6 +40,7 @@ def values_equal(a, b):
     return a == b
 
 fail = 0
+compared = 0
 names = sorted(d for d in os.listdir(out_dir)
                if os.path.isdir(os.path.join(out_dir, d)))
 for name in names:
@@ -47,6 +49,7 @@ for name in names:
         print(f"  {name}: NO-ORACLE rows={len(spark_df)}"
               + (" !! EMPTY" if len(spark_df) == 0 else ""))
         continue
+    compared += 1
     try:
         duck_df = con.execute(oracles[name]).fetchdf()
     except Exception as e:
@@ -80,4 +83,8 @@ for name in names:
         print(f"  {name}: OK rows={len(a)}")
 
 print(f"\n{len(names) - fail}/{len(names)} queries pass")
-sys.exit(1 if fail else 0)
+if compared == 0:
+    # A failed Verify leaves no result dirs: comparing nothing is a failure,
+    # not a pass.
+    print(f"no query result with an oracle in {out_dir}: nothing compared")
+sys.exit(1 if fail or compared == 0 else 0)
