@@ -416,33 +416,25 @@ object CurationMm {
 
   /** Banded delta pairs over a combined (phash, n_copies, canon) group
     * frame: every near pair (Hamming ≤ `maxHamming`) with at least one
-    * NEW-group endpoint (`isNew` over `canon`). The corpus side carries
-    * the windowed skew cap ([[SkewCap.dropOverCap]], observable); the
-    * probe side is the new groups only, so cost is O(delta × colliding
-    * band buckets), never corpus². Emitted un-normalized (both
-    * orientations may appear for new-new pairs) — the CC consumer
-    * symmetrizes anyway. */
-  private def deltaHashPairs(groups: DataFrame, isNew: Column,
-                             maxHamming: Int, capMetric: String): DataFrame = {
-    val banded = MultimodalQueries.bandedHash(
-      groups.select(col("phash"), col("canon")), maxHamming)
-    val corp = SkewCap.dropOverCap(banded,
-      Seq(col("band"), col("chunk")), 100000, capMetric)
+    * NEW-group endpoint (`isNew` over `canon`) — a [[BandJoin.probe]]
+    * of the new groups into the capped corpus index, so cost is
+    * O(delta × colliding band buckets), never corpus². Emitted
+    * un-normalized (both orientations may appear for new-new pairs) —
+    * the CC consumer symmetrizes anyway. */
+  private[graft] def deltaHashPairs(groups: DataFrame, isNew: Column,
+                                    maxHamming: Int,
+                                    capMetric: String): DataFrame = {
+    val banded = BandJoin.bands(groups.select(col("phash"), col("canon")),
+      "phash", MultimodalQueries.phashBits, maxHamming)
     // No broadcast hint: the probe side is delta-SIZED, not delta-SMALL
     // (an ingest batch can be any fraction of the corpus), so the join
     // strategy is left to the planner — AQE broadcasts a small probe at
     // runtime and falls back to shuffle join beyond the broadcast limit.
-    val probe = banded.filter(isNew)
-    corp.alias("a")
-      .join(probe.alias("b"),
-        col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-          col("a.phash") =!= col("b.phash"))
-      // Hamming filter BEFORE the distinct (guide §2.3 — filter is
-      // per-row codegen, the distinct is an exchange): band collisions
-      // that fail the radius never reach the shuffle, and duplicates of
-      // surviving pairs are dropped by the same distinct as before.
-      .filter(bit_count(col("a.phash").bitwiseXOR(col("b.phash")))
-        <= maxHamming)
+    BandJoin.withinHamming(
+        BandJoin.probe(banded, banded.filter(isNew), Seq("band", "chunk"),
+          col("a.phash") =!= col("b.phash"),
+          Some(BandJoin.Cap(100000, capMetric))),
+        "phash", maxHamming)
       .select(col("a.canon").as("canon_a"), col("b.canon").as("canon_b"))
       .distinct()
   }
@@ -1494,7 +1486,8 @@ object CurationMm {
       .filter(col("kept") === "true" && col("split") === "train")
       .select(col("doc_id"))
     val att = attachments(s, dir).join(train, "doc_id")
-    def banded(df: DataFrame) = MultimodalQueries.bandedHash(df, maxHamming)
+    def banded(df: DataFrame) =
+      BandJoin.bands(df, "phash", MultimodalQueries.phashBits, maxHamming)
     def leg(hashPath: String, idCol: String, attCol: String,
             modality: String): DataFrame = {
       val hash = graft.sources.TableIO.readStatic(s, hashPath)
@@ -1506,13 +1499,9 @@ object CurationMm {
       // no broadcast hint: a REAL benchmark set is fixed-size and would
       // broadcast on its own; this stand-in scales with the corpus, so
       // the strategy stays with the planner (AQE broadcasts when small)
-      banded(docH).alias("a")
-        .join(banded(bench).alias("b"),
-          col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk"))
-        .withColumn("hamming",
-          bit_count(col("a.phash").bitwiseXOR(col("b.phash")))
-            .cast(org.apache.spark.sql.types.IntegerType))
-        .filter(col("hamming") <= maxHamming)
+      BandJoin.withinHamming(
+          BandJoin.probe(banded(docH), banded(bench), Seq("band", "chunk")),
+          "phash", maxHamming)
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("bench_id")).as("n_bench_hits"),
           min(col("hamming")).as("min_hamming"))

@@ -169,20 +169,49 @@ object MultimodalQueries {
     * PCM frames; tag/info variants differ by tens of bytes). */
   private def wavBytesOf(id: Long): Long = {
     val (n, _, _, _, c) = audioParams(id)
-    44L + 2L * n * c
+    wavBytes(n, c)
   }
 
+  /** Byte length of a canonical RIFF file (44-byte header) holding `n`
+    * 16-bit PCM frames of `c` channels. */
+  private def wavBytes(n: Int, c: Int): Long = 44L + 2L * n * c
+
+  /** A little-endian buffer of [[wavBytes]]`(n, c)` + `info` bytes
+    * holding the canonical RIFF header (8 kHz, 16-bit PCM) with `info`
+    * between the `fmt ` and `data` chunks, positioned at the first
+    * sample: the encoder then puts exactly n·c samples. */
+  private def pcmWav(n: Int, c: Int,
+      info: Array[Byte] = Array.emptyByteArray): java.nio.ByteBuffer = {
+    val sr = 8000
+    val dataLen = n * c * 2
+    java.nio.ByteBuffer.allocate(wavBytes(n, c).toInt + info.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put("RIFF".getBytes("US-ASCII")).putInt(36 + info.length + dataLen)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1).putShort(c.toShort).putInt(sr)
+      .putInt(sr * c * 2).putShort((c * 2).toShort).putShort(16)
+      .put(info)
+      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+  }
+
+  /** One payload per document, (doc_id, payload) — see [[payloadRows]]. */
   private def payloadFixture(s: SparkSession, dir: String, name: String,
                              sizedBy: Option[Long => Long] = None)
-                            (encode: Long => Array[Byte]): String = {
+                            (encode: Long => Array[Byte]): String =
+    payloadRows(s, dir, name, "doc_id", sizedBy)(id => Seq(id -> encode(id)))
+
+  /** (`idCol`, payload) fixture table, encoded distributed once per sf
+    * dir: `rows(doc_id)` emits the document's (id, payload) rows. */
+  private def payloadRows(s: SparkSession, dir: String, name: String,
+                          idCol: String, sizedBy: Option[Long => Long] = None)
+                         (rows: Long => Seq[(Long, Array[Byte])]): String = {
     val root = graft.sources.ScratchDirs.memoized(name, dir) { r =>
       val ids = sizedBy.fold(fixtureIds(s, dir))(fixtureIdsSizedBy(s, dir, _))
-      val rows = ids.rdd.mapPartitions(_.map { row =>
-        val id = row.getLong(0)
-        Row(id, encode(id))
-      })
-      s.createDataFrame(rows, StructType(Seq(
-          StructField("doc_id", LongType),
+      s.createDataFrame(ids.rdd.mapPartitions(_.flatMap(row =>
+          rows(row.getLong(0)).map { case (id, payload) => Row(id, payload) })),
+        StructType(Seq(
+          StructField(idCol, LongType),
           StructField("payload", BinaryType))))
         .write.parquet(s"$r/data")
     }
@@ -681,25 +710,13 @@ object MultimodalQueries {
   private def encodeVideoStatic(id: Long): Array[Byte] =
     gftvContainer(Seq.fill(3)(encodePngGrid(id * 31 + 1)))
 
-  private[operators] def videoClipFixture(s: SparkSession, dir: String): String = {
-    val root = graft.sources.ScratchDirs.memoized("mm_gftv2_fix", dir) { r =>
-      val ids = fixtureIds(s, dir)
-      val rows = ids.rdd.mapPartitions(_.flatMap { row =>
-        val id = row.getLong(0)
-        val base = Row(id * 2, encodeVideoClip(id, twin = false))
-        if (id % 4 == 0)
-          Iterator(base, Row(id * 2 + 1, encodeVideoClip(id, twin = true)))
-        else if (id % 4 == 2)
-          Iterator(base, Row(id * 2 + 1, encodeVideoStatic(id)))
-        else Iterator(base)
-      })
-      s.createDataFrame(rows, StructType(Seq(
-          StructField("video_id", LongType),
-          StructField("payload", BinaryType))))
-        .write.parquet(s"$r/vid")
+  private[operators] def videoClipFixture(s: SparkSession, dir: String): String =
+    payloadRows(s, dir, "mm_gftv2_fix", "video_id") { id =>
+      val base = id * 2 -> encodeVideoClip(id, twin = false)
+      if (id % 4 == 0) Seq(base, id * 2 + 1 -> encodeVideoClip(id, twin = true))
+      else if (id % 4 == 2) Seq(base, id * 2 + 1 -> encodeVideoStatic(id))
+      else Seq(base)
     }
-    s"$root/vid"
-  }
 
   /** Frame table of the clip fixture — the same decode-once discipline
     * as [[videoFrameTablePath]], minimal (video, frame, phash) schema. */
@@ -820,12 +837,8 @@ object MultimodalQueries {
       .select(col(idCol), explode(col("shs")).as("shingle"))
       .withColumn("n_sh", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(idCol)))
-    val capped = SkewCap.dropOverCap(vs, Seq(col("shingle")), maxDf,
-      capMetric, failOnDrop = failOnDrop)
-    capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
+    BandJoin.self(vs, Seq("shingle"), col(s"a.$idCol") < col(s"b.$idCol"),
+        Some(BandJoin.Cap(maxDf, capMetric, failOnDrop)))
       .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .agg(count(lit(1)).as("n_shared"),
         max(col("a.n_sh")).as("n_a"), max(col("b.n_sh")).as("n_b"))
@@ -869,8 +882,6 @@ object MultimodalQueries {
   private def encodeWavContainer(id: Long, info: Option[String],
                                  tagId: Boolean = false): Array[Byte] = {
     val (n, h, a, b, c) = audioParams(id)
-    val sr = 8000
-    val dataLen = n * c * 2
     // LIST chunk: "LIST" + size + "INFO" + "IART" + size + text (padded even)
     val infoBytes = info.map { t =>
       val txt0 = t.getBytes("US-ASCII")
@@ -882,15 +893,7 @@ object MultimodalQueries {
         .put("IART".getBytes("US-ASCII")).putInt(txt.length).put(txt)
       chunk.array()
     }.getOrElse(Array.emptyByteArray)
-    val buf = java.nio.ByteBuffer.allocate(44 + infoBytes.length + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + infoBytes.length + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(c.toShort).putInt(sr)
-      .putInt(sr * c * 2).putShort((c * 2).toShort).putShort(16)
-      .put(infoBytes)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    val buf = pcmWav(n, c, infoBytes)
     var i = 0
     while (i < n) {
       val v = if (tagId && i < 4) idTagSample(id, i)
@@ -949,28 +952,16 @@ object MultimodalQueries {
     * LIST/INFO metadata chunk, the re-wrap a tag editor produces. The
     * [[pngNearFixture]] contract: seeded positives byte-level identity
     * provably misses. */
-  private[operators] def wavDupFixture(s: SparkSession, dir: String): String = {
-    val root = graft.sources.ScratchDirs.memoized("mm_wavdup_fix", dir) { r =>
-      val ids = fixtureIdsSizedBy(s, dir,
-        id => wavBytesOf(id) * (if (id % 5 == 0) 2 else 1))
-      val rows = ids.rdd.mapPartitions(_.flatMap { row =>
-        val id = row.getLong(0)
-        // tagId stamps the doc id into the PCM so streams are
-        // collision-free at ANY corpus size (see encodeWavContainer)
-        val base = Row(id * 2, encodeWavContainer(id, None, tagId = true))
-        if (id % 5 == 0)
-          Iterator(base,
-            Row(id * 2 + 1,
-              encodeWavContainer(id, Some(s"artist-$id"), tagId = true)))
-        else Iterator(base)
-      })
-      s.createDataFrame(rows, StructType(Seq(
-          StructField("audio_id", LongType),
-          StructField("payload", BinaryType))))
-        .write.parquet(s"$r/wav")
+  private[operators] def wavDupFixture(s: SparkSession, dir: String): String =
+    payloadRows(s, dir, "mm_wavdup_fix", "audio_id",
+        Some(id => wavBytesOf(id) * (if (id % 5 == 0) 2 else 1))) { id =>
+      // tagId stamps the doc id into the PCM so streams are
+      // collision-free at ANY corpus size (see encodeWavContainer)
+      val base = id * 2 -> encodeWavContainer(id, None, tagId = true)
+      if (id % 5 == 0) Seq(base, id * 2 + 1 ->
+        encodeWavContainer(id, Some(s"artist-$id"), tagId = true))
+      else Seq(base)
     }
-    s"$root/wav"
-  }
 
   /** Gapped waveform for the segmentation gate: the square wave of
     * [[audioParams]] with every fourth half-period SILENCED (samples 0)
@@ -979,16 +970,7 @@ object MultimodalQueries {
     * frames [4k·h, min((4k+3)·h, n) − 1], k < ⌈n / 4h⌉. */
   private def encodeWavGapped(id: Long): Array[Byte] = {
     val (n, h, a, b, c) = audioParams(id)
-    val sr = 8000
-    val dataLen = n * c * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(c.toShort).putInt(sr)
-      .putInt(sr * c * 2).putShort((c * 2).toShort).putShort(16)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    val buf = pcmWav(n, c)
     var i = 0
     while (i < n) {
       val j = i / h
@@ -1159,22 +1141,10 @@ object MultimodalQueries {
     *    twin sits at Hamming 1–3 from its base — the pair the BANDED
     *    search must recover. */
   private def encodeWavNear(id: Long, variant: Int): Array[Byte] = {
-    val m = (2 + id % 6).toInt
-    val c = (1 + id % 2).toInt
-    val rep = if (variant == 1) 2 else 1
+    val (n, c) = wavNearParams(id, variant)
     val gain = if (variant == 2) 2 else 1
     val j = (id % 56).toInt
-    val n = 57 * m * rep
-    val sr = 8000
-    val dataLen = n * c * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(c.toShort).putInt(sr)
-      .putInt(sr * c * 2).putShort((c * 2).toShort).putShort(16)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    val buf = pcmWav(n, c)
     var i = 0
     while (i < 57) {
       val seg = if (variant == 3) {
@@ -1182,7 +1152,7 @@ object MultimodalQueries {
       } else i
       val v = (nearAmp(id, seg) * gain).toShort
       var f = 0
-      while (f < m * rep) {
+      while (f < n / 57) {
         var k = 0
         while (k < c) { buf.putShort(v); k += 1 }
         f += 1
@@ -1192,30 +1162,29 @@ object MultimodalQueries {
     buf.array()
   }
 
-  private[graft] def wavNearFixture(s: SparkSession, dir: String): String = {
-    val root = graft.sources.ScratchDirs.memoized("mm_wavnear_fix", dir) { r =>
-      val ids = fixtureIdsSizedBy(s, dir, { id =>
-        // base + 2× resampled (id%3) + gain (id%4) + swap (id%5) twins
-        val one = 44L + 2L * (57 * (2 + id % 6)) * (1 + id % 2)
-        one * (1 + (if (id % 3 == 0) 2L else 0L) +
-          (if (id % 4 == 0) 1L else 0L) + (if (id % 5 == 0) 1L else 0L))
-      })
-      val rows = ids.rdd.mapPartitions(_.flatMap { row =>
-        val id = row.getLong(0)
-        val out = Vector.newBuilder[Row]
-        out += Row(id * 4, encodeWavNear(id, 0))
-        if (id % 3 == 0) out += Row(id * 4 + 1, encodeWavNear(id, 1))
-        if (id % 4 == 0) out += Row(id * 4 + 2, encodeWavNear(id, 2))
-        if (id % 5 == 0) out += Row(id * 4 + 3, encodeWavNear(id, 3))
-        out.result().iterator
-      })
-      s.createDataFrame(rows, StructType(Seq(
-          StructField("audio_id", LongType),
-          StructField("payload", BinaryType))))
-        .write.parquet(s"$r/wav")
-    }
-    s"$root/wav"
-  }
+  /** (frames, channels) of [[encodeWavNear]]'s payload: 57 segments of
+    * m = 2 + id % 6 frames, doubled for the resampled variant 1. */
+  private def wavNearParams(id: Long, variant: Int): (Int, Int) =
+    (57 * (2 + id % 6).toInt * (if (variant == 1) 2 else 1),
+      (1 + id % 2).toInt)
+
+  /** Variants [[wavNearFixture]] emits for `id`: the base, then the
+    * resampled (id % 3), gain (id % 4) and swap (id % 5) twins. */
+  private def wavNearVariants(id: Long): Seq[Int] =
+    0 +: Seq(1 -> 3, 2 -> 4, 3 -> 5).collect { case (v, m) if id % m == 0 => v }
+
+  /** (audio_id, payload) rows [[wavNearFixture]] emits for `id`. */
+  private[graft] def wavNearRows(id: Long): Seq[(Long, Array[Byte])] =
+    wavNearVariants(id).map(v => (id * 4 + v, encodeWavNear(id, v)))
+
+  /** Total payload bytes of [[wavNearRows]]`(id)`, from the encoder's
+    * own frame and channel counts. */
+  private[graft] def wavNearBytesOf(id: Long): Long =
+    wavNearVariants(id).map(v => (wavBytes _).tupled(wavNearParams(id, v))).sum
+
+  private[graft] def wavNearFixture(s: SparkSession, dir: String): String =
+    payloadRows(s, dir, "mm_wavnear_fix", "audio_id",
+      Some(wavNearBytesOf))(wavNearRows)
 
   /** 56-bit ENERGY-PROFILE fingerprint over decoded PCM: split the clip
     * into 57 equal time windows (⌊i·n/57⌋ boundaries — time-proportional,
@@ -1402,24 +1371,9 @@ object MultimodalQueries {
     * base's, but every shared CONSECUTIVE segment pair survives, which
     * is what the temporal-shingle gate detects. */
   private def encodeWavSplice(id: Long, twin: Boolean): Array[Byte] = {
-    val ns = (10 + id % 5).toInt
-    val segLen = (8 + 4 * (id % 2)).toInt
-    val c = (1 + id % 2).toInt
-    val zis: Seq[Int] =
-      if (!twin) 0 until ns
-      else Seq(ns) ++ (1 until ns) ++ Seq(ns + 1)
-    val gap = 2
-    val n = zis.size * segLen + (zis.size - 1) * gap
-    val sr = 8000
-    val dataLen = n * c * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(c.toShort).putInt(sr)
-      .putInt(sr * c * 2).putShort((c * 2).toShort).putShort(16)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    val (zis, segLen, n, c) = wavSpliceParams(id, twin)
+    val gap = wavSpliceGap
+    val buf = pcmWav(n, c)
     zis.zipWithIndex.foreach { case (zi, pos) =>
       var f = 0
       while (f < segLen) {
@@ -1436,28 +1390,43 @@ object MultimodalQueries {
     buf.array()
   }
 
-  private[graft] def wavSpliceFixture(s: SparkSession, dir: String): String = {
-    val root = graft.sources.ScratchDirs.memoized("mm_wavsplice_fix", dir) { r =>
-      val ids = fixtureIdsSizedBy(s, dir, { id =>
-        // ns segments of segLen frames + 2-frame gaps, ≤2 channels;
-        // the id%4 twin re-embeds the base plus head/tail segments
-        val one = 44L + 4L * ((10 + id % 5) * (10 + 4 * (id % 2)))
-        one * (if (id % 4 == 0) 2L else 1L)
-      })
-      val rows = ids.rdd.mapPartitions(_.flatMap { row =>
-        val id = row.getLong(0)
-        val base = Row(id * 2, encodeWavSplice(id, twin = false))
-        if (id % 4 == 0)
-          Iterator(base, Row(id * 2 + 1, encodeWavSplice(id, twin = true)))
-        else Iterator(base)
-      })
-      s.createDataFrame(rows, StructType(Seq(
-          StructField("audio_id", LongType),
-          StructField("payload", BinaryType))))
-        .write.parquet(s"$r/wav")
-    }
-    s"$root/wav"
+  private val wavSpliceGap = 2
+
+  /** (segment ids, segment frames, total frames, channels) of
+    * [[encodeWavSplice]]'s recording: the segments plus a
+    * [[wavSpliceGap]]-frame silence between neighbours. */
+  private def wavSpliceParams(id: Long,
+                              twin: Boolean): (Seq[Int], Int, Int, Int) = {
+    val ns = (10 + id % 5).toInt
+    val segLen = (8 + 4 * (id % 2)).toInt
+    val zis: Seq[Int] =
+      if (!twin) 0 until ns
+      else Seq(ns) ++ (1 until ns) ++ Seq(ns + 1)
+    (zis, segLen, zis.size * segLen + (zis.size - 1) * wavSpliceGap,
+      (1 + id % 2).toInt)
   }
+
+  /** Recordings [[wavSpliceFixture]] emits for `id`: the base, plus the
+    * spliced twin for every fourth doc. */
+  private def wavSpliceTwins(id: Long): Seq[Boolean] =
+    if (id % 4 == 0) Seq(false, true) else Seq(false)
+
+  /** (audio_id, payload) rows [[wavSpliceFixture]] emits for `id`. */
+  private[graft] def wavSpliceRows(id: Long): Seq[(Long, Array[Byte])] =
+    wavSpliceTwins(id).map(t =>
+      (id * 2 + (if (t) 1 else 0), encodeWavSplice(id, t)))
+
+  /** Total payload bytes of [[wavSpliceRows]]`(id)`, from the encoder's
+    * own frame and channel counts. */
+  private[graft] def wavSpliceBytesOf(id: Long): Long =
+    wavSpliceTwins(id).map { t =>
+      val (_, _, n, c) = wavSpliceParams(id, t)
+      wavBytes(n, c)
+    }.sum
+
+  private[graft] def wavSpliceFixture(s: SparkSession, dir: String): String =
+    payloadRows(s, dir, "mm_wavsplice_fix", "audio_id",
+      Some(wavSpliceBytesOf))(wavSpliceRows)
 
   /** Persisted segment-SIGNATURE table of the splice fixture: real
     * `javax.sound` decode + in-loop silence segmentation (the
@@ -1654,22 +1623,12 @@ object MultimodalQueries {
     * twin (img_id = 2·doc_id + 1) for every third document — the seeded
     * near-pairs the banded search must recover. Distributed encode, same
     * read-only memoization contract as [[pngFixture]]. */
-  private[operators] def pngNearFixture(s: SparkSession, dir: String): String = {
-    val root = graft.sources.ScratchDirs.memoized("mm_pngnear_fix", dir) { r =>
-      val ids = fixtureIds(s, dir)
-      val rows = ids.rdd.mapPartitions(_.flatMap { row =>
-        val id = row.getLong(0)
-        val base = Row(id * 2, encodePngBanded(id, 0))
-        if (id % 3 == 0) Iterator(base, Row(id * 2 + 1, encodePngBanded(id, 1)))
-        else Iterator(base)
-      })
-      s.createDataFrame(rows, StructType(Seq(
-          StructField("img_id", LongType),
-          StructField("payload", BinaryType))))
-        .write.parquet(s"$r/png")
+  private[operators] def pngNearFixture(s: SparkSession, dir: String): String =
+    payloadRows(s, dir, "mm_pngnear_fix", "img_id") { id =>
+      val base = id * 2 -> encodePngBanded(id, 0)
+      if (id % 3 == 0) Seq(base, id * 2 + 1 -> encodePngBanded(id, 1))
+      else Seq(base)
     }
-    s"$root/png"
-  }
 
   /** Decoded 56-bit dHash per payload of an (id, payload) fixture — real
     * `javax.imageio` decode where the bytes are (no shuffle). Shared by
@@ -1778,58 +1737,32 @@ object MultimodalQueries {
           inputDistinctPairs = true)
         .select(col("node").as("canon"), col("component").as("cluster_id")))
 
+  /** Width of the image dHash and the audio energy-profile fingerprint,
+    * the bit width every phash band join splits. */
+  private[operators] val phashBits = 56
+
   /** Banded candidate generation + exact-Hamming verify over a
     * (phash, canon, n_copies) group frame — stages 2-3 of the near-dup
-    * pipeline, shared by the pair gate and the cluster gate. Band count
-    * derives from the tolerance (`maxHamming + 1` bands of
-    * ⌈56 / nBands⌉ bits — pigeonhole-lossless, maximal per-band key
-    * space) and `maxBucket` drops degenerate (band, chunk) buckets
-    * before the self-join, the same windowed count-and-drop guard as
-    * [[Sketches.simhashPairs]] — it rides the exchange the join already
-    * pays. Recall effect: a pair agreeing ONLY on dropped buckets is
-    * lost, which is exactly the pathological flat-image cluster the cap
-    * exists to exclude (`PhashNeardupSpec` pins both directions on a
+    * pipeline, shared by the pair and cluster gates of the image and
+    * audio families: [[BandJoin]] over the 56-bit hash with the
+    * `maxBucket` skew cap (`PhashNeardupSpec` pins both directions on a
     * degenerate fixture). */
-  /** Banded (band, chunk) explode of a 56-bit `phash` column for
-    * Hamming ≤ `maxHamming` blocking — pigeonhole-lossless: nBands =
-    * maxHamming + 1 bands of ⌈56 / nBands⌉ bits, maximal per-band key
-    * space. ONE definition for every banded consumer (the group-pair
-    * joins, the incremental ingest's delta probes, the benchmark
-    * contamination screen) and the single mirror of the hardcoded
-    * banding constants in the DuckDB oracles. */
-  private[operators] def bandedHash(df: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 1 && maxHamming <= 6,
-      s"band tolerance must be in [1, 6]; got $maxHamming")
-    val nBands = maxHamming + 1
-    val chunkBits = (56 + nBands - 1) / nBands
-    val mask = (1L << chunkBits) - 1
-    df.select(df.columns.map(col) :+
-      posexplode(expr(s"transform(sequence(0, ${nBands - 1}), " +
-          s"b -> (phash >> (b * $chunkBits)) & $mask)"))
-        .as(Seq("band", "chunk")): _*)
-  }
-
   private[graft] def phashGroupPairs(grp: DataFrame, maxHamming: Int,
                                      maxBucket: Int = 100000,
                                      capMetric: String = "phash_band_cap",
-                                     failOnDrop: Boolean = false): DataFrame = {
-    val banded = bandedHash(
-      grp.select(col("phash"), col("canon"), col("n_copies")), maxHamming)
-    val capped = SkewCap.dropOverCap(banded,
-      Seq(col("band"), col("chunk")), maxBucket, capMetric,
-      failOnDrop = failOnDrop)
-    capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-          col("a.phash") < col("b.phash"))
+                                     failOnDrop: Boolean = false): DataFrame =
+    BandJoin.withinHamming(
+        BandJoin.self(BandJoin.bands(
+            grp.select(col("phash"), col("canon"), col("n_copies")),
+            "phash", phashBits, maxHamming),
+          Seq("band", "chunk"), col("a.phash") < col("b.phash"),
+          Some(BandJoin.Cap(maxBucket, capMetric, failOnDrop))),
+        "phash", maxHamming)
       .select(col("a.phash").as("ph_a"), col("b.phash").as("ph_b"),
         col("a.canon").as("canon_a"), col("b.canon").as("canon_b"),
-        col("a.n_copies").as("n_a"), col("b.n_copies").as("n_b"))
+        col("a.n_copies").as("n_a"), col("b.n_copies").as("n_b"),
+        col("hamming"))
       .distinct()
-      .withColumn("hamming",
-        bit_count(col("ph_a").bitwiseXOR(col("ph_b"))).cast(IntegerType))
-      .filter(col("hamming") <= maxHamming)
-  }
 
   def mmPhashNeardup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
     phashGroupPairs(phashGroups(s, dir), maxHamming)

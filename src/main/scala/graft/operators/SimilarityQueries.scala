@@ -365,22 +365,25 @@ object SimilarityQueries {
     // matches the oracle's.
     val sig = bandSignature(col("embedding"), nBands, rowsPerBand)
     val banded = c.select(col("vec_id"), posexplode(sig).as(Seq("band", "bucket")))
-    val cand = banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.vec_id") < col("r.vec_id"))
-      .select(col("l.vec_id").as("id_a"), col("r.vec_id").as("id_b"))
+    cosineVerified(c, BandJoin.self(banded, Seq("band", "bucket"),
+      col("a.vec_id") < col("b.vec_id")), threshold, candFilter)
+  }
+
+  /** Exact cosine verify of a [[BandJoin.self]] candidate join over the
+    * corpus `c`: distinct (id_a, id_b) pairs, then both endpoints'
+    * embeddings. An id-level candidate restriction (e.g. the recall
+    * gate's sample slice) commutes with exact verification — applying it
+    * BEFORE the verify joins cuts their work to the slice's share. */
+  private def cosineVerified(c: DataFrame, cand: DataFrame,
+                             threshold: Double,
+                             candFilter: Option[Column]): DataFrame = {
+    val pairs = cand
+      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
       .distinct()
-    // An id-level candidate restriction (e.g. the recall gate's sample
-    // slice) commutes with exact verification — applying it BEFORE the
-    // two verify joins cuts their work to the slice's share.
-    val kept = candFilter.fold(cand)(cand.filter)
-    kept
-      .join(c.select(col("vec_id").as("id_a"), col("embedding").as("e_a"),
-        col("norm").as("n_a")), "id_a")
-      .join(c.select(col("vec_id").as("id_b"), col("embedding").as("e_b"),
-        col("norm").as("n_b")), "id_b")
-      .withColumn("cos_sim",
-        dotProduct(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")))
+    BandJoin.withEndpoints(candFilter.fold(pairs)(pairs.filter),
+        c.select("vec_id", "embedding", "norm"), "vec_id", ("id_a", "id_b"))
+      .withColumn("cos_sim", dotProduct(col("embedding_a"),
+        col("embedding_b")) / (col("norm_a") * col("norm_b")))
       .filter(col("cos_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos_sim"))
   }
@@ -417,20 +420,8 @@ object SimilarityQueries {
         }: _*))), x => -x.getField("negid")), 1, nProbe)
     val probed = c.select(col("vec_id"),
         explode(probeCells(col("embedding"), col("norm"))).as("cell"))
-    val cand = probed.as("l").join(probed.as("r"),
-        col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
-      .select(col("l.vec_id").as("id_a"), col("r.vec_id").as("id_b"))
-      .distinct()
-    val kept = candFilter.fold(cand)(cand.filter)
-    kept
-      .join(c.select(col("vec_id").as("id_a"), col("embedding").as("e_a"),
-        col("norm").as("n_a")), "id_a")
-      .join(c.select(col("vec_id").as("id_b"), col("embedding").as("e_b"),
-        col("norm").as("n_b")), "id_b")
-      .withColumn("cos_sim",
-        dotProduct(col("e_a"), col("e_b")) / (col("n_a") * col("n_b")))
-      .filter(col("cos_sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
+    cosineVerified(c, BandJoin.self(probed, Seq("cell"),
+      col("a.vec_id") < col("b.vec_id")), threshold, candFilter)
   }
 
   /** Exact near-dup pairs restricted to a deterministic QUERY SAMPLE:

@@ -72,21 +72,16 @@ object Sketches {
       .select(col("doc_id"),
         posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
           s"b -> hash(b, slice(sig, b * $r + 1, $r)))")).as(Seq("band", "bucket")))
-    val cand = banded.alias("a")
-      .join(banded.alias("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
+    val cand = BandJoin.self(banded, Seq("band", "bucket"),
+        col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
 
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
-        col("n_sh").as("na")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
-        col("n_sh").as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+    BandJoin.withEndpoints(cand, sh, "doc_id", ("doc_a", "doc_b"))
+      .withColumn("inter",
+        size(array_intersect(col("shingles_a"), col("shingles_b"))))
       .withColumn("jaccard", col("inter").cast(DoubleType) /
-        (col("na") + col("nb") - col("inter")).cast(DoubleType))
+        (col("n_sh_a") + col("n_sh_b") - col("inter")).cast(DoubleType))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
@@ -104,46 +99,34 @@ object Sketches {
       graft.functions.VectorExpressions.wordNgramHashes(
         col(toksCol), n = 1, algo = "md5_60", distinct = false))
 
-  /** SimHash near-dup pairs: band the 64-bit signature into eight 8-bit
-    * chunks (any pair within Hamming distance 7 must agree on ≥1 chunk),
-    * join candidates per chunk, then filter by exact Hamming distance. */
+  /** SimHash near-dup pairs: band the 64-bit signature into
+    * `maxHamming + 1` chunks (eight 8-bit chunks at the default 7; any
+    * pair within the distance must agree on ≥1 chunk), join candidates
+    * per chunk, then filter by exact Hamming distance. */
   def dedupSimhash(s: SparkSession, dir: String, maxHamming: Int = 7): DataFrame =
     simhashPairs(table(s, dir, "documents"), maxHamming)
 
-  /** Core SimHash candidate join over a (doc_id, text) frame.
-    *
-    * `maxBucket` is the production skew guard: near-uniform chunks (short or
-    * stop-worded corpora — note bits 60-63 are structurally 0, so band 7
-    * has only 16 live values) can concentrate a (band,chunk) bucket until
-    * the self-join on it is quadratic in corpus size. Buckets above the cap
-    * are DROPPED before the join, bounding any bucket's join cost at
-    * maxBucket². Recall effect: a pair agreeing ONLY on dropped buckets is
-    * lost — with 8 bands a true near-dup pair survives unless all its
-    * agreeing chunks are degenerate, which is exactly the pathological
-    * cluster the cap exists to exclude. The count rides the same
-    * (band,chunk) shuffle the join needs, so the guard adds no exchange. */
+  /** Core SimHash candidate join over a (doc_id, text) frame, with
+    * `maxBucket` as the production skew cap ([[BandJoin]]). Bits 60-63
+    * are structurally 0, so band 7 has only 16 live values. */
   def simhashPairs(docsText: DataFrame, maxHamming: Int = 7,
-                   maxBucket: Int = 100000): DataFrame = {
-    val docs = docsText
+                   maxBucket: Int = 100000): DataFrame =
+    simhashSigPairs(docsText
       .withColumn("toks", split(col("text"), " "))
       .withColumn("simhash", simhash("toks"))
-      .select("doc_id", "simhash")
-    val banded = docs.select(col("doc_id"), col("simhash"),
-      posexplode(expr("transform(sequence(0, 7), " +
-        "b -> (simhash >> (b * 8)) & 255)")).as(Seq("band", "chunk")))
-    val capped = SkewCap.dropOverCap(banded,
-      Seq(col("band"), col("chunk")), maxBucket, "simhash_band_cap")
-    capped.alias("a")
-      .join(capped.alias("b"),
-        col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
+      .select("doc_id", "simhash"), maxHamming, maxBucket)
+
+  /** Banded Hamming self-join over (doc_id, simhash) signatures. */
+  private[graft] def simhashSigPairs(docs: DataFrame, maxHamming: Int,
+                                     maxBucket: Int): DataFrame =
+    BandJoin.withinHamming(
+        BandJoin.self(BandJoin.bands(docs, "simhash", 64, maxHamming),
+          Seq("band", "chunk"), col("a.doc_id") < col("b.doc_id"),
+          Some(BandJoin.Cap(maxBucket, "simhash_band_cap"))),
+        "simhash", maxHamming)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
+        col("hamming"))
       .distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
 
   /** Keep token hashes below 2^56 — a deterministic 1/16 stripe of the
     * 60-bit md5 hash space. */

@@ -303,14 +303,11 @@ object TextQueries {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .distinct()
-    cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
-        col("n_sh").as("na")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
-        col("n_sh").as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+    BandJoin.withEndpoints(cands, sh, "doc_id", ("doc_a", "doc_b"))
+      .withColumn("inter",
+        size(array_intersect(col("shingles_a"), col("shingles_b"))))
       .withColumn("containment", col("inter").cast(DoubleType) /
-        least(col("na"), col("nb")).cast(DoubleType))
+        least(col("n_sh_a"), col("n_sh_b")).cast(DoubleType))
       .filter(col("containment") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("containment"))
   }

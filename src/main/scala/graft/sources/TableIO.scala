@@ -77,19 +77,6 @@ object TableIO {
   def events(spark: SparkSession, dir: String): DataFrame =
     withEpochMicros(table(spark, dir, "events"))
 
-  /** Multi-directory scan + positional union, each dir filtered before the
-    * union so the predicate pushes into every individual scan.
-    * Reference: mls_listings_curated.py:71-77 (ORC dirs + load_date filter). */
-  def readUnion(spark: SparkSession, format: String, dirs: Seq[String],
-                filterSql: Option[String] = None): DataFrame = {
-    require(dirs.nonEmpty, "readUnion needs at least one input dir")
-    val dfs = dirs.map { d =>
-      val df = spark.read.format(format).load(d)
-      filterSql.fold(df)(f => df.filter(f))
-    }
-    dfs.reduce(_ unionAll _)
-  }
-
   /** ORC sink with zlib compression and explicit output-file-count control.
     * Reference: mls_listings_curated.py:359-363 (Delta→ORC mirror).
     * `repartition(n)` is RoundRobin — correct for file-count control because

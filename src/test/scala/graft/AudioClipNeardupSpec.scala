@@ -94,4 +94,11 @@ class AudioClipNeardupSpec extends AnyFunSuite {
     assert(hammings.forall(_ > 3),
       s"some splice pair inside whole-clip tolerance: min=${hammings.min}")
   }
+
+  test("fixture sizing estimates equal the emitted payload bytes") {
+    for (id <- 0L until 200L)
+      assert(MultimodalQueries.wavSpliceBytesOf(id) ==
+        MultimodalQueries.wavSpliceRows(id).map(_._2.length.toLong).sum,
+        s"doc $id")
+  }
 }

@@ -94,4 +94,11 @@ class AudioNeardupSpec extends AnyFunSuite {
     }
     out.values.foreach(h => assert(h >= 1 && h <= 3))
   }
+
+  test("fixture sizing estimates equal the emitted payload bytes") {
+    for (id <- 0L until 200L)
+      assert(MultimodalQueries.wavNearBytesOf(id) ==
+        MultimodalQueries.wavNearRows(id).map(_._2.length.toLong).sum,
+        s"doc $id")
+  }
 }

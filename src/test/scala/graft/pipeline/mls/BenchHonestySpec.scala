@@ -17,7 +17,9 @@ import graft.sources.ScratchDirs
   * refactor that memoizes an e2e run introduces a new memo name here and
   * fails loudly. It also pins the one session config surface: every main
   * builds its session through GraftSession, so the oracle certifies the
-  * engine configuration the bench times. */
+  * engine configuration the bench times. And it pins the one banded
+  * candidate-join core: no main file but BandJoin/SkewCap writes its own
+  * skew-capped band join or Hamming verify. */
 class BenchHonestySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -89,23 +91,39 @@ class BenchHonestySpec extends AnyFunSuite {
       }
   }
 
-  test("every session is built through GraftSession (no raw-builder mains)") {
-    // Built at runtime so this file's own source never matches.
-    val rawBuilder = ("SparkSession" + "\\s*\\.\\s*builder\\s*\\(").r
-    val allowed = Set("GraftSession.scala", "TestSpark.scala")
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
-    val offenders = try {
+  /** Scala files under `root`, other than the `allowed` file names,
+    * whose source matches `pattern`. */
+  private def scalaFilesMatching(root: String, allowed: Set[String],
+                        pattern: scala.util.matching.Regex): Vector[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try {
       import scala.jdk.CollectionConverters._
       files.iterator().asScala
         .filter(p => p.toString.endsWith(".scala") &&
           !allowed(p.getFileName.toString))
-        .filter(p => rawBuilder
+        .filter(p => pattern
           .findFirstIn(java.nio.file.Files.readString(p)).nonEmpty)
         .map(_.toString).toVector
     } finally files.close()
+  }
+
+  test("every session is built through GraftSession (no raw-builder mains)") {
+    // Built at runtime so this file's own source never matches.
+    val rawBuilder = ("SparkSession" + "\\s*\\.\\s*builder\\s*\\(").r
+    val offenders = scalaFilesMatching("src",
+      Set("GraftSession.scala", "TestSpark.scala"), rawBuilder)
     assert(offenders.isEmpty,
       s"$offenders build a raw session — use graft.GraftSession.builder() " +
         "so the bench, the oracle and the mains share one engine config")
+  }
+
+  test("banded candidate joins and Hamming verifies live only in BandJoin") {
+    val copy = "SkewCap\\.dropOverCap\\(|bit_count\\(col\\(".r
+    val offenders = scalaFilesMatching("src/main",
+      Set("BandJoin.scala", "SkewCap.scala"), copy)
+    assert(offenders.isEmpty,
+      s"$offenders hand-write a skew-capped band join or a Hamming verify " +
+        "— route it through graft.operators.BandJoin")
   }
 
   test("SPARK_GRAFT_CPUS defaults to the host's processor count") {
