@@ -144,10 +144,70 @@ object MlsEnrich {
     }
   }
 
-  /** Attach phase (curated.py:236-271): inner-join results back, recompute
-    * the twelve asg_* columns in the reference's column order, tag
-    * `_from = 'propertyid_new'`, union with the main set, and keep the
-    * highest-precedence row per key. `now` injects current_timestamp(). */
+  /** The 11 asg_* property-id bookkeeping columns, in the reference's
+    * merge match-condition order (backfill:196-200). Job 1's window 2
+    * re-derives every one per key (curated.py:144-159); the ORC mirrors
+    * keep only the first two, the id and its final flag (curated.py:360). */
+  val asgCols: Seq[String] = Seq("asg_primary_id",
+    "asg_primary_id_final_flag", "asg_primary_id_source",
+    "asg_primary_id_source_queried_timestamp",
+    "asg_primary_id_source_responded_flag", "asg_primary_id_issue_text",
+    "asg_primary_id_mssql_fixed_flag", "asg_primary_id_updated_flag",
+    "asg_primary_id_updated_timestamp", "asg_primary_id_previous_value",
+    "asg_primary_id_load_status")
+
+  /** A lookup budget's ordering and cut (curated.py:211-227,
+    * backfill:125-134): never-tried sources first (`desc_nulls_first`),
+    * then the caller's load-status rank (a SQL expression — the two jobs
+    * rank differently), then the responded flag, then the key tiebreak;
+    * the first `limit` rows. */
+  def byPriority(rows: DataFrame, statusRank: String, limit: Int): DataFrame =
+    rows
+      .withColumn("_asg_primary_id_load_status_num", expr(statusRank))
+      .orderBy(col("asg_primary_id_source").desc_nulls_first,
+        col("_asg_primary_id_load_status_num").asc_nulls_first,
+        col("asg_primary_id_source_responded_flag").asc_nulls_first,
+        col("mls").asc, col("mls_listing_id").asc)
+      .limit(limit)
+      .drop("_asg_primary_id_load_status_num")
+
+  /** The asg_* recompute of both attaches (curated.py:236-271,
+    * backfill:148-167): inner-join each row to its lookup row, then one
+    * withColumns layer recomputes ten asg_* columns from the lkp_* values
+    * and the PRE-update `asg_primary_id`, and `asg_primary_id` is assigned
+    * LAST ("order is important"). `changed` is the caller's id-changed
+    * predicate: Job 1 writes it `coalesce(-1) <>` and Job 3 `NOT <=>`, and
+    * the two disagree when one side is null and the other -1. The lkp_*
+    * columns stay on the result. */
+  def recomputeAsg(rows: DataFrame, lookup: DataFrame, changed: Column,
+                   now: Column): DataFrame =
+    rows.join(lookup,
+        col("mls") === col("lkp_mls") &&
+          col("mls_listing_id") === col("lkp_mls_listing_id"), "inner")
+      .withColumns(Map(
+        "asg_primary_id_final_flag" -> col("lkp_asg_primary_id_final_flag"),
+        "asg_primary_id_source" -> col("lkp_asg_primary_id_source"),
+        "asg_primary_id_source_queried_timestamp" -> now,
+        "asg_primary_id_source_responded_flag" ->
+          col("lkp_asg_primary_id_source_responded_flag"),
+        "asg_primary_id_issue_text" -> col("lkp_asg_primary_id_issue_text"),
+        "asg_primary_id_mssql_fixed_flag" ->
+          col("lkp_asg_primary_id_mssql_fixed_flag"),
+        "asg_primary_id_updated_flag" -> changed,
+        "asg_primary_id_updated_timestamp" ->
+          when(changed, now).otherwise(lit(null)).cast(TimestampType),
+        "asg_primary_id_previous_value" ->
+          when(changed, col("asg_primary_id")).otherwise(lit(null)).cast(LongType),
+        "asg_primary_id_load_status" -> expr(
+          "CASE WHEN lkp_asg_primary_id_final_flag IS NULL THEN 'Null' " +
+            "WHEN lkp_asg_primary_id_final_flag = true THEN 'Final' " +
+            "WHEN lkp_asg_primary_id_final_flag = false THEN 'Provisional' END")))
+      .withColumn("asg_primary_id", col("lkp_asg_primary_id")) // MUST be last
+
+  /** Attach phase (curated.py:236-271): the asg_* recompute over the
+    * lookup's keys, tagged `_from = 'propertyid_new'`, unioned with the
+    * main set, keeping the highest-precedence row per key. `now` injects
+    * current_timestamp(). */
   def attachPropertyIds(main: DataFrame, lookup: DataFrame,
                         now: Column = current_timestamp()): DataFrame = {
     val tagged = if (main.columns.contains("_from")) main
@@ -155,32 +215,9 @@ object MlsEnrich {
     val changed = expr(
       "CASE WHEN coalesce(asg_primary_id,-1) <> coalesce(lkp_asg_primary_id,-1) " +
         "THEN true ELSE false END")
-    val enriched = tagged.join(lookup,
-        col("mls") === col("lkp_mls") &&
-          col("mls_listing_id") === col("lkp_mls_listing_id"), "inner")
-      .withColumn("asg_primary_id_final_flag", col("lkp_asg_primary_id_final_flag"))
-      .withColumn("asg_primary_id_source", col("lkp_asg_primary_id_source"))
-      .withColumn("asg_primary_id_source_queried_timestamp", now)
-      .withColumn("asg_primary_id_source_responded_flag",
-        col("lkp_asg_primary_id_source_responded_flag"))
-      .withColumn("asg_primary_id_issue_text", col("lkp_asg_primary_id_issue_text"))
-      .withColumn("asg_primary_id_mssql_fixed_flag",
-        col("lkp_asg_primary_id_mssql_fixed_flag"))
-      .withColumn("asg_primary_id_updated_flag", changed)
-      .withColumn("asg_primary_id_updated_timestamp",
-        when(changed, now).otherwise(lit(null)).cast(TimestampType))
-      .withColumn("asg_primary_id_previous_value",
-        when(changed, col("asg_primary_id")).otherwise(lit(null)).cast(LongType))
-      .withColumn("asg_primary_id_load_status", expr(
-        "CASE WHEN lkp_asg_primary_id_final_flag IS NULL THEN 'Null' " +
-          "WHEN lkp_asg_primary_id_final_flag = true THEN 'Final' " +
-          "WHEN lkp_asg_primary_id_final_flag = false THEN 'Provisional' END"))
-      .withColumn("asg_primary_id", col("lkp_asg_primary_id")) // MUST be last
+    val enriched = recomputeAsg(tagged, lookup, changed, now)
       .withColumn("_from", lit("propertyid_new"))
-      .drop("lkp_mls", "lkp_mls_listing_id", "lkp_asg_primary_id",
-        "lkp_asg_primary_id_final_flag", "lkp_asg_primary_id_source",
-        "lkp_asg_primary_id_source_responded_flag",
-        "lkp_asg_primary_id_issue_text", "lkp_asg_primary_id_mssql_fixed_flag")
+      .drop(lookup.columns.toIndexedSeq: _*)
 
     // propertyid_new > new > curated, lexicographically (curated.py:262-267)
     val w = Window.partitionBy(col("mls"), col("mls_listing_id"))

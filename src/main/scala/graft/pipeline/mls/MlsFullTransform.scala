@@ -136,59 +136,36 @@ object MlsFullTransform {
 
   /** Extra columns + placeholders (transform.py:322-357): derived address
     * columns, injected clock timestamps, and the typed-null placeholder
-    * blocks for mls.listings and mls.listings_history. */
+    * blocks for mls.listings (the asg_* columns) and mls.listings_history
+    * (the `*_old` / `*_changed_flag` tail). */
   private[mls] def extraColumns(df: DataFrame, nowTs: Column): DataFrame = {
     val city0 = upper(col("_city_raw"))
-    df.select(col("*"),
+    def typedNull(schema: StructType)(c: String): Column =
+      lit(null).cast(schema(c).dataType).as(c)
+    df.select((Seq(col("*"),
       when(!city0.isin("UNINCORPORATED", "OTHER CITY", "HTTP"), city0).as("city"),
       upper(col("_street_address_raw")).as("street_address"),
       col("zip_raw").as("zip"),
       col("states_state").as("state"),
       nowTs.as("create_timestamp"),
-      nowTs.as("update_timestamp"),
-      lit(null).cast(LongType).as("asg_primary_id"),
-      lit(null).cast(BooleanType).as("asg_primary_id_final_flag"),
-      lit(null).cast(StringType).as("asg_primary_id_source"),
-      lit(null).cast(TimestampType).as("asg_primary_id_source_queried_timestamp"),
-      lit(null).cast(BooleanType).as("asg_primary_id_source_responded_flag"),
-      lit(null).cast(StringType).as("asg_primary_id_issue_text"),
-      lit(null).cast(BooleanType).as("asg_primary_id_mssql_fixed_flag"),
-      lit(null).cast(BooleanType).as("asg_primary_id_updated_flag"),
-      lit(null).cast(TimestampType).as("asg_primary_id_updated_timestamp"),
-      lit(null).cast(LongType).as("asg_primary_id_previous_value"),
-      lit(null).cast(StringType).as("asg_primary_id_load_status"),
-      lit(null).cast(StringType).as("listing_status_old"),
-      lit(null).cast(DecimalType(16, 4)).as("current_price_old"),
-      lit(null).cast(StringType).as("source_listing_id_old"),
-      lit(null).cast(StringType).as("street_address_raw_old"),
-      lit(null).cast(StringType).as("property_type_old"),
-      lit(null).cast(StringType).as("property_sub_type_old"),
-      lit(null).cast(BooleanType).as("listing_status_changed_flag"),
-      lit(null).cast(BooleanType).as("current_price_changed_flag"),
-      lit(null).cast(BooleanType).as("source_listing_id_changed_flag"),
-      lit(null).cast(BooleanType).as("street_address_raw_changed_flag"),
-      lit(null).cast(BooleanType).as("property_type_changed_flag"),
-      lit(null).cast(BooleanType).as("property_sub_type_changed_flag"))
+      nowTs.as("update_timestamp")) ++
+      MlsEnrich.asgCols.map(typedNull(targetSchema)) ++
+      MlsHistory.tailCols.map(typedNull(histSchema))): _*)
   }
 
-  /** The complete Job-1 transform at reference width: sanitize → 65-rule
+  /** The full-width transform at reference width: sanitize → 65-rule
     * derivation → extra columns → geo joins → `_`-replacement → projection
-    * to the 133-field schema in declared order. */
-  def transform(good: DataFrame, counties: DataFrame, geoIds: DataFrame,
-                asOf: Column, nowTs: Column): DataFrame =
-    transformTo(targetSchema)(good, counties, geoIds, asOf, nowTs)
-
-  /** Same shared transform projected to the 134-field HIST schema — exactly
-    * how the reference's hist job reuses transform_listings with the hist
-    * schema file (mls_listings_hist_curated.py:102): the asg_* placeholders
-    * fall away and the `*_old`/`*_changed_flag` null placeholders survive
-    * the projection (they are recomputed downstream by the lead/flags
-    * stage). */
-  def transformHist(good: DataFrame, counties: DataFrame, geoIds: DataFrame,
-                    asOf: Column, nowTs: Column): DataFrame =
-    transformTo(histSchema)(good, counties, geoIds, asOf, nowTs)
-
-  private def transformTo(schema: StructType, keep: Seq[String] = Nil)(
+    * to `schema` in declared order (the 133-field [[targetSchema]], or the
+    * 134-field [[histSchema]] exactly as the reference's hist job reuses
+    * transform_listings with the hist schema file,
+    * mls_listings_hist_curated.py:102), plus the `keep` passenger columns
+    * (e.g. a batch tag). The transform is row-wise apart from the per-row
+    * dropDuplicates, which a distinct-valued tag cannot collapse across —
+    * so transforming a tagged UNION of batches equals transforming each
+    * batch separately. The e2e gates use this to analyze/codegen the
+    * full-width plan ONCE instead of once per batch: at gate row counts the
+    * planning, not the data, is the dominant cost. */
+  def transformKeeping(schema: StructType, keep: Seq[String])(
       good: DataFrame, counties: DataFrame, geoIds: DataFrame,
       asOf: Column, nowTs: Column): DataFrame = {
     val derived = deriveRest(
@@ -199,15 +176,28 @@ object MlsFullTransform {
     replaced.select((schema.fieldNames.toIndexedSeq ++ keep).map(col): _*)
   }
 
-  /** Transform carrying extra passenger columns (e.g. a batch tag) through
-    * to the projection. The transform is row-wise apart from the per-row
-    * dropDuplicates, which a distinct-valued tag cannot collapse across —
-    * so transforming a tagged UNION of batches equals transforming each
-    * batch separately. The e2e gates use this to analyze/codegen the
-    * full-width plan ONCE instead of once per batch: at gate row counts the
-    * planning, not the data, is the dominant cost. */
-  def transformKeeping(schema: StructType, keep: Seq[String])(
-      good: DataFrame, counties: DataFrame, geoIds: DataFrame,
-      asOf: Column, nowTs: Column): DataFrame =
-    transformTo(schema, keep)(good, counties, geoIds, asOf, nowTs)
+  /** The shared front of Jobs 1 and 2 (curated.py:110-117, hist:95-104):
+    * validate `listings` against the boards/states/zipcodes/psub dims,
+    * transform the valid rows to `schema` with the counties/geo_ids dims
+    * ([[transformKeeping]]), and truncate that lineage with a LAZY local
+    * checkpoint. `dim` resolves a dim by one of those six names. Returns
+    * (fresh rows, rejected rows).
+    *
+    * The checkpoint: downstream stages read the fresh rows more than once
+    * (the dedupe's batch keys and its window input; the gates' per-batch
+    * filters), and without it each read re-analyzes AND re-executes the
+    * many-thousand-expression transform tree. Lazy: the plan is truncated
+    * at analysis time, and the blocks persist inside whichever job
+    * computes them first. Validation checkpoints itself inside
+    * [[MlsValidate]]. */
+  def validatedBatch(listings: DataFrame, dim: String => DataFrame,
+                     schema: StructType, keep: Seq[String],
+                     asOf: Column, nowTs: Column): (DataFrame, DataFrame) = {
+    val (good, rejected) = MlsValidate.validateListings(listings,
+      dim("boards"), dim("states"), dim("zipcodes"), dim("psub"))
+    val fresh = transformKeeping(schema, keep)(
+      good, dim("counties"), dim("geo_ids"), asOf, nowTs)
+      .localCheckpoint(eager = false)
+    (fresh, rejected)
+  }
 }

@@ -249,12 +249,16 @@ object MlsJob1Gate {
     * Both batches flow through ONE tagged validate+transform tree (the
     * transform is row-wise, so transforming the tagged union equals
     * transforming each batch — see [[MlsFullTransform.transformKeeping]]),
-    * and one LAZY localCheckpoint truncates the many-thousand-expression
-    * lineage before the frames are re-referenced by dedupe and merge: at
-    * gate row counts the query is planning-bound, not data-bound, and this
-    * halves the analyzer/codegen work without paying a separate eager
-    * materialization job. Checkpoint blocks are executor-local and
-    * job-scoped. */
+    * through the drivers' own front step
+    * ([[MlsFullTransform.validatedBatch]]), whose LAZY localCheckpoint
+    * truncates the many-thousand-expression lineage before the frames are
+    * re-referenced by dedupe and merge: at gate row counts the query is
+    * planning-bound, not data-bound, and this halves the analyzer/codegen
+    * work without paying a separate eager materialization job.
+    *
+    * Its window ordering (`load_date` only) and its frame merge are its
+    * own, encoded by its oracle; q_job1_cli is the gate that certifies
+    * Job 1 as production composes it ([[MlsJobsMain.runJob1]]). */
   def job1E2e(s: SparkSession, dir: String): DataFrame = {
     val asOf = expr(asOfSql)
     val nowTs = expr(nowTsSql)
@@ -262,12 +266,8 @@ object MlsJob1Gate {
       rawBase(s, dir, 1, "2024-01-01", tag = "a")
         .unionByName(rawBase(s, dir, 2, "2024-02-01", tag = "b",
           kFilter = Some("k % 3 = 0")))))
-    val (good, _) = MlsValidate.validateListings(raw, dimDf(s, "boards"),
-      dimDf(s, "states"), dimDf(s, "zipcodes"), dimDf(s, "psub"))
-    val tAll = MlsFullTransform.transformKeeping(
-        MlsFullTransform.targetSchema, Seq("gate_batch"))(
-        good, dimDf(s, "counties"), dimDf(s, "geo_ids"), asOf, nowTs)
-      .localCheckpoint(eager = false)
+    val (tAll, _) = MlsFullTransform.validatedBatch(raw, dimDf(s, _),
+      MlsFullTransform.targetSchema, Seq("gate_batch"), asOf, nowTs)
     val t1 = tAll.filter(col("gate_batch") === "a").drop("gate_batch")
     val t2 = tAll.filter(col("gate_batch") === "b").drop("gate_batch")
     val keys = Seq("mls", "mls_listing_id")

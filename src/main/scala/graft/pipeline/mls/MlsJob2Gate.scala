@@ -1,11 +1,8 @@
 package graft.pipeline.mls
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Merge
-import graft.pipeline.LatestWins
-import graft.sources.MergeClauses
 
 /** End-to-end Job-2 (listings HISTORY) parity gate at the real 134-column
   * hist schema width (mls_listings_hist_curated.py:56-218): validate →
@@ -35,6 +32,7 @@ import graft.sources.MergeClauses
 object MlsJob2Gate {
   import MlsJob1Gate.{asOfSql, dimDf, dims, outCastSql, rawBase, rawSql,
     synthesize, transformSql, validateSql}
+  import MlsHistory.{matchCols, tracked}
 
   // Per-run injected clocks (run 2 is a month later, making the
   // min(create_timestamp) recompute observable across runs).
@@ -45,70 +43,20 @@ object MlsJob2Gate {
   private val soad1 = "2024-01-04 23:00:00"
   private val soad2 = "2024-02-04 23:00:00"
 
-  private[mls] val grainKeys = Seq("mls", "mls_listing_id", "source_as_of_date")
-  private val tracked = Seq("listing_status", "current_price",
-    "source_listing_id", "street_address_raw", "property_type",
-    "property_sub_type")
-  /** The 18 columns of the matched-update guard (hist:188-192). */
-  private val matchCols =
-    tracked.map(_ + "_old") ++ tracked ++ tracked.map(_ + "_changed_flag")
-  private val tailCols: Set[String] =
-    (tracked.map(_ + "_old") ++ tracked.map(_ + "_changed_flag")).toSet
   /** The 122 non-change-tracking hist columns, in schema order. */
   private lazy val coreCols: Seq[String] =
-    MlsFullTransform.histSchema.fieldNames.toSeq.filterNot(tailCols)
+    MlsFullTransform.histSchema.fieldNames.toSeq
+      .filterNot(MlsHistory.tailCols.toSet)
 
   // -------------------------------------------------------------------
   // Spark side
   // -------------------------------------------------------------------
 
-  /** One hist-job run, reference order: union new∪curated at the hist
-    * grain, keep the window winner, recompute create_timestamp as the
-    * partition min, then derive `*_old`/changed flags with lead() over the
-    * survivors (hist:119-159). Returns the merge source (134 cols +
-    * `_insert_update_flag`). */
-  private[mls] def histFinal(fresh: DataFrame, curated: Option[DataFrame],
-      fieldNames: Seq[String] =
-        MlsFullTransform.histSchema.fieldNames.toSeq): DataFrame = {
-    val tagged = fresh.withColumn("_from", lit("new"))
-    val union = curated.fold(tagged) { c =>
-      tagged.unionByName(
-        c.select(fieldNames.toIndexedSeq.map(col): _*)
-          .withColumn("_from", lit("curated")))
-    }
-    val w1 = Window.partitionBy(grainKeys.map(col): _*)
-      .orderBy(col("listing_date").desc, col("entry_date").asc,
-        col("load_date").desc, col("_from").desc)
-    val w2 = Window.partitionBy(grainKeys.map(col): _*)
-    val ranked = union.select(col("*"),
-      row_number().over(w1).as("_rownum"),
-      min(col("create_timestamp")).over(w2).as("_create_timestamp"))
-    val winners = ranked.filter(col("_rownum") === 1)
-      .withColumn("create_timestamp", col("_create_timestamp"))
-    LatestWins.changeFlags(winners, Seq("mls", "mls_listing_id"),
-      Seq(col("source_as_of_date").desc), tracked,
-      compare = Map("current_price" ->
-        ((a: Column, b: Column) => round(a, 0) <=> round(b, 0))))
-      .drop("_from", "_rownum", "_create_timestamp")
-  }
-
-  /** The reference's three-way MERGE (hist:184-210): non-null-safe key
-    * equality, update only when a driving column differs from the target's
-    * stored state, delete when the recomputed flags say no driving change,
-    * insert new changed snapshots. */
-  /** The reference's three-way clause set as a reusable spec (shared with
-    * the CLI driver, which runs it through the TABLE merge). */
-  private[mls] lazy val histMergeSpec: MergeClauses.Spec = {
-    val sameAll = matchCols.map(c => col(s"t.$c") <=> col(s"s.$c")).reduce(_ && _)
-    MergeClauses.Spec(
-      updateWhen = Some(col("s._insert_update_flag") && !sameAll),
-      deleteWhen = Some(!col("s._insert_update_flag")),
-      insertWhen = Some(col("s._insert_update_flag")))
-  }
-
+  /** Job 2's three-way MERGE as a frame merge: the gate returns the
+    * pipeline's plan, not a read of a published table. */
   private def merge3(curated: DataFrame, source: DataFrame): DataFrame =
-    Merge.mergeFrames(curated, source, grainKeys, histMergeSpec,
-      nullSafeKeys = false)
+    Merge.mergeFrames(curated, source, MlsHistory.grainKeys,
+      MlsHistory.mergeSpec, nullSafeKeys = false)
 
   /** q_job2_e2e: two consecutive hist-job runs at 134-column width.
     *
@@ -118,13 +66,9 @@ object MlsJob2Gate {
     * re-reference the frames — at gate row counts planning dominates, and
     * this pays the analyzer/codegen cost of the 134-column transform once
     * instead of twice while keeping everything in one Spark job (see
-    * [[MlsFullTransform.transformKeeping]]). */
+    * [[MlsFullTransform.validatedBatch]]). */
   def job2E2e(s: SparkSession, dir: String): DataFrame = {
     val asOf = expr(asOfSql)
-    val boards = dimDf(s, "boards"); val states = dimDf(s, "states")
-    val zips = dimDf(s, "zipcodes"); val psub = dimDf(s, "psub")
-    val counties = dimDf(s, "counties"); val geoIds = dimDf(s, "geo_ids")
-
     val raw = MlsJob1Gate.rawFixture(s, dir, "job2")(synthesize(
       rawBase(s, dir, 1, "2024-01-01", tag = "a", soadTs = soad1)
         // Run 2 unions two input dirs (S1) — a later changed snapshot and
@@ -133,12 +77,9 @@ object MlsJob2Gate {
           soadTs = soad2, kFilter = Some("k % 3 = 0")))
         .unionByName(rawBase(s, dir, 1, "2024-02-01", tag = "b",
           soadTs = soad0, kFilter = Some("k % 5 = 1")))))
-    val (good, _) = MlsValidate.validateListings(raw, boards, states, zips, psub)
     val nowTs = when(col("gate_batch") === "a", expr(now1Sql)).otherwise(expr(now2Sql))
-    val hAll = MlsFullTransform.transformKeeping(
-        MlsFullTransform.histSchema, Seq("gate_batch"))(
-        good, counties, geoIds, asOf, nowTs)
-      .localCheckpoint(eager = false)
+    val (hAll, _) = MlsFullTransform.validatedBatch(raw, dimDf(s, _),
+      MlsFullTransform.histSchema, Seq("gate_batch"), asOf, nowTs)
     val h1 = hAll.filter(col("gate_batch") === "a").drop("gate_batch")
     val hN = hAll.filter(col("gate_batch") === "b").drop("gate_batch")
 
@@ -151,10 +92,10 @@ object MlsJob2Gate {
     // materialization job runs — the RDD computes and persists inside the
     // final action (measured ~2.5 s faster per steady-state bench run than
     // either the eager or the no-checkpoint variant).
-    val hist1 = histFinal(h1, None).filter(col("_insert_update_flag"))
+    val hist1 = MlsHistory.histFinal(h1, None).filter(col("_insert_update_flag"))
       .select(MlsFullTransform.histSchema.fieldNames.toIndexedSeq.map(col): _*)
       .localCheckpoint(eager = false)
-    val merged = merge3(hist1, histFinal(hN, Some(hist1)))
+    val merged = merge3(hist1, MlsHistory.histFinal(hN, Some(hist1)))
     merged.select(MlsJob1Gate.outCastCols(MlsFullTransform.histSchema): _*)
   }
 

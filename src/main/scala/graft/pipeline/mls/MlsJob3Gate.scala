@@ -1,10 +1,10 @@
 package graft.pipeline.mls
 
 import java.nio.file.Paths
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.{ManagedTable, MergeClauses, TableIO}
+import graft.sources.{ManagedTable, TableIO}
 
 /** End-to-end Job-3 (property-id backfill) parity gate at the real
   * 133-column schema width (mls_listings_curated_propid_backfill.py:71-229):
@@ -31,20 +31,8 @@ object MlsJob3Gate {
 
   private val now1Sql = "TIMESTAMP '2024-06-02 00:00:00'"
   private val now2Sql = "TIMESTAMP '2024-07-02 00:00:00'"
-  private val keys = Seq("mls", "mls_listing_id")
-
-  /** The 11 asg_* columns in the reference's merge match-condition order
-    * (backfill:196-200). */
-  private[mls] val asgCols = Seq("asg_primary_id", "asg_primary_id_final_flag",
-    "asg_primary_id_source", "asg_primary_id_source_queried_timestamp",
-    "asg_primary_id_source_responded_flag", "asg_primary_id_issue_text",
-    "asg_primary_id_mssql_fixed_flag", "asg_primary_id_updated_flag",
-    "asg_primary_id_updated_timestamp", "asg_primary_id_previous_value",
-    "asg_primary_id_load_status")
 
   private lazy val schema = MlsFullTransform.targetSchema
-  private lazy val coreCols: Seq[String] =
-    schema.fieldNames.toSeq.filterNot(_.startsWith("asg_"))
 
   private def sqlType(dt: DataType): String = dt match {
     case StringType    => "STRING"
@@ -89,88 +77,14 @@ object MlsJob3Gate {
   private def freshRoot(name: String): String =
     graft.sources.ScratchDirs.fresh(name)
 
-  /** The 11 added placeholder columns of the first-run bootstrap
-    * (backfill:81-92) — all typed nulls except load_status = 'Null'. One
-    * withColumns batch (independent columns; a chained withColumn
-    * re-resolves the 133-column plan per call). */
-  private[mls] def addAsgPlaceholders(df: DataFrame): DataFrame = df
-    .withColumns(Map(
-      "asg_primary_id" -> lit(null).cast(LongType),
-      "asg_primary_id_final_flag" -> lit(null).cast(BooleanType),
-      "asg_primary_id_source" -> lit(null).cast(StringType),
-      "asg_primary_id_source_queried_timestamp" -> lit(null).cast(TimestampType),
-      "asg_primary_id_source_responded_flag" -> lit(null).cast(BooleanType),
-      "asg_primary_id_issue_text" -> lit(null).cast(StringType),
-      "asg_primary_id_mssql_fixed_flag" -> lit(null).cast(BooleanType),
-      "asg_primary_id_updated_flag" -> lit(null).cast(BooleanType),
-      "asg_primary_id_updated_timestamp" -> lit(null).cast(TimestampType),
-      "asg_primary_id_previous_value" -> lit(null).cast(LongType),
-      "asg_primary_id_load_status" -> lit("Null").cast(StringType)))
-
-  /** Candidate selection (backfill:115-134): optional load_date window,
-    * load-status modes, then the prioritized lookup budget — never-tried
-    * sources first, then Null < Provisional < Final, then
-    * responded-flag, keyed tiebreak. */
-  private[mls] def candidates(cur: DataFrame, dateRange: Option[(String, String)],
-                         modes: Seq[String], limit: Int): DataFrame = {
-    val dated = dateRange.fold(cur) { case (lo, hi) =>
-      cur.filter(s"""load_date between "$lo" and "$hi"""") }
-    dated.filter(col("asg_primary_id_load_status").isin(modes: _*))
-      .withColumn("_asg_primary_id_load_status_num", expr(
-        "CASE WHEN asg_primary_id_load_status = 'Null' THEN 1 " +
-          "WHEN asg_primary_id_load_status = 'Provisional' THEN 2 " +
-          "WHEN asg_primary_id_load_status = 'Final' THEN 3 END"))
-      .orderBy(col("asg_primary_id_source").desc_nulls_first,
-        col("_asg_primary_id_load_status_num").asc_nulls_first,
-        col("asg_primary_id_source_responded_flag").asc_nulls_first,
-        col("mls").asc, col("mls_listing_id").asc)
-      .limit(limit)
-      .drop("_asg_primary_id_load_status_num")
-  }
-
-  /** Attach phase (backfill:151-167): recompute the 11 asg_* columns from
-    * the lookup row; `asg_primary_id` is assigned LAST (a second
-    * withColumns layer) because updated_flag/previous_value compare
-    * against its pre-update value — the first batch reads the old value,
-    * the second overwrites it. */
-  private[mls] def attach(cand: DataFrame, lookup: DataFrame, now: Column): DataFrame = {
-    val changed = expr("not(asg_primary_id <=> lkp_asg_primary_id)")
-    cand.join(lookup,
-        col("mls") === col("lkp_mls") &&
-          col("mls_listing_id") === col("lkp_mls_listing_id"), "inner")
-      .withColumns(Map(
-        "asg_primary_id_final_flag" -> col("lkp_asg_primary_id_final_flag"),
-        "asg_primary_id_source" -> col("lkp_asg_primary_id_source"),
-        "asg_primary_id_source_queried_timestamp" -> now,
-        "asg_primary_id_source_responded_flag" ->
-          col("lkp_asg_primary_id_source_responded_flag"),
-        "asg_primary_id_issue_text" -> col("lkp_asg_primary_id_issue_text"),
-        "asg_primary_id_mssql_fixed_flag" ->
-          col("lkp_asg_primary_id_mssql_fixed_flag"),
-        "asg_primary_id_updated_flag" -> changed,
-        "asg_primary_id_updated_timestamp" ->
-          when(changed, now).otherwise(lit(null)).cast(TimestampType),
-        "asg_primary_id_previous_value" ->
-          when(changed, col("asg_primary_id")).otherwise(lit(null)).cast(LongType),
-        "asg_primary_id_load_status" -> expr(
-          "CASE WHEN lkp_asg_primary_id_final_flag IS NULL THEN 'Null' " +
-            "WHEN lkp_asg_primary_id_final_flag = true THEN 'Final' " +
-            "WHEN lkp_asg_primary_id_final_flag = false THEN 'Provisional' END")))
-      .withColumn("asg_primary_id", col("lkp_asg_primary_id")) // MUST be last
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-  }
-
   private def runOnce(s: SparkSession, root: String,
                       dateRange: Option[(String, String)], modes: Seq[String],
                       limit: Int, salt: String, nowSql: String): Unit = {
-    val cur = ManagedTable.read(s, root)
-    val cand = candidates(cur, dateRange, modes, limit)
+    val cand = MlsBackfill.candidates(ManagedTable.read(s, root), dateRange,
+      modes, Some(limit))
     val lkp = MlsEnrich.lookupPropertyIds(s, cand, md5StubClient(salt),
       batchSize = 64).get
-    val enriched = attach(cand, lkp, expr(nowSql))
-    val changedAny = !asgCols.map(c => col(s"t.$c") <=> col(s"s.$c")).reduce(_ && _)
-    ManagedTable.merge(s, root, enriched, keys,
-      MergeClauses.Spec(updateWhen = Some(changedAny)))
+    MlsBackfill.attachAndMerge(s, root, cand, lkp, expr(nowSql))
   }
 
   /** q_job3_e2e: ORC bootstrap + two backfill runs; returns the final
@@ -187,7 +101,7 @@ object MlsJob3Gate {
     }
     // Bootstrap: the ORC mirror lacks the asg_* columns, so the first run
     // adds them and publishes the frame as the managed table (backfill:77-98).
-    val boot = addAsgPlaceholders(graft.sources.TableIO.readStatic(s, s"$orcRoot/orc", "orc"))
+    val boot = MlsBackfill.addAsgPlaceholders(graft.sources.TableIO.readStatic(s, s"$orcRoot/orc", "orc"))
       .select(schema.fieldNames.toIndexedSeq.map(col): _*)
     ManagedTable.overwrite(s"$root/delta", boot)
     runOnce(s, s"$root/delta", Some(("2024-01-01", "2024-01-31")),
@@ -422,7 +336,7 @@ object MlsJob3Gate {
         attachAsg.find(_.endsWith(s" AS $c")).get
       else s"c.$c AS $c"
     }
-    val same11 = asgCols
+    val same11 = MlsEnrich.asgCols
       .map(c => s"(t.$c IS NOT DISTINCT FROM a.$c)").mkString("\n      AND ")
     val outList = schema.fieldNames.mkString(", ")
     s"""${p}c AS (
@@ -452,7 +366,7 @@ object MlsJob3Gate {
        |  SELECT $outList FROM ${p}chg)""".stripMargin
   }
 
-  private def asgDefaults: Seq[String] = asgCols.map { c =>
+  private def asgDefaults: Seq[String] = MlsEnrich.asgCols.map { c =>
     val dt = sqlType(schema(c).dataType)
     if (c == "asg_primary_id_load_status") s"'Null' AS $c"
     else s"CAST(NULL AS $dt) AS $c"

@@ -5,17 +5,22 @@ import org.apache.spark.sql.functions._
 import graft.enrich.{BatchLookup, HttpLookupClient}
 import graft.pipeline.{JobsCli, JobsCliArgs, LatestWins}
 import graft.schema.SchemaLoader
-import graft.sources.{ManagedTable, MergeClauses, TableIO, VersionedLayout}
+import graft.sources.{ManagedTable, TableIO, VersionedLayout}
 
-/** The REAL Job-1 driver behind the reference argv surface
-  * (mls_listings_curated.py:62-371): reads ORC listings dirs + the six
-  * reference-data dims + the JSON target schema from the parsed flags and
-  * drives the full-width pipeline — validate → 133-column transform →
-  * union with the live curated table → the two latest-wins windows →
-  * optional property-id enrichment (API over HTTP or the MSSQL 3-hop) →
-  * reject/outdated text legs → MERGE into the managed table → ORC mirror →
-  * retention vacuum. This object is the one production entry for all
-  * three jobs, gated end-to-end by q_job1_cli/q_job2_cli/q_job3_cli.
+/** The REAL drivers behind the reference argv surfaces. `main` is the
+  * Job-1 entry (mls_listings_curated.py:62-371): it reads ORC listings
+  * dirs + the six reference-data dims + the JSON target schema from the
+  * parsed flags and drives the full-width pipeline — validate →
+  * 133-column transform → union with the live curated table → the two
+  * latest-wins windows → optional property-id enrichment (API over HTTP
+  * or the MSSQL 3-hop) → reject/outdated text legs → MERGE into the
+  * managed table → ORC mirror → retention vacuum. Jobs 2 and 3 are reached
+  * through [[runJob2]] (listings history) and [[runJob3]] (property-id
+  * backfill), which have no `main` of their own. The q_job1_cli,
+  * q_job2_cli and q_job3_cli gates run all three end to end. Every step
+  * they compose lives in a step object ([[MlsFullTransform]],
+  * [[LatestWins]], [[MlsEnrich]], [[MlsHistory]], [[MlsBackfill]]) that
+  * the gates call too.
   *
   * `asOf`/`now` inject the run clock (the reference's `current_date()` /
   * `current_timestamp()`): production `main` passes the real clock, the
@@ -35,26 +40,6 @@ import graft.sources.{ManagedTable, MergeClauses, TableIO, VersionedLayout}
 object MlsJobsMain {
 
   private val keys = Seq("mls", "mls_listing_id")
-
-  /** The asg_* bookkeeping columns window-2 re-derives per key
-    * (curated.py:144-159): max over all versions, minus create_timestamp
-    * which takes the min; load_status additionally coalesces to 'Null'. */
-  private val asgRecomputeMax = Seq("asg_primary_id",
-    "asg_primary_id_final_flag", "asg_primary_id_source",
-    "asg_primary_id_source_queried_timestamp",
-    "asg_primary_id_source_responded_flag", "asg_primary_id_issue_text",
-    "asg_primary_id_mssql_fixed_flag", "asg_primary_id_updated_flag",
-    "asg_primary_id_updated_timestamp", "asg_primary_id_previous_value",
-    "asg_primary_id_load_status")
-
-  /** The 9 asg_* columns dropped from the ORC mirror (curated.py:360) —
-    * the mirror keeps only asg_primary_id + its final flag. */
-  private val mirrorDropped = Seq("asg_primary_id_source",
-    "asg_primary_id_source_queried_timestamp",
-    "asg_primary_id_source_responded_flag", "asg_primary_id_issue_text",
-    "asg_primary_id_mssql_fixed_flag", "asg_primary_id_updated_flag",
-    "asg_primary_id_updated_timestamp", "asg_primary_id_previous_value",
-    "asg_primary_id_load_status")
 
   /** `<output>` → sibling `<output>_delta` (curated.py:418-420). */
   def deltaDirOf(listingsOutputDir: String): String = {
@@ -84,24 +69,56 @@ object MlsJobsMain {
     }.reduce(_ || _)
   }
 
-  /** Priority-ordered lookup budget (curated.py:211-227): never-tried
-    * sources first (`desc_nulls_first`), then the load-status rank, then
-    * the responded flag, then the key tiebreak. */
+  /** Priority-ordered lookup budget (curated.py:211-227): the shared
+    * budget tail ([[MlsEnrich.byPriority]]) with Job 1's load-status rank,
+    * which puts never-queried 'Null' rows (mode New) first. */
   private[mls] def budget(toLookup: DataFrame, limit: Int): DataFrame =
-    toLookup
-      .withColumn("_asg_primary_id_load_status_num", expr(
-        "CASE WHEN asg_primary_id_load_status = 'Null' AND " +
-          "asg_primary_id_source_queried_timestamp IS NULL THEN 0 " +
-          "WHEN asg_primary_id_load_status = 'Null' AND " +
-          "asg_primary_id_source_queried_timestamp IS NOT NULL THEN 1 " +
-          "WHEN asg_primary_id_load_status = 'Provisional' THEN 2 " +
-          "WHEN asg_primary_id_load_status = 'Final' THEN 3 END"))
-      .orderBy(col("asg_primary_id_source").desc_nulls_first,
-        col("_asg_primary_id_load_status_num").asc_nulls_first,
-        col("asg_primary_id_source_responded_flag").asc_nulls_first,
-        col("mls").asc, col("mls_listing_id").asc)
-      .limit(limit)
-      .drop("_asg_primary_id_load_status_num")
+    MlsEnrich.byPriority(toLookup,
+      "CASE WHEN asg_primary_id_load_status = 'Null' AND " +
+        "asg_primary_id_source_queried_timestamp IS NULL THEN 0 " +
+        "WHEN asg_primary_id_load_status = 'Null' AND " +
+        "asg_primary_id_source_queried_timestamp IS NOT NULL THEN 1 " +
+        "WHEN asg_primary_id_load_status = 'Provisional' THEN 2 " +
+        "WHEN asg_primary_id_load_status = 'Final' THEN 3 END", limit)
+
+  private def orc(spark: SparkSession, dir: String): DataFrame =
+    TableIO.readStatic(spark, format = "orc", path = dir)
+
+  /** The six reference-data dims by [[MlsFullTransform.validatedBatch]]'s
+    * names, each read from its flag's ORC dir. */
+  private def argvDims(spark: SparkSession, a: JobsCliArgs): String => DataFrame = {
+    val dirs = Map("boards" -> a.inputDirBoards, "states" -> a.inputDirStates,
+      "zipcodes" -> a.inputDirZipcodes, "psub" -> a.inputDirPropertySubTypes,
+      "counties" -> a.inputDirCounties, "geo_ids" -> a.inputDirGeoIds)
+    name => orc(spark, dirs(name).get)
+  }
+
+  /** The property-id lookup of Jobs 1 and 3, by `--property_id_source`
+    * (curated.py:194-271, backfill:138-146): the API over HTTP
+    * (`clientOverride` lets specs inject a deterministic client) or the
+    * MSSQL 3-hop over the two ORC dirs. None when `rows` is empty. */
+  private def lookup(spark: SparkSession, a: JobsCliArgs, rows: DataFrame,
+                     clientOverride: Option[BatchLookup.LookupClient])
+      : Option[DataFrame] = a.propertyIdSource match {
+    case "API" =>
+      val client = clientOverride.getOrElse(new HttpLookupClient(
+        a.propertyIdApiEndpoint.get,
+        throttleMillis = (a.propertyIdApiSleep * 1000).toLong))
+      MlsEnrich.lookupPropertyIds(spark, rows, client, a.propertyIdApiBatchSize)
+    case "MSSQL" =>
+      MlsEnrich.lookupPropertyIdsFromMssql(rows,
+        orc(spark, a.inputDirListingsMssql.get),
+        orc(spark, a.inputDirPropertyMasterMssql.get))
+  }
+
+  /** The ORC mirror of Jobs 1 and 3 (curated.py:359-363; Job 3 writes it
+    * under `--overwrite_orc_location`): the live table without the asg_*
+    * columns past the id and its final flag. */
+  private def writeMirror(spark: SparkSession, deltaRoot: String,
+                          dir: String, numFiles: Int): Unit =
+    TableIO.writeOrcZlib(
+      ManagedTable.read(spark, deltaRoot).drop(MlsEnrich.asgCols.drop(2): _*),
+      dir, numFiles)
 
   /** One full Job-1 run. Returns the managed-table root so callers/specs
     * can read the published state; counts are the caller's choice (the
@@ -114,29 +131,12 @@ object MlsJobsMain {
               clientOverride: Option[BatchLookup.LookupClient] = None)
       : String = {
     val deltaRoot = deltaDirOf(a.listingsOutputDir)
-
-    // ---- read inputs (curated.py:70-96) --------------------------------
-    val listings = readWindowedListings(spark, a)
-    val boards = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirBoards.get)
-    val states = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirStates.get)
-    val zipcodes = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirZipcodes.get)
-    val psub = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirPropertySubTypes.get)
-    val counties = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirCounties.get)
-    val geoIds = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirGeoIds.get)
     val targetSchema = SchemaLoader.fromFile(a.targetSchemaFile.get)
 
-    // ---- validate + transform (curated.py:110-117) ---------------------
-    val (good, rejected) = MlsValidate.validateListings(
-      listings, boards, states, zipcodes, psub)
-    // LAZY lineage truncation, same as the e2e gates (MlsJob1Gate.job1E2e):
-    // dedupe reads this frame twice (its batch keys and the window input),
-    // and without the checkpoint each read re-analyzes AND re-executes the
-    // many-thousand-expression transform tree. Lazy: the plan is truncated
-    // at analysis time, the blocks persist inside whichever job computes
-    // them first. Validation itself is checkpointed inside MlsValidate.
-    val fresh = MlsFullTransform.transformKeeping(targetSchema, Nil)(
-      good, counties, geoIds, asOf, now)
-      .localCheckpoint(eager = false)
+    // ---- read, validate + transform (curated.py:70-117) ----------------
+    val (fresh, rejected) = MlsFullTransform.validatedBatch(
+      readWindowedListings(spark, a), argvDims(spark, a), targetSchema, Nil,
+      asOf, now)
 
     // ---- union with curated + the two windows (curated.py:120-189) -----
     val curated: DataFrame =
@@ -152,32 +152,21 @@ object MlsJobsMain {
     // batch-sized materialized frame, not the window subtree.
     val dd = LatestWins.dedupe(fresh, curated, keys, window1Ordering,
       recomputeMin = Seq("create_timestamp"),
-      recomputeMax = asgRecomputeMax)
+      recomputeMax = MlsEnrich.asgCols)
     val latest = dd.latest.withColumn("asg_primary_id_load_status",
       coalesce(col("asg_primary_id_load_status"), lit("Null")))
 
     // ---- property-id lookup (curated.py:194-271) -----------------------
     val resolved: DataFrame = a.propertyIdSource match {
       case "NONE" => latest
-      case source =>
+      case _ =>
         val toLookup0 = latest.filter(modeFilter(a.propertyIdModes))
         val toLookup = a.propertyIdLimit.fold(toLookup0)(budget(toLookup0, _))
-        val lookup: Option[DataFrame] = source match {
-          case "API" =>
-            val client = clientOverride.getOrElse(new HttpLookupClient(
-              a.propertyIdApiEndpoint.get,
-              throttleMillis = (a.propertyIdApiSleep * 1000).toLong))
-            MlsEnrich.lookupPropertyIds(spark, toLookup, client,
-              a.propertyIdApiBatchSize)
-          case "MSSQL" =>
-            MlsEnrich.lookupPropertyIdsFromMssql(toLookup,
-              graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirListingsMssql.get),
-              graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirPropertyMasterMssql.get))
-        }
         // Inner-joining the FULL latest set against the lookup rows
         // touches exactly the budgeted keys (lkp keys ⊆ toLookup keys),
         // so one attach covers the reference's subset-join + union.
-        lookup.fold(latest)(MlsEnrich.attachPropertyIds(latest, _, now))
+        lookup(spark, a, toLookup, clientOverride)
+          .fold(latest)(MlsEnrich.attachPropertyIds(latest, _, now))
     }
     val finalDf =
       resolved.select(targetSchema.fieldNames.toIndexedSeq.map(col): _*)
@@ -200,9 +189,7 @@ object MlsJobsMain {
       s"job=listings_curated from=${a.fromDate} to=${a.toDate}") {
       ManagedTable.merge(spark, deltaRoot, finalDf, keys)
     }
-    TableIO.writeOrcZlib(
-      ManagedTable.read(spark, deltaRoot).drop(mirrorDropped: _*),
-      a.listingsOutputDir, a.numOutputFiles)
+    writeMirror(spark, deltaRoot, a.listingsOutputDir, a.numOutputFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
   }
@@ -213,7 +200,7 @@ object MlsJobsMain {
   private def readWindowedListings(spark: SparkSession,
                                    a: JobsCliArgs): DataFrame =
     a.inputDirListings.map { d =>
-      val df = graft.sources.TableIO.readStatic(spark, format = "orc", path = d).filter(
+      val df = orc(spark, d).filter(
         col("load_date").between(lit(a.fromDateIso), lit(a.toDateIso)))
       a.inputMlsList.fold(df)(codes => df.filter(col("mls").isin(codes: _*)))
     }.reduce(_ union _)
@@ -235,51 +222,22 @@ object MlsJobsMain {
     val histOut = a.listingsHistOutputDir.getOrElse(
       throw new IllegalArgumentException("missing --listings_hist_output_dir"))
     val deltaRoot = deltaDirOf(histOut)
-    val listings = readWindowedListings(spark, a)
-    val boards = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirBoards.get)
-    val states = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirStates.get)
-    val zipcodes = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirZipcodes.get)
-    val psub = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirPropertySubTypes.get)
-    val counties = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirCounties.get)
-    val geoIds = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirGeoIds.get)
     val targetSchema = SchemaLoader.fromFile(a.targetSchemaFile.get)
-
-    val (good, _) = MlsValidate.validateListings(
-      listings, boards, states, zipcodes, psub)
-    // Same lazy lineage truncation as runJob1 (see the comment there).
-    val fresh = MlsFullTransform.transformKeeping(targetSchema, Nil)(
-      good, counties, geoIds, asOf, now)
-      .localCheckpoint(eager = false)
+    // rejects discarded — the hist job logs nothing
+    val (fresh, _) = MlsFullTransform.validatedBatch(
+      readWindowedListings(spark, a), argvDims(spark, a), targetSchema, Nil,
+      asOf, now)
 
     // hist:109-116 — try the mirror, fall back to new-only on first run.
     val curated: Option[DataFrame] =
-      scala.util.Try(graft.sources.TableIO.readStatic(spark, format = "orc", path = histOut)
+      scala.util.Try(orc(spark, histOut)
         .select(targetSchema.fieldNames.toIndexedSeq.map(col): _*)).toOption
-    mergeHistory(spark, deltaRoot, fresh, curated, targetSchema.fieldNames.toSeq)
+    MlsHistory.mergeHistory(spark, deltaRoot, fresh, curated,
+      targetSchema.fieldNames.toSeq)
     TableIO.writeOrcZlib(ManagedTable.read(spark, deltaRoot),
       histOut, a.numOutputFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
-  }
-
-  /** Job 2's publish step (hist:119-210): hist-grain dedup of the fresh
-    * batch ∪ `curated` (projected to `fieldNames`), `*_old` + changed
-    * flags, then the three-way MERGE into the delta table at `deltaRoot`,
-    * created empty on the first run. */
-  def mergeHistory(spark: SparkSession, deltaRoot: String, fresh: DataFrame,
-                   curated: Option[DataFrame], fieldNames: Seq[String]): Unit = {
-    val source = MlsJob2Gate.histFinal(fresh, curated, fieldNames)
-      .localCheckpoint(eager = false)
-    if (!ManagedTable.exists(deltaRoot))
-      VersionedLayout.withUserMetadata(
-        "Create empty listings hist delta table") {
-        ManagedTable.createEmpty(spark, deltaRoot,
-          source.drop("_insert_update_flag"))
-      }
-    // Plain (non-null-safe) key equality, exactly hist:185 — rows whose
-    // source_as_of_date the sanitizer nulled never match and re-insert.
-    ManagedTable.merge(spark, deltaRoot, source, MlsJob2Gate.grainKeys,
-      MlsJob2Gate.histMergeSpec, nullSafeKeys = false)
   }
 
   /** One full Job-3 (property-id BACKFILL) run behind the reference's
@@ -301,10 +259,10 @@ object MlsJobsMain {
       throw new IllegalArgumentException("missing --listings_delta_dir"))
     val targetSchema = SchemaLoader.fromFile(a.targetSchemaFile.get)
     if (!ManagedTable.exists(deltaRoot)) {
-      val orc0 = graft.sources.TableIO.readStatic(spark, format = "orc", path = a.listingsOrcDir.get)
+      val orc0 = orc(spark, a.listingsOrcDir.get)
       val boot0 =
         if (orc0.columns.contains("asg_primary_id")) orc0
-        else MlsJob3Gate.addAsgPlaceholders(orc0)
+        else MlsBackfill.addAsgPlaceholders(orc0)
       VersionedLayout.withUserMetadata("Create listings delta table") {
         ManagedTable.overwrite(deltaRoot,
           boot0.select(targetSchema.fieldNames.toIndexedSeq.map(col): _*))
@@ -312,43 +270,14 @@ object MlsJobsMain {
     }
     val cur0 = ManagedTable.read(spark, deltaRoot)
     val cur = a.inputMlsList.fold(cur0)(m => cur0.filter(col("mls").isin(m: _*)))
-    // Candidate filters + budget share the gate's exact column logic;
-    // without a limit the mode/date filter set goes to lookup whole.
-    val cand = a.backfillLimit match {
-      case Some(n) =>
-        MlsJob3Gate.candidates(cur, a.backfillRangeIso, a.propertyIdModes, n)
-      case None =>
-        val dated = a.backfillRangeIso.fold(cur) { case (lo, hi) =>
-          cur.filter(s"""load_date between "$lo" and "$hi"""") }
-        dated.filter(col("asg_primary_id_load_status")
-          .isin(a.propertyIdModes: _*))
-    }
-    val lookup: Option[DataFrame] = a.propertyIdSource match {
-      case "API" =>
-        val client = clientOverride.getOrElse(new HttpLookupClient(
-          a.propertyIdApiEndpoint.get,
-          throttleMillis = (a.propertyIdApiSleep * 1000).toLong))
-        MlsEnrich.lookupPropertyIds(spark, cand, client,
-          a.propertyIdApiBatchSize)
-      case "MSSQL" =>
-        MlsEnrich.lookupPropertyIdsFromMssql(cand,
-          graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirListingsMssql.get),
-          graft.sources.TableIO.readStatic(spark, format = "orc", path = a.inputDirPropertyMasterMssql.get))
-    }
-    val enriched = MlsJob3Gate.attach(cand,
-      lookup.getOrElse(throw new IllegalStateException(
-        "property id lookup returned no frame")), now)
-    val changedAny = !MlsJob3Gate.asgCols
-      .map(c => col(s"t.$c") <=> col(s"s.$c")).reduce(_ && _)
-    // updateWhen changed-only; insertWhen None = the reference's plain
-    // `when not matched then insert *` (vacuous here — source ⊆ table —
-    // but kept for clause parity, backfill:205-212).
-    ManagedTable.merge(spark, deltaRoot, enriched, keys,
-      MergeClauses.Spec(updateWhen = Some(changedAny)))
+    val cand = MlsBackfill.candidates(cur, a.backfillRangeIso,
+      a.propertyIdModes, a.backfillLimit)
+    MlsBackfill.attachAndMerge(spark, deltaRoot, cand,
+      lookup(spark, a, cand, clientOverride).getOrElse(
+        throw new IllegalStateException("property id lookup returned no frame")),
+      now)
     if (a.overwriteOrcLocation)
-      TableIO.writeOrcZlib(
-        ManagedTable.read(spark, deltaRoot).drop(mirrorDropped: _*),
-        a.listingsOrcDir.get, a.numOutputOrcFiles)
+      writeMirror(spark, deltaRoot, a.listingsOrcDir.get, a.numOutputOrcFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
   }

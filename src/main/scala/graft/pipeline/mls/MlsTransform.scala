@@ -245,7 +245,4 @@ object MlsTransform {
         when(col("_tmp_ls").isNotNull && col("_tmp_ls") <= 2147483647L,
           col("_tmp_ls").cast(DecimalType(16, 4)))))
   }
-
-  private[mls] def townshipRangeCol(c: Column): Column = townshipRange(c)
-  private[mls] def waterSourceCol(c: Column): Column = waterSource(c)
 }

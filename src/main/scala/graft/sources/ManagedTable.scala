@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -71,7 +72,7 @@ object ManagedTable extends VersionedLayout {
       case None =>
         applyColmap(TableIO.readStatic(spark, dir.toString), colmapOf(root, version))
       case Some(base) =>
-        val dv = TableIO.readStatic(spark, s"$root/v$version/_dv")
+        val dv = readDv(spark, root, version)
         val baseRows = addressed(spark, s"$root/v$base")
           .join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
           .drop(DvFileCol, DvPosCol)
@@ -87,6 +88,21 @@ object ManagedTable extends VersionedLayout {
     * (the parquet reader's `_metadata.row_index`). */
   private val DvFileCol = "_dv_file"
   private val DvPosCol = "_dv_pos"
+
+  /** A DV version's (file, pos) tombstones. The read names the `_dv`
+    * dir's parquet files, not the dir: Spark takes a `_`-prefixed root as
+    * hidden and warns "All paths were ignored" on every read, then reads
+    * it anyway. Every write leaves at least one (possibly empty) file, and
+    * the schema is fixed, so nothing is inferred. */
+  private def readDv(spark: SparkSession, root: String, version: Int): DataFrame = {
+    val st = Files.list(Paths.get(root, s"v$version", "_dv"))
+    val files = try st.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toVector
+      finally st.close()
+    spark.read.schema(StructType(Seq(StructField(DvFileCol, StringType),
+        StructField(DvPosCol, LongType))))
+      .parquet(files: _*)
+  }
 
   /** The FULL version whose files a DV version shares, or None when
     * `version` is itself a full snapshot. */
@@ -474,7 +490,7 @@ object ManagedTable extends VersionedLayout {
     dvBaseOf(root, live) match {
       case None => (base, addr, None, None)
       case Some(_) =>
-        val dv = TableIO.readStatic(spark, s"$root/v$live/_dv")
+        val dv = readDv(spark, root, live)
         (base, addr.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"),
           Some(dv), appDirOf(root, live).map(TableIO.readStatic(spark, _)))
     }
@@ -624,7 +640,7 @@ object ManagedTable extends VersionedLayout {
         val minus = df.withColumn(DvFileCol,
             element_at(split(col("_metadata.file_path"), "/"), -1))
           .withColumn(DvPosCol, col("_metadata.row_index"))
-          .join(TableIO.readStatic(spark, s"$root/v$live/_dv"),
+          .join(readDv(spark, root, live),
             Seq(DvFileCol, DvPosCol), "left_anti")
           .drop(DvFileCol, DvPosCol)
         appDirOf(root, live).fold(minus)(d =>
@@ -1365,7 +1381,7 @@ object ManagedTable extends VersionedLayout {
         val minus = df.withColumn(DvFileCol,
             element_at(split(col("_metadata.file_path"), "/"), -1))
           .withColumn(DvPosCol, col("_metadata.row_index"))
-          .join(TableIO.readStatic(spark, s"$root/v$live/_dv"),
+          .join(readDv(spark, root, live),
             Seq(DvFileCol, DvPosCol), "left_anti")
           .drop(DvFileCol, DvPosCol)
         appDirOf(root, live).fold(minus)(d =>

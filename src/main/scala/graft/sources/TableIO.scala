@@ -34,14 +34,18 @@ object TableIO {
   /** Read a write-once path with the schema cached per (format, path,
     * dir mtime): the mtime key makes a wiped-and-rewritten path (the
     * gate harness's fresh() cycle) re-infer instead of serving a stale
-    * schema — one stat call per read, ~μs against the ~65 ms saved. */
+    * schema — one stat call per read, ~μs against the ~65 ms saved. A
+    * path the local stat cannot see (a URI, a glob) has no mtime to key
+    * on, so it is read without the cache. */
   def readStatic(spark: SparkSession, path: String,
                  format: String = "parquet"): DataFrame = {
-    val mtime = try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path)).toMillis catch { case _: Exception => -1L }
-    val sc = staticSchemas.computeIfAbsent(s"$format:$path@$mtime",
-      _ => spark.read.format(format).load(path).schema)
-    spark.read.schema(sc).format(format).load(path)
+    val mtime = try Some(java.nio.file.Files.getLastModifiedTime(
+      java.nio.file.Paths.get(path)).toMillis) catch { case _: Exception => None }
+    mtime.fold(spark.read.format(format).load(path)) { m =>
+      val sc = staticSchemas.computeIfAbsent(s"$format:$path@$m",
+        _ => spark.read.format(format).load(path).schema)
+      spark.read.schema(sc).format(format).load(path)
+    }
   }
 
   /** Read one testdata table (`<dir>/<name>.parquet`). */

@@ -302,6 +302,36 @@ class ManagedTableSpec extends AnyFunSuite {
     assert(ManagedTable.read(spark, root).count() == 800)
   }
 
+  test("a deletion-vector read logs no 'All paths were ignored' WARN") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val root = Files.createTempDirectory("graft_dv_warn").toString
+    ManagedTable.overwrite(root, (1 to 100).map(i => (i.toLong, i % 10)).toDF("k", "m"))
+    ManagedTable.deleteVectorized(spark, root, col("m") === 0)
+    val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("dv-read-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        messages.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    // Spark's file-source resolution logs under this name.
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    val level0 = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    val rows = try ManagedTable.read(spark, root).count()
+      finally { logger.removeAppender(capture); logger.setLevel(level0); capture.stop() }
+    assert(rows == 90)
+    import scala.jdk.CollectionConverters._
+    assert(!messages.asScala.exists(_.contains("All paths were ignored")),
+      messages.asScala.mkString("\n"))
+  }
+
   test("compactSmall packs only the small tail; big files carry as links") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._

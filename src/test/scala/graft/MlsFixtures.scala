@@ -108,7 +108,7 @@ object MlsFixtures {
     * current state as the curated side (what `runJob2` reads back from
     * the ORC mirror it wrote from that state). */
   def runHistory(spark: SparkSession, root: String, fresh: DataFrame): Unit =
-    graft.pipeline.mls.MlsJobsMain.mergeHistory(spark, root, fresh,
+    graft.pipeline.mls.MlsHistory.mergeHistory(spark, root, fresh,
       if (graft.sources.ManagedTable.exists(root))
         Some(graft.sources.ManagedTable.read(spark, root))
       else None,

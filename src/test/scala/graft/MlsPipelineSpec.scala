@@ -84,7 +84,12 @@ class MlsPipelineSpec extends AnyFunSuite {
         "owner_phone" -> "123-456-7890", "subdivision" -> "42",
         "lot_size_acres" -> 2.0, "lot_size_sq_ft" -> null,
         "water_source" -> "no water", "year_built" -> 1500,
-        "entry_date" -> Date.valueOf("1800-01-01"))), asOf)
+        "entry_date" -> Date.valueOf("1800-01-01")),
+      // boundaries kept: a close at exactly asOf+180, the year 1900, a
+      // year_built of 1700 (the window opens at 1600)
+      listing("mls_listing_id" -> "T3", "water_source" -> "city water",
+        "year_built" -> 1700, "closed_date" -> Date.valueOf("2024-11-28"),
+        "entry_date" -> Date.valueOf("1900-01-01"))), asOf)
     val colIdx = df.columns.zipWithIndex.toMap
     val byId = df.collect()
       .map(r => r.getString(colIdx("mls_listing_id")) -> r).toMap
@@ -113,6 +118,12 @@ class MlsPipelineSpec extends AnyFunSuite {
     assert(v("T2", "water_source") == "None")
     assert(v("T2", "year_built") == null)
     assert(v("T2", "entry_date") == null)             // pre-1900 sanitized
+    assert(v("T3", "water_source") == "Municipal")
+    assert(v("T3", "year_built") == 1700)
+    assert(v("T3", "closed_date") == Date.valueOf("2024-11-28"))
+    assert(v("T3", "entry_date") == Date.valueOf("1900-01-01"))
+    assert(v("T3", "apn") == "123456")                // from "12-34 56"
+    assert(v("T3", "lot_size_acres").toString == "1.0000") // 43560 sq ft
   }
 
   test("history job on MLS snapshot grain keeps only change rows") {

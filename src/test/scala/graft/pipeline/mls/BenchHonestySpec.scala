@@ -17,9 +17,10 @@ import graft.sources.ScratchDirs
   * refactor that memoizes an e2e run introduces a new memo name here and
   * fails loudly. It also pins the one session config surface: every main
   * builds its session through GraftSession, so the oracle certifies the
-  * engine configuration the bench times. And it pins the one banded
+  * engine configuration the bench times. It pins the one banded
   * candidate-join core: no main file but BandJoin/SkewCap writes its own
-  * skew-capped band join or Hamming verify. */
+  * skew-capped band join or Hamming verify. And it pins the one MLS step
+  * library: no main file but a gate references a gate object. */
 class BenchHonestySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -93,7 +94,7 @@ class BenchHonestySpec extends AnyFunSuite {
 
   /** Scala files under `root`, other than the `allowed` file names,
     * whose source matches `pattern`. */
-  private def scalaFilesMatching(root: String, allowed: Set[String],
+  private def scalaFilesMatching(root: String, allowed: String => Boolean,
                         pattern: scala.util.matching.Regex): Vector[String] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try {
@@ -124,6 +125,17 @@ class BenchHonestySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"$offenders hand-write a skew-capped band join or a Hamming verify " +
         "— route it through graft.operators.BandJoin")
+  }
+
+  test("no main file but a gate calls a gate object (one step library)") {
+    // Drivers and step objects hold the steps; gates hold fixtures,
+    // clocks, argv and oracle SQL, and call the steps — never the reverse.
+    val gateRef = "\\b\\w+Gate\\.".r
+    val offenders = scalaFilesMatching("src/main",
+      n => n.endsWith("Gate.scala") || n == "SparkEntry.scala", gateRef)
+    assert(offenders.isEmpty,
+      s"$offenders reference a gate object — move the step it uses into " +
+        "a step object under graft.pipeline.mls and call it from both sides")
   }
 
   test("SPARK_GRAFT_CPUS defaults to the host's processor count") {
