@@ -6,6 +6,7 @@ import graft.enrich.{BatchLookup, HttpLookupClient}
 import graft.pipeline.{JobsCli, JobsCliArgs, LatestWins}
 import graft.schema.SchemaLoader
 import graft.sources.{ManagedTable, TableIO, VersionedLayout}
+import scala.jdk.CollectionConverters._
 
 /** The REAL drivers behind the reference argv surfaces. `main` is the
   * Job-1 entry (mls_listings_curated.py:62-371): it reads ORC listings
@@ -33,9 +34,16 @@ import graft.sources.{ManagedTable, TableIO, VersionedLayout}
   * broadcast (MlsValidate/attachGeo); the windows shuffle only the batch's
   * keys and their curated versions ([[LatestWins.dedupe]]), so the nightly
   * window cost follows the batch, not the table; the merge shuffles once
-  * on (mls, mls_listing_id); the lookup leg sends service batches of at
-  * most `--property_id_api_batch_size` rows; and the final ORC mirror is
-  * file-count-controlled.
+  * on (mls, mls_listing_id) and publishes merge-on-read
+  * ([[ManagedTable.mergeVectorized]]): the new version holds tombstones
+  * for the matched rows plus the batch's post-images and inserts, so the
+  * nightly write follows the batch too, and no base data file is
+  * rewritten. ManagedTable's fold rule compacts the head once its appended
+  * bytes reach the base's (at once on the first run into a new table).
+  * The lookup leg sends service batches of at most
+  * `--property_id_api_batch_size` rows, and the final ORC mirror (the
+  * reference's Hive-table contract) stays a file-count-controlled full
+  * overwrite.
   */
 object MlsJobsMain {
 
@@ -120,7 +128,9 @@ object MlsJobsMain {
       ManagedTable.read(spark, deltaRoot).drop(MlsEnrich.asgCols.drop(2): _*),
       dir, numFiles)
 
-  /** One full Job-1 run. Returns the managed-table root so callers/specs
+  /** One full Job-1 run. The batch publishes through the merge-on-read
+    * MERGE with the reference's keys and default clauses
+    * (curated.py:329-353). Returns the managed-table root so callers/specs
     * can read the published state; counts are the caller's choice (the
     * reference logs, it does not count). `clientOverride` lets specs
     * inject a deterministic lookup client; production builds the real
@@ -187,7 +197,7 @@ object MlsJobsMain {
       }
     VersionedLayout.withUserMetadata(
       s"job=listings_curated from=${a.fromDate} to=${a.toDate}") {
-      ManagedTable.merge(spark, deltaRoot, finalDf, keys)
+      ManagedTable.mergeVectorized(spark, deltaRoot, finalDf, keys)
     }
     writeMirror(spark, deltaRoot, a.listingsOutputDir, a.numOutputFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
@@ -228,16 +238,29 @@ object MlsJobsMain {
       readWindowedListings(spark, a), argvDims(spark, a), targetSchema, Nil,
       asOf, now)
 
-    // hist:109-116 — try the mirror, fall back to new-only on first run.
+    // hist:109-116 — union the mirror, or new rows only on the first run
+    // (no mirror dir yet, or one without data files).
     val curated: Option[DataFrame] =
-      scala.util.Try(orc(spark, histOut)
-        .select(targetSchema.fieldNames.toIndexedSeq.map(col): _*)).toOption
+      Option.when(hasDataFiles(histOut))(orc(spark, histOut)
+        .select(targetSchema.fieldNames.toIndexedSeq.map(col): _*))
     MlsHistory.mergeHistory(spark, deltaRoot, fresh, curated,
       targetSchema.fieldNames.toSeq)
     TableIO.writeOrcZlib(ManagedTable.read(spark, deltaRoot),
       histOut, a.numOutputFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
     deltaRoot
+  }
+
+  /** Whether `dir` exists and holds a data file (a name Spark's file
+    * sources do not skip as hidden: not `_`- or `.`-prefixed). */
+  private def hasDataFiles(dir: String): Boolean = {
+    val p = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.isDirectory(p) && {
+      val st = java.nio.file.Files.list(p)
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .exists(n => !n.startsWith("_") && !n.startsWith("."))
+      finally st.close()
+    }
   }
 
   /** One full Job-3 (property-id BACKFILL) run behind the reference's

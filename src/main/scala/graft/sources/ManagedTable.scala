@@ -24,11 +24,14 @@ import scala.jdk.CollectionConverters._
   * on the pointer object (same protocol Delta/Iceberg use for their log tip).
   *
   * Scale notes (100 TB): `merge` is one shuffle of each side on the merge key
-  * — the cost floor for a generic keyed upsert. The snapshot rewrite is
-  * proportional to the full table; at 100 TB the production refinement is
-  * key-range/bucket partitioning of each snapshot so a merge only rewrites
-  * buckets containing source keys (the source is typically a small daily
-  * delta). The MERGE semantics below are independent of that layout choice.
+  * — the cost floor for a generic keyed upsert — and rewrites the full
+  * snapshot. `mergeVectorized` (the nightly Job-1 publish) runs the same
+  * join but writes only the batch: tombstones for the matched rows plus
+  * their post-images and the inserts, so its write cost follows the daily
+  * delta, not the table. Its reads pay base + appended rows; the fold rule
+  * in [[publishMor]] compacts the head once the appended bytes reach the
+  * base's, which bounds every live read by twice the base. The MERGE
+  * semantics below are independent of the layout choice.
   */
 object MergeClauses {
   /** Delta-MERGE-equivalent clause set. Conditions see the matched pair as
@@ -76,8 +79,8 @@ object ManagedTable extends VersionedLayout {
         val baseRows = addressed(spark, s"$root/v$base")
           .join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
           .drop(DvFileCol, DvPosCol)
-        appDirOf(root, version).fold(baseRows)(d =>
-          baseRows.unionByName(TableIO.readStatic(spark, d)))
+        readApp(spark, root, version, baseRows.schema)
+          .fold(baseRows)(baseRows.unionByName(_))
     }
   }
 
@@ -94,15 +97,23 @@ object ManagedTable extends VersionedLayout {
     * hidden and warns "All paths were ignored" on every read, then reads
     * it anyway. Every write leaves at least one (possibly empty) file, and
     * the schema is fixed, so nothing is inferred. */
-  private def readDv(spark: SparkSession, root: String, version: Int): DataFrame = {
-    val st = Files.list(Paths.get(root, s"v$version", "_dv"))
-    val files = try st.iterator().asScala.map(_.toString)
-      .filter(_.endsWith(".parquet")).toVector
-      finally st.close()
+  private def readDv(spark: SparkSession, root: String, version: Int): DataFrame =
     spark.read.schema(StructType(Seq(StructField(DvFileCol, StringType),
         StructField(DvPosCol, LongType))))
-      .parquet(files: _*)
-  }
+      .parquet(parquetFiles(Paths.get(root, s"v$version", "_dv")): _*)
+
+  /** The parquet files directly inside `dir` (none when it is absent). */
+  private def parquetFiles(dir: Path): Vector[String] =
+    if (!Files.exists(dir)) Vector.empty
+    else {
+      val st = Files.list(dir)
+      try st.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toVector
+      finally st.close()
+    }
+
+  private def parquetBytes(dir: Path): Long =
+    parquetFiles(dir).map(f => Files.size(Paths.get(f))).sum
 
   /** The FULL version whose files a DV version shares, or None when
     * `version` is itself a full snapshot. */
@@ -111,17 +122,16 @@ object ManagedTable extends VersionedLayout {
     if (Files.exists(f)) Some(Files.readString(f).trim.toInt) else None
   }
 
-  /** The appended-rows dir of a merge-on-read version, when it has data
-    * files ([[updateVectorized]] writes updated copies there). */
-  private def appDirOf(root: String, version: Int): Option[String] = {
-    val d = Paths.get(root, s"v$version", "_append")
-    def hasData = {
-      val st = Files.list(d)
-      try st.iterator().asScala
-        .exists(_.getFileName.toString.endsWith(".parquet"))
-      finally st.close()
-    }
-    if (Files.exists(d) && hasData) Some(d.toString) else None
+  /** The appended rows of a merge-on-read version, when its `_append` dir
+    * has data files (the vectorized writes put post-images and inserts
+    * there). Read like [[readDv]]: by file name, with the base's `schema`,
+    * which every vectorized write requires appended rows to match type
+    * for type. Reading the dir would log the false "All paths were
+    * ignored" WARN and cache one inferred schema per published version. */
+  private def readApp(spark: SparkSession, root: String, version: Int,
+                      schema: StructType): Option[DataFrame] = {
+    val files = parquetFiles(Paths.get(root, s"v$version", "_append"))
+    Option.when(files.nonEmpty)(spark.read.schema(schema).parquet(files: _*))
   }
 
   // ---- column mapping (metadata-only RENAME COLUMN) ---------------------
@@ -265,7 +275,7 @@ object ManagedTable extends VersionedLayout {
         .write.mode("overwrite").parquet(s"$root/_changes/v$next")
     }
     val newTombs = baseLive.filter(hit).select(col(DvFileCol), col(DvPosCol))
-    publishMor(root, next, base,
+    publishMor(spark, root, next, base,
       oldDv.fold(newTombs)(_.unionByName(newTombs)),
       oldApp.map(_.filter(!hit)))
   }
@@ -321,7 +331,7 @@ object ManagedTable extends VersionedLayout {
         .write.mode("overwrite").parquet(s"$root/_changes/v$next")
     val newTombs = baseLive.filter(hit).select(col(DvFileCol), col(DvPosCol))
     val app2 = oldApp.fold(guarded)(a => a.filter(!hit).unionByName(guarded))
-    publishMor(root, next, base,
+    publishMor(spark, root, next, base,
       oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(app2))
   }
 
@@ -363,7 +373,7 @@ object ManagedTable extends VersionedLayout {
       constraintsOf(root))
     val newTombs = baseLive.filter(hit).select(col(DvFileCol), col(DvPosCol))
     val app2 = oldApp.fold(guarded)(a => a.filter(!hit).unionByName(guarded))
-    publishMor(root, live + 1, base,
+    publishMor(spark, root, live + 1, base,
       oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(app2))
   }
 
@@ -393,8 +403,10 @@ object ManagedTable extends VersionedLayout {
     * write cost and the lazy-checkpoint footprint scale with
     * |source| + |append set|, not the table. At 100 TB a daily-delta
     * upsert writes GBs where [[merge]] rewrites the snapshot (and
-    * [[BucketedTable.merge]] rewrites touched buckets); [[optimize]]
-    * later folds the accumulated deltas back into a clean snapshot.
+    * [[BucketedTable.merge]] rewrites touched buckets); the fold rule in
+    * [[publishMor]] runs [[optimize]] once the accumulated deltas reach
+    * the base's size. Job 1's nightly publish
+    * ([[graft.pipeline.mls.MlsJobsMain.runJob1]]) runs through here.
     *
     * Schema evolution is NOT offered here: appended files must match the
     * base schema or the union on read breaks — an evolving merge is a
@@ -475,7 +487,7 @@ object ManagedTable extends VersionedLayout {
       val app2 = guarded.unionByName(
         touched.filter(act === lit("keep"))
           .drop(DvFileCol, DvPosCol, Merge.ActionCol, Merge.PreCol))
-      publishMor(root, next, base,
+      publishMor(spark, root, next, base,
         oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(app2))
     } finally touched.unpersist()
   }
@@ -492,21 +504,33 @@ object ManagedTable extends VersionedLayout {
       case Some(_) =>
         val dv = readDv(spark, root, live)
         (base, addr.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"),
-          Some(dv), appDirOf(root, live).map(TableIO.readStatic(spark, _)))
+          Some(dv), readApp(spark, root, live,
+            addr.drop(DvFileCol, DvPosCol).schema))
     }
   }
 
   /** Publish a merge-on-read version: tombstones, optional appended rows,
     * then the base marker — all before the pointer swap, so a readable
-    * version is always complete. */
-  private def publishMor(root: String, next: Int, base: Int,
-                         tombstones: DataFrame,
+    * version is always complete.
+    *
+    * Then the fold rule, fixed and without a knob: when the new head's
+    * `_append` bytes are at least its base's data bytes, [[optimize]]
+    * folds it into a full snapshot at once. A merge-on-read read scans
+    * base + appended rows, so this keeps every live read within twice its
+    * base. The first merge into a [[createEmpty]] table (an empty base)
+    * therefore always ends on a full version. Like any OPTIMIZE, the fold
+    * version changes no rows and records no change feed. */
+  private def publishMor(spark: SparkSession, root: String, next: Int,
+                         base: Int, tombstones: DataFrame,
                          appended: Option[DataFrame]): Unit = {
     tombstones.write.mode("overwrite").parquet(s"$root/v$next/_dv")
     appended.foreach(_.write.mode("overwrite")
       .parquet(s"$root/v$next/_append"))
     Files.writeString(Paths.get(root, s"v$next", "_dv_base"), base.toString)
     swapPointer(root, next)
+    if (parquetBytes(Paths.get(root, s"v$next", "_append")) >=
+        parquetBytes(Paths.get(root, s"v$base")))
+      optimize(spark, root)
   }
 
   /** Snapshot DIFF between two published versions — CDC reconstruction
@@ -643,8 +667,8 @@ object ManagedTable extends VersionedLayout {
           .join(readDv(spark, root, live),
             Seq(DvFileCol, DvPosCol), "left_anti")
           .drop(DvFileCol, DvPosCol)
-        appDirOf(root, live).fold(minus)(d =>
-          minus.unionByName(TableIO.readStatic(spark, d)))
+        readApp(spark, root, live, minus.schema)
+          .fold(minus)(minus.unionByName(_))
     }
     val cmap = colmapOf(root, dvBase.getOrElse(live))
     def mapped(df: DataFrame): DataFrame = applyColmap(df, cmap)
@@ -1103,14 +1127,12 @@ object ManagedTable extends VersionedLayout {
                zorderBy: Seq[String] = Nil): Unit = {
     val live = currentVersion(root)
     // A DV version holds no data files of its own — size its base
-    // snapshot (an upper bound; the rewrite purges the tombstones).
-    val sizedDir = dvBaseOf(root, live).fold(s"v$live")(b => s"v$b")
-    val walk = Files.walk(Paths.get(root, sizedDir))
-    val snapBytes =
-      try walk.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(Files.size).sum
-      finally walk.close()
+    // snapshot plus its appended rows (an upper bound; the rewrite purges
+    // the tombstones).
+    val snapBytes = dvBaseOf(root, live).fold(
+      parquetBytes(Paths.get(root, s"v$live")))(b =>
+      parquetBytes(Paths.get(root, s"v$b")) +
+        parquetBytes(Paths.get(root, s"v$live", "_append")))
     val nFiles = math.max(1, math.ceil(snapBytes.toDouble / targetFileBytes).toInt)
     val cur = read(spark, root)
     var zorderCuts: Map[String, Seq[Double]] = Map.empty
@@ -1384,8 +1406,8 @@ object ManagedTable extends VersionedLayout {
           .join(readDv(spark, root, live),
             Seq(DvFileCol, DvPosCol), "left_anti")
           .drop(DvFileCol, DvPosCol)
-        appDirOf(root, live).fold(minus)(d =>
-          minus.unionByName(TableIO.readStatic(spark, d)))
+        readApp(spark, root, live, minus.schema)
+          .fold(minus)(minus.unionByName(_))
     }
     val pred = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)

@@ -311,6 +311,12 @@ class ManagedTableSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_dv_warn").toString
     ManagedTable.overwrite(root, (1 to 100).map(i => (i.toLong, i % 10)).toDF("k", "m"))
     ManagedTable.deleteVectorized(spark, root, col("m") === 0)
+    // v2: a merge-on-read MERGE, so the read below also takes `_append`
+    ManagedTable.mergeVectorized(spark, root,
+      Seq(1L, 2L, 3L, 10L).map(k => (k, 7)).toDF("k", "m"), Seq("k"))
+    assert(ManagedTable.currentVersion(root) == 2)
+    assert(Files.exists(Paths.get(root, "v2", "_dv_base")))
+    assert(Files.exists(Paths.get(root, "v2", "_append")))
     val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val capture = new AbstractAppender("dv-read-capture", null, null, true,
         Property.EMPTY_ARRAY) {
@@ -324,9 +330,11 @@ class ManagedTableSpec extends AnyFunSuite {
     val level0 = logger.getLevel
     logger.addAppender(capture)
     logger.setLevel(Level.WARN)
-    val rows = try ManagedTable.read(spark, root).count()
+    val (rows1, rows2) = try (ManagedTable.readVersion(spark, root, 1).count(),
+        ManagedTable.read(spark, root).count())
       finally { logger.removeAppender(capture); logger.setLevel(level0); capture.stop() }
-    assert(rows == 90)
+    assert(rows1 == 90)
+    assert(rows2 == 91) // k = 10 was deleted in v1, so the merge re-inserts it
     import scala.jdk.CollectionConverters._
     assert(!messages.asScala.exists(_.contains("All paths were ignored")),
       messages.asScala.mkString("\n"))
@@ -719,6 +727,43 @@ class ManagedTableSpec extends AnyFunSuite {
       assert(vAt(9999L) == "c")
       intercept[IllegalArgumentException](vAt(50L)) // before first commit
     } finally VersionedLayout.commitClock = prev
+  }
+
+  test("fold rule: a merge-on-read head whose appends outweigh its base folds") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_mor_fold").toString
+    def files(v: Int) = Files.list(Paths.get(root, s"v$v")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    def isMor(v: Int) = Files.exists(Paths.get(root, s"v$v", "_dv_base"))
+    def rows(v: Int) = ManagedTable.readVersion(spark, root, v)
+      .as[(Long, Double)].collect().toMap
+
+    // the first merge into an empty table folds at once: v1 is
+    // merge-on-read over the empty v0, v2 its full snapshot
+    ManagedTable.createEmpty(spark, root, Seq((0L, 0.0)).toDF("k", "v"))
+    ManagedTable.mergeVectorized(spark, root,
+      (1 to 10).map(i => (i.toLong, i.toDouble)).toDF("k", "v").coalesce(1),
+      Seq("k"))
+    assert(isMor(1))
+    assert(ManagedTable.currentVersion(root) == 2)
+    assert(!isMor(2) && files(2).nonEmpty)
+    assert(rows(2) == rows(1) && rows(2).size == 10)
+
+    // a light head stays merge-on-read
+    ManagedTable.mergeVectorized(spark, root, Seq((1L, 1.5)).toDF("k", "v"),
+      Seq("k"))
+    assert(ManagedTable.currentVersion(root) == 3 && isMor(3))
+
+    // appends that outweigh the 10-row base fold the head into v5
+    ManagedTable.mergeVectorized(spark, root,
+      (5 to 2000).map(i => (i.toLong, i + 0.5)).toDF("k", "v"), Seq("k"))
+    assert(isMor(4))
+    assert(ManagedTable.currentVersion(root) == 5)
+    assert(!isMor(5) && files(5).nonEmpty)
+    val folded = rows(5)
+    assert(folded == rows(4))
+    assert(folded.size == 2000)
+    assert(folded(1L) == 1.5 && folded(4L) == 4.0 && folded(5L) == 5.5)
   }
 
   test("createEmpty publishes schema-only snapshot (limit 0)") {

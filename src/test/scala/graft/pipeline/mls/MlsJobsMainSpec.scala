@@ -346,7 +346,10 @@ class MlsJobsMainSpec extends AnyFunSuite {
       val lookedD = lookedUpAt(gr, "2024-08-01 00:00:00")
       assert(triedC.subsetOf(lookedD))
       assert(lookedD == keys(ManagedTable.read(spark, gr)))
-      assert(versionDirs(gr) == Seq(ManagedTable.currentVersion(gr)))
+      // retention 0 h keeps the live version and the base it reads (a
+      // merge-on-read head shares its base's files), nothing else
+      val live = ManagedTable.currentVersion(gr)
+      assert(versionDirs(gr) == (live +: dvBaseOf(gr, live).toSeq).sorted)
     } finally server.stop()
   }
 
@@ -357,20 +360,75 @@ class MlsJobsMainSpec extends AnyFunSuite {
     try {
       val gr = cliRun(root, server, "2024-07-01 00:00:00",
         Seq("--property_id_modes", "New", "--property_id_limit", "2"))
-      val live = s"/v${ManagedTable.currentVersion(gr)}"
-      val scans = ScanLog.during(spark) {
+      val v = ManagedTable.currentVersion(gr)
+      val (live, next) = (s"/v$v", s"/v${v + 1}")
+      // The second run merges the MLS0 third of the table: a batch that
+      // touches part of it, as a nightly one does.
+      val queries = ScanLog.during(spark) {
         cliRun(root, server, "2024-08-01 00:00:00", Seq(
+          "--input_mls_list", "MLS0",
           "--property_id_modes", "New,Null,Provisional,Final",
           "--property_id_limit", "2"))
       }
+      val scans = queries.flatten
       def scansOf(suffix: String) = scans.count(_.endsWith(suffix))
       // validation's scan + joins + dropDuplicates feed both the reject
       // leg and the transform: one execution
       assert(scansOf("/in_a") == 1, scans)
       assert(scansOf("/in_b") == 1, scans)
+      // The published version: a full snapshot dir, or a merge-on-read
+      // version's `_dv`/`_append` files (read along with live's files).
+      def readsNext(q: Seq[String]) =
+        q.exists(r => r.endsWith(next) || r.contains(s"$next/"))
       // the dedupe window and the merge target; the lookup branch and the
       // outdated leg read the window's materialized output
-      assert(scansOf(live) >= 1 && scansOf(live) <= 2, scans)
+      val liveOnly = queries.count(q => q.exists(_.endsWith(live)) && !readsNext(q))
+      assert(liveOnly >= 1 && liveOnly <= 2, queries)
+      // the mirror reads the published version, once
+      assert(queries.count(readsNext) == 1, queries)
+    } finally server.stop()
+  }
+
+  test("merge-on-read publish: the nightly version holds only the batch, " +
+      "reads as a copy-on-write MERGE would, and a new table folds at once") {
+    val root = Files.createTempDirectory("graft_cli_mor").toString
+    val server = new graft.enrich.StubPropertyServer()
+    try {
+      // the first run into a new table: v0 empty, v1 merge-on-read over
+      // it, then the fold publishes v2 as a full snapshot
+      val gr = cliRun(root, server, "2024-07-01 00:00:00",
+        Seq("--property_id_modes", "New", "--property_id_limit", "2"))
+      val live = ManagedTable.currentVersion(gr)
+      assert(live == 2 && dvBaseOf(gr, 1).contains(0), versionDirs(gr))
+      assert(dvBaseOf(gr, live).isEmpty)
+      assert(listNames(s"$gr/v$live").exists(_.endsWith(".parquet")))
+
+      val before = s"$root/before"
+      copyTree(gr, before)
+      val batchKeys = keys(ManagedTable.read(spark, gr)
+        .filter(col("mls") === "MLS0"))
+      assert(batchKeys.nonEmpty && batchKeys.size < keys(
+        ManagedTable.read(spark, gr)).size)
+      cliRun(root, server, "2024-08-01 00:00:00", Seq("--input_mls_list", "MLS0",
+        "--property_id_modes", "New", "--property_id_limit", "1"))
+      val next = live + 1
+      assert(ManagedTable.currentVersion(gr) == next)
+      // tombstones, appended rows and the base marker; no data file
+      assert(listNames(s"$gr/v$next").toSet == Set("_dv", "_append", "_dv_base"))
+      assert(dvBaseOf(gr, next).contains(live))
+      def parquet(d: String) = spark.read.parquet(
+        listNames(d).filter(_.endsWith(".parquet")).map(f => s"$d/$f"): _*)
+      val appended = parquet(s"$gr/v$next/_append")
+      // every batch key matched a live row: one post-image and one
+      // tombstone per merged row, no insert
+      assert(keys(appended) == batchKeys)
+      assert(appended.count() == batchKeys.size)
+      assert(parquet(s"$gr/v$next/_dv").count() == batchKeys.size)
+
+      // the copy-on-write MERGE of the same batch into the pre-run state
+      ManagedTable.merge(spark, before, appended, Seq("mls", "mls_listing_id"))
+      assert(digest(ManagedTable.read(spark, gr)) ==
+        digest(ManagedTable.read(spark, before)))
     } finally server.stop()
   }
 
@@ -384,11 +442,35 @@ class MlsJobsMainSpec extends AnyFunSuite {
 
   private def versionDirs(root: String): Seq[Int] =
     listNames(root).filter(_.matches("v\\d+")).map(_.drop(1).toInt).sorted
+
+  /** The full version a merge-on-read version's `_dv_base` names. */
+  private def dvBaseOf(root: String, version: Int): Option[Int] = {
+    val f = Paths.get(root, s"v$version", "_dv_base")
+    Option.when(Files.exists(f))(Files.readString(f).trim.toInt)
+  }
+
+  private def copyTree(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val st = Files.walk(src)
+    try st.forEach { p =>
+      val dst = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally st.close()
+  }
+
+  /** Order-independent content digest: row count plus the exact sum of a
+    * 64-bit hash of every row. */
+  private def digest(df: org.apache.spark.sql.DataFrame): String = {
+    val r = df.agg(count(lit(1)), sum(xxhash64(
+      df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
+      .cast("decimal(38,0)"))).head()
+    s"${r.getLong(0)}:${r.get(1)}"
+  }
 }
 
-/** Root paths of every file scan the queries of a block execute, from the
-  * executed plans a [[QueryExecutionListener]] sees (lazy checkpoints
-  * report theirs as a `localCheckpoint` action). */
+/** Root paths of the file scans of each query a block executes, one entry
+  * per query, from the executed plans a [[QueryExecutionListener]] sees
+  * (lazy checkpoints report theirs as a `localCheckpoint` action). */
 object ScanLog {
   import java.util.concurrent.ConcurrentLinkedQueue
   import scala.jdk.CollectionConverters._
@@ -413,8 +495,8 @@ object ScanLog {
   /** Events arrive in order on one bus, but after their query returns:
     * a start and an end marker query bracket `body`, so events of earlier
     * queries are skipped and every event of `body` is in when it returns. */
-  def during(spark: SparkSession)(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
+  def during(spark: SparkSession)(body: => Unit): Seq[Seq[String]] = {
+    val seen = new ConcurrentLinkedQueue[Seq[String]]()
     @volatile var recording = false
     @volatile var drained = false
     val l = new QueryExecutionListener {
@@ -422,7 +504,7 @@ object ScanLog {
         val plan = qe.logical.toString
         if (plan.contains(Start)) recording = true
         else if (plan.contains(End)) drained = true
-        else if (recording) roots(qe.executedPlan).foreach(seen.add)
+        else if (recording) seen.add(roots(qe.executedPlan))
       }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
