@@ -37,9 +37,11 @@ import scala.jdk.CollectionConverters._
   * on (mls, mls_listing_id) and publishes merge-on-read
   * ([[ManagedTable.mergeVectorized]]): the new version holds tombstones
   * for the matched rows plus the batch's post-images and inserts, so the
-  * nightly write follows the batch too, and no base data file is
-  * rewritten. ManagedTable's fold rule compacts the head once its appended
-  * bytes reach the base's (at once on the first run into a new table).
+  * nightly write follows the batch too: no base data file, and no earlier
+  * night's appended file, is rewritten. ManagedTable's fold rule compacts
+  * the head into a full snapshot on the night the appended bytes reach
+  * the base's (at once on the first run into a new table); that night
+  * pays a full rewrite, as every night did before.
   * The lookup leg sends service batches of at most
   * `--property_id_api_batch_size` rows, and the final ORC mirror (the
   * reference's Hive-table contract) stays a file-count-controlled full
@@ -141,6 +143,46 @@ object MlsJobsMain {
               clientOverride: Option[BatchLookup.LookupClient] = None)
       : String = {
     val deltaRoot = deltaDirOf(a.listingsOutputDir)
+    val batch = job1Batch(spark, a, asOf, now, clientOverride)
+
+    // ---- reject legs (curated.py:287-309) ------------------------------
+    if (a.logRejectedRecords) {
+      val rejectDir = a.rejectDataDir.get
+      TableIO.writeJsonLines(batch.rejected, rejectDir)
+      TableIO.writeJsonLines(
+        batch.outdated.withColumn("_reject_reasons", lit("Outdated record")),
+        rejectDir, append = true)
+    }
+
+    // ---- merge + mirror + vacuum (curated.py:316-368) ------------------
+    if (!ManagedTable.exists(deltaRoot))
+      VersionedLayout.withUserMetadata("Create empty listings delta table") {
+        ManagedTable.createEmpty(spark, deltaRoot, batch.rows)
+      }
+    VersionedLayout.withUserMetadata(
+      s"job=listings_curated from=${a.fromDate} to=${a.toDate}") {
+      ManagedTable.mergeVectorized(spark, deltaRoot, batch.rows, keys)
+    }
+    writeMirror(spark, deltaRoot, a.listingsOutputDir, a.numOutputFiles)
+    a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
+    deltaRoot
+  }
+
+  /** Job 1's batch as it stands before the publish: `rows`, the
+    * validated, latest-wins and looked-up batch in the target schema's
+    * column order (the MERGE source), and the two reject legs, the
+    * validation `rejected` rows and the window's `outdated` losers. */
+  private[mls] final case class Job1Batch(rows: DataFrame, rejected: DataFrame,
+                                          outdated: DataFrame)
+
+  /** Read, validate, transform, dedupe against the live table and look
+    * up property ids: everything of a Job-1 run up to its reject dump and
+    * publish. The property-id lookup runs here. */
+  private[mls] def job1Batch(spark: SparkSession, a: JobsCliArgs, asOf: Column,
+                             now: Column,
+                             clientOverride: Option[BatchLookup.LookupClient])
+      : Job1Batch = {
+    val deltaRoot = deltaDirOf(a.listingsOutputDir)
     val targetSchema = SchemaLoader.fromFile(a.targetSchemaFile.get)
 
     // ---- read, validate + transform (curated.py:70-117) ----------------
@@ -178,30 +220,9 @@ object MlsJobsMain {
         lookup(spark, a, toLookup, clientOverride)
           .fold(latest)(MlsEnrich.attachPropertyIds(latest, _, now))
     }
-    val finalDf =
-      resolved.select(targetSchema.fieldNames.toIndexedSeq.map(col): _*)
-
-    // ---- reject legs (curated.py:287-309) ------------------------------
-    if (a.logRejectedRecords) {
-      val rejectDir = a.rejectDataDir.get
-      TableIO.writeJsonLines(rejected, rejectDir)
-      TableIO.writeJsonLines(
-        dd.outdated.withColumn("_reject_reasons", lit("Outdated record")),
-        rejectDir, append = true)
-    }
-
-    // ---- merge + mirror + vacuum (curated.py:316-368) ------------------
-    if (!ManagedTable.exists(deltaRoot))
-      VersionedLayout.withUserMetadata("Create empty listings delta table") {
-        ManagedTable.createEmpty(spark, deltaRoot, finalDf)
-      }
-    VersionedLayout.withUserMetadata(
-      s"job=listings_curated from=${a.fromDate} to=${a.toDate}") {
-      ManagedTable.mergeVectorized(spark, deltaRoot, finalDf, keys)
-    }
-    writeMirror(spark, deltaRoot, a.listingsOutputDir, a.numOutputFiles)
-    a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))
-    deltaRoot
+    Job1Batch(
+      resolved.select(targetSchema.fieldNames.toIndexedSeq.map(col): _*),
+      rejected, dd.outdated)
   }
 
   /** Positional unionAll of the input dirs, each window-filtered on

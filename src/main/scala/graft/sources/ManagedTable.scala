@@ -27,11 +27,12 @@ import scala.jdk.CollectionConverters._
   * — the cost floor for a generic keyed upsert — and rewrites the full
   * snapshot. `mergeVectorized` (the nightly Job-1 publish) runs the same
   * join but writes only the batch: tombstones for the matched rows plus
-  * their post-images and the inserts, so its write cost follows the daily
-  * delta, not the table. Its reads pay base + appended rows; the fold rule
-  * in [[publishMor]] compacts the head once the appended bytes reach the
-  * base's, which bounds every live read by twice the base. The MERGE
-  * semantics below are independent of the layout choice.
+  * their post-images and the inserts. Earlier versions' appended files are
+  * served by reference, never rewritten, so its write cost follows the
+  * daily delta, not the table. Its reads pay base + appended rows; the
+  * fold rule in [[publishMor]] compacts the head once the appended bytes
+  * reach the base's, which bounds every live read by twice the base. The
+  * MERGE semantics below are independent of the layout choice.
   */
 object MergeClauses {
   /** Delta-MERGE-equivalent clause set. Conditions see the matched pair as
@@ -75,12 +76,8 @@ object ManagedTable extends VersionedLayout {
       case None =>
         applyColmap(TableIO.readStatic(spark, dir.toString), colmapOf(root, version))
       case Some(base) =>
-        val dv = readDv(spark, root, version)
-        val baseRows = addressed(spark, s"$root/v$base")
-          .join(dv, Seq(DvFileCol, DvPosCol), "left_anti")
+        morLive(spark, root, version, TableIO.readStatic(spark, s"$root/v$base"))
           .drop(DvFileCol, DvPosCol)
-        readApp(spark, root, version, baseRows.schema)
-          .fold(baseRows)(baseRows.unionByName(_))
     }
   }
 
@@ -122,16 +119,45 @@ object ManagedTable extends VersionedLayout {
     if (Files.exists(f)) Some(Files.readString(f).trim.toInt) else None
   }
 
-  /** The appended rows of a merge-on-read version, when its `_append` dir
-    * has data files (the vectorized writes put post-images and inserts
-    * there). Read like [[readDv]]: by file name, with the base's `schema`,
-    * which every vectorized write requires appended rows to match type
-    * for type. Reading the dir would log the false "All paths were
-    * ignored" WARN and cache one inferred schema per published version. */
-  private def readApp(spark: SparkSession, root: String, version: Int,
-                      schema: StructType): Option[DataFrame] = {
-    val files = parquetFiles(Paths.get(root, s"v$version", "_append"))
-    Option.when(files.nonEmpty)(spark.read.schema(schema).parquet(files: _*))
+  /** The versions whose `_append` dirs merge-on-read `version` serves, as
+    * its `_append_versions` file lists them (its own dir alone when the
+    * file is absent). The list is flat: each version copies its
+    * predecessor's list and adds itself, so a read never walks a chain. */
+  private def appendVersionsOf(root: String, version: Int): Seq[Int] = {
+    val f = Paths.get(root, s"v$version", "_append_versions")
+    if (!Files.exists(f)) Seq(version)
+    else Files.readString(f).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+      .map(_.toInt)
+  }
+
+  private def appendBytes(root: String, version: Int): Long =
+    appendVersionsOf(root, version)
+      .map(v => parquetBytes(Paths.get(root, s"v$v", "_append"))).sum
+
+  /** `df` (a scan of parquet files) with each row's (file, pos) address. */
+  private def withAddress(df: DataFrame): DataFrame =
+    df.withColumn(DvFileCol,
+        element_at(split(col("_metadata.file_path"), "/"), -1))
+      .withColumn(DvPosCol, col("_metadata.row_index"))
+
+  /** The live rows of merge-on-read `version`, addressed: `baseScan` (its
+    * base's files, possibly pruned) plus every appended file it serves,
+    * minus its tombstones. Appended files are read like [[readDv]] reads:
+    * by file name, with the base's schema, which every vectorized write
+    * requires appended rows to match type for type. Reading the dirs
+    * would log the false "All paths were ignored" WARN and cache one
+    * inferred schema per published version. */
+  private def morLive(spark: SparkSession, root: String, version: Int,
+                      baseScan: DataFrame): DataFrame = {
+    val files = appendVersionsOf(root, version).toVector
+      .flatMap(v => parquetFiles(Paths.get(root, s"v$v", "_append")))
+    val base = withAddress(baseScan)
+    val rows =
+      if (files.isEmpty) base
+      else base.unionByName(withAddress(
+        spark.read.schema(baseScan.schema).parquet(files: _*)))
+    rows.join(readDv(spark, root, version), Seq(DvFileCol, DvPosCol),
+      "left_anti")
   }
 
   // ---- column mapping (metadata-only RENAME COLUMN) ---------------------
@@ -224,14 +250,6 @@ object ManagedTable extends VersionedLayout {
     swapPointer(root, next)
   }
 
-  /** The base snapshot with each row's stable (file, position) address
-    * attached — the join side every deletion-vector read/write uses. */
-  private def addressed(spark: SparkSession, baseDir: String): DataFrame =
-    TableIO.readStatic(spark, baseDir)
-      .withColumn(DvFileCol,
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn(DvPosCol, col("_metadata.row_index"))
-
   /** DELETE at delta cost — the deletion-vector form of [[delete]]
     * (Delta deletion vectors / Iceberg v3 position deletes, from the
     * public designs): instead of rewriting the snapshot without the
@@ -250,14 +268,18 @@ object ManagedTable extends VersionedLayout {
     * AQE broadcasts them (the engine-level stand-in for Delta's per-file
     * roaring bitmaps). Tombstones are CUMULATIVE relative to the base:
     * stacked deletes union their addresses, so any version resolves with
-    * exactly one base + one tombstone set — no recursive chain. The
-    * underscore dir keeps tombstone files invisible to plain snapshot
-    * scans (Spark's FileIndex skips `_`-prefixed paths).
+    * exactly one base + one tombstone set — no recursive chain. They
+    * address appended rows too: a row that an earlier merge-on-read
+    * version appended is deleted by its (file, pos) in that version's
+    * `_append` dir, which stays as written. The underscore dir keeps
+    * tombstone files invisible to plain snapshot scans (Spark's FileIndex
+    * skips `_`-prefixed paths).
     *
     * Rows where `where` is null are KEPT — SQL DELETE semantics, like
     * [[delete]]. A later [[optimize]] (or any full rewrite) purges the
     * vectors back into a plain snapshot; [[vacuum]] keeps a DV version's
-    * base alive for as long as the DV version is retained. */
+    * base, and the versions whose appended files it serves, alive for as
+    * long as the DV version is retained. */
   def deleteVectorized(spark: SparkSession, root: String, where: Column,
                        changeFeed: Boolean = false): Unit = {
     val live = currentVersion(root)
@@ -265,28 +287,24 @@ object ManagedTable extends VersionedLayout {
       "vectorized DML on a RENAMEd (column-mapped) version is not " +
         "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
         "first to materialize the logical names")
-    val (base, baseLive, oldDv, oldApp) = morParts(spark, root, live)
+    val (base, rows, oldDv, served) = morParts(spark, root, live)
     val hit = coalesce(where, lit(false))
     val next = live + 1
-    if (changeFeed) {
-      val pre = baseLive.filter(hit).drop(DvFileCol, DvPosCol)
-      oldApp.fold(pre)(a => pre.unionByName(a.filter(hit)))
+    if (changeFeed)
+      rows.filter(hit).drop(DvFileCol, DvPosCol)
         .withColumn(graft.operators.Merge.ActionCol, lit("delete"))
         .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    }
-    val newTombs = baseLive.filter(hit).select(col(DvFileCol), col(DvPosCol))
+    val newTombs = rows.filter(hit).select(col(DvFileCol), col(DvPosCol))
     publishMor(spark, root, next, base,
-      oldDv.fold(newTombs)(_.unionByName(newTombs)),
-      oldApp.map(_.filter(!hit)))
+      oldDv.fold(newTombs)(_.unionByName(newTombs)), None, served)
   }
 
   /** UPDATE at delta cost — the merge-on-read form of [[update]] (Delta
     * DV-update / Iceberg merge-on-read, from the public designs): matched
-    * BASE rows are tombstoned by address and their updated copies land in
-    * the version's `_append` dir; matched previously-appended rows are
-    * rewritten in place of the (delta-sized) append set. No base data
-    * file is rewritten — write cost scales with the matched rows. Reads
-    * resolve base − tombstones ∪ appended. `set` expressions see the
+    * rows are tombstoned by address and their updated copies land in the
+    * version's `_append` dir. No data file is rewritten, neither the
+    * base's nor an earlier version's appended one — write cost scales
+    * with the matched rows. Reads resolve base ∪ appended − tombstones. `set` expressions see the
     * PRE-update row, null-predicate rows are untouched (SQL UPDATE, like
     * [[update]]); CHECK constraints and generated-column validation ride
     * the appended write, so a violating update aborts before the pointer
@@ -299,22 +317,18 @@ object ManagedTable extends VersionedLayout {
       "vectorized DML on a RENAMEd (column-mapped) version is not " +
         "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
         "first to materialize the logical names")
-    val (base, baseLive, oldDv, oldApp) = morParts(spark, root, live)
+    val (base, rows, oldDv, served) = morParts(spark, root, live)
     val hit = coalesce(where, lit(false))
-    val cols = baseLive.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
+    val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
     val bad = set.keySet -- cols.toSet
     require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
       bad.mkString(", "))
-    def applySet(d: DataFrame): DataFrame =
-      d.select(cols.map(c => set.getOrElse(c, col(c)).as(c)): _*)
-    val updated = {
-      val fromBase = applySet(baseLive.filter(hit).drop(DvFileCol, DvPosCol))
-      oldApp.fold(fromBase)(a => fromBase.unionByName(applySet(a.filter(hit))))
-    }
+    val updated = rows.filter(hit)
+      .select(cols.map(c => set.getOrElse(c, col(c)).as(c)): _*)
     // A type-changing SET would make appended files diverge from the base
     // schema and break the union on read — reject it up front (Delta
     // likewise refuses type-changing updates without explicit evolution).
-    val baseTypes = baseLive.drop(DvFileCol, DvPosCol).schema
+    val baseTypes = rows.drop(DvFileCol, DvPosCol).schema
       .map(f => f.name -> f.dataType)
     val updTypes = updated.schema.map(f => f.name -> f.dataType)
     require(updTypes == baseTypes,
@@ -329,24 +343,22 @@ object ManagedTable extends VersionedLayout {
     if (changeFeed)
       guarded.withColumn(graft.operators.Merge.ActionCol, lit("update"))
         .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    val newTombs = baseLive.filter(hit).select(col(DvFileCol), col(DvPosCol))
-    val app2 = oldApp.fold(guarded)(a => a.filter(!hit).unionByName(guarded))
+    val newTombs = rows.filter(hit).select(col(DvFileCol), col(DvPosCol))
     publishMor(spark, root, next, base,
-      oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(app2))
+      oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(guarded), served)
   }
 
   /** OVERWRITE WHERE at delta cost — the merge-on-read form of
-    * [[overwriteWhere]]: the replaced slice's BASE rows are tombstoned by
-    * (file, position) address and the replacement lands in the version's
-    * `_append` dir; previously-appended rows in the slice are dropped from
-    * the (delta-sized) append rewrite. No base data file is rewritten —
-    * write cost scales with |replaced addresses| + |replacement|, so at
-    * 100 TB replacing one day of a fact table writes GBs of tombstones
-    * and fresh data instead of rewriting the snapshot. Same insertion
-    * contract as [[overwriteWhere]]: every replacement row must satisfy
-    * `where` (asserted inside the write — a violating row aborts before
-    * the pointer swaps), predicate-null rows are KEPT, and the replacement
-    * may have any cardinality. CHECK constraints and generated columns
+    * [[overwriteWhere]]: the replaced slice's rows (base or earlier
+    * appended ones) are tombstoned by (file, position) address and the
+    * replacement lands in the version's `_append` dir. No data file is
+    * rewritten — write cost scales with |replaced addresses| +
+    * |replacement|, so at 100 TB replacing one day of a fact table writes
+    * GBs of tombstones and fresh data instead of rewriting the snapshot.
+    * Same insertion contract as [[overwriteWhere]]: every replacement row
+    * must satisfy `where` (asserted inside the write — a violating row
+    * aborts before the pointer swaps), predicate-null rows are KEPT, and
+    * the replacement may have any cardinality. CHECK constraints and generated columns
     * ride the appended write, whose schema must match the base exactly
     * (appended files union with base files on read). */
   def overwriteWhereVectorized(spark: SparkSession, root: String,
@@ -356,11 +368,11 @@ object ManagedTable extends VersionedLayout {
       "vectorized DML on a RENAMEd (column-mapped) version is not " +
         "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
         "first to materialize the logical names")
-    val (base, baseLive, oldDv, oldApp) = morParts(spark, root, live)
+    val (base, rows, oldDv, served) = morParts(spark, root, live)
     val hit = coalesce(where, lit(false))
-    val cols = baseLive.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
+    val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
     val shaped = df.select(cols.map(col): _*) // fail fast on missing cols
-    val baseTypes = baseLive.drop(DvFileCol, DvPosCol).schema
+    val baseTypes = rows.drop(DvFileCol, DvPosCol).schema
       .map(f => f.name -> f.dataType)
     val newTypes = shaped.schema.map(f => f.name -> f.dataType)
     require(newTypes == baseTypes,
@@ -371,10 +383,9 @@ object ManagedTable extends VersionedLayout {
     val guarded = Constraints.enforce(
       GeneratedColumns(assertSatisfies(shaped, hit), GeneratedColumns.load(root)),
       constraintsOf(root))
-    val newTombs = baseLive.filter(hit).select(col(DvFileCol), col(DvPosCol))
-    val app2 = oldApp.fold(guarded)(a => a.filter(!hit).unionByName(guarded))
+    val newTombs = rows.filter(hit).select(col(DvFileCol), col(DvPosCol))
     publishMor(spark, root, live + 1, base,
-      oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(app2))
+      oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(guarded), served)
   }
 
   /** Delta's replaceWhere insertion contract folded into the write plan:
@@ -394,14 +405,13 @@ object ManagedTable extends VersionedLayout {
     * merge-on-read / Iceberg v2 MERGE with position deletes, from the
     * public designs). Same clause semantics and the same single full-outer
     * key join as [[merge]], but instead of rewriting the snapshot the
-    * published version SHARES the base files and records only the delta:
-    * matched base rows are tombstoned by (file, position) address, their
-    * post-images plus the not-matched inserts land in `_append`, and
-    * previously-appended rows are rewritten in place of the (delta-sized)
-    * append set. Unmatched base rows are never written — the join output
-    * is filtered to touched-or-appended rows BEFORE materialization, so
-    * write cost and the lazy-checkpoint footprint scale with
-    * |source| + |append set|, not the table. At 100 TB a daily-delta
+    * published version SHARES the base files and the earlier versions'
+    * appended files and records only the delta: matched rows are
+    * tombstoned by (file, position) address, and their post-images plus
+    * the not-matched inserts land in `_append`. Unmatched rows are never
+    * written — the join output is filtered to touched rows BEFORE
+    * materialization, so write cost and the lazy-checkpoint footprint
+    * scale with the source, not the table. At 100 TB a daily-delta
     * upsert writes GBs where [[merge]] rewrites the snapshot (and
     * [[BucketedTable.merge]] rewrites touched buckets); the fold rule in
     * [[publishMor]] runs [[optimize]] once the accumulated deltas reach
@@ -427,36 +437,31 @@ object ManagedTable extends VersionedLayout {
       "vectorized DML on a RENAMEd (column-mapped) version is not " +
         "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
         "first to materialize the logical names")
-    val (base, baseLive, oldDv, oldApp) = morParts(spark, root, live)
-    val cols = baseLive.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
+    val (base, rows, oldDv, served) = morParts(spark, root, live)
+    val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
     val missing = cols.filterNot(source.columns.contains)
     require(missing.isEmpty, "merge-on-read MERGE source lacks target " +
       s"column(s) ${missing.mkString(", ")}; appended files must match " +
       "the base schema — an evolving merge is a rewrite, use " +
       "merge(schemaEvolution = true)")
-    // Addresses ride the merge as ordinary target columns: null marks a
-    // row that did not come from a base file (appended rows, and every
-    // update/insert post-image, which takes the source side's null).
-    val appAddr = oldApp.map(_
-      .withColumn(DvFileCol, lit(null).cast("string"))
-      .withColumn(DvPosCol, lit(null).cast("bigint")))
-    val target = appAddr.fold(baseLive)(baseLive.unionByName(_))
+    // Addresses ride the merge as ordinary target columns; every
+    // update/insert post-image takes the source side's null.
     val src = source
       .withColumn(DvFileCol, lit(null).cast("string"))
       .withColumn(DvPosCol, lit(null).cast("bigint"))
     val act = col(Merge.ActionCol)
-    // Base keeps (address non-null) are the table-sized bulk the MoR form
-    // exists to never touch: filter them out INSIDE the join pipeline so
-    // the lazy checkpoint materializes only delta-sized rows.
-    val touched = Merge.mergeFramesTagged(target, src, keys, clauses,
+    // Keeps are the table-sized bulk the MoR form exists to never touch:
+    // filter them out INSIDE the join pipeline so the lazy checkpoint
+    // materializes only delta-sized rows.
+    val touched = Merge.mergeFramesTagged(rows, src, keys, clauses,
         nullSafeKeys, schemaEvolution = false, preImage = true)
-      .filter(act =!= lit("keep") || col(DvFileCol).isNull)
+      .filter(act =!= lit("keep"))
       .localCheckpoint(eager = false)
     val next = live + 1
     try {
       val fresh = touched.filter(act.isin("update", "insert"))
         .drop(DvFileCol, DvPosCol, Merge.ActionCol, Merge.PreCol)
-      val baseTypes = cols.map(c => c -> baseLive.schema(c).dataType)
+      val baseTypes = cols.map(c => c -> rows.schema(c).dataType)
       val freshTypes = fresh.schema.map(f => f.name -> f.dataType).toIndexedSeq
       require(freshTypes == baseTypes,
         "merge-on-read MERGE changes column type(s): " +
@@ -476,45 +481,41 @@ object ManagedTable extends VersionedLayout {
               struct(cols.map(c => col(Merge.PreCol)(c).as(c)): _*)))
         feed.write.mode("overwrite").parquet(s"$root/_changes/v$next")
       }
-      val updTombs = touched
-        .filter(act === lit("update") && col(Merge.PreCol)(DvFileCol).isNotNull)
-        .select(col(Merge.PreCol)(DvFileCol).as(DvFileCol),
-          col(Merge.PreCol)(DvPosCol).as(DvPosCol))
-      val delTombs = touched
-        .filter(act === lit("delete") && col(DvFileCol).isNotNull)
-        .select(col(DvFileCol), col(DvPosCol))
-      val newTombs = updTombs.unionByName(delTombs)
-      val app2 = guarded.unionByName(
-        touched.filter(act === lit("keep"))
-          .drop(DvFileCol, DvPosCol, Merge.ActionCol, Merge.PreCol))
+      // an update's address rides its pre-image (its own columns are the
+      // source's); a delete keeps the target's
+      val newTombs = touched.filter(act.isin("update", "delete"))
+        .select(
+          coalesce(col(Merge.PreCol)(DvFileCol), col(DvFileCol)).as(DvFileCol),
+          coalesce(col(Merge.PreCol)(DvPosCol), col(DvPosCol)).as(DvPosCol))
       publishMor(spark, root, next, base,
-        oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(app2))
+        oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(guarded), served)
     } finally touched.unpersist()
   }
 
   /** The merge-on-read decomposition of a live version: its FULL base
-    * version, the base rows still live (addressed, tombstones already
-    * subtracted), and the current tombstone / appended-row sets. */
+    * version, its live rows (addressed, tombstones already subtracted),
+    * its tombstone set, and the versions whose appended files it serves. */
   private def morParts(spark: SparkSession, root: String, live: Int)
-      : (Int, DataFrame, Option[DataFrame], Option[DataFrame]) = {
-    val base = dvBaseOf(root, live).getOrElse(live)
-    val addr = addressed(spark, s"$root/v$base")
+      : (Int, DataFrame, Option[DataFrame], Seq[Int]) =
     dvBaseOf(root, live) match {
-      case None => (base, addr, None, None)
-      case Some(_) =>
-        val dv = readDv(spark, root, live)
-        (base, addr.join(dv, Seq(DvFileCol, DvPosCol), "left_anti"),
-          Some(dv), readApp(spark, root, live,
-            addr.drop(DvFileCol, DvPosCol).schema))
+      case None =>
+        (live, withAddress(TableIO.readStatic(spark, s"$root/v$live")), None, Nil)
+      case Some(base) =>
+        (base, morLive(spark, root, live,
+            TableIO.readStatic(spark, s"$root/v$base")),
+          Some(readDv(spark, root, live)), appendVersionsOf(root, live))
     }
-  }
 
-  /** Publish a merge-on-read version: tombstones, optional appended rows,
+  /** Publish a merge-on-read version: tombstones, the rows this version
+    * appends (if any), the list of versions whose appended files it
+    * serves (`served`, the predecessor's, plus itself when it appended),
     * then the base marker — all before the pointer swap, so a readable
-    * version is always complete.
+    * version is always complete. Earlier appended files are referenced,
+    * not rewritten: a version writes its own rows and the (cumulative,
+    * address-only) tombstones.
     *
-    * Then the fold rule, fixed and without a knob: when the new head's
-    * `_append` bytes are at least its base's data bytes, [[optimize]]
+    * Then the fold rule, fixed and without a knob: when the appended bytes
+    * the new head serves are at least its base's data bytes, [[optimize]]
     * folds it into a full snapshot at once. A merge-on-read read scans
     * base + appended rows, so this keeps every live read within twice its
     * base. The first merge into a [[createEmpty]] table (an empty base)
@@ -522,14 +523,16 @@ object ManagedTable extends VersionedLayout {
     * version changes no rows and records no change feed. */
   private def publishMor(spark: SparkSession, root: String, next: Int,
                          base: Int, tombstones: DataFrame,
-                         appended: Option[DataFrame]): Unit = {
+                         appended: Option[DataFrame], served: Seq[Int]): Unit = {
     tombstones.write.mode("overwrite").parquet(s"$root/v$next/_dv")
     appended.foreach(_.write.mode("overwrite")
       .parquet(s"$root/v$next/_append"))
+    val withNext = served ++ Option.when(appended.isDefined)(next)
+    Files.writeString(Paths.get(root, s"v$next", "_append_versions"),
+      withNext.mkString(","))
     Files.writeString(Paths.get(root, s"v$next", "_dv_base"), base.toString)
     swapPointer(root, next)
-    if (parquetBytes(Paths.get(root, s"v$next", "_append")) >=
-        parquetBytes(Paths.get(root, s"v$base")))
+    if (appendBytes(root, next) >= parquetBytes(Paths.get(root, s"v$base")))
       optimize(spark, root)
   }
 
@@ -661,14 +664,7 @@ object ManagedTable extends VersionedLayout {
     def overlay(df: DataFrame): DataFrame = dvBase match {
       case None => df
       case Some(_) =>
-        val minus = df.withColumn(DvFileCol,
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn(DvPosCol, col("_metadata.row_index"))
-          .join(readDv(spark, root, live),
-            Seq(DvFileCol, DvPosCol), "left_anti")
-          .drop(DvFileCol, DvPosCol)
-        readApp(spark, root, live, minus.schema)
-          .fold(minus)(minus.unionByName(_))
+        morLive(spark, root, live, df).drop(DvFileCol, DvPosCol)
     }
     val cmap = colmapOf(root, dvBase.getOrElse(live))
     def mapped(df: DataFrame): DataFrame = applyColmap(df, cmap)
@@ -1131,8 +1127,7 @@ object ManagedTable extends VersionedLayout {
     // the tombstones).
     val snapBytes = dvBaseOf(root, live).fold(
       parquetBytes(Paths.get(root, s"v$live")))(b =>
-      parquetBytes(Paths.get(root, s"v$b")) +
-        parquetBytes(Paths.get(root, s"v$live", "_append")))
+      parquetBytes(Paths.get(root, s"v$b")) + appendBytes(root, live))
     val nFiles = math.max(1, math.ceil(snapBytes.toDouble / targetFileBytes).toInt)
     val cur = read(spark, root)
     var zorderCuts: Map[String, Seq[Double]] = Map.empty
@@ -1391,23 +1386,16 @@ object ManagedTable extends VersionedLayout {
     // deleted rows can only shrink true spans).
     val dvBase = dvBaseOf(root, live)
     val dir = dvBase.fold(s"$root/v$live")(b => s"$root/v$b")
-    // subtract the tombstones from whatever survives pruning, then union
-    // the (unpruned, delta-sized) appended rows — they pass through the
-    // same row-level predicate below
+    // union the (unpruned, delta-sized) appended rows with whatever
+    // survives pruning and subtract the tombstones — the rows pass through
+    // the same row-level predicate below
     // a DV version's base cannot be column-mapped (vectorized ops refuse
     // mapped bases), so the mapping is only ever non-empty on full reads
     val cmap = colmapOf(root, dvBase.getOrElse(live))
     def subtractDv(df: DataFrame): DataFrame = dvBase match {
       case None => applyColmap(df, cmap)
       case Some(_) =>
-        val minus = df.withColumn(DvFileCol,
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn(DvPosCol, col("_metadata.row_index"))
-          .join(readDv(spark, root, live),
-            Seq(DvFileCol, DvPosCol), "left_anti")
-          .drop(DvFileCol, DvPosCol)
-        readApp(spark, root, live, minus.schema)
-          .fold(minus)(minus.unionByName(_))
+        morLive(spark, root, live, df).drop(DvFileCol, DvPosCol)
     }
     val pred = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
@@ -1543,7 +1531,8 @@ object ManagedTable extends VersionedLayout {
     * kept regardless of age, and versions with no recorded history line
     * (pre-history tables) are conservatively kept. Reachability is the
     * same as the count-based [[vacuum]]: the full base of any retained
-    * deletion-vector version survives with it. */
+    * deletion-vector version survives with it, and so do the versions
+    * whose appended files it serves. */
   def vacuum(root: String, retainHours: Double): Unit = {
     require(retainHours >= 0, s"vacuum: retainHours=$retainHours")
     val live = currentVersion(root)
@@ -1560,8 +1549,10 @@ object ManagedTable extends VersionedLayout {
   }
 
   private def vacuumRetaining(root: String, retained: Seq[Int]): Unit = {
-    val reachable: Set[Int] =
-      (retained ++ retained.flatMap(v => dvBaseOf(root, v))).toSet
+    // a merge-on-read version reads its base's files and the appended
+    // files of the versions it lists
+    val reachable: Set[Int] = (retained ++ retained.flatMap(v =>
+      dvBaseOf(root, v).toSeq.flatMap(_ +: appendVersionsOf(root, v)))).toSet
     def prune(dir: Path, keepSet: Set[Int]): Unit =
       if (Files.exists(dir)) {
         val listing = Files.list(dir)

@@ -439,7 +439,8 @@ class ManagedTableSpec extends AnyFunSuite {
     assert(got2.forall(_._3 <= 10500.0))
     assert(got2.count(_._2 == 3) == 50) // 503..993 deleted, 50 remain
 
-    // a second UPDATE rewrites matched appended rows in place of the set
+    // a second UPDATE tombstones matched appended rows and appends their
+    // new copies
     ManagedTable.updateVectorized(spark, root,
       Map("v" -> (col("v") + 1.0)), col("m") === 3)
     val got3 = ManagedTable.read(spark, root).as[(Long, Int, Double)]
@@ -639,7 +640,12 @@ class ManagedTableSpec extends AnyFunSuite {
 
     // stacked MoR merge with a delete clause: matched keys 1000-1100
     // with even m are deleted, the rest updated; appended rows from v1
-    // are rewritten in place of the append set, base still untouched.
+    // are tombstoned by address like base rows, and neither the base nor
+    // v1's appended files are rewritten: v2 appends only its 50 updates.
+    def appFiles(v: Int) = Files.list(Paths.get(root, s"v$v", "_append"))
+      .iterator().asScala.map(p => p.getFileName.toString -> Files.size(p))
+      .filter(_._1.endsWith(".parquet")).toMap
+    val v1App = appFiles(1)
     val delta2 = (1000 to 1100).map(i => (i.toLong, i % 10, i + 0.25))
       .toDF("k", "m", "v")
     ManagedTable.mergeVectorized(spark, root, delta2, Seq("k"),
@@ -648,6 +654,9 @@ class ManagedTableSpec extends AnyFunSuite {
         deleteWhen = Some(lit(true)),
         insertWhen = Some(lit(false))))
     assert(files(0) == baseFiles)
+    assert(appFiles(1) == v1App)
+    assert(spark.read.parquet(s"$root/v2/_append").count() == 50)
+    assert(Files.readString(Paths.get(root, "v2", "_append_versions")) == "1,2")
     val got2 = ManagedTable.read(spark, root).as[(Long, Int, Double)]
       .collect().map(r => r._1 -> r._3).toMap
     assert(got2.size == 1100 - 51)        // 51 even-m keys in 1000..1100 gone
@@ -764,6 +773,51 @@ class ManagedTableSpec extends AnyFunSuite {
     assert(folded == rows(4))
     assert(folded.size == 2000)
     assert(folded(1L) == 1.5 && folded(4L) == 4.0 && folded(5L) == 5.5)
+
+    // Nightly upserts of a fifth of the table: each night appends only its
+    // own rows and serves the earlier nights' appended files as written,
+    // so no single night outweighs the base, but their sum does, and the
+    // night it does folds.
+    val baseBytes = Files.list(Paths.get(root, "v5")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
+    def appBytes(v: Int) = Files.list(Paths.get(root, s"v$v", "_append"))
+      .iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => p.getFileName.toString -> Files.size(p)).toMap
+    val written = scala.collection.mutable.LinkedHashMap[Int, Map[String, Long]]()
+    var expected = folded
+    var night = 0
+    while (ManagedTable.currentVersion(root) == 5 + night && night < 10) {
+      night += 1
+      val ks = (1 to 400).map(i => ((i * 5 + night) % 2000 + 1).toLong)
+      ManagedTable.mergeVectorized(spark, root,
+        ks.map(k => (k, k + night * 0.125)).toDF("k", "v").coalesce(1), Seq("k"))
+      expected = expected ++ ks.map(k => k -> (k + night * 0.125))
+      val v = 5 + night
+      assert(rows(v) == expected)
+      written(v) = appBytes(v)
+      // earlier nights' appended files are served unchanged
+      written.foreach { case (w, f) => assert(appBytes(w) == f) }
+    }
+    val head = 5 + night
+    assert(night >= 2, "a single night folded: the chain is untested")
+    assert(ManagedTable.currentVersion(root) == head + 1, "no night folded")
+    assert(Files.readString(Paths.get(root, s"v$head", "_append_versions")) ==
+      (6 to head).mkString(","))
+    assert(written(head).values.sum < baseBytes)
+    assert(written.values.map(_.values.sum).sum >= baseBytes)
+    assert(!isMor(head + 1) && rows(head + 1) == expected)
+
+    // vacuum keeps a merge-on-read head's base and every version whose
+    // appended files it serves
+    ManagedTable.mergeVectorized(spark, root, Seq((7L, 0.0)).toDF("k", "v"), Seq("k"))
+    ManagedTable.mergeVectorized(spark, root, Seq((8L, 0.0)).toDF("k", "v"), Seq("k"))
+    val tip = ManagedTable.currentVersion(root)
+    ManagedTable.vacuum(root, keep = 1)
+    val left = Files.list(Paths.get(root)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.matches("v\\d+")).map(_.drop(1).toInt)
+      .toSet
+    assert(left == Set(tip - 2, tip - 1, tip))
+    assert(rows(tip) == expected ++ Map(7L -> 0.0, 8L -> 0.0))
   }
 
   test("createEmpty publishes schema-only snapshot (limit 0)") {

@@ -211,19 +211,24 @@ class MlsJobsMainSpec extends AnyFunSuite {
     in
   }
 
-  /** One February Job-1 run from argv into `out`, API lookups against
-    * `server`, at the run clock `nowTs`. Returns the delta root. */
-  private def cliRun(out: String, server: graft.enrich.StubPropertyServer,
-                     nowTs: String, extra: Seq[String]): String = {
-    val a = JobsCli.parse(MlsJobCliGate.argv(cliInputs, out,
+  /** The argv of a February Job-1 run into `out`, API lookups against
+    * `server`. */
+  private def cliArgs(out: String, server: graft.enrich.StubPropertyServer,
+                      extra: Seq[String]) =
+    JobsCli.parse(MlsJobCliGate.argv(cliInputs, out,
       "20240201", "20240228", Seq(
         "--property_id_source", "API",
         "--property_id_api_endpoint", server.lookupUrl,
         "--property_id_api_batch_size", "64",
         "--property_id_api_sleep", "0") ++ extra))
-    MlsJobsMain.runJob1(spark, a,
-      asOf = expr("DATE '2024-06-01'"), now = expr(s"TIMESTAMP '$nowTs'"))
-  }
+  private val cliAsOf = expr("DATE '2024-06-01'")
+
+  /** One February Job-1 run from argv into `out`, API lookups against
+    * `server`, at the run clock `nowTs`. Returns the delta root. */
+  private def cliRun(out: String, server: graft.enrich.StubPropertyServer,
+                     nowTs: String, extra: Seq[String]): String =
+    MlsJobsMain.runJob1(spark, cliArgs(out, server, extra),
+      asOf = cliAsOf, now = expr(s"TIMESTAMP '$nowTs'"))
 
   private val keyOf = (r: org.apache.spark.sql.Row) =>
     (r.getString(0), r.getString(1))
@@ -346,10 +351,13 @@ class MlsJobsMainSpec extends AnyFunSuite {
       val lookedD = lookedUpAt(gr, "2024-08-01 00:00:00")
       assert(triedC.subsetOf(lookedD))
       assert(lookedD == keys(ManagedTable.read(spark, gr)))
-      // retention 0 h keeps the live version and the base it reads (a
-      // merge-on-read head shares its base's files), nothing else
+      // retention 0 h keeps the live version and the versions it reads (a
+      // merge-on-read head shares its base's files and the appended files
+      // of the versions it lists), nothing else
       val live = ManagedTable.currentVersion(gr)
-      assert(versionDirs(gr) == (live +: dvBaseOf(gr, live).toSeq).sorted)
+      assert(versionDirs(gr) ==
+        (live +: (dvBaseOf(gr, live).toSeq ++ appendVersionsOf(gr, live)))
+          .distinct.sorted)
     } finally server.stop()
   }
 
@@ -390,7 +398,8 @@ class MlsJobsMainSpec extends AnyFunSuite {
   }
 
   test("merge-on-read publish: the nightly version holds only the batch, " +
-      "reads as a copy-on-write MERGE would, and a new table folds at once") {
+      "reads as a copy-on-write MERGE would, and folds when its appends " +
+      "reach the base") {
     val root = Files.createTempDirectory("graft_cli_mor").toString
     val server = new graft.enrich.StubPropertyServer()
     try {
@@ -403,19 +412,28 @@ class MlsJobsMainSpec extends AnyFunSuite {
       assert(dvBaseOf(gr, live).isEmpty)
       assert(listNames(s"$gr/v$live").exists(_.endsWith(".parquet")))
 
-      val before = s"$root/before"
-      copyTree(gr, before)
+      // The copy-on-write reference: a copy of the pre-run state takes the
+      // same night's batch (built from the copy, at the same clock)
+      // through ManagedTable.merge.
+      val copyOut = s"$root/copy"
+      val copyRoot = MlsJobsMain.deltaDirOf(s"$copyOut/out")
+      copyTree(gr, copyRoot)
       val batchKeys = keys(ManagedTable.read(spark, gr)
         .filter(col("mls") === "MLS0"))
       assert(batchKeys.nonEmpty && batchKeys.size < keys(
         ManagedTable.read(spark, gr)).size)
-      cliRun(root, server, "2024-08-01 00:00:00", Seq("--input_mls_list", "MLS0",
-        "--property_id_modes", "New", "--property_id_limit", "1"))
+      val night2 = Seq("--input_mls_list", "MLS0",
+        "--property_id_modes", "New", "--property_id_limit", "1")
+      val now2 = "2024-08-01 00:00:00"
+      cliRun(root, server, now2, night2)
       val next = live + 1
       assert(ManagedTable.currentVersion(gr) == next)
-      // tombstones, appended rows and the base marker; no data file
-      assert(listNames(s"$gr/v$next").toSet == Set("_dv", "_append", "_dv_base"))
+      // tombstones, appended rows, the appended-versions list and the base
+      // marker; no data file
+      assert(listNames(s"$gr/v$next").toSet ==
+        Set("_dv", "_append", "_append_versions", "_dv_base"))
       assert(dvBaseOf(gr, next).contains(live))
+      assert(appendVersionsOf(gr, next) == Seq(next))
       def parquet(d: String) = spark.read.parquet(
         listNames(d).filter(_.endsWith(".parquet")).map(f => s"$d/$f"): _*)
       val appended = parquet(s"$gr/v$next/_append")
@@ -425,10 +443,43 @@ class MlsJobsMainSpec extends AnyFunSuite {
       assert(appended.count() == batchKeys.size)
       assert(parquet(s"$gr/v$next/_dv").count() == batchKeys.size)
 
-      // the copy-on-write MERGE of the same batch into the pre-run state
-      ManagedTable.merge(spark, before, appended, Seq("mls", "mls_listing_id"))
+      val batch = MlsJobsMain.job1Batch(spark, cliArgs(copyOut, server, night2),
+        cliAsOf, expr(s"TIMESTAMP '$now2'"), None).rows
+      ManagedTable.merge(spark, copyRoot, batch, Seq("mls", "mls_listing_id"))
       assert(digest(ManagedTable.read(spark, gr)) ==
-        digest(ManagedTable.read(spark, before)))
+        digest(ManagedTable.read(spark, copyRoot)))
+
+      // Night 3 re-sends the whole February batch: its post-images plus
+      // night 2's appends outweigh the base, so the head folds inside the
+      // run. The fold is one more full read (of the new head) and one full
+      // rewrite; the mirror then reads the folded version.
+      val head = next + 1
+      val queries = ScanLog.during(spark) {
+        cliRun(root, server, "2024-09-01 00:00:00",
+          Seq("--property_id_modes", "New", "--property_id_limit", "1"))
+      }
+      assert(ManagedTable.currentVersion(gr) == head + 1)
+      assert(dvBaseOf(gr, head).contains(live))
+      assert(appendVersionsOf(gr, head) == Seq(next, head))
+      assert(dvBaseOf(gr, head + 1).isEmpty)
+      assert(listNames(s"$gr/v${head + 1}").exists(_.endsWith(".parquet")))
+      assert(digest(ManagedTable.readVersion(spark, gr, head)) ==
+        digest(ManagedTable.read(spark, gr)))
+      val scans = queries.flatten
+      assert(scans.count(_.endsWith("/in_a")) == 1, scans)
+      assert(scans.count(_.endsWith("/in_b")) == 1, scans)
+      // a version's rows: its data files or its appended ones
+      def readsRows(v: Int)(q: Seq[String]) =
+        q.exists(r => r.endsWith(s"/v$v") || r.contains(s"/v$v/_append/"))
+      def readsAny(v: Int)(q: Seq[String]) =
+        q.exists(r => r.endsWith(s"/v$v") || r.contains(s"/v$v/"))
+      // the dedupe window and the merge target read the pre-run head's
+      // rows (v2's files plus v3's appends); nothing else does
+      val preRun = queries.count(q => (readsRows(live)(q) || readsRows(next)(q)) &&
+        !readsAny(head)(q) && !readsAny(head + 1)(q))
+      assert(preRun >= 1 && preRun <= 2, queries)
+      assert(queries.count(readsAny(head)) == 1, queries)     // the fold
+      assert(queries.count(readsAny(head + 1)) == 1, queries) // the mirror
     } finally server.stop()
   }
 
@@ -447,6 +498,13 @@ class MlsJobsMainSpec extends AnyFunSuite {
   private def dvBaseOf(root: String, version: Int): Option[Int] = {
     val f = Paths.get(root, s"v$version", "_dv_base")
     Option.when(Files.exists(f))(Files.readString(f).trim.toInt)
+  }
+
+  /** The versions whose `_append` dirs a merge-on-read version serves. */
+  private def appendVersionsOf(root: String, version: Int): Seq[Int] = {
+    val f = Paths.get(root, s"v$version", "_append_versions")
+    if (!Files.exists(f)) Nil
+    else Files.readString(f).split(',').toSeq.filter(_.nonEmpty).map(_.toInt)
   }
 
   private def copyTree(from: String, to: String): Unit = {
