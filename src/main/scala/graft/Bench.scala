@@ -15,7 +15,7 @@ package graft
   * Queries run via `.count()` (full materialization, no driver-side
   * collect).
   *
-  * Session hygiene (SPARK_GRAFT_BENCH_CLEAN, default on): a handful of
+  * Session hygiene (always on): a handful of
   * gates eagerly `localCheckpoint` (GraphCC rounds, prefix sums, the e2e
   * jobs), and each of the 3 passes re-creates those blocks; nothing frees
   * them until the ContextCleaner GCs the dead RDD references, so by the
@@ -48,7 +48,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
-    val clean = sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEAN", "true").toBoolean
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // Comma-separated allowlist for isolation experiments (empty = all).
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
@@ -62,8 +61,6 @@ object Bench {
       .master(s"local[$cpus]")
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     // Re-apply the A/B passthrough LAST so an experiment can override
     // the bench-specific configs above as well.
     GraftSession.applyEnvConf(builder)
@@ -72,7 +69,7 @@ object Bench {
     graft.operators.SkewCap.registerWarnings(spark)
 
     var sinceGc = 0
-    def cleanup(): Unit = if (clean) {
+    def cleanup(): Unit = {
       val sc = spark.sparkContext
       val stale = sc.getPersistentRDDs
       stale.values.foreach(_.unpersist(blocking = false))

@@ -29,11 +29,11 @@ import org.apache.spark.sql.SparkSession
   *    benefit from the eviction; 10k entries is a few hundred MB of
   *    class metadata at most.
   *
-  * Both stay overridable per run (`SPARK_GRAFT_CONSTRAINT_PROP`,
-  * `SPARK_GRAFT_CODEGEN_CACHE`), and `SPARK_GRAFT_SQL_CONF` applies
-  * arbitrary `key=value;key=value` pairs for A/B experiments — a
-  * malformed token fails LOUDLY (it is the A/B surface; a silently
-  * dropped key would fake a negative result).
+  * Both are constants here. `SPARK_GRAFT_SQL_CONF` applies arbitrary
+  * `key=value;key=value` pairs for A/B experiments, after these defaults,
+  * so either knob can still be flipped per run — a malformed token fails
+  * LOUDLY (it is the A/B surface; a silently dropped key would fake a
+  * negative result).
   */
 object GraftSession {
 
@@ -46,10 +46,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      .config("spark.sql.constraintPropagation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
     applyEnvConf(b)
     b
   }

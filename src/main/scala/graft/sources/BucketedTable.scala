@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Hash-bucketed managed table — the 100 TB upgrade of [[ManagedTable]]'s
@@ -89,19 +89,36 @@ object BucketedTable extends VersionedLayout {
   private def bucketDir(root: String, ver: String, b: Int): String =
     if (ver.startsWith("/")) f"$ver/b$b%05d" else f"$root/$ver/b$b%05d"
 
-  /** Scoped directory listing — `Files.list` holds an OS directory handle
-    * until closed; consume the iterator inside `f` only. */
-  private def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
-    val st = Files.list(dir)
-    try f(st.iterator().asScala) finally st.close()
-  }
-
   private def hasParquet(dir: String): Boolean =
     listDir(Paths.get(dir))(_.exists(_.getFileName.toString.endsWith(".parquet")))
 
   /** Remove the partitionBy staging dir once its buckets are moved out. */
   private def dropStaging(root: String, ver: Int): Unit = {
     ScratchDirs.deleteRecursively(Paths.get(s"$root/v$ver/_data"))
+  }
+
+  /** Publish the version after `meta`'s: move each `touched` bucket that a
+    * `partitionBy("_bucket")` write staged under `v<next>/_data` into its
+    * bucket dir (an empty one where the write left none — a bucket emptied
+    * by deletes, or all-empty files compacted away), then publish the
+    * manifest with those buckets pointing at `v<next>` and the rest
+    * carried by reference. */
+  private def publishBuckets(root: String, meta: Meta, touched: Iterable[Int],
+                             schema: Option[org.apache.spark.sql.types.StructType])
+      : Unit = {
+    val next = meta.version + 1
+    touched.foreach { b =>
+      val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
+      val dst = Paths.get(bucketDir(root, s"v$next", b))
+      if (Files.exists(src)) Files.move(src, dst)
+      else Files.createDirectories(dst)
+    }
+    dropStaging(root, next)
+    val touchedSet = touched.toSet
+    writeVersion(root, next, meta.nBuckets, meta.keys,
+      meta.manifest.map { case (b, ver) =>
+        b -> (if (touchedSet(b)) s"v$next" else ver)
+      }, schema)
   }
 
   /** Initial full write: every bucket lands in v0. */
@@ -273,11 +290,12 @@ object BucketedTable extends VersionedLayout {
   }
 
   /** Keyed MERGE touching only the buckets that contain source keys.
-    * With `changeFeed`, the merge also lands its row-level changes as
-    * `_changes/v<next>` BEFORE the pointer swap — and because a merge can
-    * only insert/update/delete inside buckets containing source keys, the
-    * delta-proportional feed equals the feed a whole-table merge would
-    * produce: CDC cost scales with the delta, never the table. */
+    * With `changeFeed`, the merge also records its row-level changes as
+    * the next version's change feed BEFORE the pointer swap — and because
+    * a merge can only insert/update/delete inside buckets containing
+    * source keys, the delta-proportional feed equals the feed a
+    * whole-table merge would produce: CDC cost scales with the delta,
+    * never the table. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
             clauses: MergeClauses.Spec = MergeClauses.Spec(),
             changeFeed: Boolean = false,
@@ -327,7 +345,6 @@ object BucketedTable extends VersionedLayout {
     import graft.operators.Merge
     val touched = srcB.select("_bucket").distinct()
       .collect().map(_.getInt(0)).sorted
-    val touchedSet = touched.toSet
 
     val targetPaths = touched
       .map(b => bucketDir(root, meta.manifest(b), b))
@@ -354,8 +371,8 @@ object BucketedTable extends VersionedLayout {
       if (changeFeed) taggedRaw.localCheckpoint(eager = false) else taggedRaw
     try {
       if (changeFeed)
-        tagged.filter(col(Merge.ActionCol) =!= lit("keep"))
-          .write.mode("overwrite").parquet(s"$root/_changes/v$next")
+        writeChanges(root, next,
+          tagged.filter(col(Merge.ActionCol) =!= lit("keep")))
       val merged = Constraints.enforce(
           tagged
             .filter(col(Merge.ActionCol) =!= lit("delete"))
@@ -364,20 +381,9 @@ object BucketedTable extends VersionedLayout {
         .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
       merged.write.mode("overwrite").partitionBy("_bucket")
         .parquet(s"$root/v$next/_data")
-      touched.foreach { b =>
-        val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
-        val dst = Paths.get(bucketDir(root, s"v$next", b))
-        if (Files.exists(src)) Files.move(src, dst)
-        else Files.createDirectories(dst) // bucket emptied by matched-delete
-      }
-      dropStaging(root, next)
-      val manifest = meta.manifest.map { case (b, ver) =>
-        b -> (if (touchedSet(b)) s"v$next" else ver)
-      }
       // An evolving merge widens the recorded schema; untouched buckets
       // keep their narrow files and read null-filled through it.
-      writeVersion(root, next, meta.nBuckets, meta.keys, manifest,
-        Some(merged.drop("_bucket").schema))
+      publishBuckets(root, meta, touched, Some(merged.drop("_bucket").schema))
     } finally {
       if (changeFeed) tagged.unpersist()
     }
@@ -390,8 +396,8 @@ object BucketedTable extends VersionedLayout {
     * the bucket key touches only the keys' buckets; a broad predicate
     * degrades gracefully toward a full rewrite (never past it). Rows
     * where `where` is null are KEPT — SQL DELETE semantics. With
-    * `changeFeed`, deleted pre-images land as `_changes/v<next>` before
-    * the pointer swap. No-op (no version published) when nothing
+    * `changeFeed`, deleted pre-images land as the next version's change
+    * feed before the pointer swap. No-op (no version published) when nothing
     * matches. */
   def delete(spark: SparkSession, root: String, where: Column,
              changeFeed: Boolean = false): Unit = {
@@ -403,31 +409,19 @@ object BucketedTable extends VersionedLayout {
     val touched = withB.filter(hit).select("_bucket").distinct()
       .collect().map(_.getInt(0)).sorted // bounded: <= nBuckets ids
     if (touched.isEmpty) return
-    val touchedSet = touched.toSet
     val next = meta.version + 1
     val touchedPaths = touched
       .map(b => bucketDir(root, meta.manifest(b), b)).filter(hasParquet)
     val touchedRows = readerFor(spark, meta)
       .parquet(touchedPaths.toIndexedSeq: _*)
     if (changeFeed)
-      touchedRows.filter(hit)
-        .withColumn(Merge.ActionCol, lit("delete"))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
+      writeChanges(root, next, touchedRows.filter(hit)
+        .withColumn(Merge.ActionCol, lit("delete")))
     val kept = touchedRows.filter(!hit)
       .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
     kept.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/v$next/_data")
-    touched.foreach { b =>
-      val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
-      val dst = Paths.get(bucketDir(root, s"v$next", b))
-      if (Files.exists(src)) Files.move(src, dst)
-      else Files.createDirectories(dst) // bucket emptied entirely
-    }
-    dropStaging(root, next)
-    writeVersion(root, next, meta.nBuckets, meta.keys,
-      meta.manifest.map { case (b, ver) =>
-        b -> (if (touchedSet(b)) s"v$next" else ver)
-      }, meta.schema)
+    publishBuckets(root, meta, touched, meta.schema)
   }
 
   /** UPDATE at bucket-delta cost — the bucketed twin of
@@ -436,8 +430,8 @@ object BucketedTable extends VersionedLayout {
     * re-evaluated (expressions see the PRE-update row), and untouched
     * buckets carry by manifest reference. Null-predicate rows are
     * untouched (SQL UPDATE); CHECK constraints ride the rewrite. With
-    * `changeFeed`, post-images land as `_changes/v<next>` before the
-    * swap. No-op when nothing matches. */
+    * `changeFeed`, post-images land as the next version's change feed
+    * before the swap. No-op when nothing matches. */
   def update(spark: SparkSession, root: String, set: Map[String, Column],
              where: Column = lit(true), changeFeed: Boolean = false): Unit = {
     import graft.operators.Merge
@@ -448,7 +442,6 @@ object BucketedTable extends VersionedLayout {
     val touched = withB.filter(hit).select("_bucket").distinct()
       .collect().map(_.getInt(0)).sorted // bounded: <= nBuckets ids
     if (touched.isEmpty) return
-    val touchedSet = touched.toSet
     val next = meta.version + 1
     val touchedPaths = touched
       .map(b => bucketDir(root, meta.manifest(b), b)).filter(hasParquet)
@@ -467,25 +460,14 @@ object BucketedTable extends VersionedLayout {
       when(col("__hit"), set.getOrElse(c, col(c))).otherwise(col(c)).as(c)) :+
       col("__hit"): _*)
     if (changeFeed)
-      updated.filter(col("__hit")).drop("__hit")
-        .withColumn(Merge.ActionCol, lit("update"))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
+      writeChanges(root, next, updated.filter(col("__hit")).drop("__hit")
+        .withColumn(Merge.ActionCol, lit("update")))
     val rewritten = Constraints.enforce(updated.drop("__hit"),
         Constraints.load(root))
       .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
     rewritten.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/v$next/_data")
-    touched.foreach { b =>
-      val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
-      val dst = Paths.get(bucketDir(root, s"v$next", b))
-      if (Files.exists(src)) Files.move(src, dst)
-      else Files.createDirectories(dst)
-    }
-    dropStaging(root, next)
-    writeVersion(root, next, meta.nBuckets, meta.keys,
-      meta.manifest.map { case (b, ver) =>
-        b -> (if (touchedSet(b)) s"v$next" else ver)
-      }, meta.schema)
+    publishBuckets(root, meta, touched, meta.schema)
   }
 
   /** OVERWRITE WHERE at bucket-delta cost — the bucketed twin of
@@ -518,7 +500,6 @@ object BucketedTable extends VersionedLayout {
       replB.select("_bucket").distinct().collect().map(_.getInt(0)))
       .distinct.sorted
     if (touched.isEmpty) return
-    val touchedSet = touched.toSet
     val next = meta.version + 1
     val touchedPaths = touched
       .map(b => bucketDir(root, meta.manifest(b), b)).filter(hasParquet)
@@ -532,17 +513,7 @@ object BucketedTable extends VersionedLayout {
       .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
     rewritten.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/v$next/_data")
-    touched.foreach { b =>
-      val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
-      val dst = Paths.get(bucketDir(root, s"v$next", b))
-      if (Files.exists(src)) Files.move(src, dst)
-      else Files.createDirectories(dst)
-    }
-    dropStaging(root, next)
-    writeVersion(root, next, meta.nBuckets, meta.keys,
-      meta.manifest.map { case (b, ver) =>
-        b -> (if (touchedSet(b)) s"v$next" else ver)
-      }, meta.schema)
+    publishBuckets(root, meta, touched, meta.schema)
   }
 
   /** OPTIMIZE for the bucketed layout: every merge leaves its touched
@@ -578,85 +549,36 @@ object BucketedTable extends VersionedLayout {
       .repartition(fragmented.size, col("_bucket"))
     compacted.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/v$next/_data")
-    fragmented.foreach { b =>
-      val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
-      val dst = Paths.get(bucketDir(root, s"v$next", b))
-      if (Files.exists(src)) Files.move(src, dst)
-      else Files.createDirectories(dst) // all-empty files compacted away
-    }
-    dropStaging(root, next)
-    val fragSet = fragmented.toSet
-    writeVersion(root, next, meta.nBuckets, meta.keys,
-      meta.manifest.map { case (b, ver) =>
-        b -> (if (fragSet(b)) s"v$next" else ver)
-      }, meta.schema)
+    publishBuckets(root, meta, fragmented, meta.schema)
   }
 
-  /** VACUUM for the bucketed layout (reference semantics:
-    * DeltaTable.vacuum, mls_listings_curated.py:366-368). Unlike
-    * [[ManagedTable.vacuum]], old version dirs cannot simply be dropped by
-    * age: the live manifest carries untouched buckets forward BY REFERENCE,
-    * so an old dir may still host live data. Retention is therefore
-    * manifest-reachability — keep the newest `keep` manifests, keep every
-    * bucket dir some retained manifest references, and delete the rest
-    * (unreferenced bucket dirs, then version dirs left with nothing).
-    * Deletion cost is proportional to the GARBAGE, never the table. */
-  def vacuum(root: String, keep: Int = 1): Unit = {
-    val live = currentVersion(root)
-    vacuumRetaining(root, (math.max(0, live - keep + 1) to live)
-      .filter(v => Files.exists(Paths.get(root, s"v$v", "_manifest"))))
-  }
+  /** Retention for the bucketed layout ([[VersionedLayout.vacuum]] applies
+    * the policy). Unlike [[ManagedTable]]'s snapshots, old version dirs
+    * cannot simply be dropped by age: the live manifest carries untouched
+    * buckets forward BY REFERENCE, so an old dir may still host live data.
+    * Retention is therefore manifest-reachability — a retained version is
+    * one whose manifest is on disk, every bucket dir some retained
+    * manifest references is kept, and the rest goes (unreferenced bucket
+    * dirs, then version dirs left with nothing). */
+  protected def isPublished(root: String, v: Int): Boolean =
+    Files.exists(Paths.get(root, s"v$v", "_manifest"))
 
-  /** Retention-DURATION vacuum — same policy knob as
-    * [[ManagedTable.vacuum(root:String,retainHours:Double)*]] (the
-    * reference's `delta_table.vacuum(hours)`): retain manifests whose
-    * commit time (from the shared `_history` log) is within `retainHours`
-    * of now, always including the live manifest; then run the same
-    * manifest-reachability sweep, so any bucket dir a retained manifest
-    * references survives regardless of its own age. */
-  def vacuum(root: String, retainHours: Double): Unit = {
-    require(retainHours >= 0, s"vacuum: retainHours=$retainHours")
-    val live = currentVersion(root)
-    val cutoff =
-      VersionedLayout.commitClock() - (retainHours * 3600 * 1000).toLong
-    val commitTimes: Map[Int, Long] = commitHistory(root).toMap
-    val withManifest = listDir(Paths.get(root))(
-        _.filter(_.getFileName.toString.matches("v\\d+"))
-          .map(_.getFileName.toString.drop(1).toInt).toVector.sorted)
-      .filter(v => Files.exists(Paths.get(root, s"v$v", "_manifest")))
-    vacuumRetaining(root, withManifest.filter(v =>
-      v == live || commitTimes.get(v).forall(_ >= cutoff)))
-  }
-
-  private def vacuumRetaining(root: String, retained: Seq[Int]): Unit = {
+  protected def sweepUnreachable(root: String, retained: Seq[Int]): Unit = {
     val referenced: Set[(Int, String)] = retained.flatMap { v =>
       readMetaAt(root, v).manifest.toSeq.map { case (b, ver) => (b, ver) }
     }.toSet
-    listDir(Paths.get(root))(
-        _.filter(_.getFileName.toString.matches("v\\d+")).toList)
-      .foreach { vdir =>
-        val vname = vdir.getFileName.toString
-        listDir(vdir)(_.filter(_.getFileName.toString.matches("b\\d{5}")).toList)
-          .foreach { bdir =>
-            val b = bdir.getFileName.toString.drop(1).toInt
-            if (!referenced((b, vname))) ScratchDirs.deleteRecursively(bdir)
-          }
-        if (!retained.contains(vname.drop(1).toInt)) {
-          val hostsLiveBuckets = listDir(vdir)(
-            _.exists(_.getFileName.toString.matches("b\\d{5}")))
-          if (!hostsLiveBuckets) ScratchDirs.deleteRecursively(vdir)
+    versionDirs(Paths.get(root)).foreach { vdir =>
+      val vname = vdir.getFileName.toString
+      listDir(vdir)(_.filter(_.getFileName.toString.matches("b\\d{5}")).toList)
+        .foreach { bdir =>
+          val b = bdir.getFileName.toString.drop(1).toInt
+          if (!referenced((b, vname))) ScratchDirs.deleteRecursively(bdir)
         }
+      if (!retained.contains(versionOf(vdir))) {
+        val hostsLiveBuckets = listDir(vdir)(
+          _.exists(_.getFileName.toString.matches("b\\d{5}")))
+        if (!hostsLiveBuckets) ScratchDirs.deleteRecursively(vdir)
       }
-    // Change feeds age with their version's manifest retention (a feed is
-    // never referenced by a later manifest, so age alone decides).
-    val changesDir = Paths.get(root, "_changes")
-    if (Files.exists(changesDir)) {
-      val listing = Files.list(changesDir)
-      try listing.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("v\\d+"))
-        .filter(p => !retained.contains(p.getFileName.toString.drop(1).toInt))
-        .toList.foreach(ScratchDirs.deleteRecursively)
-      finally listing.close()
     }
   }
 }

@@ -33,6 +33,10 @@ import scala.jdk.CollectionConverters._
   * fold rule in [[publishMor]] compacts the head once the appended bytes
   * reach the base's, which bounds every live read by twice the base. The
   * MERGE semantics below are independent of the layout choice.
+  *
+  * The pointer, constraints, change feeds, retention and directory
+  * listing are the protocol this layout shares with [[BucketedTable]];
+  * they live once in [[VersionedLayout]].
   */
 object MergeClauses {
   /** Delta-MERGE-equivalent clause set. Conditions see the matched pair as
@@ -66,19 +70,32 @@ object ManagedTable extends VersionedLayout {
     // travel must not resolve it.
     require(version <= live,
       s"version $version of $root is not published yet (live is v$live)")
-    val dir = Paths.get(root, s"v$version")
-    require(Files.exists(dir),
+    require(Files.exists(Paths.get(root, s"v$version")),
       s"version $version of $root is not on disk (vacuumed or never published); " +
         s"live is v$live")
-    dvBaseOf(root, version) match {
-      // a DV version can never carry a mapping (vectorized ops refuse
-      // mapped bases), so only the full-snapshot branch applies one
-      case None =>
-        applyColmap(TableIO.readStatic(spark, dir.toString), colmapOf(root, version))
-      case Some(base) =>
-        morLive(spark, root, version, TableIO.readStatic(spark, s"$root/v$base"))
-          .drop(DvFileCol, DvPosCol)
+    readAt(spark, root, version)
+  }
+
+  /** The rows of `version`. Of its base dir (its own dir when it is a full
+    * version) the scan opens every parquet file, or with `pruned` only the
+    * files the set does not name. A full version applies its column
+    * mapping; a merge-on-read version adds the appended rows it serves and
+    * subtracts its tombstones. A DV version can never carry a mapping
+    * (vectorized ops refuse mapped bases). */
+  private def readAt(spark: SparkSession, root: String, version: Int,
+                     pruned: Option[scala.collection.Set[String]] = None)
+      : DataFrame = {
+    val dvBase = dvBaseOf(root, version)
+    val dir = s"$root/v${dvBase.getOrElse(version)}"
+    val scan = pruned.fold(TableIO.readStatic(spark, dir)) { out =>
+      val keep = parquetFiles(Paths.get(dir)).map(_.getFileName.toString)
+        .filterNot(out).sorted
+      // Even with every base file pruned, appended rows can still match.
+      if (keep.isEmpty) TableIO.readStatic(spark, dir).where(lit(false))
+      else spark.read.parquet(keep.map(f => s"$dir/$f"): _*)
     }
+    dvBase.fold(applyColmap(scan, colmapOf(root, version)))(_ =>
+      morLive(spark, root, version, scan).drop(DvFileCol, DvPosCol))
   }
 
   // ---- deletion vectors -------------------------------------------------
@@ -97,20 +114,37 @@ object ManagedTable extends VersionedLayout {
   private def readDv(spark: SparkSession, root: String, version: Int): DataFrame =
     spark.read.schema(StructType(Seq(StructField(DvFileCol, StringType),
         StructField(DvPosCol, LongType))))
-      .parquet(parquetFiles(Paths.get(root, s"v$version", "_dv")): _*)
+      .parquet(parquetFiles(Paths.get(root, s"v$version", "_dv"))
+        .map(_.toString): _*)
 
   /** The parquet files directly inside `dir` (none when it is absent). */
-  private def parquetFiles(dir: Path): Vector[String] =
+  private def parquetFiles(dir: Path): Vector[Path] =
     if (!Files.exists(dir)) Vector.empty
-    else {
-      val st = Files.list(dir)
-      try st.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toVector
-      finally st.close()
-    }
+    else listDir(dir)(
+      _.filter(_.getFileName.toString.endsWith(".parquet")).toVector)
 
   private def parquetBytes(dir: Path): Long =
-    parquetFiles(dir).map(f => Files.size(Paths.get(f))).sum
+    parquetFiles(dir).map(Files.size).sum
+
+  /** Hard-link `src` to `dst`, or copy it where the filesystem refuses
+    * links. */
+  private def linkOrCopy(src: Path, dst: Path): Unit =
+    try Files.createLink(dst, src)
+    catch { case _: UnsupportedOperationException => Files.copy(src, dst) }
+
+  /** Refuse `op` on a merge-on-read `version`: `op` works on a full
+    * version's own files. */
+  private def requireFull(root: String, version: Int, op: String): Unit =
+    require(dvBaseOf(root, version).isEmpty,
+      s"$op: v$version of $root is a merge-on-read version — OPTIMIZE " +
+        "first to fold it into a full snapshot")
+
+  /** `df` with the table's generated columns computed or validated and its
+    * CHECK constraints enforced inside the plan: a violating row aborts
+    * the write that materializes it, before any pointer swap. */
+  private def guard(root: String, df: DataFrame): DataFrame =
+    Constraints.enforce(GeneratedColumns(df, GeneratedColumns.load(root)),
+      constraintsOf(root))
 
   /** The FULL version whose files a DV version shares, or None when
     * `version` is itself a full snapshot. */
@@ -151,6 +185,7 @@ object ManagedTable extends VersionedLayout {
                       baseScan: DataFrame): DataFrame = {
     val files = appendVersionsOf(root, version).toVector
       .flatMap(v => parquetFiles(Paths.get(root, s"v$v", "_append")))
+      .map(_.toString)
     val base = withAddress(baseScan)
     val rows =
       if (files.isEmpty) base
@@ -201,8 +236,7 @@ object ManagedTable extends VersionedLayout {
     // v<next> move). Holding the lock pins `live` for the duration — the
     // body is metadata-sized (footer read + hard links), never a data scan.
     val live = currentVersion(root)
-    require(dvBaseOf(root, live).isEmpty,
-      s"renameColumn: v$live is a merge-on-read version — OPTIMIZE first")
+    requireFull(root, live, "renameColumn")
     val m0 = colmapOf(root, live)
     val phys = TableIO.readStatic(spark, s"$root/v$live").schema.fieldNames.toSeq
     val logical = phys.map(p => m0.getOrElse(p, p))
@@ -223,15 +257,7 @@ object ManagedTable extends VersionedLayout {
     val next = live + 1
     val nextDir = Paths.get(root, s"v$next")
     Files.createDirectories(nextDir)
-    val listing = Files.list(dir)
-    try listing.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach { p =>
-        val dst = nextDir.resolve(p.getFileName.toString)
-        try Files.createLink(dst, p)
-        catch { case _: UnsupportedOperationException => Files.copy(p, dst) }
-      }
-    finally listing.close()
+    parquetFiles(dir).foreach(p => linkOrCopy(p, nextDir.resolve(p.getFileName)))
     // translate the skipping manifests' column field old→new logical name
     Seq("_stats.tsv", "_bloom.tsv").foreach { mf =>
       val src = dir.resolve(mf)
@@ -281,23 +307,13 @@ object ManagedTable extends VersionedLayout {
     * base, and the versions whose appended files it serves, alive for as
     * long as the DV version is retained. */
   def deleteVectorized(spark: SparkSession, root: String, where: Column,
-                       changeFeed: Boolean = false): Unit = {
-    val live = currentVersion(root)
-    require(colmapOf(root, dvBaseOf(root, live).getOrElse(live)).isEmpty,
-      "vectorized DML on a RENAMEd (column-mapped) version is not " +
-        "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
-        "first to materialize the logical names")
-    val (base, rows, oldDv, served) = morParts(spark, root, live)
-    val hit = coalesce(where, lit(false))
-    val next = live + 1
-    if (changeFeed)
-      rows.filter(hit).drop(DvFileCol, DvPosCol)
-        .withColumn(graft.operators.Merge.ActionCol, lit("delete"))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    val newTombs = rows.filter(hit).select(col(DvFileCol), col(DvPosCol))
-    publishMor(spark, root, next, base,
-      oldDv.fold(newTombs)(_.unionByName(newTombs)), None, served)
-  }
+                       changeFeed: Boolean = false): Unit =
+    writeMor(spark, root) { rows =>
+      val hit = rows.filter(coalesce(where, lit(false)))
+      MorDelta(addresses(hit), feed = _ => Option.when(changeFeed)(
+        hit.drop(DvFileCol, DvPosCol)
+          .withColumn(graft.operators.Merge.ActionCol, lit("delete"))))
+    }
 
   /** UPDATE at delta cost — the merge-on-read form of [[update]] (Delta
     * DV-update / Iceberg merge-on-read, from the public designs): matched
@@ -311,42 +327,19 @@ object ManagedTable extends VersionedLayout {
     * swaps. */
   def updateVectorized(spark: SparkSession, root: String,
                        set: Map[String, Column], where: Column = lit(true),
-                       changeFeed: Boolean = false): Unit = {
-    val live = currentVersion(root)
-    require(colmapOf(root, dvBaseOf(root, live).getOrElse(live)).isEmpty,
-      "vectorized DML on a RENAMEd (column-mapped) version is not " +
-        "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
-        "first to materialize the logical names")
-    val (base, rows, oldDv, served) = morParts(spark, root, live)
-    val hit = coalesce(where, lit(false))
-    val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
-    val bad = set.keySet -- cols.toSet
-    require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
-      bad.mkString(", "))
-    val updated = rows.filter(hit)
-      .select(cols.map(c => set.getOrElse(c, col(c)).as(c)): _*)
-    // A type-changing SET would make appended files diverge from the base
-    // schema and break the union on read — reject it up front (Delta
-    // likewise refuses type-changing updates without explicit evolution).
-    val baseTypes = rows.drop(DvFileCol, DvPosCol).schema
-      .map(f => f.name -> f.dataType)
-    val updTypes = updated.schema.map(f => f.name -> f.dataType)
-    require(updTypes == baseTypes,
-      s"UPDATE SET changes column type(s): " +
-        updTypes.zip(baseTypes).collect {
-          case ((n, t), (_, bt)) if t != bt => s"$n: $bt -> $t"
-        }.mkString(", "))
-    val guarded = Constraints.enforce(
-      GeneratedColumns(updated, GeneratedColumns.load(root)),
-      constraintsOf(root))
-    val next = live + 1
-    if (changeFeed)
-      guarded.withColumn(graft.operators.Merge.ActionCol, lit("update"))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    val newTombs = rows.filter(hit).select(col(DvFileCol), col(DvPosCol))
-    publishMor(spark, root, next, base,
-      oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(guarded), served)
-  }
+                       changeFeed: Boolean = false): Unit =
+    writeMor(spark, root) { rows =>
+      val hit = rows.filter(coalesce(where, lit(false)))
+      val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
+      val bad = set.keySet -- cols.toSet
+      require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
+        bad.mkString(", "))
+      MorDelta(addresses(hit),
+        Some(hit.select(cols.map(c => set.getOrElse(c, col(c)).as(c)): _*)),
+        "UPDATE SET changes column type(s): ",
+        _.filter(_ => changeFeed)
+          .map(_.withColumn(graft.operators.Merge.ActionCol, lit("update"))))
+    }
 
   /** OVERWRITE WHERE at delta cost — the merge-on-read form of
     * [[overwriteWhere]]: the replaced slice's rows (base or earlier
@@ -362,31 +355,14 @@ object ManagedTable extends VersionedLayout {
     * ride the appended write, whose schema must match the base exactly
     * (appended files union with base files on read). */
   def overwriteWhereVectorized(spark: SparkSession, root: String,
-                               df: DataFrame, where: Column): Unit = {
-    val live = currentVersion(root)
-    require(colmapOf(root, dvBaseOf(root, live).getOrElse(live)).isEmpty,
-      "vectorized DML on a RENAMEd (column-mapped) version is not " +
-        "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
-        "first to materialize the logical names")
-    val (base, rows, oldDv, served) = morParts(spark, root, live)
-    val hit = coalesce(where, lit(false))
-    val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
-    val shaped = df.select(cols.map(col): _*) // fail fast on missing cols
-    val baseTypes = rows.drop(DvFileCol, DvPosCol).schema
-      .map(f => f.name -> f.dataType)
-    val newTypes = shaped.schema.map(f => f.name -> f.dataType)
-    require(newTypes == baseTypes,
-      s"replacement schema diverges from the table: " +
-        newTypes.zip(baseTypes).collect {
-          case ((n, t), (_, bt)) if t != bt => s"$n: $bt -> $t"
-        }.mkString(", "))
-    val guarded = Constraints.enforce(
-      GeneratedColumns(assertSatisfies(shaped, hit), GeneratedColumns.load(root)),
-      constraintsOf(root))
-    val newTombs = rows.filter(hit).select(col(DvFileCol), col(DvPosCol))
-    publishMor(spark, root, live + 1, base,
-      oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(guarded), served)
-  }
+                               df: DataFrame, where: Column): Unit =
+    writeMor(spark, root) { rows =>
+      val hit = coalesce(where, lit(false))
+      val shaped = df.select( // fail fast on missing cols
+        rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq.map(col): _*)
+      MorDelta(addresses(rows.filter(hit)), Some(assertSatisfies(shaped, hit)),
+        "replacement schema diverges from the table: ")
+    }
 
   /** Delta's replaceWhere insertion contract folded into the write plan:
     * materializing any replacement row that does NOT satisfy the predicate
@@ -422,89 +398,114 @@ object ManagedTable extends VersionedLayout {
     * base schema or the union on read breaks — an evolving merge is a
     * rewrite by nature, use `merge(schemaEvolution = true)`. CHECK
     * constraints and generated columns ride the newly-written rows, as in
-    * [[updateVectorized]]. With `changeFeed`, non-keep rows land as
-    * `_changes/v<next>` (post-images, tagged; `preImageFeed` adds the
-    * pre-update struct) before the pointer swap. */
+    * [[updateVectorized]]. With `changeFeed`, non-keep rows land as the
+    * next version's change feed (post-images, tagged; `preImageFeed` adds
+    * the pre-update struct) before the pointer swap. */
   def mergeVectorized(spark: SparkSession, root: String, source: DataFrame,
                       keys: Seq[String],
                       clauses: MergeClauses.Spec = MergeClauses.Spec(),
                       nullSafeKeys: Boolean = true,
                       changeFeed: Boolean = false,
-                      preImageFeed: Boolean = false): Unit = {
-    import graft.operators.Merge
-    val live = currentVersion(root)
-    require(colmapOf(root, dvBaseOf(root, live).getOrElse(live)).isEmpty,
-      "vectorized DML on a RENAMEd (column-mapped) version is not " +
-        "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
-        "first to materialize the logical names")
-    val (base, rows, oldDv, served) = morParts(spark, root, live)
-    val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
-    val missing = cols.filterNot(source.columns.contains)
-    require(missing.isEmpty, "merge-on-read MERGE source lacks target " +
-      s"column(s) ${missing.mkString(", ")}; appended files must match " +
-      "the base schema — an evolving merge is a rewrite, use " +
-      "merge(schemaEvolution = true)")
-    // Addresses ride the merge as ordinary target columns; every
-    // update/insert post-image takes the source side's null.
-    val src = source
-      .withColumn(DvFileCol, lit(null).cast("string"))
-      .withColumn(DvPosCol, lit(null).cast("bigint"))
-    val act = col(Merge.ActionCol)
-    // Keeps are the table-sized bulk the MoR form exists to never touch:
-    // filter them out INSIDE the join pipeline so the lazy checkpoint
-    // materializes only delta-sized rows.
-    val touched = Merge.mergeFramesTagged(rows, src, keys, clauses,
-        nullSafeKeys, schemaEvolution = false, preImage = true)
-      .filter(act =!= lit("keep"))
-      .localCheckpoint(eager = false)
-    val next = live + 1
-    try {
-      val fresh = touched.filter(act.isin("update", "insert"))
-        .drop(DvFileCol, DvPosCol, Merge.ActionCol, Merge.PreCol)
-      val baseTypes = cols.map(c => c -> rows.schema(c).dataType)
-      val freshTypes = fresh.schema.map(f => f.name -> f.dataType).toIndexedSeq
-      require(freshTypes == baseTypes,
-        "merge-on-read MERGE changes column type(s): " +
-          freshTypes.zip(baseTypes).collect {
-            case ((n, t), (_, bt)) if t != bt => s"$n: $bt -> $t"
-          }.mkString(", "))
-      val guarded = Constraints.enforce(
-        GeneratedColumns(fresh, GeneratedColumns.load(root)),
-        constraintsOf(root))
-      if (changeFeed) {
-        val feedBase = touched.filter(act =!= lit("keep"))
-          .drop(DvFileCol, DvPosCol)
-        val feed =
+                      preImageFeed: Boolean = false): Unit =
+    writeMor(spark, root) { rows =>
+      import graft.operators.Merge
+      val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
+      val missing = cols.filterNot(source.columns.contains)
+      require(missing.isEmpty, "merge-on-read MERGE source lacks target " +
+        s"column(s) ${missing.mkString(", ")}; appended files must match " +
+        "the base schema — an evolving merge is a rewrite, use " +
+        "merge(schemaEvolution = true)")
+      // Addresses ride the merge as ordinary target columns; every
+      // update/insert post-image takes the source side's null.
+      val src = source
+        .withColumn(DvFileCol, lit(null).cast("string"))
+        .withColumn(DvPosCol, lit(null).cast("bigint"))
+      val act = col(Merge.ActionCol)
+      // Keeps are the table-sized bulk the MoR form exists to never touch:
+      // filter them out INSIDE the join pipeline so the lazy checkpoint
+      // materializes only delta-sized rows.
+      val touched = Merge.mergeFramesTagged(rows, src, keys, clauses,
+          nullSafeKeys, schemaEvolution = false, preImage = true)
+        .filter(act =!= lit("keep"))
+        .localCheckpoint(eager = false)
+      // an update's address rides its pre-image (its own columns are the
+      // source's); a delete keeps the target's
+      MorDelta(
+        touched.filter(act.isin("update", "delete")).select(
+          coalesce(col(Merge.PreCol)(DvFileCol), col(DvFileCol)).as(DvFileCol),
+          coalesce(col(Merge.PreCol)(DvPosCol), col(DvPosCol)).as(DvPosCol)),
+        Some(touched.filter(act.isin("update", "insert"))
+          .drop(DvFileCol, DvPosCol, Merge.ActionCol, Merge.PreCol)),
+        "merge-on-read MERGE changes column type(s): ",
+        _ => Option.when(changeFeed) {
+          val feedBase = touched.filter(act =!= lit("keep"))
+            .drop(DvFileCol, DvPosCol)
           if (!preImageFeed) feedBase.drop(Merge.PreCol)
           else feedBase.withColumn(Merge.PreCol,
             when(col(Merge.PreCol).isNotNull,
               struct(cols.map(c => col(Merge.PreCol)(c).as(c)): _*)))
-        feed.write.mode("overwrite").parquet(s"$root/_changes/v$next")
-      }
-      // an update's address rides its pre-image (its own columns are the
-      // source's); a delete keeps the target's
-      val newTombs = touched.filter(act.isin("update", "delete"))
-        .select(
-          coalesce(col(Merge.PreCol)(DvFileCol), col(DvFileCol)).as(DvFileCol),
-          coalesce(col(Merge.PreCol)(DvPosCol), col(DvPosCol)).as(DvPosCol))
-      publishMor(spark, root, next, base,
-        oldDv.fold(newTombs)(_.unionByName(newTombs)), Some(guarded), served)
-    } finally touched.unpersist()
-  }
-
-  /** The merge-on-read decomposition of a live version: its FULL base
-    * version, its live rows (addressed, tombstones already subtracted),
-    * its tombstone set, and the versions whose appended files it serves. */
-  private def morParts(spark: SparkSession, root: String, live: Int)
-      : (Int, DataFrame, Option[DataFrame], Seq[Int]) =
-    dvBaseOf(root, live) match {
-      case None =>
-        (live, withAddress(TableIO.readStatic(spark, s"$root/v$live")), None, Nil)
-      case Some(base) =>
-        (base, morLive(spark, root, live,
-            TableIO.readStatic(spark, s"$root/v$base")),
-          Some(readDv(spark, root, live)), appendVersionsOf(root, live))
+        },
+        cached = Some(touched))
     }
+
+  /** The (file, pos) addresses of `rows`. */
+  private def addresses(rows: DataFrame): DataFrame =
+    rows.select(col(DvFileCol), col(DvPosCol))
+
+  /** What one merge-on-read write adds to its head: the addresses it
+    * tombstones, the rows it appends (their column types must be the
+    * base's, or the write fails with `typeError` and the differing
+    * columns), its change feed given the guarded appended rows, and a frame
+    * cached for the write, released when the write ends. */
+  private final case class MorDelta(
+      tombstones: DataFrame,
+      appended: Option[DataFrame] = None,
+      typeError: String = "",
+      feed: Option[DataFrame] => Option[DataFrame] = _ => None,
+      cached: Option[DataFrame] = None)
+
+  /** The one merge-on-read write. It refuses a column-mapped head, hands
+    * `delta` the head's live rows (addressed, tombstones already
+    * subtracted), checks the appended rows' types and guards them with the
+    * table's generated columns and constraints, records the feed, and
+    * publishes the head's tombstones plus the new ones through
+    * [[publishMor]], on the head's FULL base version. */
+  private def writeMor(spark: SparkSession, root: String)(
+      delta: DataFrame => MorDelta): Unit = {
+    val live = currentVersion(root)
+    val dvBase = dvBaseOf(root, live)
+    val base = dvBase.getOrElse(live)
+    require(colmapOf(root, base).isEmpty,
+      "vectorized DML on a RENAMEd (column-mapped) version is not " +
+        "supported — publish a physical rewrite (overwrite/merge/OPTIMIZE) " +
+        "first to materialize the logical names")
+    val scan = TableIO.readStatic(spark, s"$root/v$base")
+    val rows =
+      if (dvBase.isEmpty) withAddress(scan) else morLive(spark, root, live, scan)
+    val d = delta(rows)
+    try {
+      // A type-changing write would make appended files diverge from the
+      // base schema and break the union on read — reject it up front
+      // (Delta likewise refuses type-changing updates without explicit
+      // evolution).
+      val appended = d.appended.map { a =>
+        val baseTypes = rows.drop(DvFileCol, DvPosCol).schema
+          .map(f => f.name -> f.dataType)
+        val types = a.schema.map(f => f.name -> f.dataType)
+        require(types == baseTypes, d.typeError +
+          types.zip(baseTypes).collect {
+            case ((n, t), (_, bt)) if t != bt => s"$n: $bt -> $t"
+          }.mkString(", "))
+        guard(root, a)
+      }
+      d.feed(appended).foreach(writeChanges(root, live + 1, _))
+      val (tombstones, served) =
+        if (dvBase.isEmpty) (d.tombstones, Nil)
+        else (readDv(spark, root, live).unionByName(d.tombstones),
+          appendVersionsOf(root, live))
+      publishMor(spark, root, live + 1, base, tombstones, appended, served)
+    } finally d.cached.foreach(_.unpersist())
+  }
 
   /** Publish a merge-on-read version: tombstones, the rows this version
     * appends (if any), the list of versions whose appended files it
@@ -559,10 +560,7 @@ object ManagedTable extends VersionedLayout {
     * so readers can never observe a constraint-breaking version. */
   def overwrite(root: String, df: DataFrame): Unit = {
     val next = if (exists(root)) currentVersion(root) + 1 else 0
-    Constraints.enforce(
-        GeneratedColumns(df, GeneratedColumns.load(root)),
-        constraintsOf(root))
-      .write.mode("overwrite").parquet(s"$root/v$next")
+    guard(root, df).write.mode("overwrite").parquet(s"$root/v$next")
     swapPointer(root, next)
   }
 
@@ -605,9 +603,7 @@ object ManagedTable extends VersionedLayout {
   def analyzeBloom(spark: SparkSession, root: String, statsCols: Seq[String],
                    nWords: Int = 64, k: Int = 3): Unit = {
     val live = currentVersion(root)
-    require(dvBaseOf(root, live).isEmpty,
-      s"analyzeBloom: v$live is a deletion-vector version — OPTIMIZE first " +
-        "to purge the vectors into a full snapshot, then index")
+    requireFull(root, live, "analyzeBloom")
     require(nWords > 0 && k > 0, s"analyzeBloom: nWords=$nWords k=$k")
     val snap = applyColmap(TableIO.readStatic(spark, s"$root/v$live"),
       colmapOf(root, live))
@@ -659,22 +655,14 @@ object ManagedTable extends VersionedLayout {
     require(value != null,
       "readPoint: null probe — SQL equality never matches null, use read()")
     val live = currentVersion(root)
-    val dvBase = dvBaseOf(root, live)
-    val dir = dvBase.fold(s"$root/v$live")(b => s"$root/v$b")
-    def overlay(df: DataFrame): DataFrame = dvBase match {
-      case None => df
-      case Some(_) =>
-        morLive(spark, root, live, df).drop(DvFileCol, DvPosCol)
-    }
-    val cmap = colmapOf(root, dvBase.getOrElse(live))
-    def mapped(df: DataFrame): DataFrame = applyColmap(df, cmap)
+    val base = dvBaseOf(root, live).getOrElse(live)
+    val dir = s"$root/v$base"
     // logical -> physical for footer-schema lookups; the bloom manifest
     // itself was translated to logical names at rename time
-    val physC = cmap.find(_._2 == c).map(_._1).getOrElse(c)
+    val physC = colmapOf(root, base).find(_._2 == c).map(_._1).getOrElse(c)
     val eq = col(c) === lit(value)
     val bloomPath = Paths.get(dir, "_bloom.tsv")
-    if (!Files.exists(bloomPath))
-      return mapped(overlay(TableIO.readStatic(spark, dir))).where(eq)
+    if (!Files.exists(bloomPath)) return readAt(spark, root, live).where(eq)
     val dt = TableIO.readStatic(spark, dir).schema(physC).dataType
     val hr = spark.range(1).select(xxh(lit(value).cast(dt), 42L).as("h1"),
       xxh(lit(value).cast(dt), 9001L).as("h2")).head()
@@ -703,17 +691,8 @@ object ManagedTable extends VersionedLayout {
         case _ => ()
       }
     } finally lineStream.close()
-    if (!indexedAny) return mapped(overlay(TableIO.readStatic(spark, dir))).where(eq)
-    val listing = Files.list(Paths.get(dir))
-    val allFiles =
-      try listing.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).toVector.sorted
-      finally listing.close()
-    val keep = allFiles.filterNot(prunedOut)
-    // Even with every base file pruned, appended rows can still match.
-    if (keep.isEmpty)
-      mapped(overlay(TableIO.readStatic(spark, dir).where(lit(false)))).where(eq)
-    else mapped(overlay(spark.read.parquet(keep.map(f => s"$dir/$f"): _*))).where(eq)
+    if (!indexedAny) return readAt(spark, root, live).where(eq)
+    readAt(spark, root, live, Some(prunedOut)).where(eq)
   }
 
   /** WRITE-AUDIT-PUBLISH (the Iceberg WAP / Netflix audit pattern, from
@@ -744,10 +723,7 @@ object ManagedTable extends VersionedLayout {
     // reader resolves).
     val stage = Paths.get(root, "_staging", s"a${System.nanoTime()}")
     try {
-      Constraints.enforce(
-          GeneratedColumns(df, GeneratedColumns.load(root)),
-          constraintsOf(root))
-        .write.mode("overwrite").parquet(stage.toString)
+      guard(root, df).write.mode("overwrite").parquet(stage.toString)
       val report = graft.operators.DataQuality
         .check(spark.read.parquet(stage.toString), rules)
         .localCheckpoint() // one audit scan; the report is rule-count-sized
@@ -803,10 +779,7 @@ object ManagedTable extends VersionedLayout {
     // OverlappingFileLockException instead of arbitrating).
     val stage = Paths.get(root, "_staging", s"c${System.nanoTime()}")
     try {
-      Constraints.enforce(
-          GeneratedColumns(df, GeneratedColumns.load(root)),
-          constraintsOf(root))
-        .write.mode("overwrite").parquet(stage.toString)
+      guard(root, df).write.mode("overwrite").parquet(stage.toString)
       withCommitLock(root) {
         val live = currentVersion(root)
         if (live != expectedVersion)
@@ -889,8 +862,8 @@ object ManagedTable extends VersionedLayout {
         preImage = preImageFeed).localCheckpoint(eager = false)
       val next = if (exists(root)) currentVersion(root) + 1 else 0
       try {
-        tagged.filter(col(Merge.ActionCol) =!= lit("keep"))
-          .write.mode("overwrite").parquet(s"$root/_changes/v$next")
+        writeChanges(root, next,
+          tagged.filter(col(Merge.ActionCol) =!= lit("keep")))
         // The feed lands before the pointer swap: a published version
         // either has its complete feed or was not published at all.
         overwrite(root,
@@ -903,18 +876,15 @@ object ManagedTable extends VersionedLayout {
   /** DELETE command (Delta `DELETE FROM ... WHERE`): publish a new version
     * without the rows satisfying `where`. Rows where the predicate
     * evaluates to null are KEPT — SQL DELETE semantics, not filter
-    * semantics. With `changeFeed`, the deleted pre-images land as
-    * `_changes/v<next>` before the pointer swap. */
+    * semantics. With `changeFeed`, the deleted pre-images land as the next
+    * version's change feed before the pointer swap. */
   def delete(spark: SparkSession, root: String, where: Column,
              changeFeed: Boolean = false): Unit = {
     val cur = read(spark, root)
     val hit = coalesce(where, lit(false))
-    if (changeFeed) {
-      val next = currentVersion(root) + 1
-      cur.filter(hit)
-        .withColumn(graft.operators.Merge.ActionCol, lit("delete"))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    }
+    if (changeFeed)
+      writeChanges(root, currentVersion(root) + 1, cur.filter(hit)
+        .withColumn(graft.operators.Merge.ActionCol, lit("delete")))
     overwrite(root, cur.filter(!hit))
   }
 
@@ -922,7 +892,8 @@ object ManagedTable extends VersionedLayout {
     * `where` get each column in `set` re-evaluated (expressions see the
     * pre-update row); all other rows and columns pass through. Null
     * predicate rows are untouched, like SQL UPDATE. With `changeFeed`,
-    * post-image rows land as `_changes/v<next>` before the swap. */
+    * post-image rows land as the next version's change feed before the
+    * swap. */
   def update(spark: SparkSession, root: String, set: Map[String, Column],
              where: Column = lit(true), changeFeed: Boolean = false): Unit = {
     val cur = read(spark, root)
@@ -936,12 +907,10 @@ object ManagedTable extends VersionedLayout {
     val updated = flagged.select(cur.columns.toIndexedSeq.map(c =>
       when(col("__hit"), set.getOrElse(c, col(c))).otherwise(col(c)).as(c)) :+
       col("__hit"): _*)
-    if (changeFeed) {
-      val next = currentVersion(root) + 1
-      updated.filter(col("__hit")).drop("__hit")
-        .withColumn(graft.operators.Merge.ActionCol, lit("update"))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    }
+    if (changeFeed)
+      writeChanges(root, currentVersion(root) + 1,
+        updated.filter(col("__hit")).drop("__hit")
+          .withColumn(graft.operators.Merge.ActionCol, lit("update")))
     overwrite(root, updated.drop("__hit"))
   }
 
@@ -964,14 +933,11 @@ object ManagedTable extends VersionedLayout {
     val hit = coalesce(where, lit(false))
     val guarded = assertSatisfies(df.select(
       cur.columns.toIndexedSeq.map(col): _*), hit)
-    if (changeFeed) {
-      val next = currentVersion(root) + 1
-      cur.filter(hit)
+    if (changeFeed)
+      writeChanges(root, currentVersion(root) + 1, cur.filter(hit)
         .withColumn(graft.operators.Merge.ActionCol, lit("delete"))
         .unionByName(guarded
-          .withColumn(graft.operators.Merge.ActionCol, lit("insert")))
-        .write.mode("overwrite").parquet(s"$root/_changes/v$next")
-    }
+          .withColumn(graft.operators.Merge.ActionCol, lit("insert"))))
     overwrite(root, cur.filter(!hit).unionByName(guarded))
   }
 
@@ -982,27 +948,6 @@ object ManagedTable extends VersionedLayout {
   def restore(spark: SparkSession, root: String, version: Int): Unit =
     overwrite(root, readVersion(spark, root, version))
 
-  /** OPTIMIZE — bin-packing compaction with optional z-order layout,
-    * published as a new immutable version (content-identical; only the
-    * file layout changes). The reference ecosystem gets this from Delta's
-    * `OPTIMIZE [ZORDER BY]`; at 100 TB it is the difference between a
-    * merge-heavy table degrading into millions of KB-files (every scan
-    * pays per-file open/footer costs) and scans that read large
-    * contiguous row groups with data-skipping locality.
-    *
-    *  - Compaction: the live snapshot's byte size divided by
-    *    `targetFileBytes` sets the output file count — a plain
-    *    round-robin `repartition` when no layout columns are given.
-    *  - Z-order: each layout column is quantized to an equal-width
-    *    8-bit bucket (scalar min/max aggregate crossJoined — no
-    *    driver-side stats pass), the buckets' bits are interleaved into
-    *    one z-value, and the data is range-partitioned + sorted by it.
-    *    Files then own pairwise-disjoint z-ranges, so every layout
-    *    column's per-file min/max spans shrink together — parquet
-    *    row-group stats skip multi-dimensionally on read.
-    *
-    * The rewrite is one shuffle of the snapshot (range exchange on the
-    * z-value) — same cost class as the merge it cleans up after. */
   /** SHALLOW CLONE (Delta `CREATE TABLE ... SHALLOW CLONE src` on the
     * dir layout): publish a clone table whose v0 HARD-LINKS the source's
     * live data files — metadata-plus-links only, zero data bytes copied
@@ -1020,21 +965,11 @@ object ManagedTable extends VersionedLayout {
                    cloneRoot: String): Unit = {
     require(!exists(cloneRoot), s"clone target $cloneRoot already exists")
     val live = currentVersion(sourceRoot)
-    require(dvBaseOf(sourceRoot, live).isEmpty,
-      s"shallowClone: v$live of $sourceRoot is a merge-on-read version — " +
-        "OPTIMIZE first to purge tombstones/appends into a full snapshot")
+    requireFull(sourceRoot, live, "shallowClone")
     val srcDir = Paths.get(sourceRoot, s"v$live")
     val dstDir = Paths.get(cloneRoot, "v0")
     Files.createDirectories(dstDir)
-    val listing = Files.list(srcDir)
-    try listing.iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .foreach { p =>
-        val dst = dstDir.resolve(p.getFileName.toString)
-        try Files.createLink(dst, p)
-        catch { case _: UnsupportedOperationException => Files.copy(p, dst) }
-      }
-    finally listing.close()
+    parquetFiles(srcDir).foreach(p => linkOrCopy(p, dstDir.resolve(p.getFileName)))
     Seq("_stats.tsv", "_bloom.tsv", "_colmap").foreach { mf =>
       val f = srcDir.resolve(mf)
       if (Files.exists(f)) Files.copy(f, dstDir.resolve(mf))
@@ -1065,16 +1000,9 @@ object ManagedTable extends VersionedLayout {
   def compactSmall(spark: SparkSession, root: String,
                    targetFileBytes: Long = 128L << 20): Unit = {
     val live = currentVersion(root)
-    require(dvBaseOf(root, live).isEmpty,
-      s"compactSmall: v$live is a deletion-vector version — run optimize " +
-        "to purge the vectors first")
+    requireFull(root, live, "compactSmall")
     val dir = Paths.get(root, s"v$live")
-    val listing = Files.list(dir)
-    val all =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => p.getFileName.toString -> Files.size(p)).toVector
-      finally listing.close()
+    val all = parquetFiles(dir).map(p => p.getFileName.toString -> Files.size(p))
     val (small, big) = all.partition(_._2 < targetFileBytes / 2)
     if (small.size <= 1) return
     val next = live + 1
@@ -1089,16 +1017,10 @@ object ManagedTable extends VersionedLayout {
     spark.read.parquet(small.map(f => s"$dir/${f._1}"): _*)
       .repartition(nPacked)
       .write.mode("overwrite").parquet(stage.toString)
-    val stageList = Files.list(stage)
-    try stageList.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach(p => Files.move(p, nextDir.resolve(p.getFileName.toString)))
-    finally stageList.close()
+    parquetFiles(stage).foreach(p => Files.move(p, nextDir.resolve(p.getFileName)))
     ScratchDirs.deleteRecursively(stage)
     big.foreach { case (name, _) =>
-      val (src, dst) = (dir.resolve(name), nextDir.resolve(name))
-      try Files.createLink(dst, src)
-      catch { case _: UnsupportedOperationException => Files.copy(src, dst) }
+      linkOrCopy(dir.resolve(name), nextDir.resolve(name))
     }
     // Carry the manifest rows of the files that carried (their stats are
     // still exact); packed files read conservatively until re-analyzed.
@@ -1118,6 +1040,27 @@ object ManagedTable extends VersionedLayout {
     swapPointer(root, next)
   }
 
+  /** OPTIMIZE — bin-packing compaction with optional z-order layout,
+    * published as a new immutable version (content-identical; only the
+    * file layout changes). The reference ecosystem gets this from Delta's
+    * `OPTIMIZE [ZORDER BY]`; at 100 TB it is the difference between a
+    * merge-heavy table degrading into millions of KB-files (every scan
+    * pays per-file open/footer costs) and scans that read large
+    * contiguous row groups with data-skipping locality.
+    *
+    *  - Compaction: the live snapshot's byte size divided by
+    *    `targetFileBytes` sets the output file count — a plain
+    *    round-robin `repartition` when no layout columns are given.
+    *  - Z-order: each layout column is quantized to an equal-width
+    *    8-bit bucket (scalar min/max aggregate crossJoined — no
+    *    driver-side stats pass), the buckets' bits are interleaved into
+    *    one z-value, and the data is range-partitioned + sorted by it.
+    *    Files then own pairwise-disjoint z-ranges, so every layout
+    *    column's per-file min/max spans shrink together — parquet
+    *    row-group stats skip multi-dimensionally on read.
+    *
+    * The rewrite is one shuffle of the snapshot (range exchange on the
+    * z-value) — same cost class as the merge it cleans up after. */
   def optimize(spark: SparkSession, root: String,
                targetFileBytes: Long = 128L << 20,
                zorderBy: Seq[String] = Nil): Unit = {
@@ -1262,10 +1205,7 @@ object ManagedTable extends VersionedLayout {
     * lexicographic == chronological. */
   def analyze(spark: SparkSession, root: String, statsCols: Seq[String]): Unit = {
     val live = currentVersion(root)
-    require(dvBaseOf(root, live).isEmpty,
-      s"analyze: v$live is a deletion-vector version sharing v" +
-        s"${dvBaseOf(root, live).get}'s files — OPTIMIZE first to purge " +
-        "the vectors into a full snapshot, then analyze")
+    requireFull(root, live, "analyze")
     // read through the column mapping: stats record LOGICAL names, the
     // names readWhere's range predicates are written in
     val snap = applyColmap(TableIO.readStatic(spark, s"$root/v$live"),
@@ -1383,25 +1323,14 @@ object ManagedTable extends VersionedLayout {
     val live = currentVersion(root)
     // A merge-on-read version serves its base's files: prune against
     // the BASE's listing+manifest (spans are conservative upper bounds —
-    // deleted rows can only shrink true spans).
-    val dvBase = dvBaseOf(root, live)
-    val dir = dvBase.fold(s"$root/v$live")(b => s"$root/v$b")
-    // union the (unpruned, delta-sized) appended rows with whatever
-    // survives pruning and subtract the tombstones — the rows pass through
-    // the same row-level predicate below
-    // a DV version's base cannot be column-mapped (vectorized ops refuse
-    // mapped bases), so the mapping is only ever non-empty on full reads
-    val cmap = colmapOf(root, dvBase.getOrElse(live))
-    def subtractDv(df: DataFrame): DataFrame = dvBase match {
-      case None => applyColmap(df, cmap)
-      case Some(_) =>
-        morLive(spark, root, live, df).drop(DvFileCol, DvPosCol)
-    }
+    // deleted rows can only shrink true spans). Its (unpruned,
+    // delta-sized) appended rows pass through the same row-level
+    // predicate below.
+    val dir = s"$root/v${dvBaseOf(root, live).getOrElse(live)}"
     val pred = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
     val statsPath = Paths.get(dir, "_stats.tsv")
-    if (!Files.exists(statsPath))
-      return subtractDv(TableIO.readStatic(spark, dir)).where(pred)
+    if (!Files.exists(statsPath)) return readAt(spark, root, live).where(pred)
     // Manifest pruning, two execution strategies with ONE semantics:
     // a file is pruned when ANY range column's recorded span cannot
     // intersect ("null\tnull" = the file is all-null for that column —
@@ -1427,9 +1356,7 @@ object ManagedTable extends VersionedLayout {
         val scratch = Files.createTempDirectory("graft_prune")
         val link = scratch.resolve("stats.tsv")
         try {
-          try Files.createLink(link, statsPath)
-          catch { case _: UnsupportedOperationException =>
-            Files.copy(statsPath, link) }
+          linkOrCopy(statsPath, link)
           pruneVerdicts(spark, link.toString, ranges)
             .collect().map(_.getString(0)).toSet
         } finally ScratchDirs.deleteRecursively(scratch)
@@ -1462,30 +1389,14 @@ object ManagedTable extends VersionedLayout {
         } finally lineStream.close()
         acc
       }
-    val listing = Files.list(Paths.get(dir))
-    val allFiles =
-      try listing.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).toVector.sorted
-      finally listing.close()
-    val keep = allFiles.filterNot(pruned)
-    // Even with every base file pruned, appended rows can still match.
-    if (keep.isEmpty)
-      subtractDv(TableIO.readStatic(spark, dir).where(lit(false))).where(pred)
-    else subtractDv(spark.read.parquet(keep.map(f => s"$dir/$f"): _*))
-      .where(pred)
+    readAt(spark, root, live, Some(pruned)).where(pred)
   }
 
-  /** Drop all but the newest `keep` published versions — plus, like
-    * [[BucketedTable.vacuum]]'s reachability sweep, the FULL base version
-    * of any retained deletion-vector version: a DV version serves its
-    * base's files, so the base must outlive every DV version that
-    * references it even when the base itself has aged out.
-    * Reference: DeltaTable.vacuum (mls_listings_curated.py:366-368). */
   /** Right-to-forget COMPLETION for a retained change feed: a retraction
     * merge's feed carries the retracted rows' PRE-IMAGES (the audit
     * record a downstream consumer replays), so even after [[vacuum]]
-    * drops the pre-retraction snapshots, the deleted BYTES survive in
-    * `_changes/v<version>` for as long as that feed is retained. This
+    * drops the pre-retraction snapshots, the deleted BYTES survive in the
+    * change feed of `version` for as long as that feed is retained. This
     * rewrites the feed in place, reducing every row matching `where`
     * (typically `_action = 'delete'`) to a key + action TOMBSTONE —
     * payload columns nulled, schema unchanged, so feed consumers still
@@ -1496,73 +1407,25 @@ object ManagedTable extends VersionedLayout {
     * publish-then-swap discipline as everything else in the layout. */
   def redactChangeFeed(spark: SparkSession, root: String, version: Int,
                        keyCols: Seq[String],
-                       where: org.apache.spark.sql.Column): Unit = {
-    val feedDir = Paths.get(root, "_changes", s"v$version")
-    require(Files.exists(feedDir),
-      s"no change feed for version $version of $root")
-    val feed = spark.read.parquet(feedDir.toString)
-    val keep = (keyCols :+ graft.operators.Merge.ActionCol).toSet
-    val redacted = feed.select(feed.schema.fields.map { f =>
-      if (keep(f.name)) col(f.name)
-      else when(where, lit(null).cast(f.dataType)).otherwise(col(f.name))
-        .as(f.name)
-    }.toIndexedSeq: _*)
-    val stage = Paths.get(root, "_changes", s".v$version.redact")
-    ScratchDirs.deleteRecursively(stage)
-    redacted.write.parquet(stage.toString)
-    val old = Paths.get(root, "_changes", s".v$version.old")
-    ScratchDirs.deleteRecursively(old)
-    Files.move(feedDir, old)
-    Files.move(stage, feedDir)
-    ScratchDirs.deleteRecursively(old)
-  }
+                       where: org.apache.spark.sql.Column): Unit =
+    rewriteChanges(spark, root, version) { feed =>
+      val keep = (keyCols :+ graft.operators.Merge.ActionCol).toSet
+      feed.select(feed.schema.fields.map { f =>
+        if (keep(f.name)) col(f.name)
+        else when(where, lit(null).cast(f.dataType)).otherwise(col(f.name))
+          .as(f.name)
+      }.toIndexedSeq: _*)
+    }
 
-  def vacuum(root: String, keep: Int = 1): Unit = {
-    val live = currentVersion(root)
-    vacuumRetaining(root, (math.max(0, live - keep + 1) to live)
-      .filter(v => Files.exists(Paths.get(root, s"v$v"))))
-  }
+  /** Retention for the snapshot layout ([[VersionedLayout.vacuum]] applies
+    * the policy): every version dir is a published version, and a retained
+    * deletion-vector version keeps its FULL base version alive — it serves
+    * the base's files even when the base itself has aged out — together
+    * with the versions whose appended files it serves. */
+  protected def isPublished(root: String, v: Int): Boolean =
+    Files.exists(Paths.get(root, s"v$v"))
 
-  /** Retention-DURATION vacuum — the reference's policy knob
-    * (mls_listings_curated.py:366-368: `delta_table.vacuum(hours)`,
-    * default 168 h). Drops versions whose COMMIT TIME (from the
-    * `_history` log [[commitHistory]] records at every pointer swap) is
-    * older than `retainHours` before now; the live version is always
-    * kept regardless of age, and versions with no recorded history line
-    * (pre-history tables) are conservatively kept. Reachability is the
-    * same as the count-based [[vacuum]]: the full base of any retained
-    * deletion-vector version survives with it, and so do the versions
-    * whose appended files it serves. */
-  def vacuum(root: String, retainHours: Double): Unit = {
-    require(retainHours >= 0, s"vacuum: retainHours=$retainHours")
-    val live = currentVersion(root)
-    val cutoff =
-      VersionedLayout.commitClock() - (retainHours * 3600 * 1000).toLong
-    val commitTimes: Map[Int, Long] = commitHistory(root).toMap
-    val listing = Files.list(Paths.get(root))
-    val onDisk =
-      try listing.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toInt).toVector.sorted
-      finally listing.close()
-    vacuumRetaining(root, onDisk.filter(v =>
-      v == live || commitTimes.get(v).forall(_ >= cutoff)))
-  }
-
-  private def vacuumRetaining(root: String, retained: Seq[Int]): Unit = {
-    // a merge-on-read version reads its base's files and the appended
-    // files of the versions it lists
-    val reachable: Set[Int] = (retained ++ retained.flatMap(v =>
-      dvBaseOf(root, v).toSeq.flatMap(_ +: appendVersionsOf(root, v)))).toSet
-    def prune(dir: Path, keepSet: Set[Int]): Unit =
-      if (Files.exists(dir)) {
-        val listing = Files.list(dir)
-        try listing.iterator().asScala
-          .filter(p => p.getFileName.toString.matches("v\\d+"))
-          .filter(p => !keepSet(p.getFileName.toString.drop(1).toInt))
-          .foreach(ScratchDirs.deleteRecursively)
-        finally listing.close()
-      }
-    prune(Paths.get(root), reachable)               // snapshots
-    prune(Paths.get(root, "_changes"), retained.toSet) // feeds age by time only
-  }
+  protected def sweepUnreachable(root: String, retained: Seq[Int]): Unit =
+    deleteVersionsBut(Paths.get(root), (retained ++ retained.flatMap(v =>
+      dvBaseOf(root, v).toSeq.flatMap(_ +: appendVersionsOf(root, v)))).toSet)
 }

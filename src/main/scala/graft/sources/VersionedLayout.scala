@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Protocol shared by the two versioned table layouts ([[ManagedTable]]'s
   * whole-snapshot dirs, [[BucketedTable]]'s manifest-routed buckets):
@@ -12,14 +13,19 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *    same tip-swap discipline Delta/Iceberg put on their log head (a
   *    conditional-put on object storage);
   *  - CHECK constraints ([[Constraints]] storage + enforcement contract);
-  *  - the `_changes/v<N>` change-feed dirs a `merge(..., changeFeed=true)`
-  *    records before its pointer swap.
+  *  - the change feed: the `_changes/v<N>` dir a writer records before its
+  *    pointer swap, its reads and its in-place redaction;
+  *  - retention: [[vacuum]] by count and by commit age, one policy over
+  *    two layout hooks ([[isPublished]], [[sweepUnreachable]]), with the
+  *    feeds pruned to the retained versions;
+  *  - scoped directory listing ([[listDir]], [[versionDirs]]).
   *
   * Keeping this in one place stops the two layouts drifting apart on the
   * pieces whose semantics MUST agree (a reader of either layout sees the
-  * same pointer/constraint/CDF behavior); everything layout-specific —
-  * snapshot shape, time travel resolution, vacuum reachability, merge
-  * routing — stays in the concrete objects.
+  * same pointer/constraint/CDF/retention behavior); everything
+  * layout-specific — snapshot shape, time travel resolution, what a
+  * retained version keeps reachable, merge routing — stays in the
+  * concrete objects.
   */
 private[sources] trait VersionedLayout {
 
@@ -156,12 +162,42 @@ private[sources] trait VersionedLayout {
 
   // ---- change feed ------------------------------------------------------
 
+  private def changesDir(root: String, version: Int): Path =
+    Paths.get(root, "_changes", s"v$version")
+
+  /** Record `feed` as the change feed of `version`. Writers call it before
+    * the version's pointer swap: a published version either has its
+    * complete feed or was not published at all. */
+  protected final def writeChanges(root: String, version: Int,
+                                   feed: DataFrame): Unit =
+    feed.write.mode("overwrite").parquet(changesDir(root, version).toString)
+
+  /** Replace the recorded feed of `version` by `f` of it. The rewrite
+    * stages next to the feed and swaps in by rename, the same
+    * publish-then-swap discipline as a version. */
+  protected final def rewriteChanges(spark: SparkSession, root: String,
+                                     version: Int)(
+      f: DataFrame => DataFrame): Unit = {
+    val feedDir = changesDir(root, version)
+    require(Files.exists(feedDir),
+      s"no change feed for version $version of $root")
+    val rewritten = f(spark.read.parquet(feedDir.toString))
+    val stage = Paths.get(root, "_changes", s".v$version.redact")
+    ScratchDirs.deleteRecursively(stage)
+    rewritten.write.parquet(stage.toString)
+    val old = Paths.get(root, "_changes", s".v$version.old")
+    ScratchDirs.deleteRecursively(old)
+    Files.move(feedDir, old)
+    Files.move(stage, feedDir)
+    ScratchDirs.deleteRecursively(old)
+  }
+
   /** Read the change feed a `merge(..., changeFeed = true)` recorded when
     * it published `version` — delta-sized rows tagged insert / update
     * (post-image) / delete (pre-image with `preImageFeed`). Delta's
     * `table_changes()` on these layouts. */
   final def changes(spark: SparkSession, root: String, version: Int): DataFrame = {
-    val dir = Paths.get(root, "_changes", s"v$version")
+    val dir = changesDir(root, version)
     require(Files.exists(dir),
       s"no change feed for version $version of $root (merge ran without " +
         "changeFeed, feed vacuumed, or not a merge-published version)")
@@ -180,6 +216,78 @@ private[sources] trait VersionedLayout {
       .map(v => changes(spark, root, v).withColumn("_version", lit(v)))
       .reduce(_ unionByName _)
   }
+
+  // ---- retention --------------------------------------------------------
+
+  /** Whether version `v` of `root` is published on disk (a version dir,
+    * or a version's manifest). */
+  protected def isPublished(root: String, v: Int): Boolean
+
+  /** Delete every data file and version dir that none of the `retained`
+    * versions reads (a version may read files that older versions
+    * wrote). */
+  protected def sweepUnreachable(root: String, retained: Seq[Int]): Unit
+
+  /** VACUUM (reference semantics: DeltaTable.vacuum,
+    * mls_listings_curated.py:366-368): retain the newest `keep` published
+    * versions, delete every file none of them reads, and drop the change
+    * feeds of the versions not retained. Deletion cost is proportional to
+    * the garbage, never the table. */
+  final def vacuum(root: String, keep: Int = 1): Unit = {
+    val live = currentVersion(root)
+    vacuumRetaining(root,
+      (math.max(0, live - keep + 1) to live).filter(isPublished(root, _)))
+  }
+
+  /** Retention-DURATION vacuum — the reference's policy knob
+    * (mls_listings_curated.py:366-368: `delta_table.vacuum(hours)`,
+    * default 168 h). Retains the published versions whose COMMIT TIME
+    * (from the `_history` log [[commitHistory]] records at every pointer
+    * swap) is within `retainHours` of now; the live version is always
+    * kept regardless of age, and versions with no recorded history line
+    * (pre-history tables) are conservatively kept. Reachability is the
+    * same as the count-based [[vacuum]]: every file a retained version
+    * reads survives regardless of its own age. */
+  final def vacuum(root: String, retainHours: Double): Unit = {
+    require(retainHours >= 0, s"vacuum: retainHours=$retainHours")
+    val live = currentVersion(root)
+    val cutoff =
+      VersionedLayout.commitClock() - (retainHours * 3600 * 1000).toLong
+    val commitTimes: Map[Int, Long] = commitHistory(root).toMap
+    val onDisk = versionDirs(Paths.get(root)).map(versionOf).sorted
+      .filter(isPublished(root, _))
+    vacuumRetaining(root, onDisk.filter(v =>
+      v == live || commitTimes.get(v).forall(_ >= cutoff)))
+  }
+
+  private def vacuumRetaining(root: String, retained: Seq[Int]): Unit = {
+    sweepUnreachable(root, retained)
+    // A feed is never read through a later version, so age alone decides.
+    deleteVersionsBut(Paths.get(root, "_changes"), retained.toSet)
+  }
+
+  /** Delete the `v<N>` entries of `dir` whose N is not in `keep`. */
+  protected final def deleteVersionsBut(dir: Path, keep: Set[Int]): Unit =
+    versionDirs(dir).filterNot(p => keep(versionOf(p)))
+      .foreach(ScratchDirs.deleteRecursively)
+
+  // ---- listing ----------------------------------------------------------
+
+  /** Scoped directory listing — `Files.list` holds an OS directory handle
+    * until closed; consume the iterator inside `f` only. */
+  protected final def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
+    val st = Files.list(dir)
+    try f(st.iterator().asScala) finally st.close()
+  }
+
+  /** The `v<N>` entries directly inside `dir` (none when it is absent). */
+  protected final def versionDirs(dir: Path): Vector[Path] =
+    if (!Files.exists(dir)) Vector.empty
+    else listDir(dir)(_.filter(_.getFileName.toString.matches("v\\d+")).toVector)
+
+  /** N of a `v<N>` entry. */
+  protected final def versionOf(p: Path): Int =
+    p.getFileName.toString.drop(1).toInt
 }
 
 object VersionedLayout {

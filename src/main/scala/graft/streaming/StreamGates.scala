@@ -46,24 +46,16 @@ object StreamGates {
     // file churn that dominates replay wall time (state is a few thousand
     // rows — compute is noise next to the checkpoint file ops).
     s.conf.set(key, "3")
-    // State-store provider is selectable per run (SPARK_GRAFT_STATE_PROVIDER)
-    // so the RocksDB-vs-default choice is a measured decision, not a guess.
-    // Measured on the five stateful replay gates at sf0.1, quiet window:
+    // The state store is the session's provider (SPARK_GRAFT_SQL_CONF can
+    // set `spark.sql.streaming.stateStore.providerClass` per run). Measured
+    // on the five stateful replay gates at sf0.1, quiet window:
     // RocksDBStateStoreProvider 14.6 s vs default HDFS-backed 13.4 s — the
     // per-restart native-instance setup outweighs any lookup win at
     // replay-sized state (a few thousand rows), so the default stays. At
     // production state sizes (GBs per partition, long-lived queries) the
-    // same knob flips to RocksDB without touching gate code.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach(s.conf.set(provKey, _))
+    // same conf flips to RocksDB without touching gate code.
     try body finally {
       s.conf.set(key, prev)
-      if (sys.env.contains("SPARK_GRAFT_STATE_PROVIDER"))
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
       // Replay checkpoints are dead after the gate returns, but their
       // state-store providers stay registered in the JVM singleton and
       // the background maintenance thread keeps visiting them (file

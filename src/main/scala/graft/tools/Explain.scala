@@ -25,8 +25,6 @@ object Explain {
     val spark = graft.GraftSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

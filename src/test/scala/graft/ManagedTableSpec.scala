@@ -943,10 +943,19 @@ class ManagedTableSpec extends AnyFunSuite {
     ManagedTable.renameColumn(spark, root, "grp", "bucket") // v2
     assert(ManagedTable.read(spark, root).columns.toSeq ==
       Seq("k", "bucket", "score"))
-    // vectorized DML refuses mapped versions with a clear error
-    val ex = intercept[IllegalArgumentException](
-      ManagedTable.deleteVectorized(spark, root, col("k") === 1L))
-    assert(ex.getMessage.contains("column-mapped"))
+    // every vectorized DML op refuses mapped versions with a clear error
+    val row = Seq((1L, 7L, 1.0)).toDF("k", "bucket", "score")
+    Seq[() => Unit](
+      () => ManagedTable.deleteVectorized(spark, root, col("k") === 1L),
+      () => ManagedTable.updateVectorized(spark, root,
+        Map("score" -> lit(0.0)), col("k") === 1L),
+      () => ManagedTable.overwriteWhereVectorized(spark, root, row,
+        col("k") === 1L),
+      () => ManagedTable.mergeVectorized(spark, root, row, Seq("k"))
+    ).foreach { op =>
+      val ex = intercept[IllegalArgumentException](op())
+      assert(ex.getMessage.contains("column-mapped"))
+    }
     // a logical rewrite (merge) materializes the names and drops the map
     ManagedTable.merge(spark, root,
       Seq((1L, 99L, 123.0)).toDF("k", "bucket", "score"), Seq("k")) // v3

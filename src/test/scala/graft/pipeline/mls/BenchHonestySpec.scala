@@ -138,6 +138,17 @@ class BenchHonestySpec extends AnyFunSuite {
         "a step object under graft.pipeline.mls and call it from both sides")
   }
 
+  test("change feeds, retention and listing live only in VersionedLayout") {
+    // Built at runtime so this file's own source never matches.
+    val protocol = ("_chan" + "ges|Files\\.list\\(").r
+    val offenders = scalaFilesMatching("src/main/scala/graft/sources",
+      Set("VersionedLayout.scala"), protocol)
+    assert(offenders.isEmpty,
+      s"$offenders hand-build a change-feed path or a directory listing " +
+        "— use VersionedLayout's writeChanges, rewriteChanges, vacuum hooks " +
+        "and listDir")
+  }
+
   test("SPARK_GRAFT_CPUS defaults to the host's processor count") {
     assert(graft.GraftSession.cpusFrom(None) ==
       Runtime.getRuntime.availableProcessors)
