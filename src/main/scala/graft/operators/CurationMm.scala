@@ -67,6 +67,20 @@ object CurationMm {
           (col("doc_id") - 1) * 2 + 1)
           .otherwise(col("doc_id") * 2))
 
+  /** Artifact → group canon: each hash row joined to its exact-hash group
+    * on `phash`, as (`idCol`, canon). */
+  private def memberOf(hash: DataFrame, groups: DataFrame,
+                       idCol: String): DataFrame =
+    hash.join(groups.select("phash", "canon"), "phash")
+      .select(col(idCol), col("canon"))
+
+  /** The static videos of a clip-frame table: every frame the same phash. */
+  private def staticVideos(frames: DataFrame): DataFrame =
+    frames.groupBy("video_id")
+      .agg(countDistinct(col("phash")).as("nd"))
+      .filter(col("nd") === 1)
+      .select(col("video_id").as("vid"))
+
   /** Everything the manifest assembly and the cross-modality graph need,
     * decoupled from WHERE the frames come from: the full capstone reads
     * persisted tables, the incremental base fixture reads id-FILTERED
@@ -92,8 +106,6 @@ object CurationMm {
     * artifact tables (hash/group/pair/cluster/frame) — no decode, no
     * banded join, no per-modality CC at capstone time. */
   private def modalFull(s: SparkSession, dir: String): MmInputs = {
-    val frames = graft.sources.TableIO.readStatic(s, 
-      MultimodalQueries.videoClipFrameTablePath(s, dir))
     val vidPairs = graft.sources.TableIO.readStatic(s, 
         MultimodalQueries.videoClipPairTablePath(s, dir))
       .select(col("video_a"), col("video_b"))
@@ -103,46 +115,118 @@ object CurationMm {
       textCl = graft.sources.TableIO.readStatic(s, GraphCC.clusterTablePath(s, dir))
         .select(col("doc_id"), col("cluster_id"), col("is_canonical")),
       quality = graft.sources.TableIO.readStatic(s, TextQueries.qualityTablePath(s, dir)),
-      imgMember = graft.sources.TableIO.readStatic(s, 
-          MultimodalQueries.phashHashTablePath(s, dir))
-        .join(MultimodalQueries.phashGroups(s, dir).select("phash", "canon"),
-          "phash")
-        .select(col("img_id"), col("canon")),
+      imgMember = memberOf(graft.sources.TableIO.readStatic(s,
+          MultimodalQueries.phashHashTablePath(s, dir)),
+        MultimodalQueries.phashGroups(s, dir), "img_id"),
       imgPairs = graft.sources.TableIO.readStatic(s, MultimodalQueries.phashPairTablePath(s, dir)),
       imgCl = graft.sources.TableIO.readStatic(s, MultimodalQueries.phashClusterTablePath(s, dir)),
-      audMember = graft.sources.TableIO.readStatic(s, 
-          MultimodalQueries.audioFpHashTablePath(s, dir))
-        .join(MultimodalQueries.audioFpGroups(s, dir).select("phash", "canon"),
-          "phash")
-        .select(col("audio_id"), col("canon")),
+      audMember = memberOf(graft.sources.TableIO.readStatic(s,
+          MultimodalQueries.audioFpHashTablePath(s, dir)),
+        MultimodalQueries.audioFpGroups(s, dir), "audio_id"),
       audPairs = graft.sources.TableIO.readStatic(s, 
         MultimodalQueries.audioFpPairTablePath(s, dir)),
       audCl = graft.sources.TableIO.readStatic(s, 
         MultimodalQueries.audioFpClusterTablePath(s, dir)),
       vidPairs = vidPairs,
       vidDup = vidPairs.select(col("video_b").as("vid")).distinct(),
-      vidStatic = frames.groupBy("video_id")
-        .agg(countDistinct(col("phash")).as("nd"))
-        .filter(col("nd") === 1)
-        .select(col("video_id").as("vid")))
+      vidStatic = staticVideos(graft.sources.TableIO.readStatic(s,
+        MultimodalQueries.videoClipFrameTablePath(s, dir))))
   }
 
-  /** The cross-modality leakage graph: encoded-node edge list over ONE
-    * id space (strides ×8 — see the object doc). */
-  private def encodedEdges(m: MmInputs): DataFrame = {
-    val doc8 = (col("doc_id") * 8).as("s")
-    m.textCl.select(doc8, (col("cluster_id") * 8 + 1).as("t"))
-      .unionByName(m.att.join(m.imgMember, m.att("img") === m.imgMember("img_id"))
-        .select(doc8, (col("canon") * 8 + 2).as("t")))
-      .unionByName(m.imgPairs.select((col("canon_a") * 8 + 2).as("s"),
-        (col("canon_b") * 8 + 2).as("t")))
-      .unionByName(m.att.join(m.audMember, m.att("aud") === m.audMember("audio_id"))
+  // ---- the cross-modality edge legs, in the 8-stride id space (see the
+  // object doc); every graph below is a union of these legs ----
+
+  private val doc8 = (col("doc_id") * 8).as("s")
+
+  /** doc–doc edges of text near-dup pairs (doc_a, doc_b). */
+  private def textPairEdges(pairs: DataFrame): DataFrame =
+    pairs.select((col("doc_a") * 8).as("s"), (col("doc_b") * 8).as("t"))
+
+  /** The legs an attachment set contributes: doc → image canon, doc →
+    * audio canon, doc → video, and the video pairs among the videos. */
+  private def attachmentEdges(att: DataFrame, imgMember: DataFrame,
+                              audMember: DataFrame,
+                              vidPairs: DataFrame): DataFrame =
+    att.join(imgMember, att("img") === imgMember("img_id"))
+      .select(doc8, (col("canon") * 8 + 2).as("t"))
+      .unionByName(att.join(audMember, att("aud") === audMember("audio_id"))
         .select(doc8, (col("canon") * 8 + 3).as("t")))
-      .unionByName(m.audPairs.select((col("canon_a") * 8 + 3).as("s"),
-        (col("canon_b") * 8 + 3).as("t")))
-      .unionByName(m.att.select(doc8, (col("vid") * 8 + 4).as("t")))
-      .unionByName(m.vidPairs.select((col("video_a") * 8 + 4).as("s"),
+      .unionByName(att.select(doc8, (col("vid") * 8 + 4).as("t")))
+      .unionByName(vidPairs.select((col("video_a") * 8 + 4).as("s"),
         (col("video_b") * 8 + 4).as("t")))
+
+  /** canon–canon edges of the image and audio near pairs. */
+  private def canonPairEdges(imgPairs: DataFrame,
+                             audPairs: DataFrame): DataFrame =
+    imgPairs.select((col("canon_a") * 8 + 2).as("s"),
+        (col("canon_b") * 8 + 2).as("t"))
+      .unionByName(audPairs.select((col("canon_a") * 8 + 3).as("s"),
+        (col("canon_b") * 8 + 3).as("t")))
+
+  /** The cross-modality leakage graph of a prepared input set: each doc
+    * → its text cluster hub (8c+1), plus the attachment and pair legs. */
+  private def encodedEdges(m: MmInputs): DataFrame =
+    m.textCl.select(doc8, (col("cluster_id") * 8 + 1).as("t"))
+      .unionByName(attachmentEdges(m.att, m.imgMember, m.audMember, m.vidPairs))
+      .unionByName(canonPairEdges(m.imgPairs, m.audPairs))
+
+  /** The nodes of stride class `k` in an 8-stride labelling (node,
+    * component), decoded back to their ids as `idName`. */
+  private def strideNodes(labels: DataFrame, k: Int,
+                          idName: String): DataFrame =
+    labels.filter(col("node") % 8 === k)
+      .select(expr(s"(node - $k) div 8").as(idName), col("component"))
+
+  /** Each document's cross-modality group: (doc_id, group_id), the group
+    * id being the component's encoded-node minimum. */
+  private def docGroupsIn(labels: DataFrame): DataFrame =
+    strideNodes(labels, 0, "doc_id").withColumnRenamed("component", "group_id")
+
+  // ---- the fused closure codec: one CC run re-converges every label set.
+  // The cross-modality graph rides the EVEN ids (node → 2·node); the
+  // text, image and audio cluster-label graphs ride the ODD ids (doc /
+  // canon → 3·id + k for k = 0, 1, 2, then → 2·x + 1). Parities and
+  // strides never connect and every encoding is monotone, so each label
+  // set's component minima decode exactly. ----
+
+  /** One fused edge list (s, t) from the cross-modality edges `cross`
+    * (8-stride s, t) and the text, image and audio cluster graphs, each a
+    * two-column (id, id) frame: pairs, or (member, cluster) star edges. */
+  private def fusedEdges(cross: DataFrame, text: DataFrame, img: DataFrame,
+                         aud: DataFrame): DataFrame = {
+    def odd(df: DataFrame, k: Int): DataFrame = {
+      val Array(a, b) = df.columns.map(col)
+      df.select(((a * 3 + k) * 2 + 1).as("s"), ((b * 3 + k) * 2 + 1).as("t"))
+    }
+    val Array(cs, ct) = cross.columns.map(col)
+    cross.select((cs * 2).as("s"), (ct * 2).as("t"))
+      .unionByName(odd(text, 0))
+      .unionByName(odd(img, 1))
+      .unionByName(odd(aud, 2))
+  }
+
+  /** A fused labelling (node, component), decoded: the cross-modality
+    * `labels` (8-stride), the text clusters (doc_id, cluster_id,
+    * is_canonical) and the image and audio clusters (canon, cluster_id). */
+  private final case class Closure(labels: DataFrame, textCl: DataFrame,
+                                   imgCl: DataFrame, audCl: DataFrame)
+
+  private def decodeClosure(fused: DataFrame): Closure = {
+    val local = fused.filter(col("node") % 2 === 1)
+      .select(expr("(node - 1) div 2").as("node"),
+        expr("(component - 1) div 2").as("component"))
+    def cl(k: Int, idName: String): DataFrame =
+      local.filter(col("node") % 3 === k)
+        .select(expr(s"(node - $k) div 3").as(idName),
+          expr(s"(component - $k) div 3").as("cluster_id"))
+    Closure(
+      labels = fused.filter(col("node") % 2 === 0)
+        .select(expr("node div 2").as("node"),
+          expr("component div 2").as("component")),
+      textCl = cl(0, "doc_id").withColumn("is_canonical",
+        when(col("doc_id") === col("cluster_id"), 1).otherwise(0)),
+      imgCl = cl(1, "canon"),
+      audCl = cl(2, "canon"))
   }
 
   /** Manifest assembly over prepared inputs: one row per document in
@@ -210,10 +294,7 @@ object CurationMm {
   /** Cross-modality doc groups for a prepared input set: the one live CC
     * the capstone pays, then doc nodes decoded back out. */
   private def docGroupsOf(m: MmInputs): DataFrame =
-    GraphCC.connectedComponents(encodedEdges(m), "s", "t")
-      .filter(col("node") % 8 === 0)
-      .select(expr("node div 8").as("doc_id"),
-        col("component").as("group_id"))
+    docGroupsIn(GraphCC.connectedComponents(encodedEdges(m), "s", "t"))
 
   /** q_curation_mm_e2e: the one-shot manifest over the full corpus. */
   def curationMmE2e(s: SparkSession, dir: String): DataFrame = {
@@ -320,23 +401,17 @@ object CurationMm {
           .as("is_canonical")),
       quality = graft.sources.TableIO.readStatic(s, TextQueries.qualityTablePath(s, dir))
         .filter(col("doc_id") < b),
-      imgMember = imgHash.join(imgGroups.select("phash", "canon"), "phash")
-        .select(col("img_id"), col("canon")),
+      imgMember = memberOf(imgHash, imgGroups, "img_id"),
       imgPairs = imgPairs,
       imgCl = ccLabels(imgPairs),
-      audMember = audHash.join(audGroups.select("phash", "canon"), "phash")
-        .select(col("audio_id"), col("canon")),
+      audMember = memberOf(audHash, audGroups, "audio_id"),
       audPairs = audPairs,
       audCl = ccLabels(audPairs),
       vidPairs = vidPairs,
       vidDup = vidPairs.select(col("video_b").as("vid")).distinct(),
-      vidStatic = graft.sources.TableIO.readStatic(s, 
+      vidStatic = staticVideos(graft.sources.TableIO.readStatic(s,
           MultimodalQueries.videoClipFrameTablePath(s, dir))
-        .filter(col("video_id") < 2 * b)
-        .groupBy("video_id")
-        .agg(countDistinct(col("phash")).as("nd"))
-        .filter(col("nd") === 1)
-        .select(col("video_id").as("vid")))
+        .filter(col("video_id") < 2 * b)))
   }
 
   /** Build the persisted curation STATE at doc cut `b` into `r` — what a
@@ -356,9 +431,6 @@ object CurationMm {
     val m = modalBase(s, dir, b)
     val labels = GraphCC.connectedComponents(encodedEdges(m), "s", "t")
       .localCheckpoint() // docGroups + the labels dump share one CC run
-    val docGroups = labels.filter(col("node") % 8 === 0)
-      .select(expr("node div 8").as("doc_id"),
-        col("component").as("group_id"))
     CurationState.publish(s, r, Map(
       "labels" -> labels,
       "textcl" -> m.textCl.select("doc_id", "cluster_id"),
@@ -370,7 +442,7 @@ object CurationMm {
         MultimodalQueries.audioFpHashTablePath(s, dir), "audio_id", 4 * b)._2,
       "viddup" -> m.vidDup,
       "vidstatic" -> m.vidStatic),
-      manifestFrom(m, docGroups))
+      manifestFrom(m, docGroupsIn(labels)))
   }
 
   /** Persisted BASE curation state at the standard 4/5 cut, built once
@@ -439,33 +511,6 @@ object CurationMm {
       .distinct()
   }
 
-  /** Stage-timing probe (diagnostic only, env-gated): wraps the eager
-    * points of the incremental run so a bench investigation can see
-    * where per-invocation time goes without a profiler. */
-  private implicit class StagedFrame(df: DataFrame) {
-    def localCheckpointStaged(name: String): DataFrame =
-      staged(name)(df.localCheckpoint())
-  }
-
-  private lazy val stageLog = {
-    // The probe is env-gated diagnostics: when explicitly requested,
-    // force the graft logger past Spark's post-init WARN default so the
-    // lines actually land in the log stream.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "graft.CurationMm", org.apache.logging.log4j.Level.INFO)
-    org.slf4j.LoggerFactory.getLogger("graft.CurationMm")
-  }
-
-  private def staged[T](name: String)(f: => T): T =
-    if (!sys.env.contains("SPARK_GRAFT_STAGE_TIMING")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      stageLog.info(
-        f"[stage] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.2f s " +
-          s"(cc_rounds=${GraphCC.lastRunRounds})")
-      r
-    }
-
   /** The ingest base-state ref (root@version) consumed by the most
     * recent [[ingestAt]] in this JVM — the observable
     * CurationMmChainSpec pins: a chained round must consume the PREVIOUS
@@ -515,7 +560,6 @@ object CurationMm {
     // pinned version is the CAS base for this ingest's own state publish.
     val base = baseState.pin
     lastIngestBaseA.set(base.describe)
-    val baseLabels = base.fam(s, "labels")
 
     val att = attachments(s, dir)
     val inBatch = col("doc_id") >= lo && col("doc_id") < hi
@@ -575,123 +619,54 @@ object CurationMm {
     // static flags are per-video and immutable: persisted base set ∪ the
     // new batch's videos only — a delta-sized aggregation
     val vidStatic = base.fam(s, "vidstatic")
-      .unionByName(graft.sources.TableIO.readStatic(s, 
+      .unionByName(staticVideos(graft.sources.TableIO.readStatic(s,
           MultimodalQueries.videoClipFrameTablePath(s, dir))
         .filter(col("video_id") >= 2 * lo && col("video_id") < 2 * hi)
-        .filter(aliveDoc(expr("video_id div 2")))
-        .groupBy("video_id").agg(countDistinct(col("phash")).as("nd"))
-        .filter(col("nd") === 1).select(col("video_id").as("vid")))
+        .filter(aliveDoc(expr("video_id div 2")))))
 
     // --- combined memberships for NEW attachments (may resolve to BASE
     // canons: a re-uploaded base artifact joins its existing group) ---
-    def memberOf(hashTable: DataFrame, groups: DataFrame,
-                 idCol: String): DataFrame =
-      hashTable.join(groups.select("phash", "canon"), "phash")
-        .select(col(idCol), col("canon"))
-    val imgHashAll = graft.sources.TableIO.readStatic(s, 
+    val imgMember = memberOf(graft.sources.TableIO.readStatic(s,
         MultimodalQueries.phashHashTablePath(s, dir))
-      .filter(aliveDoc(expr("img_id div 2")))
-    val audHashAll = graft.sources.TableIO.readStatic(s, 
+      .filter(aliveDoc(expr("img_id div 2"))), imgGroups, "img_id")
+    val audMember = memberOf(graft.sources.TableIO.readStatic(s,
         MultimodalQueries.audioFpHashTablePath(s, dir))
-      .filter(aliveDoc(expr("audio_id div 4")))
-    val imgMember = memberOf(imgHashAll, imgGroups, "img_id")
-    val audMember = memberOf(audHashAll, audGroups, "audio_id")
+      .filter(aliveDoc(expr("audio_id div 4"))), audGroups, "audio_id")
 
-    // --- batch-incident edge legs that do NOT derive from the probe
-    // outputs (attachment→canon membership, attachment→video, the
-    // persisted video pair slice), pre-encoded to the 8-stride edge
-    // space so they ride the SAME materialization barrier as the probes
-    // (m = 3 below) — previously a second driver-synchronized checkpoint
-    // per ingest whose only NEW work was exactly these legs (guide §2.4:
-    // one explicit barrier, not two; no exchange-reuse dependence — the
-    // probe legs and these legs are disjoint subtrees of one job) ---
-    val doc8 = col("doc_id") * 8
-    val edgeExtrasLazy =
-      newAtt.join(imgMember, newAtt("img") === imgMember("img_id"))
-        .select(doc8.as("a"), (col("canon") * 8 + 2).as("b"))
-      .unionByName(newAtt.join(audMember,
-          newAtt("aud") === audMember("audio_id"))
-        .select(doc8.as("a"), (col("canon") * 8 + 3).as("b")))
-      .unionByName(newAtt.select(doc8.as("a"), (col("vid") * 8 + 4).as("b")))
-      .unionByName(deltaVidPairs.select((col("video_a") * 8 + 4).as("a"),
-        (col("video_b") * 8 + 4).as("b")))
-
-    // --- ONE materialization barrier for the three probes AND the edge
-    // extras: the pipelines run as parallel stages of a single job
-    // (instead of driver-synchronized checkpoints), and every downstream
-    // consumer (both closures, the encoded edges, the touched set) reads
-    // the cached blocks through cheap per-row re-encodings ---
-    val deltaPairs = staged("delta_probe")(
+    // --- ONE materialization barrier for the three probes (m = 0..2)
+    // AND the batch's attachment legs (m = 3: they do not derive from the
+    // probe outputs, so they are encoded before the barrier): the
+    // pipelines run as parallel stages of a single job instead of
+    // driver-synchronized checkpoints, and every downstream consumer
+    // (the fused closure, the delta edges, the touched set) reads the
+    // cached blocks through cheap per-row re-encodings ---
+    val deltaPairs =
       deltaTextPairsLazy.toDF("a", "b").withColumn("m", lit(0))
         .unionByName(deltaImgPairsLazy.toDF("a", "b").withColumn("m", lit(1)))
         .unionByName(deltaAudPairsLazy.toDF("a", "b").withColumn("m", lit(2)))
-        .unionByName(edgeExtrasLazy.withColumn("m", lit(3)))
-        .localCheckpoint())
-    val deltaTextPairs = deltaPairs.filter(col("m") === 0)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    val deltaImgPairs = deltaPairs.filter(col("m") === 1)
-      .select(col("a").as("canon_a"), col("b").as("canon_b"))
-    val deltaAudPairs = deltaPairs.filter(col("m") === 2)
-      .select(col("a").as("canon_a"), col("b").as("canon_b"))
+        .unionByName(attachmentEdges(newAtt, imgMember, audMember,
+          deltaVidPairs).toDF("a", "b").withColumn("m", lit(3)))
+        .localCheckpoint()
+    def probed(m: Int, a: String, b: String): DataFrame =
+      deltaPairs.filter(col("m") === m).select(col("a").as(a), col("b").as(b))
+    val deltaTextPairs = probed(0, "doc_a", "doc_b")
+    val deltaImgPairs = probed(1, "canon_a", "canon_b")
+    val deltaAudPairs = probed(2, "canon_a", "canon_b")
+    val deltaEdges = textPairEdges(deltaTextPairs)
+      .unionByName(canonPairEdges(deltaImgPairs, deltaAudPairs))
+      .unionByName(probed(3, "s", "t"))
 
-    // --- the cross-modality delta edges (8-stride encoding): pair legs
-    // re-encode per-row off the checkpointed blocks, the m=3 legs are
-    // already encoded — no second materialization ---
-    val deltaEdges = deltaPairs.filter(col("m") === 0)
-      .select((col("a") * 8).as("s"), (col("b") * 8).as("t"))
-      .unionByName(deltaPairs.filter(col("m") === 1)
-        .select((col("a") * 8 + 2).as("s"), (col("b") * 8 + 2).as("t")))
-      .unionByName(deltaPairs.filter(col("m") === 2)
-        .select((col("a") * 8 + 3).as("s"), (col("b") * 8 + 3).as("t")))
-      .unionByName(deltaPairs.filter(col("m") === 3)
-        .select(col("a").as("s"), col("b").as("t")))
-
-    // --- ONE FUSED incremental closure for EVERY label set: the
-    // cross-modality component graph rides the EVEN ids (node → 2·node)
-    // and the three per-modality cluster-label graphs ride the ODD ids
-    // (text docs / image canons / audio canons in mod-3 strides, then
-    // node → 2·node + 1). Parities never connect and both encodings are
-    // monotone, so one contracted CC — base labels collapse to
-    // supernodes, cost scales with the DELTA — re-converges all four
-    // label sets in a single run (one driver loop instead of two), and
-    // component minima decode exactly per parity/stride. ---
-    def enc3(df: DataFrame, aCol: String, bCol: String, k: Int): DataFrame =
-      df.select((col(aCol) * 3 + k).as("ea"), (col(bCol) * 3 + k).as("eb"))
-    val baseLocal = enc3(base.fam(s, "textcl"), "doc_id", "cluster_id", 0)
-      .unionByName(enc3(base.fam(s, "imgcl"), "canon", "cluster_id", 1))
-      .unionByName(enc3(base.fam(s, "audcl"), "canon", "cluster_id", 2))
-    val deltaLocal = enc3(deltaTextPairs, "doc_a", "doc_b", 0)
-      .unionByName(enc3(deltaImgPairs, "canon_a", "canon_b", 1))
-      .unionByName(enc3(deltaAudPairs, "canon_a", "canon_b", 2))
-    // checkpointed: the decoded consumers (docGroups, the touched join,
-    // three cluster-label frames) all sit inside the merge's one
-    // materialized plan — without it the expansion joins re-run per leg
-    val fused = staged("fused_cc")(incrementalCc(
-      baseLabels.select((col("node") * 2).as("node"),
-          (col("component") * 2).as("component"))
-        .unionByName(baseLocal.select((col("ea") * 2 + 1).as("node"),
-          (col("eb") * 2 + 1).as("component"))),
-      deltaEdges.select((col("s") * 2).as("s"), (col("t") * 2).as("t"))
-        .unionByName(deltaLocal.select((col("ea") * 2 + 1).as("s"),
-          (col("eb") * 2 + 1).as("t"))))
+    // --- ONE FUSED incremental closure for EVERY label set: base labels
+    // and base cluster labels collapse to supernodes, so the cost scales
+    // with the DELTA. Checkpointed: the decoded consumers (docGroups, the
+    // touched join, three cluster-label frames) all sit inside the
+    // merge's one materialized plan — without it the expansion joins
+    // re-run per leg ---
+    val closure = decodeClosure(incrementalCc(
+      fusedEdges(base.fam(s, "labels"), base.fam(s, "textcl"),
+        base.fam(s, "imgcl"), base.fam(s, "audcl")).toDF("node", "component"),
+      fusedEdges(deltaEdges, deltaTextPairs, deltaImgPairs, deltaAudPairs))
       .localCheckpoint())
-    val labels = fused.filter(col("node") % 2 === 0)
-      .select(expr("node div 2").as("node"),
-        expr("component div 2").as("component"))
-    val localCl = fused.filter(col("node") % 2 === 1)
-      .select(expr("(node - 1) div 2").as("node"),
-        expr("(component - 1) div 2").as("component"))
-    def dec(k: Int, idName: String): DataFrame =
-      localCl.filter(col("node") % 3 === k)
-        .select(expr(s"(node - $k) div 3").as(idName),
-          expr(s"(component - $k) div 3").as("cluster_id"))
-    val textCl = dec(0, "doc_id")
-      .withColumn("is_canonical",
-        when(col("doc_id") === col("cluster_id"), 1).otherwise(0))
-    val imgCl = dec(1, "canon")
-    val audCl = dec(2, "canon")
-    val docGroups = labels.filter(col("node") % 8 === 0)
-      .select(expr("node div 8").as("doc_id"), col("component").as("group_id"))
 
     // --- touched components: everything a delta edge reaches. Docs in
     // UNtouched components keep their base manifest row verbatim (their
@@ -700,60 +675,78 @@ object CurationMm {
     // CHANGED rows enter the merge feed. ---
     val touched = deltaEdges.select(col("s").as("node"))
       .unionByName(deltaEdges.select(col("t").as("node"))).distinct()
-      .join(labels, "node")
+      .join(closure.labels, "node")
       .select(col("component")).distinct()
-    val touchedDocs = staged("touched")(docGroups
+    val docGroups = docGroupsIn(closure.labels)
+    val touchedDocs = docGroups
       .join(touched, docGroups("group_id") === touched("component"))
       .select(col("doc_id"), col("group_id"))
-      .localCheckpoint()) // small; read by att, docs, and the group join
+      .localCheckpoint() // small; read by att, docs, and the group join
 
     val mInc = MmInputs(
       att = att.join(touchedDocs.select("doc_id"), "doc_id"),
       docs = touchedDocs.select("doc_id"),
-      textCl = textCl,
+      textCl = closure.textCl,
       // persisted per-doc artifact, probed by id like every other input
       quality = graft.sources.TableIO.readStatic(s, TextQueries.qualityTablePath(s, dir)),
-      imgMember = imgMember, imgPairs = deltaImgPairs, imgCl = imgCl,
-      audMember = audMember, audPairs = deltaAudPairs, audCl = audCl,
+      imgMember = imgMember, imgPairs = deltaImgPairs, imgCl = closure.imgCl,
+      audMember = audMember, audPairs = deltaAudPairs, audCl = closure.audCl,
       vidPairs = deltaVidPairs, vidDup = vidDup, vidStatic = vidStatic)
-    val recomputed = manifestFrom(mInc, touchedDocs)
 
-    // --- publish through the table layer: bootstrap v1 = the base
-    // manifest (a straight publish — no keys to resolve against the
-    // empty v0), then the incremental MERGE (update only when the row
-    // actually changed; insert the new batch) with its change feed ---
-    if (bootstrap) staged("bootstrap") {
+    publishRound(s, root, base, bootstrap, manifestFrom(mInc, touchedDocs),
+      removed = None, stateOut, Map(
+        "labels" -> closure.labels,
+        "textcl" -> closure.textCl.select("doc_id", "cluster_id"),
+        "imgcl" -> closure.imgCl,
+        "audcl" -> closure.audCl,
+        "imggrp" -> imgGroups,
+        "audgrp" -> audGroups,
+        "viddup" -> vidDup,
+        "vidstatic" -> vidStatic))
+  }
+
+  /** The manifest columns a round compares: a matched row is rewritten
+    * only when one of them changed. */
+  private val changedCols = Seq("kept", "drop_reasons", "split", "group_id",
+    "group_docs", "quality_score", "n_tokens")
+
+  /** The publish step every curation round ends with, through the managed
+    * table at `root`:
+    *  - `bootstrap` first publishes the pinned `base` state's manifest
+    *    (v1 — a straight publish, no keys to resolve against the empty
+    *    v0);
+    *  - the MERGE of the `recomputed` rows, with its change feed: a
+    *    matched row updates only when it changed, a new doc inserts, and
+    *    each `removed` row (a retraction's) is matched-DELETEd through the
+    *    `_retract` flag — the reference's hist delete-clause semantics;
+    *  - `stateOut` = Some(root) republishes the post-round `state` as the
+    *    next [[CurationState]] version. A publish to the base's own root is
+    *    a CAS against the version the round read, so a concurrent writer
+    *    makes it fail loudly instead of silently losing its update. */
+  private def publishRound(s: SparkSession, root: String, base: StateRef,
+                           bootstrap: Boolean, recomputed: DataFrame,
+                           removed: Option[DataFrame],
+                           stateOut: Option[String],
+                           state: => Map[String, DataFrame]): Unit = {
+    if (bootstrap) {
       val baseManifest = base.manifest(s)
       ManagedTable.createEmpty(s, root, baseManifest)
       ManagedTable.overwrite(root, baseManifest)
     }
-    val changedCols = Seq("kept", "drop_reasons", "split", "group_id",
-      "group_docs", "quality_score", "n_tokens")
-    staged("merge") {
-      ManagedTable.merge(s, root, recomputed, Seq("doc_id"),
-        MergeClauses.Spec(updateWhen = Some(changedCols
-          .map(c => !(col(s"t.$c") <=> col(s"s.$c"))).reduce(_ || _))),
-        changeFeed = true)
+    val changed = changedCols
+      .map(c => !(col(s"t.$c") <=> col(s"s.$c"))).reduce(_ || _)
+    val (src, clauses) = removed match {
+      case None => (recomputed, MergeClauses.Spec(updateWhen = Some(changed)))
+      case Some(r) =>
+        (recomputed.withColumn("_retract", lit(false))
+          .unionByName(r.withColumn("_retract", lit(true))),
+          MergeClauses.Spec(updateWhen = Some(!col("s._retract") && changed),
+            deleteWhen = Some(col("s._retract"))))
     }
-    // --- republish the post-ingest state for the NEXT batch (the chain
-    // contract: same versioned table [[buildBaseState]] bootstraps, so a
-    // chained round never reaches back to t=0). Same-root publishes CAS
-    // against the version this ingest READ — a concurrent writer makes
-    // the publish fail loudly instead of silently losing its update. ---
+    ManagedTable.merge(s, root, src, Seq("doc_id"), clauses, changeFeed = true)
     stateOut.foreach { out =>
-      staged("state_out") {
-        CurationState.publish(s, out, Map(
-          "labels" -> labels,
-          "textcl" -> textCl.select("doc_id", "cluster_id"),
-          "imgcl" -> imgCl,
-          "audcl" -> audCl,
-          "imggrp" -> imgGroups,
-          "audgrp" -> audGroups,
-          "viddup" -> vidDup,
-          "vidstatic" -> vidStatic),
-          ManagedTable.read(s, root),
-          expectedVersion = if (out == base.root) base.version else None)
-      }
+      CurationState.publish(s, out, state, ManagedTable.read(s, root),
+        expectedVersion = if (out == base.root) base.version else None)
     }
   }
 
@@ -763,7 +756,7 @@ object CurationMm {
   private def incrementalRunAt(s: SparkSession, dir: String,
                                root: String): String = {
     ingestAt(s, dir, root, StateRef(baseStateRoot(s, dir)),
-      staged("basecut")(baseCut(s, dir)), corpusTop(s, dir),
+      baseCut(s, dir), corpusTop(s, dir),
       bootstrap = true)
     root
   }
@@ -965,7 +958,6 @@ object CurationMm {
     val full = baseState.getOrElse(StateRef(fullStateRoot(s, dir))).pin
     val top = docTop.getOrElse(corpusTop(s, dir))
     val labels = full.fam(s, "labels")
-    val manifest = full.manifest(s)
     val retractedDocs = table(s, dir, "documents").select(col("doc_id"))
       .filter(pred(col("doc_id")) && col("doc_id") < top)
 
@@ -998,13 +990,11 @@ object CurationMm {
       .select(col("component")).distinct()
     val touchedLabeled = labels
       .join(touchedComps, Seq("component"))
-      .localCheckpointStaged("r_touched")
-    val touchedDocs = touchedLabeled.filter(col("node") % 8 === 0)
-      .select(expr("node div 8").as("doc_id"))
-    val survivors = touchedDocs.filter(!pred(col("doc_id")))
+      .localCheckpoint()
     def touchedArt(k: Int, idName: String): DataFrame =
-      touchedLabeled.filter(col("node") % 8 === k)
-        .select(expr(s"(node - $k) div 8").as(idName))
+      strideNodes(touchedLabeled, k, idName).select(idName)
+    val touchedDocs = touchedArt(0, "doc_id")
+    val survivors = touchedDocs.filter(!pred(col("doc_id")))
 
     val att = attachments(s, dir)
     val attT = att.join(survivors, "doc_id")
@@ -1046,13 +1036,10 @@ object CurationMm {
     val audPairsT = remapPairs(
       graft.sources.TableIO.readStatic(s, MultimodalQueries.audioFpPairTablePath(s, dir)),
       full.fam(s, "audgrp"), audGroupsS, touchedArt(3, "id"))
-    def memberOfS(hash: DataFrame, groups: DataFrame, idCol: String,
-                  stride: Int): DataFrame =
-      survivingOf(hash, idCol, stride)
-        .join(groups.select("phash", "canon"), "phash")
-        .select(col(idCol), col("canon"))
-    val imgMemberS = memberOfS(imgHashAll, imgGroupsS, "img_id", 2)
-    val audMemberS = memberOfS(audHashAll, audGroupsS, "audio_id", 4)
+    val imgMemberS = memberOf(survivingOf(imgHashAll, "img_id", 2),
+      imgGroupsS, "img_id")
+    val audMemberS = memberOf(survivingOf(audHashAll, "audio_id", 4),
+      audGroupsS, "audio_id")
 
     // --- video: surviving pairs (endpoints are artifacts — both must
     // survive), touched-scoped; static flags filter the persisted set ---
@@ -1067,118 +1054,55 @@ object CurationMm {
     val vidStaticT = full.fam(s, "vidstatic")
       .filter(!pred(expr("vid div 2")))
 
-    // --- ONE fused from-scratch closure over the touched subgraph:
-    // cross-modality groups on EVEN ids (raw text pairs as doc-doc
-    // edges), the three per-modality cluster-label graphs on ODD ids
-    // (mod-3 strides) — the incremental path's fusion, without
-    // contraction (deletion re-converges from scratch) ---
-    val doc8 = (col("doc_id") * 8).as("s")
-    val crossEdges = textPairsT
-      .select((col("doc_a") * 8).as("s"), (col("doc_b") * 8).as("t"))
-      .unionByName(attT.join(imgMemberS, attT("img") === imgMemberS("img_id"))
-        .select(doc8, (col("canon") * 8 + 2).as("t")))
-      .unionByName(imgPairsT.select((col("canon_a") * 8 + 2).as("s"),
-        (col("canon_b") * 8 + 2).as("t")))
-      .unionByName(attT.join(audMemberS, attT("aud") === audMemberS("audio_id"))
-        .select(doc8, (col("canon") * 8 + 3).as("t")))
-      .unionByName(audPairsT.select((col("canon_a") * 8 + 3).as("s"),
-        (col("canon_b") * 8 + 3).as("t")))
-      .unionByName(attT.select(doc8, (col("vid") * 8 + 4).as("t")))
-      .unionByName(vidPairsT.select((col("video_a") * 8 + 4).as("s"),
-        (col("video_b") * 8 + 4).as("t")))
-    def enc3(df: DataFrame, aCol: String, bCol: String, k: Int): DataFrame =
-      df.select((col(aCol) * 3 + k).as("ea"), (col(bCol) * 3 + k).as("eb"))
-    val localEdges = enc3(textPairsT, "doc_a", "doc_b", 0)
-      .unionByName(enc3(imgPairsT, "canon_a", "canon_b", 1))
-      .unionByName(enc3(audPairsT, "canon_a", "canon_b", 2))
-    val fused = staged("r_fused_cc")(GraphCC.connectedComponents(
-      crossEdges.select((col("s") * 2).as("s"), (col("t") * 2).as("t"))
-        .unionByName(localEdges.select((col("ea") * 2 + 1).as("s"),
-          (col("eb") * 2 + 1).as("t"))),
+    // --- ONE fused from-scratch closure over the touched subgraph (the
+    // ingest's fusion, without contraction: deletion re-converges from
+    // scratch). Raw text pairs are the doc-doc edges. Every doc carries
+    // an unconditional vid edge, so the doc-group join covers all
+    // survivors. ---
+    val closure = decodeClosure(GraphCC.connectedComponents(
+      fusedEdges(textPairEdges(textPairsT)
+          .unionByName(attachmentEdges(attT, imgMemberS, audMemberS, vidPairsT))
+          .unionByName(canonPairEdges(imgPairsT, audPairsT)),
+        textPairsT, imgPairsT, audPairsT),
       "s", "t", inputDistinctPairs = true)
-      .withColumnRenamed("node", "n").withColumnRenamed("component", "c")
       .localCheckpoint())
-    // group ids live in the 8-stride encoded space (the full manifest's
-    // convention), so the fused (×2) component min decodes by div 2.
-    // Every doc carries an unconditional vid edge, so the inner join
-    // covers all survivors.
-    val docGroupsT = survivors.join(
-      fused.filter(col("n") % 16 === 0)
-        .select(expr("n div 16").as("doc_id"), expr("c div 2").as("group_id")),
-      Seq("doc_id"))
-    val localCl = fused.filter(col("n") % 2 === 1)
-      .select(expr("(n - 1) div 2").as("node"),
-        expr("(c - 1) div 2").as("component"))
-    def dec(k: Int, idName: String): DataFrame =
-      localCl.filter(col("node") % 3 === k)
-        .select(expr(s"(node - $k) div 3").as(idName),
-          expr(s"(component - $k) div 3").as("cluster_id"))
-    val textClT = dec(0, "doc_id")
-      .withColumn("is_canonical",
-        when(col("doc_id") === col("cluster_id"), 1).otherwise(0))
 
     val mT = MmInputs(
       att = attT,
       docs = survivors,
-      textCl = textClT,
+      textCl = closure.textCl,
       quality = graft.sources.TableIO.readStatic(s, TextQueries.qualityTablePath(s, dir)),
-      imgMember = imgMemberS, imgPairs = imgPairsT, imgCl = dec(1, "canon"),
-      audMember = audMemberS, audPairs = audPairsT, audCl = dec(2, "canon"),
+      imgMember = imgMemberS, imgPairs = imgPairsT, imgCl = closure.imgCl,
+      audMember = audMemberS, audPairs = audPairsT, audCl = closure.audCl,
       vidPairs = vidPairsT, vidDup = vidDupT, vidStatic = vidStaticT)
-    val recomputed = manifestFrom(mT, docGroupsT)
 
-    // --- publish: v1 = the pre-retraction manifest, v2 = the retraction
-    // MERGE — matched-DELETE on the retraction flag (the reference's
-    // hist delete-clause semantics), update-when-changed for touched
-    // survivors, change feed on ---
-    if (bootstrap) staged("r_bootstrap") {
-      ManagedTable.createEmpty(s, root, manifest)
-      ManagedTable.overwrite(root, manifest)
-    }
-    val changedCols = Seq("kept", "drop_reasons", "split", "group_id",
-      "group_docs", "quality_score", "n_tokens")
-    val src = recomputed.withColumn("_retract", lit(false))
-      .unionByName(manifest.join(retractedDocs, Seq("doc_id"))
-        .withColumn("_retract", lit(true)))
-    staged("r_merge") {
-      ManagedTable.merge(s, root, src, Seq("doc_id"),
-        MergeClauses.Spec(
-          updateWhen = Some(!col("s._retract") && changedCols
-            .map(c => !(col(s"t.$c") <=> col(s"s.$c"))).reduce(_ || _)),
-          deleteWhen = Some(col("s._retract"))),
-        changeFeed = true)
-    }
-    // --- republish the post-retraction state: untouched components keep
-    // their base rows verbatim (their nodes, labels, clusters, and drop
-    // sets are provably unchanged), touched components carry the
-    // re-converged values, removed nodes appear in neither — stitched in
-    // the same [[buildBaseState]] layout so the next ingest composes. ---
-    stateOut.foreach { out =>
-      staged("r_state_out") {
-        CurationState.publish(s, out, Map(
-          "labels" -> labels.join(touchedComps, Seq("component"), "left_anti")
-            .unionByName(fused.filter(col("n") % 2 === 0)
-              .select(expr("n div 2").as("node"),
-                expr("c div 2").as("component"))),
-          "textcl" -> full.fam(s, "textcl")
-            .join(touchedDocs, Seq("doc_id"), "left_anti")
-            .unionByName(textClT.select("doc_id", "cluster_id")),
-          "imgcl" -> full.fam(s, "imgcl")
-            .join(touchedArt(2, "canon"), Seq("canon"), "left_anti")
-            .unionByName(dec(1, "canon")),
-          "audcl" -> full.fam(s, "audcl")
-            .join(touchedArt(3, "canon"), Seq("canon"), "left_anti")
-            .unionByName(dec(2, "canon")),
-          "imggrp" -> imgGroupsS,
-          "audgrp" -> audGroupsS,
-          "viddup" -> full.fam(s, "viddup")
-            .join(touchedArt(4, "vid"), Seq("vid"), "left_anti")
-            .unionByName(vidDupT),
-          "vidstatic" -> vidStaticT),
-          ManagedTable.read(s, root),
-          expectedVersion = if (out == full.root) full.version else None)
-      }
-    }
+    // --- publish: v2 = the retraction MERGE (retracted docs deleted,
+    // touched survivors updated when changed). The republished state
+    // stitches untouched components' rows verbatim (their nodes, labels,
+    // clusters and drop sets are provably unchanged) to the touched
+    // components' re-converged values; removed nodes appear in neither. ---
+    publishRound(s, root, full, bootstrap,
+      manifestFrom(mT,
+        survivors.join(docGroupsIn(closure.labels), Seq("doc_id"))),
+      removed = Some(full.manifest(s).join(retractedDocs, Seq("doc_id"))),
+      stateOut, Map(
+        "labels" -> labels.join(touchedComps, Seq("component"), "left_anti")
+          .unionByName(closure.labels),
+        "textcl" -> full.fam(s, "textcl")
+          .join(touchedDocs, Seq("doc_id"), "left_anti")
+          .unionByName(closure.textCl.select("doc_id", "cluster_id")),
+        "imgcl" -> full.fam(s, "imgcl")
+          .join(touchedArt(2, "canon"), Seq("canon"), "left_anti")
+          .unionByName(closure.imgCl),
+        "audcl" -> full.fam(s, "audcl")
+          .join(touchedArt(3, "canon"), Seq("canon"), "left_anti")
+          .unionByName(closure.audCl),
+        "imggrp" -> imgGroupsS,
+        "audgrp" -> audGroupsS,
+        "viddup" -> full.fam(s, "viddup")
+          .join(touchedArt(4, "vid"), Seq("vid"), "left_anti")
+          .unionByName(vidDupT),
+        "vidstatic" -> vidStaticT))
   }
 
   /** q_curation_mm_retract: the RIGHT-TO-FORGET gate — a retraction

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 
 /** Connected components over a pair list — the step that turns near-dup
   * PAIRS (MinHash/SimHash/Jaccard output) into dedup DECISIONS: documents
@@ -39,7 +40,7 @@ import org.apache.spark.sql.functions._
   * current edge set plus a distinct; edge rows only shrink (targets
   * strictly decrease, stars dedupe); each round's edge set is
   * checkpointed so plans stay constant-size, and the PREVIOUS round's
-  * checkpoint blocks are explicitly unpersisted once the new round is
+  * checkpoint blocks are explicitly released once the new round is
   * materialized and compared (so a long session running many closures
   * holds at most two rounds of edge blocks, not `rounds` of them);
   * nothing collects to the driver. `maxIter` = 40 is sized for the
@@ -63,15 +64,6 @@ object GraphCC {
     * Diagnostic only: concurrent runs last-write-win. */
   private val lastRoundsA = new java.util.concurrent.atomic.AtomicInteger(-1)
   private[graft] def lastRunRounds: Int = lastRoundsA.get()
-
-  /** Unpersist the block-manager copy behind a frame this object
-    * produced with `.localCheckpoint()` — its analyzed plan is exactly
-    * one LogicalRDD wrapping the checkpointed RDD. Frames not backed by
-    * a checkpoint are left untouched (collectFirst finds nothing). */
-  private def drainCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Loop shuffle-partition count for a MATERIALIZED (localCheckpoint'd)
     * edge set: measured block-manager bytes over the session's AQE
@@ -207,12 +199,11 @@ object GraphCC {
         val nextCount = next.count()
         converged = nextCount == curCount &&
           next.exceptAll(cur).isEmpty
-        if (sys.env.contains("SPARK_GRAFT_CC_TRACE"))
-          log.info(s"[cc] round=${rounds + 1} edges=$nextCount")
+        log.debug(s"[cc] round=${rounds + 1} edges=$nextCount")
         // The previous round's blocks are dead once the comparison above
         // has run — drain them now instead of waiting for ContextCleaner
         // GC (the old pointer-jumping core's drain discipline).
-        prevCp.foreach(drainCheckpoint)
+        prevCp.foreach(CheckpointBridge.release)
         prevCp = Some(next)
         cur = next
         curCount = nextCount
@@ -235,8 +226,8 @@ object GraphCC {
     }
     // `out` is materialized: the symmetric set and the last round's star
     // edges have no remaining consumer.
-    drainCheckpoint(sym0)
-    prevCp.foreach(drainCheckpoint)
+    CheckpointBridge.release(sym0)
+    prevCp.foreach(CheckpointBridge.release)
     log.info(s"connectedComponents converged: rounds=$rounds " +
       s"starEdges=$curCount")
     out

@@ -40,8 +40,8 @@ import scala.jdk.CollectionConverters._
   * nightly write follows the batch too: no base data file, and no earlier
   * night's appended file, is rewritten. ManagedTable's fold rule compacts
   * the head into a full snapshot on the night the appended bytes reach
-  * the base's (at once on the first run into a new table); that night
-  * pays a full rewrite, as every night did before.
+  * the base's; that night pays a full rewrite, as every night did before.
+  * The first run into a new table publishes its batch as a full snapshot.
   * The lookup leg sends service batches of at most
   * `--property_id_api_batch_size` rows, and the final ORC mirror (the
   * reference's Hive-table contract) stays a file-count-controlled full
@@ -132,7 +132,8 @@ object MlsJobsMain {
 
   /** One full Job-1 run. The batch publishes through the merge-on-read
     * MERGE with the reference's keys and default clauses
-    * (curated.py:329-353). Returns the managed-table root so callers/specs
+    * (curated.py:329-353); the first run into a new table publishes it
+    * as a full snapshot. Returns the managed-table root so callers/specs
     * can read the published state; counts are the caller's choice (the
     * reference logs, it does not count). `clientOverride` lets specs
     * inject a deterministic lookup client; production builds the real
@@ -155,13 +156,18 @@ object MlsJobsMain {
     }
 
     // ---- merge + mirror + vacuum (curated.py:316-368) ------------------
-    if (!ManagedTable.exists(deltaRoot))
+    val newTable = !ManagedTable.exists(deltaRoot)
+    if (newTable)
       VersionedLayout.withUserMetadata("Create empty listings delta table") {
         ManagedTable.createEmpty(spark, deltaRoot, batch.rows)
       }
+    // A MERGE with default clauses into the empty table inserts exactly
+    // the batch, so the first run publishes it as a full snapshot: one
+    // write, where a merge-on-read publish would append it and fold.
     VersionedLayout.withUserMetadata(
       s"job=listings_curated from=${a.fromDate} to=${a.toDate}") {
-      ManagedTable.mergeVectorized(spark, deltaRoot, batch.rows, keys)
+      if (newTable) ManagedTable.overwrite(deltaRoot, batch.rows)
+      else ManagedTable.mergeVectorized(spark, deltaRoot, batch.rows, keys)
     }
     writeMirror(spark, deltaRoot, a.listingsOutputDir, a.numOutputFiles)
     a.vacuumHrs.foreach(h => ManagedTable.vacuum(deltaRoot, retainHours = h))

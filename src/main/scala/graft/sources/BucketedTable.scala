@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -385,7 +386,7 @@ object BucketedTable extends VersionedLayout {
       // keep their narrow files and read null-filled through it.
       publishBuckets(root, meta, touched, Some(merged.drop("_bucket").schema))
     } finally {
-      if (changeFeed) tagged.unpersist()
+      if (changeFeed) CheckpointBridge.release(tagged)
     }
   }
 

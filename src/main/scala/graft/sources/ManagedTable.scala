@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -504,7 +505,7 @@ object ManagedTable extends VersionedLayout {
         else (readDv(spark, root, live).unionByName(d.tombstones),
           appendVersionsOf(root, live))
       publishMor(spark, root, live + 1, base, tombstones, appended, served)
-    } finally d.cached.foreach(_.unpersist())
+    } finally d.cached.foreach(CheckpointBridge.release)
   }
 
   /** Publish a merge-on-read version: tombstones, the rows this version
@@ -869,7 +870,7 @@ object ManagedTable extends VersionedLayout {
         overwrite(root,
           tagged.filter(col(Merge.ActionCol) =!= lit("delete"))
             .drop(Merge.ActionCol, Merge.PreCol))
-      } finally tagged.unpersist()
+      } finally CheckpointBridge.release(tagged)
     }
   }
 

@@ -91,8 +91,6 @@ class GraphCCSpec extends AnyFunSuite {
     val cp = (1L to 10L).map(i => (i, i + 1)).toDF("src", "dst")
       .localCheckpoint()
     try assert(GraphCC.loopPartitions(cp) === "1")
-    finally cp.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    finally org.apache.spark.sql.graftbridge.CheckpointBridge.release(cp)
   }
 }

@@ -403,12 +403,13 @@ class MlsJobsMainSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_cli_mor").toString
     val server = new graft.enrich.StubPropertyServer()
     try {
-      // the first run into a new table: v0 empty, v1 merge-on-read over
-      // it, then the fold publishes v2 as a full snapshot
+      // the first run into a new table: v0 empty, v1 the batch as a full
+      // snapshot, written once
       val gr = cliRun(root, server, "2024-07-01 00:00:00",
         Seq("--property_id_modes", "New", "--property_id_limit", "2"))
       val live = ManagedTable.currentVersion(gr)
-      assert(live == 2 && dvBaseOf(gr, 1).contains(0), versionDirs(gr))
+      assert(live == 1 && ManagedTable.readVersion(spark, gr, 0).isEmpty,
+        versionDirs(gr))
       assert(dvBaseOf(gr, live).isEmpty)
       assert(listNames(s"$gr/v$live").exists(_.endsWith(".parquet")))
 
