@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -93,28 +92,27 @@ object BucketedTable extends VersionedLayout {
   private def hasParquet(dir: String): Boolean =
     listDir(Paths.get(dir))(_.exists(_.getFileName.toString.endsWith(".parquet")))
 
-  /** Remove the partitionBy staging dir once its buckets are moved out. */
-  private def dropStaging(root: String, ver: Int): Unit = {
-    ScratchDirs.deleteRecursively(Paths.get(s"$root/v$ver/_data"))
-  }
-
-  /** Publish the version after `meta`'s: move each `touched` bucket that a
-    * `partitionBy("_bucket")` write staged under `v<next>/_data` into its
-    * bucket dir (an empty one where the write left none — a bucket emptied
-    * by deletes, or all-empty files compacted away), then publish the
-    * manifest with those buckets pointing at `v<next>` and the rest
-    * carried by reference. */
+  /** Publish the version after `meta`'s with `rows` as the contents of
+    * the `touched` buckets: one write partitioned by bucket stages them
+    * under `v<next>/_data`, each bucket's dir moves out of it (an empty one
+    * where the write left none — a bucket emptied by deletes, or all-empty
+    * files compacted away), and the manifest points those buckets at
+    * `v<next>` and carries the rest by reference. */
   private def publishBuckets(root: String, meta: Meta, touched: Iterable[Int],
+                             rows: DataFrame,
                              schema: Option[org.apache.spark.sql.types.StructType])
       : Unit = {
     val next = meta.version + 1
+    rows.withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
+      .write.mode("overwrite").partitionBy("_bucket")
+      .parquet(s"$root/v$next/_data")
     touched.foreach { b =>
       val src = Paths.get(s"$root/v$next/_data/_bucket=$b")
       val dst = Paths.get(bucketDir(root, s"v$next", b))
       if (Files.exists(src)) Files.move(src, dst)
       else Files.createDirectories(dst)
     }
-    dropStaging(root, next)
+    ScratchDirs.deleteRecursively(Paths.get(s"$root/v$next/_data"))
     val touchedSet = touched.toSet
     writeVersion(root, next, meta.nBuckets, meta.keys,
       meta.manifest.map { case (b, ver) =>
@@ -122,23 +120,12 @@ object BucketedTable extends VersionedLayout {
       }, schema)
   }
 
-  /** Initial full write: every bucket lands in v0. */
+  /** Initial full write: every bucket lands in v0, published over a table
+    * with no version yet. */
   def create(root: String, df: DataFrame, keys: Seq[String], nBuckets: Int): Unit = {
-    val withB = Constraints.enforce(df, Constraints.load(root))
-      .withColumn("_bucket", bucketCol(keys, nBuckets))
-    withB.write.mode("overwrite").partitionBy("_bucket")
-      .parquet(s"$root/v0/_data")
-    // Rename spark's _bucket=N dirs into stable bucket dirs so the manifest
-    // can address them individually.
-    (0 until nBuckets).foreach { b =>
-      val src = Paths.get(s"$root/v0/_data/_bucket=$b")
-      val dst = Paths.get(bucketDir(root, "v0", b))
-      if (Files.exists(src)) Files.move(src, dst)
-      else Files.createDirectories(dst) // empty bucket
-    }
-    dropStaging(root, 0)
-    writeVersion(root, 0, nBuckets, keys,
-      (0 until nBuckets).map(_ -> "v0").toMap, Some(df.schema))
+    val all = 0 until nBuckets
+    publishBuckets(root, Meta(-1, nBuckets, keys, all.map(_ -> "").toMap, None),
+      all, guard(root, df), Some(df.schema))
   }
 
   /** Read the live table (all buckets via the manifest). */
@@ -296,22 +283,25 @@ object BucketedTable extends VersionedLayout {
     * a merge can only insert/update/delete inside buckets containing
     * source keys, the delta-proportional feed equals the feed a
     * whole-table merge would produce: CDC cost scales with the delta,
-    * never the table. */
+    * never the table. An evolving merge widens the recorded schema;
+    * untouched buckets keep their narrow files and read null-filled
+    * through it. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
             clauses: MergeClauses.Spec = MergeClauses.Spec(),
             changeFeed: Boolean = false,
             preImageFeed: Boolean = false,
             schemaEvolution: Boolean = false): Unit = {
-    import graft.operators.Merge
     val meta = readMeta(root)
-    val srcB = source.withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-      .persist()
+    val src = source.persist()
     // try/finally: an aborted merge (e.g. a CHECK-constraint violation in
-    // the write) must not leave the source cache or the feed checkpoint
-    // pinned in a session that catches the failure.
-    try mergeInner(spark, root, meta, srcB, clauses, changeFeed, preImageFeed,
-      schemaEvolution)
-    finally srcB.unpersist()
+    // the write) must not leave the source cache pinned in a session that
+    // catches the failure.
+    try {
+      val touched = bucketsOf(meta, src)
+      rewriteBuckets(spark, root, meta, touched, evolving = true)(
+        mergeStep(_, src, meta.keys, clauses, nullSafeKeys = true,
+          schemaEvolution, changeFeed, preImageFeed))
+    } finally src.unpersist()
   }
 
   /** OPTIMISTIC-CONCURRENCY merge — [[ManagedTable.commit]]'s multi-writer
@@ -339,182 +329,92 @@ object BucketedTable extends VersionedLayout {
       merge(spark, root, source, clauses)
     }
 
-  private def mergeInner(spark: SparkSession, root: String, meta: Meta,
-                         srcB: DataFrame, clauses: MergeClauses.Spec,
-                         changeFeed: Boolean, preImageFeed: Boolean,
-                         schemaEvolution: Boolean): Unit = {
-    import graft.operators.Merge
-    val touched = srcB.select("_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-
-    val targetPaths = touched
-      .map(b => bucketDir(root, meta.manifest(b), b))
-      .filter(hasParquet)
-    // Touched buckets may predate a schema evolution — read them through
-    // the recorded table schema (null-filled), not file inference.
-    val target =
-      if (targetPaths.nonEmpty)
-        readerFor(spark, meta).parquet(targetPaths.toIndexedSeq: _*)
-      else meta.schema match {
-        case Some(s0) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s0)
-        case None => srcB.drop("_bucket").limit(0)
-      }
-
-    val next = meta.version + 1
-    // With a feed, one merge join resolves snapshot AND feed (lazy
-    // localCheckpoint — materialized by the feed write, reused by the
-    // snapshot write); without one, the plain plan is left untouched.
-    val taggedRaw = Merge
-      .mergeFramesTagged(target, srcB.drop("_bucket"), meta.keys, clauses,
-        schemaEvolution = schemaEvolution, preImage = preImageFeed)
-    val tagged =
-      if (changeFeed) taggedRaw.localCheckpoint(eager = false) else taggedRaw
-    try {
-      if (changeFeed)
-        writeChanges(root, next,
-          tagged.filter(col(Merge.ActionCol) =!= lit("keep")))
-      val merged = Constraints.enforce(
-          tagged
-            .filter(col(Merge.ActionCol) =!= lit("delete"))
-            .drop(Merge.ActionCol, Merge.PreCol), // PreCol-drop no-op sans feed
-          Constraints.load(root))
-        .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-      merged.write.mode("overwrite").partitionBy("_bucket")
-        .parquet(s"$root/v$next/_data")
-      // An evolving merge widens the recorded schema; untouched buckets
-      // keep their narrow files and read null-filled through it.
-      publishBuckets(root, meta, touched, Some(merged.drop("_bucket").schema))
-    } finally {
-      if (changeFeed) CheckpointBridge.release(tagged)
-    }
-  }
-
   /** DELETE at bucket-delta cost: one pass finds the buckets that hold
     * matching rows, and ONLY those buckets are rewritten without the
     * matches — untouched buckets carry forward by manifest reference,
     * the same delta-proportional contract as [[merge]]. A predicate on
     * the bucket key touches only the keys' buckets; a broad predicate
-    * degrades gracefully toward a full rewrite (never past it). Rows
-    * where `where` is null are KEPT — SQL DELETE semantics. With
-    * `changeFeed`, deleted pre-images land as the next version's change
-    * feed before the pointer swap. No-op (no version published) when nothing
-    * matches. */
+    * degrades gracefully toward a full rewrite (never past it). Same row
+    * semantics as [[ManagedTable.delete]]. No-op (no version published)
+    * when nothing matches. */
   def delete(spark: SparkSession, root: String, where: Column,
              changeFeed: Boolean = false): Unit = {
-    import graft.operators.Merge
     val meta = readMeta(root)
-    val hit = coalesce(where, lit(false))
-    val withB = readAt(spark, root, meta)
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    val touched = withB.filter(hit).select("_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded: <= nBuckets ids
-    if (touched.isEmpty) return
-    val next = meta.version + 1
-    val touchedPaths = touched
-      .map(b => bucketDir(root, meta.manifest(b), b)).filter(hasParquet)
-    val touchedRows = readerFor(spark, meta)
-      .parquet(touchedPaths.toIndexedSeq: _*)
-    if (changeFeed)
-      writeChanges(root, next, touchedRows.filter(hit)
-        .withColumn(Merge.ActionCol, lit("delete")))
-    val kept = touchedRows.filter(!hit)
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    kept.write.mode("overwrite").partitionBy("_bucket")
-      .parquet(s"$root/v$next/_data")
-    publishBuckets(root, meta, touched, meta.schema)
+    val touched = hitBuckets(spark, root, meta, where)
+    if (touched.nonEmpty)
+      rewriteBuckets(spark, root, meta, touched)(
+        deleteStep(_, where, changeFeed))
   }
 
-  /** UPDATE at bucket-delta cost — the bucketed twin of
-    * [[ManagedTable.update]]: one pass finds the buckets holding rows
-    * satisfying `where`, only those rewrite with each `set` column
-    * re-evaluated (expressions see the PRE-update row), and untouched
-    * buckets carry by manifest reference. Null-predicate rows are
-    * untouched (SQL UPDATE); CHECK constraints ride the rewrite. With
-    * `changeFeed`, post-images land as the next version's change feed
-    * before the swap. No-op when nothing matches. */
+  /** UPDATE at bucket-delta cost: one pass finds the buckets holding rows
+    * satisfying `where`, only those rewrite, and untouched buckets carry
+    * by manifest reference. Same row semantics as [[ManagedTable.update]];
+    * a SET may not name a bucket key (a key change moves the row across
+    * buckets). No-op when nothing matches. */
   def update(spark: SparkSession, root: String, set: Map[String, Column],
              where: Column = lit(true), changeFeed: Boolean = false): Unit = {
-    import graft.operators.Merge
     val meta = readMeta(root)
-    val hit = coalesce(where, lit(false))
-    val withB = readAt(spark, root, meta)
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    val touched = withB.filter(hit).select("_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded: <= nBuckets ids
-    if (touched.isEmpty) return
-    val next = meta.version + 1
-    val touchedPaths = touched
-      .map(b => bucketDir(root, meta.manifest(b), b)).filter(hasParquet)
-    val touchedRows = readerFor(spark, meta)
-      .parquet(touchedPaths.toIndexedSeq: _*)
-    val cols = touchedRows.columns.toIndexedSeq
-    val bad = set.keySet -- cols.toSet
-    require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
-      bad.mkString(", "))
-    require((set.keySet & meta.keys.toSet).isEmpty,
-      s"UPDATE SET must not touch bucket key(s) ${meta.keys.mkString(", ")} " +
-        "— a key change moves the row across buckets; use merge")
-    // hit evaluated on the PRE-update row, carried through the projection
-    val flagged = touchedRows.withColumn("__hit", hit)
-    val updated = flagged.select(cols.map(c =>
-      when(col("__hit"), set.getOrElse(c, col(c))).otherwise(col(c)).as(c)) :+
-      col("__hit"): _*)
-    if (changeFeed)
-      writeChanges(root, next, updated.filter(col("__hit")).drop("__hit")
-        .withColumn(Merge.ActionCol, lit("update")))
-    val rewritten = Constraints.enforce(updated.drop("__hit"),
-        Constraints.load(root))
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    rewritten.write.mode("overwrite").partitionBy("_bucket")
-      .parquet(s"$root/v$next/_data")
-    publishBuckets(root, meta, touched, meta.schema)
+    val touched = hitBuckets(spark, root, meta, where)
+    if (touched.nonEmpty)
+      rewriteBuckets(spark, root, meta, touched) { rows =>
+        require((set.keySet & meta.keys.toSet).isEmpty,
+          s"UPDATE SET must not touch bucket key(s) ${meta.keys.mkString(", ")} " +
+            "— a key change moves the row across buckets; use merge")
+        updateStep(rows, set, where, changeFeed)
+      }
   }
 
-  /** OVERWRITE WHERE at bucket-delta cost — the bucketed twin of
-    * [[ManagedTable.overwriteWhere]] (Delta `replaceWhere`): atomically
-    * replace exactly the rows satisfying `where` with `df`, rewriting
-    * ONLY the buckets that hold matching rows or receive replacement
-    * rows; every other bucket carries by manifest reference. The
-    * replacement is not keyed — any cardinality, including dropping or
-    * aggregating the slice — but each replacement row must satisfy
-    * `where` (asserted while the touched-bucket set is computed, so a
-    * violating row aborts before any file is written), and predicate-null
-    * rows are KEPT. At 100 TB replacing one source's slice rewrites the
-    * handful of buckets its keys hash into, not the table. CHECK
-    * constraints ride the rewrite. */
+  /** OVERWRITE WHERE at bucket-delta cost (Delta `replaceWhere`, same row
+    * semantics as [[ManagedTable.overwriteWhere]]), rewriting ONLY the
+    * buckets that hold matching rows or receive replacement rows; every
+    * other bucket carries by manifest reference. The replacement's
+    * insertion contract is asserted while the touched-bucket set is
+    * computed, so a violating row aborts before any file is written. At
+    * 100 TB replacing one source's slice rewrites the handful of buckets
+    * its keys hash into, not the table. */
   def overwriteWhere(spark: SparkSession, root: String, df: DataFrame,
                      where: Column): Unit = {
     val meta = readMeta(root)
-    val hit = coalesce(where, lit(false))
-    val withB = readAt(spark, root, meta)
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    val cols = readAt(spark, root, meta).columns.toIndexedSeq
-    val guarded = ManagedTable.assertSatisfies(
-      df.select(cols.map(col): _*), hit) // fails fast on missing cols
-    val replB = guarded.withColumn("_bucket",
-      bucketCol(meta.keys, meta.nBuckets))
-    // Both collects are bounded (<= nBuckets ids); evaluating replB's
-    // buckets executes the insertion assert BEFORE any write starts.
-    val touched = (withB.filter(hit).select("_bucket").distinct()
-        .collect().map(_.getInt(0)) ++
-      replB.select("_bucket").distinct().collect().map(_.getInt(0)))
-      .distinct.sorted
-    if (touched.isEmpty) return
-    val next = meta.version + 1
-    val touchedPaths = touched
-      .map(b => bucketDir(root, meta.manifest(b), b)).filter(hasParquet)
-    val kept =
-      if (touchedPaths.isEmpty) replB.filter(lit(false))
-      else readerFor(spark, meta).parquet(touchedPaths.toIndexedSeq: _*)
-        .filter(!hit)
-        .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    val rewritten = Constraints.enforce(
-        kept.unionByName(replB).drop("_bucket"), Constraints.load(root))
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-    rewritten.write.mode("overwrite").partitionBy("_bucket")
-      .parquet(s"$root/v$next/_data")
-    publishBuckets(root, meta, touched, meta.schema)
+    val repl = replacement(readAt(spark, root, meta).columns.toIndexedSeq,
+      df, where)
+    val touched = (hitBuckets(spark, root, meta, where) ++
+      bucketsOf(meta, repl)).distinct.sorted
+    if (touched.nonEmpty)
+      rewriteBuckets(spark, root, meta, touched)(
+        overwriteWhereStep(_, df, where, changeFeed = false))
+  }
+
+  /** The buckets `rows` fall in (bounded: <= nBuckets ids). */
+  private def bucketsOf(meta: Meta, rows: DataFrame): Seq[Int] =
+    rows.select(bucketCol(meta.keys, meta.nBuckets)).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+
+  /** The buckets holding rows `where` hits. */
+  private def hitBuckets(spark: SparkSession, root: String, meta: Meta,
+                         where: Column): Seq[Int] =
+    bucketsOf(meta, readAt(spark, root, meta).filter(hitBy(where)))
+
+  /** Copy-on-write DML on the `touched` buckets: `step` maps their rows
+    * (read through the recorded schema — they may predate an evolution)
+    * to the rows that replace them, whose feed lands first; the rows are
+    * guarded, written partitioned by bucket and published with the rest
+    * of the manifest carried. An `evolving` step records its output
+    * schema; the others keep the table's. */
+  private def rewriteBuckets(spark: SparkSession, root: String, meta: Meta,
+                             touched: Seq[Int], evolving: Boolean = false)(
+      step: DataFrame => DmlStep): Unit = {
+    val paths = touched.map(b => bucketDir(root, meta.manifest(b), b))
+      .filter(hasParquet)
+    val rows =
+      if (paths.nonEmpty) readerFor(spark, meta).parquet(paths: _*)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        meta.schema.getOrElse(readAt(spark, root, meta).schema))
+    commitStep(root, meta.version + 1, step(rows)) { next =>
+      val guarded = guard(root, next)
+      publishBuckets(root, meta, touched, guarded,
+        if (evolving) Some(guarded.schema) else meta.schema)
+    }
   }
 
   /** OPTIMIZE for the bucketed layout: every merge leaves its touched
@@ -541,16 +441,13 @@ object BucketedTable extends VersionedLayout {
     val fragmented = meta.manifest.keys.toSeq.sorted
       .filter(nFiles(_) > maxFilesPerBucket)
     if (fragmented.isEmpty) return
-    val next = meta.version + 1
     val paths = fragmented.map(b => bucketDir(root, meta.manifest(b), b))
     // One partition per fragmented bucket: rows hash-route by the bucket
     // id itself, so each partitionBy dir receives exactly one file.
-    val compacted = readerFor(spark, meta).parquet(paths: _*)
-      .withColumn("_bucket", bucketCol(meta.keys, meta.nBuckets))
-      .repartition(fragmented.size, col("_bucket"))
-    compacted.write.mode("overwrite").partitionBy("_bucket")
-      .parquet(s"$root/v$next/_data")
-    publishBuckets(root, meta, fragmented, meta.schema)
+    publishBuckets(root, meta, fragmented, readerFor(spark, meta)
+      .parquet(paths: _*)
+      .repartition(fragmented.size, bucketCol(meta.keys, meta.nBuckets)),
+      meta.schema)
   }
 
   /** Retention for the bucketed layout ([[VersionedLayout.vacuum]] applies

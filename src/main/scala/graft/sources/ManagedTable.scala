@@ -35,9 +35,9 @@ import scala.jdk.CollectionConverters._
   * reach the base's, which bounds every live read by twice the base. The
   * MERGE semantics below are independent of the layout choice.
   *
-  * The pointer, constraints, change feeds, retention and directory
-  * listing are the protocol this layout shares with [[BucketedTable]];
-  * they live once in [[VersionedLayout]].
+  * The pointer, constraints, the copy-on-write DML row semantics, change
+  * feeds, retention and directory listing are the protocol this layout
+  * shares with [[BucketedTable]]; they live once in [[VersionedLayout]].
   */
 object MergeClauses {
   /** Delta-MERGE-equivalent clause set. Conditions see the matched pair as
@@ -139,13 +139,6 @@ object ManagedTable extends VersionedLayout {
     require(dvBaseOf(root, version).isEmpty,
       s"$op: v$version of $root is a merge-on-read version — OPTIMIZE " +
         "first to fold it into a full snapshot")
-
-  /** `df` with the table's generated columns computed or validated and its
-    * CHECK constraints enforced inside the plan: a violating row aborts
-    * the write that materializes it, before any pointer swap. */
-  private def guard(root: String, df: DataFrame): DataFrame =
-    Constraints.enforce(GeneratedColumns(df, GeneratedColumns.load(root)),
-      constraintsOf(root))
 
   /** The FULL version whose files a DV version shares, or None when
     * `version` is itself a full snapshot. */
@@ -310,10 +303,9 @@ object ManagedTable extends VersionedLayout {
   def deleteVectorized(spark: SparkSession, root: String, where: Column,
                        changeFeed: Boolean = false): Unit =
     writeMor(spark, root) { rows =>
-      val hit = rows.filter(coalesce(where, lit(false)))
+      val hit = rows.filter(hitBy(where))
       MorDelta(addresses(hit), feed = _ => Option.when(changeFeed)(
-        hit.drop(DvFileCol, DvPosCol)
-          .withColumn(graft.operators.Merge.ActionCol, lit("delete"))))
+        deletes(hit.drop(DvFileCol, DvPosCol))))
     }
 
   /** UPDATE at delta cost — the merge-on-read form of [[update]] (Delta
@@ -330,16 +322,13 @@ object ManagedTable extends VersionedLayout {
                        set: Map[String, Column], where: Column = lit(true),
                        changeFeed: Boolean = false): Unit =
     writeMor(spark, root) { rows =>
-      val hit = rows.filter(coalesce(where, lit(false)))
+      val hit = rows.filter(hitBy(where))
       val cols = rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq
-      val bad = set.keySet -- cols.toSet
-      require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
-        bad.mkString(", "))
+      requireSettable(cols, set)
       MorDelta(addresses(hit),
         Some(hit.select(cols.map(c => set.getOrElse(c, col(c)).as(c)): _*)),
         "UPDATE SET changes column type(s): ",
-        _.filter(_ => changeFeed)
-          .map(_.withColumn(graft.operators.Merge.ActionCol, lit("update"))))
+        _.filter(_ => changeFeed).map(updates))
     }
 
   /** OVERWRITE WHERE at delta cost — the merge-on-read form of
@@ -358,25 +347,11 @@ object ManagedTable extends VersionedLayout {
   def overwriteWhereVectorized(spark: SparkSession, root: String,
                                df: DataFrame, where: Column): Unit =
     writeMor(spark, root) { rows =>
-      val hit = coalesce(where, lit(false))
-      val shaped = df.select( // fail fast on missing cols
-        rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq.map(col): _*)
-      MorDelta(addresses(rows.filter(hit)), Some(assertSatisfies(shaped, hit)),
+      MorDelta(addresses(rows.filter(hitBy(where))),
+        Some(replacement(rows.drop(DvFileCol, DvPosCol).columns.toIndexedSeq,
+          df, where)),
         "replacement schema diverges from the table: ")
     }
-
-  /** Delta's replaceWhere insertion contract folded into the write plan:
-    * materializing any replacement row that does NOT satisfy the predicate
-    * raises with the row's JSON — no separate validation scan (same
-    * assert_true-in-filter idiom as [[Constraints.enforce]]). */
-  private[sources] def assertSatisfies(df: DataFrame, hit: Column): DataFrame =
-    df.filter(coalesce(
-      assert_true(hit, concat(
-        lit("replaceWhere: replacement row does not satisfy the " +
-          "predicate: "),
-        to_json(struct(df.columns.toIndexedSeq.map(col): _*))))
-        .cast("boolean"),
-      lit(true)))
 
   /** MERGE at delta cost — the merge-on-read form of [[merge]] (Delta
     * merge-on-read / Iceberg v2 MERGE with position deletes, from the
@@ -837,6 +812,9 @@ object ManagedTable extends VersionedLayout {
     *
     * Target and source must share the target's column set; key columns are
     * assumed non-null (true in the reference: merge keys are the table PK).
+    * With `changeFeed`, the non-keep rows land as the next version's change
+    * feed before the pointer swap (`preImageFeed` adds the pre-update
+    * struct), resolved by the same join.
     */
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keys: Seq[String],
@@ -844,35 +822,9 @@ object ManagedTable extends VersionedLayout {
             nullSafeKeys: Boolean = true,
             changeFeed: Boolean = false,
             schemaEvolution: Boolean = false,
-            preImageFeed: Boolean = false): Unit = {
-    val target = read(spark, root)
-    if (!changeFeed) {
-      val resolved = graft.operators.Merge.mergeFrames(target, source, keys,
-        clauses, nullSafeKeys, schemaEvolution)
-      // The resolver's plan still reads the live snapshot lazily; materialize
-      // the next version before the pointer swap so readers never see a
-      // half-written state.
-      overwrite(root, resolved)
-    } else {
-      // One merge join resolves BOTH outputs: a lazy localCheckpoint
-      // materializes the tagged resolution on the feed write and the
-      // snapshot write reuses those blocks instead of re-joining.
-      import graft.operators.Merge
-      val tagged = Merge.mergeFramesTagged(target, source, keys,
-        clauses, nullSafeKeys, schemaEvolution,
-        preImage = preImageFeed).localCheckpoint(eager = false)
-      val next = if (exists(root)) currentVersion(root) + 1 else 0
-      try {
-        writeChanges(root, next,
-          tagged.filter(col(Merge.ActionCol) =!= lit("keep")))
-        // The feed lands before the pointer swap: a published version
-        // either has its complete feed or was not published at all.
-        overwrite(root,
-          tagged.filter(col(Merge.ActionCol) =!= lit("delete"))
-            .drop(Merge.ActionCol, Merge.PreCol))
-      } finally CheckpointBridge.release(tagged)
-    }
-  }
+            preImageFeed: Boolean = false): Unit =
+    rewrite(spark, root)(mergeStep(_, source, keys, clauses, nullSafeKeys,
+      schemaEvolution, changeFeed, preImageFeed))
 
   /** DELETE command (Delta `DELETE FROM ... WHERE`): publish a new version
     * without the rows satisfying `where`. Rows where the predicate
@@ -880,14 +832,8 @@ object ManagedTable extends VersionedLayout {
     * semantics. With `changeFeed`, the deleted pre-images land as the next
     * version's change feed before the pointer swap. */
   def delete(spark: SparkSession, root: String, where: Column,
-             changeFeed: Boolean = false): Unit = {
-    val cur = read(spark, root)
-    val hit = coalesce(where, lit(false))
-    if (changeFeed)
-      writeChanges(root, currentVersion(root) + 1, cur.filter(hit)
-        .withColumn(graft.operators.Merge.ActionCol, lit("delete")))
-    overwrite(root, cur.filter(!hit))
-  }
+             changeFeed: Boolean = false): Unit =
+    rewrite(spark, root)(deleteStep(_, where, changeFeed))
 
   /** UPDATE command (Delta `UPDATE ... SET ... WHERE`): rows satisfying
     * `where` get each column in `set` re-evaluated (expressions see the
@@ -896,24 +842,8 @@ object ManagedTable extends VersionedLayout {
     * post-image rows land as the next version's change feed before the
     * swap. */
   def update(spark: SparkSession, root: String, set: Map[String, Column],
-             where: Column = lit(true), changeFeed: Boolean = false): Unit = {
-    val cur = read(spark, root)
-    val bad = set.keySet -- cur.columns.toSet
-    require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
-      bad.mkString(", "))
-    // The hit flag is evaluated on the PRE-update row and carried through
-    // the projection — re-evaluating `where` on post-images would misfeed
-    // self-referential updates (e.g. WHERE total < 100 SET total += 1000).
-    val flagged = cur.withColumn("__hit", coalesce(where, lit(false)))
-    val updated = flagged.select(cur.columns.toIndexedSeq.map(c =>
-      when(col("__hit"), set.getOrElse(c, col(c))).otherwise(col(c)).as(c)) :+
-      col("__hit"): _*)
-    if (changeFeed)
-      writeChanges(root, currentVersion(root) + 1,
-        updated.filter(col("__hit")).drop("__hit")
-          .withColumn(graft.operators.Merge.ActionCol, lit("update")))
-    overwrite(root, updated.drop("__hit"))
-  }
+             where: Column = lit(true), changeFeed: Boolean = false): Unit =
+    rewrite(spark, root)(updateStep(_, set, where, changeFeed))
 
   /** OVERWRITE WHERE (Delta `.option("replaceWhere", ...)` overwrite):
     * atomically replace EXACTLY the rows satisfying `where` with `df` in
@@ -929,18 +859,15 @@ object ManagedTable extends VersionedLayout {
     * [[delete]]. This is the copy-on-write form (full next snapshot);
     * [[overwriteWhereVectorized]] publishes the same result at delta cost. */
   def overwriteWhere(spark: SparkSession, root: String, df: DataFrame,
-                     where: Column, changeFeed: Boolean = false): Unit = {
-    val cur = read(spark, root)
-    val hit = coalesce(where, lit(false))
-    val guarded = assertSatisfies(df.select(
-      cur.columns.toIndexedSeq.map(col): _*), hit)
-    if (changeFeed)
-      writeChanges(root, currentVersion(root) + 1, cur.filter(hit)
-        .withColumn(graft.operators.Merge.ActionCol, lit("delete"))
-        .unionByName(guarded
-          .withColumn(graft.operators.Merge.ActionCol, lit("insert"))))
-    overwrite(root, cur.filter(!hit).unionByName(guarded))
-  }
+                     where: Column, changeFeed: Boolean = false): Unit =
+    rewrite(spark, root)(overwriteWhereStep(_, df, where, changeFeed))
+
+  /** Copy-on-write DML on the whole live snapshot: `step` maps its rows to
+    * the next version's, whose feed lands first; [[overwrite]] publishes. */
+  private def rewrite(spark: SparkSession, root: String)(
+      step: DataFrame => DmlStep): Unit =
+    commitStep(root, currentVersion(root) + 1, step(read(spark, root)))(
+      overwrite(root, _))
 
   /** RESTORE (Delta `RESTORE TABLE ... TO VERSION AS OF`): republish an
     * old version's CONTENT as the new head, preserving linear history —

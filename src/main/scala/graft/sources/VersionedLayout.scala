@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
+import graft.operators.Merge
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +14,11 @@ import scala.jdk.CollectionConverters._
   *    new immutable version dir and then atomically swap the pointer, the
   *    same tip-swap discipline Delta/Iceberg put on their log head (a
   *    conditional-put on object storage);
-  *  - CHECK constraints ([[Constraints]] storage + enforcement contract);
+  *  - CHECK constraints ([[Constraints]] storage + enforcement contract)
+  *    and the write [[guard]] that enforces them with generated columns;
+  *  - the row semantics of copy-on-write DELETE, UPDATE, OVERWRITE WHERE
+  *    and MERGE ([[DmlStep]]): what replaces the rows in scope, their
+  *    change feed and its tags, and the feed-before-swap commit;
   *  - the change feed: the `_changes/v<N>` dir a writer records before its
   *    pointer swap, its reads and its in-place redaction;
   *  - retention: [[vacuum]] by count and by commit age, one policy over
@@ -24,8 +30,8 @@ import scala.jdk.CollectionConverters._
   * pieces whose semantics MUST agree (a reader of either layout sees the
   * same pointer/constraint/CDF/retention behavior); everything
   * layout-specific — snapshot shape, time travel resolution, what a
-  * retained version keeps reachable, merge routing — stays in the
-  * concrete objects.
+  * retained version keeps reachable, which rows a DML op has in scope —
+  * stays in the concrete objects.
   */
 private[sources] trait VersionedLayout {
 
@@ -160,6 +166,119 @@ private[sources] trait VersionedLayout {
   final def dropConstraint(root: String, name: String): Unit =
     Constraints.drop(root, name)
 
+  /** `df` with the table's generated columns computed or validated and its
+    * CHECK constraints enforced inside the plan: a violating row aborts
+    * the write that materializes it, before any pointer swap. */
+  protected final def guard(root: String, df: DataFrame): DataFrame =
+    Constraints.enforce(GeneratedColumns(df, GeneratedColumns.load(root)),
+      constraintsOf(root))
+
+  // ---- DML row semantics ------------------------------------------------
+  // Each op maps the rows in its scope (the whole live table, or the
+  // touched buckets) to the rows that replace them; the layouts differ
+  // only in that scope and in how they publish.
+
+  /** Whether a row is hit by a DML predicate: a null predicate hits
+    * nothing (SQL DELETE/UPDATE semantics, not filter semantics). */
+  protected final def hitBy(where: Column): Column = coalesce(where, lit(false))
+
+  /** Change-feed rows tagged with the action that produced them. */
+  protected final def deletes(rows: DataFrame): DataFrame =
+    rows.withColumn(Merge.ActionCol, lit("delete"))
+  protected final def updates(rows: DataFrame): DataFrame =
+    rows.withColumn(Merge.ActionCol, lit("update"))
+  protected final def inserts(rows: DataFrame): DataFrame =
+    rows.withColumn(Merge.ActionCol, lit("insert"))
+
+  /** UPDATE SET may only name columns the table has. */
+  protected final def requireSettable(cols: Seq[String],
+                                      set: Map[String, Column]): Unit = {
+    val bad = set.keySet -- cols.toSet
+    require(bad.isEmpty, s"UPDATE SET references missing column(s): " +
+      bad.mkString(", "))
+  }
+
+  /** An OVERWRITE WHERE replacement shaped to the table's columns (fails
+    * fast on a missing one) under Delta's replaceWhere insertion contract:
+    * materializing a row that does NOT satisfy `where` raises with the
+    * row's JSON — no separate validation scan (same assert_true-in-filter
+    * idiom as [[Constraints.enforce]]). */
+  protected final def replacement(cols: Seq[String], df: DataFrame,
+                                  where: Column): DataFrame = {
+    val shaped = df.select(cols.map(col): _*)
+    shaped.filter(coalesce(
+      assert_true(hitBy(where), concat(
+        lit("replaceWhere: replacement row does not satisfy the " +
+          "predicate: "),
+        to_json(struct(cols.map(col): _*))))
+        .cast("boolean"),
+      lit(true)))
+  }
+
+  /** DELETE: rows hit by `where` go; the feed is their pre-images. */
+  protected final def deleteStep(rows: DataFrame, where: Column,
+                                 changeFeed: Boolean): DmlStep =
+    DmlStep(rows.filter(!hitBy(where)),
+      Option.when(changeFeed)(deletes(rows.filter(hitBy(where)))))
+
+  /** UPDATE: hit rows get each `set` column re-evaluated on the PRE-update
+    * row; the feed is their post-images. The hit flag is evaluated once
+    * and carried through the projection — re-evaluating `where` on
+    * post-images would misfeed self-referential updates (e.g. WHERE
+    * total < 100 SET total += 1000). */
+  protected final def updateStep(rows: DataFrame, set: Map[String, Column],
+                                 where: Column, changeFeed: Boolean): DmlStep = {
+    val cols = rows.columns.toIndexedSeq
+    requireSettable(cols, set)
+    val updated = rows.withColumn("__hit", hitBy(where)).select(cols.map(c =>
+      when(col("__hit"), set.getOrElse(c, col(c))).otherwise(col(c)).as(c)) :+
+      col("__hit"): _*)
+    DmlStep(updated.drop("__hit"), Option.when(changeFeed)(
+      updates(updated.filter(col("__hit")).drop("__hit"))))
+  }
+
+  /** OVERWRITE WHERE: the rows hit by `where` are replaced by `df` (any
+    * cardinality, under the [[replacement]] contract); predicate-null rows
+    * are kept. The feed is the replaced rows plus the inserted ones. */
+  protected final def overwriteWhereStep(rows: DataFrame, df: DataFrame,
+                                         where: Column,
+                                         changeFeed: Boolean): DmlStep = {
+    val repl = replacement(rows.columns.toIndexedSeq, df, where)
+    DmlStep(rows.filter(!hitBy(where)).unionByName(repl),
+      Option.when(changeFeed)(
+        deletes(rows.filter(hitBy(where))).unionByName(inserts(repl))))
+  }
+
+  /** MERGE: one tagged merge join resolves the next rows and, with a
+    * feed, the non-keep rows as well — a lazy localCheckpoint materializes
+    * the resolution on the feed write and the rows write reuses its blocks
+    * instead of re-joining. Without a feed the plain plan is left as is. */
+  protected final def mergeStep(target: DataFrame, source: DataFrame,
+                                keys: Seq[String], clauses: MergeClauses.Spec,
+                                nullSafeKeys: Boolean, schemaEvolution: Boolean,
+                                changeFeed: Boolean,
+                                preImageFeed: Boolean): DmlStep = {
+    val resolved = Merge.mergeFramesTagged(target, source, keys, clauses,
+      nullSafeKeys, schemaEvolution, preImage = changeFeed && preImageFeed)
+    val tagged =
+      if (changeFeed) resolved.localCheckpoint(eager = false) else resolved
+    val act = col(Merge.ActionCol)
+    DmlStep(tagged.filter(act =!= lit("delete")).drop(Merge.ActionCol, Merge.PreCol),
+      Option.when(changeFeed)(tagged.filter(act =!= lit("keep"))),
+      Option.when(changeFeed)(tagged))
+  }
+
+  /** Commit a DML step as version `next`: its feed lands first (a published
+    * version either has its complete feed or was not published at all),
+    * then `publish` writes the next rows and swaps the pointer; the step's
+    * checkpoint is released however the write ends. */
+  protected final def commitStep(root: String, next: Int, step: DmlStep)(
+      publish: DataFrame => Unit): Unit =
+    try {
+      step.feed.foreach(writeChanges(root, next, _))
+      publish(step.next)
+    } finally step.release.foreach(CheckpointBridge.release)
+
   // ---- change feed ------------------------------------------------------
 
   private def changesDir(root: String, version: Int): Path =
@@ -289,6 +408,13 @@ private[sources] trait VersionedLayout {
   protected final def versionOf(p: Path): Int =
     p.getFileName.toString.drop(1).toInt
 }
+
+/** One DML op applied to the rows in scope: the rows that replace them,
+  * the change feed to record (when asked for), and a lazily checkpointed
+  * frame to release once the write ends. */
+private[sources] final case class DmlStep(next: DataFrame,
+                                          feed: Option[DataFrame] = None,
+                                          release: Option[DataFrame] = None)
 
 object VersionedLayout {
   /** Per-canonical-root intra-JVM commit monitors (see [[VersionedLayout

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Merge
-import graft.sources.{BucketedTable, MergeClauses}
+import graft.sources.{BucketedTable, ManagedTable, MergeClauses}
 import scala.jdk.CollectionConverters._
 
 class BucketedTableSpec extends AnyFunSuite {
@@ -236,6 +236,78 @@ class BucketedTableSpec extends AnyFunSuite {
       BucketedTable.changes(spark, root, 1)
     }
     assert(BucketedTable.changes(spark, root, 2).count() == 1)
+
+    // The same DELETE, UPDATE, OVERWRITE WHERE and MERGE on three layouts
+    // (whole-snapshot copy-on-write, merge-on-read, bucketed) publish the
+    // same rows, and the same feed wherever the op records one. The seeded
+    // table has null `n` and `total` values, so null-predicate rows meet
+    // every op, and the UPDATE's SET re-reads its own predicate column.
+    val rnd = new scala.util.Random(12)
+    val seeded = (1 to 400).map(i => (i.toLong, s"v$i",
+        Option.when(rnd.nextInt(7) != 0)(rnd.nextInt(7)),
+        Option.when(rnd.nextInt(9) != 0)(rnd.nextInt(300))))
+      .toDF("k", "v", "n", "total")
+    val (cow, mor, bkt) = (Files.createTempDirectory("graft_x_cow").toString,
+      Files.createTempDirectory("graft_x_mor").toString,
+      Files.createTempDirectory("graft_x_bkt").toString)
+    ManagedTable.overwrite(cow, seeded)
+    ManagedTable.overwrite(mor, seeded)
+    BucketedTable.create(bkt, seeded, Seq("k"), nBuckets = 8)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    // Each op, run on the three layouts; the feed of the version it
+    // published, where that layout's op records one.
+    def step(op: String)(onCow: => Unit, onMor: => Unit, onBkt: => Unit,
+                         feeds: Set[String]): Unit = {
+      val vs = Seq(cow, mor).map(ManagedTable.currentVersion(_) + 1) :+
+        (BucketedTable.currentVersion(bkt) + 1)
+      onCow; onMor; onBkt
+      val rows = Seq(ManagedTable.read(spark, cow), ManagedTable.read(spark, mor),
+        BucketedTable.read(spark, bkt)).map(sorted)
+      assert(rows.distinct.size == 1, s"$op: layouts publish different rows")
+      val recorded = Seq("cow", "mor", "bkt").zip(vs).filter(lv => feeds(lv._1))
+        .map {
+          case ("bkt", v) => sorted(BucketedTable.changes(spark, bkt, v))
+          case (l, v) => sorted(ManagedTable.changes(spark,
+            if (l == "cow") cow else mor, v))
+        }
+      assert(recorded.nonEmpty && recorded.forall(_.nonEmpty))
+      assert(recorded.distinct.size == 1, s"$op: layouts record different feeds")
+    }
+    val all = Set("cow", "mor", "bkt")
+    val del = col("n") === 3
+    step("delete")(ManagedTable.delete(spark, cow, del, changeFeed = true),
+      ManagedTable.deleteVectorized(spark, mor, del, changeFeed = true),
+      BucketedTable.delete(spark, bkt, del, changeFeed = true), all)
+    assert(ManagedTable.read(spark, cow).filter(col("n").isNull).count() ==
+      seeded.filter(col("n").isNull).count()) // null-predicate rows kept
+    val set = Map("total" -> (col("total") + 1000))
+    val low = col("total") < 100
+    step("update")(ManagedTable.update(spark, cow, set, low, changeFeed = true),
+      ManagedTable.updateVectorized(spark, mor, set, low, changeFeed = true),
+      BucketedTable.update(spark, bkt, set, low, changeFeed = true), all)
+    // seeded totals are < 300, so each hit row was raised exactly once
+    assert(ManagedTable.read(spark, cow).filter(col("total") < 100 ||
+      col("total") >= 1100).isEmpty)
+    val slice = col("n") === 5
+    val repl = seeded.filter(slice).limit(3).withColumn("v", lit("R"))
+      .unionByName(Seq((5000L, "NEW", Option(5), Option.empty[Int]))
+        .toDF("k", "v", "n", "total"))
+      .localCheckpoint()
+    step("overwriteWhere")(
+      ManagedTable.overwriteWhere(spark, cow, repl, slice, changeFeed = true),
+      ManagedTable.overwriteWhereVectorized(spark, mor, repl, slice),
+      BucketedTable.overwriteWhere(spark, bkt, repl, slice), Set("cow"))
+    val src = ManagedTable.read(spark, cow).filter(col("k") % 11 === 0)
+      .withColumn("v", when(col("k") % 2 === 0, lit("M")).otherwise(col("v")))
+      .unionByName(Seq((6000L, "INS", Option.empty[Int], Option(1)))
+        .toDF("k", "v", "n", "total"))
+      .localCheckpoint()
+    step("merge")(
+      ManagedTable.merge(spark, cow, src, Seq("k"), spec, changeFeed = true),
+      ManagedTable.mergeVectorized(spark, mor, src, Seq("k"), spec,
+        changeFeed = true),
+      BucketedTable.merge(spark, bkt, src, spec, changeFeed = true), all)
   }
 
   test("matched-delete empties a bucket without breaking reads") {

@@ -149,6 +149,17 @@ class BenchHonestySpec extends AnyFunSuite {
         "and listDir")
   }
 
+  test("DML row semantics and feed tags live only in VersionedLayout") {
+    // Built at runtime so this file's own source never matches.
+    val semantics = ("__h" + "it|lit\\(\"(delete|update|insert)\"\\)").r
+    val offenders = scalaFilesMatching("src/main/scala/graft/sources",
+      Set("VersionedLayout.scala"), semantics)
+    assert(offenders.isEmpty,
+      s"$offenders hand-write a DML hit flag or a change-feed tag — run " +
+        "the op through VersionedLayout's deleteStep, updateStep, " +
+        "overwriteWhereStep or mergeStep and its feed tags")
+  }
+
   test("SPARK_GRAFT_CPUS defaults to the host's processor count") {
     assert(graft.GraftSession.cpusFrom(None) ==
       Runtime.getRuntime.availableProcessors)
