@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 /** Incremental materialized-view maintenance from MERGE change feeds —
   * the 100 TB answer to "keep a grouped aggregate fresh under daily
   * deltas without recomputing the fact table". A change feed recorded
-  * with pre-images ([[Merge.mergeFramesTagged]] `preImage = true`) carries
-  * everything a self-maintainable aggregate needs:
+  * with pre-images ([[Merge.mergeFramesTagged]] with `preImage` naming
+  * every target column, as `merge(preImageFeed = true)` and
+  * `mergeVectorized(preImageFeed = true)` record it) carries everything a
+  * self-maintainable aggregate needs:
   *
   *  - `insert` row  → add its contribution to its group;
   *  - `delete` row  → retract its contribution (the row IS the pre-image);

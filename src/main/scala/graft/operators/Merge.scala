@@ -38,11 +38,15 @@ object Merge {
       schemaEvolution)
       .filter(col(ActionCol) =!= lit("delete")).drop(ActionCol)
 
+  /** The merge's key equality: `<=>` when `nullSafeKeys`, else `=`. */
+  def keyEq(nullSafeKeys: Boolean): (Column, Column) => Column =
+    if (nullSafeKeys) _ <=> _ else _ === _
+
   /** Name of the action column [[mergeFramesTagged]] appends. */
   val ActionCol = "_action"
 
-  /** Name of the pre-image struct column appended when
-    * `preImage = true`. */
+  /** Name of the pre-image struct column appended when `preImage` names
+    * columns. */
   val PreCol = "_pre"
 
   /** The same MERGE resolution, with each surviving-or-deleted row tagged
@@ -69,21 +73,24 @@ object Merge {
     * Off (the default), the source must carry the target's column set
     * and the output schema is the target's, unchanged.
     *
-    * `preImage` additionally appends a [[PreCol]] struct holding the
-    * pre-update TARGET values of an `update` row (null for every other
-    * action — an insert has no pre-image, a delete row IS its pre-image,
-    * a keep is unchanged). This is the Delta CDF `update_preimage` /
-    * `update_postimage` pair folded into one row: downstream incremental
-    * view maintenance needs BOTH sides of an update to retract the old
-    * contribution and add the new one, including when the update moves
-    * the row between groups. Same single join — the struct is projected
-    * from the target side already present in the joined row, so the
-    * pre-image costs no extra shuffle or scan. */
+    * A non-empty `preImage` (target column names) additionally appends a
+    * [[PreCol]] struct holding those columns' pre-update TARGET values of
+    * an `update` row (null for every other action — an insert has no
+    * pre-image, a delete row IS its pre-image, a keep is unchanged). This
+    * is the Delta CDF `update_preimage` / `update_postimage` pair folded
+    * into one row: downstream incremental view maintenance needs BOTH
+    * sides of an update to retract the old contribution and add the new
+    * one, including when the update moves the row between groups. Same
+    * single join — the struct is projected from the target side already
+    * present in the joined row, so the pre-image costs no extra shuffle or
+    * scan. A caller that needs only part of the old row (the merge-on-read
+    * write needs only its address) names only those columns, so the
+    * struct stays that narrow. */
   def mergeFramesTagged(target: DataFrame, source: DataFrame, keys: Seq[String],
                         clauses: MergeClauses.Spec = MergeClauses.Spec(),
                         nullSafeKeys: Boolean = true,
                         schemaEvolution: Boolean = false,
-                        preImage: Boolean = false): DataFrame = {
+                        preImage: Seq[String] = Nil): DataFrame = {
     val cols: IndexedSeq[String] =
       if (!schemaEvolution) {
         val missing = target.columns.filterNot(source.columns.contains)
@@ -104,9 +111,8 @@ object Merge {
       .withColumn("__key_n", keyCount)
       .withColumn("__s_present", lit(true))
       .alias("s")
-    val keyEq: (Column, Column) => Column =
-      if (nullSafeKeys) _ <=> _ else _ === _
-    val keyCond = keys.map(k => keyEq(col(s"t.$k"), col(s"s.$k"))).reduce(_ && _)
+    val keyCond = keys.map(k => keyEq(nullSafeKeys)(col(s"t.$k"), col(s"s.$k")))
+      .reduce(_ && _)
     val joined = t.join(s, keyCond, "full_outer")
 
     val tPresent = col("t.__t_present").isNotNull
@@ -136,10 +142,9 @@ object Merge {
     val base = cols.map(c => when(takeSource, side("s", sCols)(c))
       .otherwise(side("t", tCols)(c)).as(c)) :+ action.as(ActionCol)
     val withPre =
-      if (!preImage) base
+      if (preImage.isEmpty) base
       else base :+ when(doUpdate, struct(
-        target.columns.toIndexedSeq.map(c => col(s"t.$c").as(c)): _*))
-        .as(PreCol)
+        preImage.map(c => col(s"t.$c").as(c)): _*)).as(PreCol)
     joined.filter(dupGuard && (keepRow || doDelete)).select(withPre: _*)
   }
 }

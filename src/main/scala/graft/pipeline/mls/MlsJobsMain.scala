@@ -33,14 +33,17 @@ import scala.jdk.CollectionConverters._
   * leg + lookup + merge) and the lookup's address frame. The dims
   * broadcast (MlsValidate/attachGeo); the windows shuffle only the batch's
   * keys and their curated versions ([[LatestWins.dedupe]]), so the nightly
-  * window cost follows the batch, not the table; the merge shuffles once
-  * on (mls, mls_listing_id) and publishes merge-on-read
-  * ([[ManagedTable.mergeVectorized]]): the new version holds tombstones
-  * for the matched rows plus the batch's post-images and inserts, so the
-  * nightly write follows the batch too: no base data file, and no earlier
-  * night's appended file, is rewritten. ManagedTable's fold rule compacts
-  * the head into a full snapshot on the night the appended bytes reach
-  * the base's; that night pays a full rewrite, as every night did before.
+  * window cost follows the batch, not the table; the merge
+  * ([[ManagedTable.mergeVectorized]]) joins on (mls, mls_listing_id) only
+  * the curated rows whose key is in the batch (the same broadcast
+  * semi-join), so its shuffle follows the batch too, and publishes
+  * merge-on-read: the new version holds tombstones for the matched rows
+  * plus the batch's post-images and inserts, so the nightly write and the
+  * night's delta files follow the batch, not the table: no base data
+  * file, and no earlier night's appended file, is rewritten.
+  * ManagedTable's fold rule compacts the head into a full snapshot on the
+  * night the appended bytes reach the base's; that night pays a full
+  * rewrite, as every night did before.
   * The first run into a new table publishes its batch as a full snapshot.
   * The lookup leg sends service batches of at most
   * `--property_id_api_batch_size` rows, and the final ORC mirror (the

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -340,7 +341,7 @@ object BucketedTable extends VersionedLayout {
   def delete(spark: SparkSession, root: String, where: Column,
              changeFeed: Boolean = false): Unit = {
     val meta = readMeta(root)
-    val touched = hitBuckets(spark, root, meta, where)
+    val touched = hitBuckets(meta, readAt(spark, root, meta), where)
     if (touched.nonEmpty)
       rewriteBuckets(spark, root, meta, touched)(
         deleteStep(_, where, changeFeed))
@@ -350,18 +351,21 @@ object BucketedTable extends VersionedLayout {
     * satisfying `where`, only those rewrite, and untouched buckets carry
     * by manifest reference. Same row semantics as [[ManagedTable.update]];
     * a SET may not name a bucket key (a key change moves the row across
-    * buckets). No-op when nothing matches. */
+    * buckets) nor a column the table lacks. Both are refused before the
+    * hit buckets are looked for, whether or not any row matches, as
+    * [[ManagedTable.update]] refuses them. No-op when nothing matches. */
   def update(spark: SparkSession, root: String, set: Map[String, Column],
              where: Column = lit(true), changeFeed: Boolean = false): Unit = {
     val meta = readMeta(root)
-    val touched = hitBuckets(spark, root, meta, where)
+    val live = readAt(spark, root, meta)
+    require((set.keySet & meta.keys.toSet).isEmpty,
+      s"UPDATE SET must not touch bucket key(s) ${meta.keys.mkString(", ")} " +
+        "— a key change moves the row across buckets; use merge")
+    requireSettable(live.columns.toIndexedSeq, set)
+    val touched = hitBuckets(meta, live, where)
     if (touched.nonEmpty)
-      rewriteBuckets(spark, root, meta, touched) { rows =>
-        require((set.keySet & meta.keys.toSet).isEmpty,
-          s"UPDATE SET must not touch bucket key(s) ${meta.keys.mkString(", ")} " +
-            "— a key change moves the row across buckets; use merge")
-        updateStep(rows, set, where, changeFeed)
-      }
+      rewriteBuckets(spark, root, meta, touched)(
+        updateStep(_, set, where, changeFeed))
   }
 
   /** OVERWRITE WHERE at bucket-delta cost (Delta `replaceWhere`, same row
@@ -369,19 +373,24 @@ object BucketedTable extends VersionedLayout {
     * buckets that hold matching rows or receive replacement rows; every
     * other bucket carries by manifest reference. The replacement's
     * insertion contract is asserted while the touched-bucket set is
-    * computed, so a violating row aborts before any file is written. At
-    * 100 TB replacing one source's slice rewrites the handful of buckets
-    * its keys hash into, not the table. */
+    * computed, so a violating row aborts before any file is written. The
+    * replacement is lazily checkpointed there and the rewrite reads those
+    * blocks, so it is computed once. At 100 TB replacing one source's
+    * slice rewrites the handful of buckets its keys hash into, not the
+    * table. */
   def overwriteWhere(spark: SparkSession, root: String, df: DataFrame,
                      where: Column): Unit = {
     val meta = readMeta(root)
-    val repl = replacement(readAt(spark, root, meta).columns.toIndexedSeq,
-      df, where)
-    val touched = (hitBuckets(spark, root, meta, where) ++
-      bucketsOf(meta, repl)).distinct.sorted
-    if (touched.nonEmpty)
-      rewriteBuckets(spark, root, meta, touched)(
-        overwriteWhereStep(_, df, where, changeFeed = false))
+    val live = readAt(spark, root, meta)
+    val repl = replacement(live.columns.toIndexedSeq, df, where)
+      .localCheckpoint(eager = false)
+    try {
+      val touched =
+        (hitBuckets(meta, live, where) ++ bucketsOf(meta, repl)).distinct.sorted
+      if (touched.nonEmpty)
+        rewriteBuckets(spark, root, meta, touched)(
+          overwriteWhereStep(_, repl, where, changeFeed = false))
+    } finally CheckpointBridge.release(repl)
   }
 
   /** The buckets `rows` fall in (bounded: <= nBuckets ids). */
@@ -389,10 +398,9 @@ object BucketedTable extends VersionedLayout {
     rows.select(bucketCol(meta.keys, meta.nBuckets)).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
 
-  /** The buckets holding rows `where` hits. */
-  private def hitBuckets(spark: SparkSession, root: String, meta: Meta,
-                         where: Column): Seq[Int] =
-    bucketsOf(meta, readAt(spark, root, meta).filter(hitBy(where)))
+  /** The buckets holding the `live` rows `where` hits. */
+  private def hitBuckets(meta: Meta, live: DataFrame, where: Column): Seq[Int] =
+    bucketsOf(meta, live.filter(hitBy(where)))
 
   /** Copy-on-write DML on the `touched` buckets: `step` maps their rows
     * (read through the recorded schema — they may predate an evolution)

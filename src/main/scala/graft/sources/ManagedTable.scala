@@ -26,11 +26,14 @@ import scala.jdk.CollectionConverters._
   *
   * Scale notes (100 TB): `merge` is one shuffle of each side on the merge key
   * — the cost floor for a generic keyed upsert — and rewrites the full
-  * snapshot. `mergeVectorized` (the nightly Job-1 publish) runs the same
-  * join but writes only the batch: tombstones for the matched rows plus
-  * their post-images and the inserts. Earlier versions' appended files are
-  * served by reference, never rewritten, so its write cost follows the
-  * daily delta, not the table. Its reads pay base + appended rows; the
+  * snapshot. `mergeVectorized` (the nightly Job-1 publish) joins only the
+  * target rows whose key is in the batch (a left-semi join against the
+  * broadcast distinct batch keys), so no table-sized shuffle runs, and it
+  * writes only the batch: tombstones for the matched rows plus their
+  * post-images and the inserts. Earlier versions' appended files are
+  * served by reference, never rewritten, so its shuffle and its write
+  * follow the daily delta, not the table, and so do the number and size
+  * of a night's delta files. Its scan still pays base + appended rows; the
   * fold rule in [[publishMor]] compacts the head once the appended bytes
   * reach the base's, which bounds every live read by twice the base. The
   * MERGE semantics below are independent of the layout choice.
@@ -355,16 +358,23 @@ object ManagedTable extends VersionedLayout {
 
   /** MERGE at delta cost — the merge-on-read form of [[merge]] (Delta
     * merge-on-read / Iceberg v2 MERGE with position deletes, from the
-    * public designs). Same clause semantics and the same single full-outer
-    * key join as [[merge]], but instead of rewriting the snapshot the
-    * published version SHARES the base files and the earlier versions'
-    * appended files and records only the delta: matched rows are
-    * tombstoned by (file, position) address, and their post-images plus
-    * the not-matched inserts land in `_append`. Unmatched rows are never
-    * written — the join output is filtered to touched rows BEFORE
-    * materialization, so write cost and the lazy-checkpoint footprint
-    * scale with the source, not the table. At 100 TB a daily-delta
-    * upsert writes GBs where [[merge]] rewrites the snapshot (and
+    * public designs). Same clause semantics as [[merge]], but the
+    * full-outer key join reads only the target rows whose key is in the
+    * source: the live rows are left-semi-joined against the broadcast
+    * distinct source keys first, with the merge's own key equality. That
+    * is exact because [[MergeClauses]] has no not-matched-by-source
+    * clause: a target row whose key is not in the source can only be a
+    * keep, and keeps are never written. Instead of rewriting the snapshot
+    * the published version SHARES the base files and the earlier
+    * versions' appended files and records only the delta: matched rows
+    * are tombstoned by (file, position) address, and their post-images
+    * plus the not-matched inserts land in `_append`. The join output is
+    * filtered to touched rows BEFORE materialization, so the shuffle, the
+    * write, the lazy-checkpoint footprint and the night's delta files
+    * (their number and size) follow the source, not the table. The source
+    * is read twice (its keys and its rows), so it is lazily checkpointed
+    * and computed once. At 100 TB a daily-delta upsert shuffles and
+    * writes GBs where [[merge]] shuffles and rewrites the snapshot (and
     * [[BucketedTable.merge]] rewrites touched buckets); the fold rule in
     * [[publishMor]] runs [[optimize]] once the accumulated deltas reach
     * the base's size. Job 1's nightly publish
@@ -391,19 +401,37 @@ object ManagedTable extends VersionedLayout {
         s"column(s) ${missing.mkString(", ")}; appended files must match " +
         "the base schema — an evolving merge is a rewrite, use " +
         "merge(schemaEvolution = true)")
+      // The source is read twice, for its keys and for its rows, so it is
+      // checkpointed once: Job 1's source carries the property-id lookup.
+      val srcRows = source.localCheckpoint(eager = false)
+      // No clause acts on a target row whose key is not in the source, so
+      // such a row can only be a keep, and keeps are never written: the
+      // join reads only the target rows keyed in the batch.
+      val batchKeys = srcRows.select(keys.map(col): _*).distinct()
+        .toDF(keys.map("_k_" + _): _*)
+      val inBatch = rows.join(broadcast(batchKeys), keys.map(k =>
+        Merge.keyEq(nullSafeKeys)(col(k), col("_k_" + k))).reduce(_ && _),
+        "left_semi")
       // Addresses ride the merge as ordinary target columns; every
       // update/insert post-image takes the source side's null.
-      val src = source
+      val src = srcRows
         .withColumn(DvFileCol, lit(null).cast("string"))
         .withColumn(DvPosCol, lit(null).cast("bigint"))
       val act = col(Merge.ActionCol)
-      // Keeps are the table-sized bulk the MoR form exists to never touch:
-      // filter them out INSIDE the join pipeline so the lazy checkpoint
-      // materializes only delta-sized rows.
-      val touched = Merge.mergeFramesTagged(rows, src, keys, clauses,
-          nullSafeKeys, schemaEvolution = false, preImage = true)
-        .filter(act =!= lit("keep"))
-        .localCheckpoint(eager = false)
+      // Keeps are filtered out INSIDE the join pipeline so the lazy
+      // checkpoint materializes only delta-sized rows. An update's
+      // pre-image carries only its address unless the feed asks for it.
+      // Under AQE the checkpoint call already runs its shuffle stages,
+      // which read the source: a failure there comes before writeMor's
+      // finally can release the source checkpoint.
+      val touched =
+        try Merge.mergeFramesTagged(inBatch, src, keys, clauses,
+            nullSafeKeys, schemaEvolution = false,
+            preImage = if (preImageFeed) rows.columns.toSeq
+                       else Seq(DvFileCol, DvPosCol))
+          .filter(act =!= lit("keep"))
+          .localCheckpoint(eager = false)
+        catch { case e: Throwable => CheckpointBridge.release(srcRows); throw e }
       // an update's address rides its pre-image (its own columns are the
       // source's); a delete keeps the target's
       MorDelta(
@@ -414,14 +442,13 @@ object ManagedTable extends VersionedLayout {
           .drop(DvFileCol, DvPosCol, Merge.ActionCol, Merge.PreCol)),
         "merge-on-read MERGE changes column type(s): ",
         _ => Option.when(changeFeed) {
-          val feedBase = touched.filter(act =!= lit("keep"))
-            .drop(DvFileCol, DvPosCol)
+          val feedBase = touched.drop(DvFileCol, DvPosCol)
           if (!preImageFeed) feedBase.drop(Merge.PreCol)
           else feedBase.withColumn(Merge.PreCol,
             when(col(Merge.PreCol).isNotNull,
               struct(cols.map(c => col(Merge.PreCol)(c).as(c)): _*)))
         },
-        cached = Some(touched))
+        cached = Seq(touched, srcRows))
     }
 
   /** The (file, pos) addresses of `rows`. */
@@ -431,14 +458,14 @@ object ManagedTable extends VersionedLayout {
   /** What one merge-on-read write adds to its head: the addresses it
     * tombstones, the rows it appends (their column types must be the
     * base's, or the write fails with `typeError` and the differing
-    * columns), its change feed given the guarded appended rows, and a frame
-    * cached for the write, released when the write ends. */
+    * columns), its change feed given the guarded appended rows, and the
+    * frames cached for the write, released when the write ends. */
   private final case class MorDelta(
       tombstones: DataFrame,
       appended: Option[DataFrame] = None,
       typeError: String = "",
       feed: Option[DataFrame] => Option[DataFrame] = _ => None,
-      cached: Option[DataFrame] = None)
+      cached: Seq[DataFrame] = Nil)
 
   /** The one merge-on-read write. It refuses a column-mapped head, hands
     * `delta` the head's live rows (addressed, tombstones already

@@ -259,7 +259,8 @@ private[sources] trait VersionedLayout {
                                 changeFeed: Boolean,
                                 preImageFeed: Boolean): DmlStep = {
     val resolved = Merge.mergeFramesTagged(target, source, keys, clauses,
-      nullSafeKeys, schemaEvolution, preImage = changeFeed && preImageFeed)
+      nullSafeKeys, schemaEvolution,
+      preImage = if (changeFeed && preImageFeed) target.columns.toSeq else Nil)
     val tagged =
       if (changeFeed) resolved.localCheckpoint(eager = false) else resolved
     val act = col(Merge.ActionCol)

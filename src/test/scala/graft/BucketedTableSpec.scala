@@ -549,4 +549,36 @@ class BucketedTableSpec extends AnyFunSuite {
         .filter($"v".isin("u1", "u2")).count() == 2)
     } finally VersionedLayout.commitClock = prev
   }
+
+  test("update refuses a bucket-key or missing-column SET that hits no row") {
+    val root = Files.createTempDirectory("graft_bt_upd_refuse").toString
+    BucketedTable.create(root, (1 to 100).map(i => (i.toLong, s"v$i"))
+      .toDF("k", "v"), Seq("k"), nBuckets = 4)
+    val before = BucketedTable.currentVersion(root)
+    val noRow = col("k") === -1L
+    intercept[IllegalArgumentException] {
+      BucketedTable.update(spark, root, Map("k" -> lit(9L)), noRow)
+    }
+    intercept[IllegalArgumentException] {
+      BucketedTable.update(spark, root, Map("missing" -> lit(1)), noRow)
+    }
+    assert(BucketedTable.currentVersion(root) == before)
+  }
+
+  test("overwriteWhere computes its replacement once") {
+    val root = Files.createTempDirectory("graft_bt_rw_once").toString
+    BucketedTable.create(root, (1 to 1000).map(i => (i.toLong, i.toDouble))
+      .toDF("k", "v"), Seq("k"), nBuckets = 16)
+    val computed = spark.sparkContext.longAccumulator("bt_replacement_rows")
+    val counted = udf { (k: Long) => computed.add(1); k }.asNondeterministic()
+    // two replacement rows, one per slice key, built over a counting UDF
+    val repl = spark.range(2).select(
+      counted(when(col("id") === 0L, 5L).otherwise(700L)).as("k"),
+      lit(-1.0).as("v"))
+    BucketedTable.overwriteWhere(spark, root, repl,
+      col("k") === 5L || col("k") === 700L)
+    assert(computed.value == 2L)
+    val got = BucketedTable.read(spark, root).as[(Long, Double)].collect().toMap
+    assert(got.size == 1000 && got(5L) == -1.0 && got(700L) == -1.0)
+  }
 }

@@ -48,6 +48,23 @@ class CheckpointReleaseSpec extends AnyFunSuite {
     assert(ManagedTable.read(spark, root).count() == 201)
   }
 
+  test("mergeVectorized releases its source checkpoint when the merge fails") {
+    val root = Files.createTempDirectory("graft_rel_mor_fail").toString
+    ManagedTable.overwrite(root, target)
+    val boom = org.apache.spark.sql.functions.udf { (k: Long) =>
+      if (k == 500L) throw new IllegalStateException("source row failed")
+      k
+    }
+    val failing = spark.range(499, 501)
+      .select(boom($"id").as("k"), org.apache.spark.sql.functions.lit("NEW").as("v"))
+    assertReleases("a failing ManagedTable.mergeVectorized") {
+      intercept[Exception] {
+        ManagedTable.mergeVectorized(spark, root, failing, Seq("k"))
+      }
+    }
+    assert(ManagedTable.currentVersion(root) == 0)
+  }
+
   test("a bucketed merge with a feed releases its tagged checkpoint") {
     val root = Files.createTempDirectory("graft_rel_bt").toString
     BucketedTable.create(root, target, Seq("k"), nBuckets = 4)

@@ -1,11 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CurationMm, StateRef}
 import graft.sources.ScratchDirs
@@ -47,50 +41,5 @@ class CurationJobsSpec extends AnyFunSuite {
     info(s"retraction: $queries queries, $jobs jobs")
     assert(queries <= retractQueries,
       s"one retraction ran $queries queries (bound $retractQueries)")
-  }
-}
-
-/** Counts the SQL queries (executions) and the Spark jobs `body` starts.
-  * Listener events arrive after their query or job starts, on one bus in
-  * order: tagged marker jobs run before and after `body` open and close
-  * the window, and the counts are read once the closing marker arrives. */
-object RoundCount {
-  def during(spark: SparkSession)(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"graft_roundcount_${System.nanoTime()}"
-    val start = s"${tag}_start"; val end = s"${tag}_end"
-    val queries = new AtomicInteger(0)
-    val jobs = new AtomicInteger(0)
-    @volatile var recording = false
-    val started = new CountDownLatch(1)
-    val ended = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .map(_.split(',').toSet).getOrElse(Set.empty[String])
-        if (tags(start)) { recording = true; started.countDown() }
-        else if (tags(end)) { recording = false; ended.countDown() }
-        else if (recording) jobs.incrementAndGet()
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart if recording =>
-          queries.incrementAndGet()
-        case _ =>
-      }
-    }
-    def marker(t: String): Unit = {
-      sc.addJobTag(t)
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(t)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker(start)
-      assert(started.await(60, TimeUnit.SECONDS), "start marker never arrived")
-      body
-      marker(end)
-      assert(ended.await(60, TimeUnit.SECONDS), "end marker never arrived")
-      (queries.get(), jobs.get())
-    } finally sc.removeSparkListener(l)
   }
 }
